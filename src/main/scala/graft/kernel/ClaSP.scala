@@ -65,37 +65,95 @@ object ClaSP {
       if (knnIn != null) knnIn
       else new KSubsequenceNeighbours(windowSize, kNeighbours, distanceName).fit(ts)
 
+    val isF1 = scoreName match {
+      case "f1" => true
+      case "roc_auc" => false
+      case other => throw new IllegalArgumentException(
+        s"$other is not a valid score. Implementations include: f1, roc_auc")
+    }
     val nOff = knn.nOffsets
-    // allocation-free hot loop: labels + scorer scratch reused across the
-    // O(n) splits — the naive per-split allocations made the whole engine
-    // GC-bound at high task parallelism
-    val scorer = new Scoring.Scorer(scoreName, nOff)
-    val yTrue = new Array[Int](nOff)
-    val yPred = new Array[Int](nOff)
     val profile = Array.fill(nOff)(Double.NegativeInfinity)
-    // 16-bit offset view when rows fit (chunk-bounded series always do):
-    // halves the bytes the O(n²·k) profile loop streams; indices identical
-    val offsShort: Array[Short] =
-      if (nOff < 32768) {
-        val flat = knn.offsetsFlat
-        val a = new Array[Short](flat.length)
-        var i = 0
-        while (i < flat.length) { a(i) = flat(i).toShort; i += 1 }
-        a
-      } else null
     // single-prange decomposition (clasp.py:188-199 with n_jobs=1):
     val start = math.max(0, minSegSize)
     val end = math.min(nOff, nOff - minSegSize + windowSize)
+    if (start < end) profileInto(knn.offsetsFlat, knn.stride, windowSize, start, end, isF1, profile)
+    new ClaSPModel(windowSize, kNeighbours, scoreName, exclRadius, knn, profile, 0, n)
+  }
+
+  /** Writes profile(split) for split in [start, end) in O(n·k) total time,
+    * bit-identical to scoring `CrossVal.labels` at every split.
+    *
+    * Each row's base vote is the majority of its k neighbours' y_true; its
+    * final label is 1 inside the forced window [split-w, split) and the
+    * base vote elsewhere. Every score is a function of four integers: n,
+    * split, onesRight (labels 1 at or after split, i.e. base votes there)
+    * and onesTotal (all labels 1 = base votes outside the window + w).
+    * Advancing the split turns y_true(split) from 1 to 0, which can only
+    * take votes away, and only from the reverse neighbours of split; the
+    * window and the right part each move by one index. So three counters
+    * of base votes (all rows, window rows, rows at or after split) follow
+    * the split in O(1 + |rnn(split)|). Scores go through the count-based
+    * entry points of [[Scoring]], the same arithmetic the array-based
+    * scores use. */
+  private def profileInto(offsetsFlat: Array[Int], k: Int, w: Int, start: Int, end: Int,
+      isF1: Boolean, profile: Array[Double]): Unit = {
+    val n = offsetsFlat.length / k
+    // the forced window never wraps (numpy's negative indices) in this range
+    require(start >= w, s"first split $start lies inside the first window ($w)")
+    val (rnnOff, rnnVal) = CrossVal.rnn(offsetsFlat, k)
+    // votes(i): row i's neighbours at or after the current split
+    val votes = new Array[Int](n)
+    var q = rnnOff(start)
+    while (q < rnnVal.length) { votes(rnnVal(q)) += 1; q += 1 }
+    @inline def base(row: Int): Int = if (votes(row) > k - votes(row)) 1 else 0
+    var baseTotal = 0; var baseWindow = 0; var baseRight = 0
+    var i = 0
+    while (i < n) {
+      val b = base(i)
+      baseTotal += b
+      if (i >= start) baseRight += b
+      else if (i >= start - w) baseWindow += b
+      i += 1
+    }
+    // the roc curve of a step score has two points past the origin
+    val tps = new Array[Double](3)
+    val fps = new Array[Double](3)
     var split = start
     while (split < end) {
-      if (offsShort != null)
-        CrossVal.labelsIntoShort(offsShort, knn.stride, split, windowSize, yTrue, yPred)
-      else
-        CrossVal.labelsInto(knn.offsetsFlat, knn.stride, split, windowSize, yTrue, yPred)
-      profile(split) = scorer(yTrue, yPred)
+      val onesRight = baseRight
+      val onesTotal = baseTotal - baseWindow + w
+      profile(split) =
+        if (isF1) {
+          // y_true is 1 at or after split: tp, fp, fn, tn of label 1
+          val onesLeft = onesTotal - onesRight
+          Scoring.f1FromCounts(onesRight, onesLeft, n - split - onesRight, split - onesLeft)
+        } else {
+          // y_score reversed: n-split ones, then split zeros (scoring.py:99-111)
+          tps(1) = onesRight
+          fps(1) = 1.0 + (n - split - 1) - onesRight
+          tps(2) = onesTotal
+          fps(2) = 1.0 + (n - 1) - onesTotal
+          Scoring.rocAucFromCurve(tps, fps, 2)
+        }
+      if (split + 1 < end) {
+        q = rnnOff(split)
+        while (q < rnnOff(split + 1)) {
+          val row = rnnVal(q)
+          val before = base(row)
+          votes(row) -= 1
+          if (before != base(row)) {
+            baseTotal -= 1
+            if (row >= split) baseRight -= 1
+            else if (row >= split - w) baseWindow -= 1
+          }
+          q += 1
+        }
+        val b = base(split)
+        baseWindow += b - base(split - w)
+        baseRight -= b
+      }
       split += 1
     }
-    new ClaSPModel(windowSize, kNeighbours, scoreName, exclRadius, knn, profile, 0, n)
   }
 
   /** _calculate_temporal_constraints (clasp.py:335-357). */

@@ -46,10 +46,8 @@ final class KSubsequenceNeighbours(
 
     val l = n - windowSize + 1
     val k = kNeighbours
-    // FLAT (l × m·k) tables with stride indexing: the profile stage reads
-    // them O(n²·k) times, and one contiguous primitive array removes the
-    // per-row pointer load + spreads no object headers through the cache
-    // (the 8→32-thread DRAM-bandwidth lever measured in BASELINE.md)
+    // FLAT (l × m·k) tables with stride indexing: one contiguous primitive
+    // array per table, no per-row pointer load or object headers
     val stride = tcs.length * k
     val knns = new Array[Int](l * stride)
     val dists = new Array[Double](l * stride)
@@ -102,7 +100,6 @@ final class KSubsequenceNeighbours(
     val cdWork = new Array[Double](l)
     val argsBuf = new Array[Int](k)
     val valsBuf = new Array[Double](k)
-    val takenBuf = new Array[Boolean](l)
 
     var order = start
     while (order < end) {
@@ -168,7 +165,7 @@ final class KSubsequenceNeighbours(
       while (kdx < tcs.length) {
         val (lb, ub) = tcs(kdx)
         if (order >= lb && order < ub) {
-          ArgKMin.into(cdist, lb, ub - w + 1, k, argsBuf, valsBuf, takenBuf)
+          ArgKMin.into(cdist, lb, ub - w + 1, k, argsBuf, valsBuf)
           val base = order * stride + kdx * k
           var i = 0
           while (i < k) {
@@ -191,18 +188,17 @@ object ArgKMin {
   def apply(dist: Array[Double], lo: Int, hi: Int, k: Int): (Array[Int], Array[Double]) = {
     val args = new Array[Int](k)
     val vals = new Array[Double](k)
-    into(dist, lo, hi, k, args, vals, new Array[Boolean](hi))
+    into(dist, lo, hi, k, args, vals)
     (args, vals)
   }
 
-  /** Allocation-free single-pass variant. `taken` is accepted for signature
-    * stability but unused: one streaming pass keeps the k smallest with a
-    * strict-< insertion, which reproduces the reference's k-pass ∞-masking
-    * EXACTLY — in both, ties go to the earliest index, and slots beyond the
-    * number of finite values stay (∞, -1). One pass instead of k makes the
-    * O(n²·m) ensemble kNN ~k× cheaper on its dominant loop. */
+  /** Allocation-free single-pass variant: one streaming pass keeps the k
+    * smallest with a strict-< insertion, which reproduces the reference's
+    * k-pass ∞-masking EXACTLY — in both, ties go to the earliest index, and
+    * slots beyond the number of finite values stay (∞, -1). One pass instead
+    * of k makes the O(n²·m) ensemble kNN ~k× cheaper on its dominant loop. */
   def into(dist: Array[Double], lo: Int, hi: Int, k: Int,
-      args: Array[Int], vals: Array[Double], taken: Array[Boolean]): Unit = {
+      args: Array[Int], vals: Array[Double]): Unit = {
     var i = 0
     while (i < k) { args(i) = -1; vals(i) = Double.PositiveInfinity; i += 1 }
     var j = lo
@@ -223,10 +219,9 @@ object ArgKMin {
 
 /** Fitted k-NN tables, stored FLAT: `offsetsFlat`/`distancesFlat` are
   * row-major (l × m·k) with l = n - w + 1 rows, m temporal constraints and
-  * stride m·k (nearest_neighbour.py:251-254 reshaped). The flat primitive
-  * layout matters: the ClaSP profile reads these O(n²·k) times, and the old
-  * array-of-rows layout paid a dependent pointer load per row (measured as
-  * the DRAM-bandwidth ceiling on the 8→32-thread scaling leg). */
+  * stride m·k (nearest_neighbour.py:251-254 reshaped). The ClaSP profile
+  * reads the offsets in O(n·k) per temporal constraint, building the
+  * reverse-NN index ([[CrossVal.rnn]]) it follows vote counts through. */
 final class KSNModel(
     val windowSize: Int,
     val kNeighbours: Int,

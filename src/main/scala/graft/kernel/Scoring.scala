@@ -11,50 +11,48 @@ package graft.kernel
   * (clasp.py:43-44); for roc_auc the first argument lands in `y_score` —
   * i.e. the step function is used as the score and the k-NN vote as the
   * truth, exactly like the reference.
+  *
+  * Each score has a count-based entry point ([[f1FromCounts]],
+  * [[rocAucFromCurve]]) holding all of its floating-point arithmetic. The
+  * array-based scores only count and then call it, so the incremental ClaSP
+  * profile, which keeps the counts up to date per split instead of
+  * materialising label arrays, gets bit-identical scores.
   */
 object Scoring {
 
   type Score = (Array[Int], Array[Int]) => Double
 
-  /** Allocation-free scorer for hot loops: scratch buffers sized once for
-    * series length `maxN`, reused across the O(n) profile splits. */
-  final class Scorer(name: String, maxN: Int) {
-    private val isF1 = name match {
-      case "f1" => true
-      case "roc_auc" => false
-      case other => throw new IllegalArgumentException(s"$other is not a valid score.")
-    }
-    private val th = new Array[Int](maxN + 1)
-    private val tps = new Array[Double](maxN + 2)
-    private val fps = new Array[Double](maxN + 2)
-    // same argument pass-through as byName: callers hand (y_true, y_pred)
-    // and roc_auc reads the sorted step function from its first argument
-    def apply(a: Array[Int], b: Array[Int]): Double =
-      if (isF1) f1Score(a, b) else rocAucScore(a, b, th, tps, fps)
-  }
-
   def byName(name: String): Score = name match {
     case "f1" => f1Score
-    case "roc_auc" => (a, b) => rocAucScore(a, b)
+    case "roc_auc" => rocAucScore
     case other => throw new IllegalArgumentException(
       s"$other is not a valid score. Implementations include: f1, roc_auc")
   }
 
   /** Macro-averaged binary F1 with -inf degenerate guards (scoring.py:38-57). */
   def f1Score(yTrue: Array[Int], yPred: Array[Int]): Double = {
+    // cells of the binary confusion matrix, (true, pred)
+    var c00 = 0L; var c01 = 0L; var c10 = 0L; var c11 = 0L
+    var i = 0
+    while (i < yTrue.length) {
+      val t = yTrue(i) == 1
+      val p = yPred(i) == 1
+      if (t) { if (p) c11 += 1 else c10 += 1 }
+      else { if (p) c01 += 1 else c00 += 1 }
+      i += 1
+    }
+    f1FromCounts(c11, c01, c10, c00)
+  }
+
+  /** Macro F1 from the binary confusion matrix, counted with label 1 as the
+    * positive class. Label 0 is scored first, with the roles swapped. */
+  def f1FromCounts(tp1: Long, fp1: Long, fn1: Long, tn1: Long): Double = {
     var total = 0.0
     var label = 0
     while (label <= 1) {
-      var tp = 0L; var fp = 0L; var fn = 0L
-      var i = 0
-      while (i < yTrue.length) {
-        val t = yTrue(i) == label
-        val p = yPred(i) == label
-        if (t && p) tp += 1
-        else if (!t && p) fp += 1
-        else if (t && !p) fn += 1
-        i += 1
-      }
+      val tp = if (label == 0) tn1 else tp1
+      val fp = if (label == 0) fn1 else fp1
+      val fn = if (label == 0) fp1 else fn1
       if (tp + fp == 0 || tp + fn == 0) return Double.NegativeInfinity
       val pr = tp.toDouble / (tp + fp)
       val re = tp.toDouble / (tp + fn)
@@ -65,28 +63,23 @@ object Scoring {
     total / 2.0
   }
 
-  /** ROC AUC — first arg is y_score, second y_true (scoring.py:60-139).
-    * Scratch arrays may be passed to avoid per-call allocation in the O(n²)
-    * profile loop (pass null to allocate). */
-  def rocAucScore(yScoreIn: Array[Int], yTrueIn: Array[Int],
-      thScratch: Array[Int] = null, tpsScratch: Array[Double] = null,
-      fpsScratch: Array[Double] = null): Double = {
+  /** ROC AUC — first arg is y_score, second y_true (scoring.py:60-139). */
+  def rocAucScore(yScoreIn: Array[Int], yTrueIn: Array[Int]): Double = {
     val n = yScoreIn.length
     // reversed views (desc_score_indices = arange(n)[::-1], scoring.py:99)
     @inline def yScore(i: Int): Int = yScoreIn(n - 1 - i)
     @inline def yTrue(i: Int): Boolean = yTrueIn(n - 1 - i) == 1
 
     // distinct-threshold indices: where diff(y_score) != 0, plus n-1 (scoring.py:107-111)
-    val thresholds = if (thScratch != null) thScratch else new Array[Int](n)
+    val thresholds = new Array[Int](n)
     var m = 0
     var i = 0
     while (i < n - 1) { if (yScore(i + 1) != yScore(i)) { thresholds(m) = i; m += 1 }; i += 1 }
     thresholds(m) = n - 1
     m += 1
 
-    val tps = if (tpsScratch != null) tpsScratch else new Array[Double](n + 1)
-    val fps = if (fpsScratch != null) fpsScratch else new Array[Double](n + 1)
-    tps(0) = 0.0; fps(0) = 0.0
+    val tps = new Array[Double](m + 1)
+    val fps = new Array[Double](m + 1)
     var cum = 0L
     var ti = 0
     i = 0
@@ -99,11 +92,18 @@ object Scoring {
       }
       i += 1
     }
+    rocAucFromCurve(tps, fps, m)
+  }
+
+  /** ROC AUC of a curve given by cumulative counts (scoring.py:113-139):
+    * point 0 is the origin, and at each of the `m` distinct thresholds
+    * point t has `tps(t)` true and `fps(t)` false positives. */
+  def rocAucFromCurve(tps: Array[Double], fps: Array[Double], m: Int): Double = {
     if (fps(m) <= 0 || tps(m) <= 0) return Double.NegativeInfinity
     val fprLast = fps(m); val tprLast = tps(m)
     // fpr has m+1 >= 2 points here; monotonicity check on fpr (scoring.py:129-136)
     var anyNeg = false; var allNonPos = true
-    i = 0
+    var i = 0
     while (i < m) {
       val dx = fps(i + 1) / fprLast - fps(i) / fprLast
       if (dx < 0) anyNeg = true

@@ -1,41 +1,15 @@
 package graft.kernel.streaming
 
-import graft.kernel.{ClaSPModel, KSNModel, KSubsequenceNeighbours}
+import graft.kernel.{ClaSPModel, CrossVal, KSNModel, KSubsequenceNeighbours, Scoring}
 
 /** ClaSS: O(n·k)-amortized classification-score profile via a reverse-NN
   * index and an incrementally-updated binary confusion matrix. Faithful port
-  * of `/root/reference/claspy/streaming/clasp.py`: `_rnn` (:9-56),
+  * of the reference's `claspy/streaming/clasp.py`: `_rnn` (:9-56, shared
+  * with the batch profile as [[CrossVal.rnn]]),
   * `_init_labels` (:59-108), conf-matrix init/update (:111-180),
   * `_binary_macro_f1_score` / `_binary_balanced_accuracy_score` (:183-271),
   * `_update_labels` (:274-343), `_profile` (:346-392), `ClaSS` (:395-485). */
 object ClaSS {
-
-  /** CSR reverse-nearest-neighbour index (clasp.py:9-56) over the FLAT
-    * (n × k) kNN table. */
-  def rnn(knnFlat: Array[Int], k: Int): (Array[Int], Array[Int]) = {
-    val n = knnFlat.length / k
-    val offsets = new Array[Int](n)
-    val values = new Array[Int](n * k)
-    val counts = new Array[Int](n)
-    val counters = new Array[Int](n)
-    var p = 0
-    while (p < knnFlat.length) { counts(knnFlat(p)) += 1; p += 1 }
-    var i = 1
-    while (i < n) { offsets(i) = offsets(i - 1) + counts(i - 1); i += 1 }
-    i = 0
-    p = 0
-    while (i < n) {
-      var j = 0
-      while (j < k) {
-        val nn = knnFlat(p)
-        values(offsets(nn) + counters(nn)) = i
-        counters(nn) += 1
-        j += 1; p += 1
-      }
-      i += 1
-    }
-    (offsets, values)
-  }
 
   /** clasp.py:59-108: (zeros, ones) k-NN vote counts, y_true, y_pred. */
   def initLabels(knnFlat: Array[Int], k: Int, splitIdx: Int)
@@ -85,23 +59,10 @@ object ClaSS {
     cm(3) -= (if (oldT == 1 && oldP == 1) 1 else 0) - (if (newT == 1 && newP == 1) 1 else 0)
   }
 
-  /** clasp.py:183-223. */
-  def binaryMacroF1(cm: Array[Long]): Double = {
-    var score = 0.0
-    var label = 0
-    while (label < 2) {
-      val (tp, fp, fn) =
-        if (label == 0) (cm(0), cm(1), cm(2))
-        else (cm(3), cm(2), cm(1))
-      if (tp + fp == 0 || tp + fn == 0) return Double.NegativeInfinity
-      val pr = tp.toDouble / (tp + fp)
-      val re = tp.toDouble / (tp + fn)
-      if (pr + re == 0) return Double.NegativeInfinity
-      score += 2 * (pr * re) / (pr + re)
-      label += 1
-    }
-    score / 2
-  }
+  /** clasp.py:183-223; `cm` is label 0's [tp, fp, fn, tn], i.e. label 1's
+    * [tn, fn, fp, tp]. */
+  def binaryMacroF1(cm: Array[Long]): Double =
+    Scoring.f1FromCounts(cm(3), cm(2), cm(1), cm(0))
 
   /** clasp.py:226-271. */
   def binaryBalancedAccuracy(cm: Array[Long]): Double = {
@@ -144,7 +105,7 @@ object ClaSS {
       scoreName: String = "f1"): Array[Double] = {
     val n = knnFlat.length / k
     val prof = Array.fill(n)(Double.NegativeInfinity)
-    val (rnnOff, rnnVal) = rnn(knnFlat, k)
+    val (rnnOff, rnnVal) = CrossVal.rnn(knnFlat, k)
     val (zeros, ones, yTrue, yPred) = initLabels(knnFlat, k, minSegSize)
     val cm = initConfMatrix(yTrue, yPred, 0, n)
     var exclStart = minSegSize

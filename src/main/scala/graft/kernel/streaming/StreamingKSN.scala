@@ -39,7 +39,6 @@ final class StreamingKSN(
   // per point (~250 KB at the default ring) makes mega-series GC-bound
   @transient private lazy val distScratch = new Array[Double](nWindows)
   @transient private lazy val changeScratch = new Array[Boolean](nWindows)
-  @transient private lazy val takenScratch = new Array[Boolean](nWindows)
   @transient private lazy val argsScratch = new Array[Int](kNeighbours)
   @transient private lazy val valsScratch = new Array[Double](kNeighbours)
 
@@ -183,7 +182,7 @@ final class StreamingKSN(
     val knnArgs = argsScratch
     val knnVals = valsScratch
     ArgKMin.into(distRow, math.max(lbound, 0), nWindows, kNeighbours,
-      knnArgs, knnVals, takenScratch)
+      knnArgs, knnVals)
     // update dot product (:209)
     j = 0
     while (j < nWindows) { dotRolled(j) -= timeSeries(idx) * timeSeries(j); j += 1 }
