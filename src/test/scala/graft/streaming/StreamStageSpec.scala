@@ -1985,4 +1985,51 @@ class StreamStageSpec extends SparkTestBase {
       s"stream-only: ${(streamed.toSet -- batch.toSet).take(3)}; " +
         s"batch-only: ${(batch.toSet -- streamed.toSet).take(3)}")
   }
+
+  test("stateful twins drop closed state and keep only what must survive") {
+    // one twin per state shape: per-(key, bucket) close-on-watermark (mad),
+    // per-key ascending period close with a carried value (psi, slo burn,
+    // calendar baseline) and per-key buffered in-order replay (ewma). After
+    // the watermark passes every real row, the state store must hold
+    // exactly the groups whose state outlives the stream: the sentinel's
+    // own group, plus every real key for the twins whose carried value is
+    // unbounded history (calendar's hour-of-day sums, ewma's smoother).
+    val rng = new scala.util.Random(97)
+    val hourMs = 3600000L
+    val urls = Seq("a", "b", "c")
+    val all = for (u <- urls; h <- 0 until 30; i <- 0 until 1 + rng.nextInt(3))
+      yield TiedPoint(u, hourMs + h * hourMs + i * 600000L + rng.nextInt(1000),
+        (h * 10 + i).toLong, rng.nextInt(3).toDouble)
+    val far = (all.map(_.ts).max / hourMs + 24L * 365L) * hourMs
+    def stateRows(name: String)(
+        twin: org.apache.spark.sql.Dataset[TiedPoint] =>
+          org.apache.spark.sql.Dataset[_]): Long = {
+      implicit val sqlCtx = spark.sqlContext
+      val mem = MemoryStream[TiedPoint]
+      val q = twin(mem.toDS()).writeStream.format("memory").queryName(name)
+        .outputMode("append").start()
+      for (chunk <- all.sortBy(_.ts).grouped(20)) {
+        mem.addData(chunk.toSeq)
+        q.processAllAvailable()
+      }
+      for (i <- 0 until 2) {
+        mem.addData(Seq(TiedPoint("sentinel", far + i, i.toLong, 0.0)))
+        q.processAllAvailable()
+      }
+      val rows = q.lastProgress.stateOperators(0).numRowsTotal
+      q.stop()
+      rows
+    }
+    val lateness = "2 hours"
+    assert(stateRows("expiry_mad")(
+      StreamStage.madStream(_, hourMs, 3.0, lateness)) == 1L)
+    assert(stateRows("expiry_psi")(
+      StreamStage.psiDriftStream(_, 6 * hourMs, 1.0, lateness = lateness)) == 1L)
+    assert(stateRows("expiry_slo")(StreamStage.sloBurnStream(_, 0.25,
+      hourMs, 6 * hourMs, 1.0, lateness)) == 1L)
+    assert(stateRows("expiry_cal")(
+      StreamStage.calendarBaselineStream(_, lateness)) == urls.size + 1L)
+    assert(stateRows("expiry_ewma")(
+      StreamStage.ewmaStream(_, 0.3, lateness)) == urls.size + 1L)
+  }
 }
