@@ -15,6 +15,39 @@ import graft.pipeline.{Checkpointing, CrawlSignals, Rollup, SyntheticCrawl}
   *  - every SparkEntry query, timed individually.
   */
 object Bench {
+
+  /** Per-stage task telemetry: stage wall vs summed task time vs max task vs
+    * summed on-CPU time, one `[stage]` line per completed stage handed to
+    * `emit`. Wall vs taskSum vs taskMax tells straggler-bound from
+    * contention-bound scaling; on-CPU time flat across parallelism means
+    * the engine adds no contention, so any wall/taskSum inflation beyond
+    * it is external (hypervisor steal, DRAM bandwidth). */
+  def stageListener(emit: String => Unit): org.apache.spark.scheduler.SparkListener =
+    new org.apache.spark.scheduler.SparkListener {
+      import java.util.concurrent.ConcurrentHashMap
+      import org.apache.spark.scheduler.{SparkListenerStageCompleted, SparkListenerTaskEnd}
+      private val taskMax = new ConcurrentHashMap[Int, Long]()
+      private val taskSum = new ConcurrentHashMap[Int, Long]()
+      private val cpuSum = new ConcurrentHashMap[Int, Long]()
+
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+        val rt = e.taskInfo.duration
+        taskMax.merge(e.stageId, rt, (a, b) => math.max(a, b))
+        taskSum.merge(e.stageId, rt, (a, b) => a + b)
+        if (e.taskMetrics != null)
+          cpuSum.merge(e.stageId, e.taskMetrics.executorCpuTime, (a, b) => a + b)
+      }
+
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val si = e.stageInfo
+        val wall = si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L)
+        emit(f"[stage] id=${si.stageId} name=${si.name.takeWhile(_ != '(').trim} " +
+          f"tasks=${si.numTasks} wall=${wall / 1e3}%.1fs " +
+          f"taskSum=${taskSum.getOrDefault(si.stageId, 0L) / 1e3}%.1fs " +
+          f"taskMax=${taskMax.getOrDefault(si.stageId, 0L) / 1e3}%.1fs " +
+          f"cpuSum=${cpuSum.getOrDefault(si.stageId, 0L) / 1e9}%.1fs")
+      }
+    }
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -102,30 +135,7 @@ object Bench {
     // per-stage skew telemetry: stage wall vs summed task time vs max task —
     // distinguishes straggler-bound from contention-bound scaling
     if (sys.env.contains("SPARK_GRAFT_STAGE_STATS")) {
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        private val taskMax = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-        private val taskSum = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-        // on-CPU ns per stage: flat across parallelism = engine adds no
-        // contention; any wall/taskSum inflation beyond it is external
-        // (hypervisor steal, DRAM bandwidth) — the shared-VM disambiguator
-        private val cpuSum = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-        override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val rt = e.taskInfo.duration
-          taskMax.merge(e.stageId, rt, (a, b) => math.max(a, b))
-          taskSum.merge(e.stageId, rt, (a, b) => a + b)
-          if (e.taskMetrics != null)
-            cpuSum.merge(e.stageId, e.taskMetrics.executorCpuTime, (a, b) => a + b)
-        }
-        override def onStageCompleted(e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val si = e.stageInfo
-          val wall = si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L)
-          System.err.println(f"[stage] id=${si.stageId} name=${si.name.takeWhile(_ != '(').trim} " +
-            f"tasks=${si.numTasks} wall=${wall / 1e3}%.1fs " +
-            f"taskSum=${taskSum.getOrDefault(si.stageId, 0L) / 1e3}%.1fs " +
-            f"taskMax=${taskMax.getOrDefault(si.stageId, 0L) / 1e3}%.1fs " +
-            f"cpuSum=${cpuSum.getOrDefault(si.stageId, 0L) / 1e9}%.1fs")
-        }
-      })
+      spark.sparkContext.addSparkListener(stageListener(System.err.println))
     }
 
     // ---- headline pipeline (scale with sf dir) ----------------------------

@@ -123,23 +123,7 @@ object BenchExtra {
         // where a single query's wall time goes (scan vs exchange vs agg)
         val qname = args(1)
         val reps = args.lift(2).map(_.toInt).getOrElse(3)
-        spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          private val sums = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-          private val cpus = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-          override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-            sums.merge(e.stageId, e.taskInfo.duration, (a, b) => a + b)
-            if (e.taskMetrics != null)
-              cpus.merge(e.stageId, e.taskMetrics.executorCpuTime, (a, b) => a + b)
-          }
-          override def onStageCompleted(e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            val si = e.stageInfo
-            val wall = si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L)
-            println(f"[one-stage] id=${si.stageId} tasks=${si.numTasks} " +
-              f"wall=${wall / 1e3}%.2fs taskSum=${sums.getOrDefault(si.stageId, 0L) / 1e3}%.2fs " +
-              f"cpuSum=${cpus.getOrDefault(si.stageId, 0L) / 1e9}%.2fs " +
-              f"name=${si.name.takeWhile(_ != '(').trim}")
-          }
-        })
+        spark.sparkContext.addSparkListener(Bench.stageListener(println))
         val fn = SparkEntry.queries(qname)
         for (r <- 1 to reps) {
           val t0 = System.nanoTime()

@@ -11,41 +11,15 @@ import org.apache.spark.sql.functions._
   * deterministic and oracle-comparable. */
 object RetentionOps {
 
-  /** Filter `tiers` to in-horizon rows, deriving the anchor from `tiers`
-    * itself.
-    *
-    * FOOTGUN GUARD: deriving the anchor self-referentially would execute
-    * the whole tier lineage twice (once for one scalar, once for the
-    * expiry), so this overload persists `tiers` first — the anchor pass
-    * materializes the cache and the expiry pass reuses it. That trades
-    * cluster memory/disk for the rescan, and the CALLER owns the cache
-    * lifetime: call `tiers.unpersist()` after the expiry output is
-    * materialized, or the cached partitions stay pinned for the session.
-    * When the anchor is computable upstream (e.g. minute-trunc of max raw
-    * ts — truncation is monotone, so coarser tiers can never exceed it),
-    * prefer the explicit-anchor variant with a column-pruned single-agg
-    * scan, which is what the q37 pipeline does. */
-  @deprecated("derives the anchor by persisting and re-reading the whole " +
-    "tier lineage; pass a precomputed pruned anchor to the explicit-anchor " +
-    "variant instead", "round-4")
-  def applyRetention(
-      tiers: DataFrame,
-      horizonMs: Map[String, Long],
-      tierCol: String = "tier",
-      bucketCol: String = "bucket_start"): DataFrame = {
-    val cached = tiers.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    applyRetention(cached,
-      cached.agg(max(unix_millis(col(bucketCol).cast("timestamp"))).as("anchor_ms")),
-      horizonMs, tierCol, bucketCol)
-  }
-
-  /** Variant taking a precomputed 1-row `anchor` frame (column `anchor_ms`).
+  /** Filter `tiers` to in-horizon rows against a precomputed 1-row
+    * `anchor` frame (column `anchor_ms`).
     *
     * Deriving the anchor from `tiers` itself re-executes the whole tier
     * lineage just for one scalar; when the finest tier's max bucket is
     * computable upstream (e.g. minute-trunc of max raw ts — truncation is
     * monotone, so coarser tiers can never exceed it), pass that as a
-    * column-pruned single-agg scan instead. */
+    * column-pruned single-agg scan instead, which is what the q37
+    * pipeline does. */
   def applyRetention(
       tiers: DataFrame,
       anchor: DataFrame,

@@ -630,15 +630,21 @@ object TextOps {
     * deterministic at any parallelism and mirror the DuckDB oracle; the
     * final round(6) is belt-and-braces only.
     *
-    * Scale shape: the model is two token-keyed hash aggregates over the
-    * gram stream (event-sized shuffles, map-side combined); V is ONE
-    * broadcast single-row aggregate (the BM25 stats license); scoring joins
-    * the gram stream to the two count tables on their own keys (standard
-    * co-keyed hash joins) and the per-doc fold touches only that doc's own
-    * grams. The corpus text column is scanned three times (unigram counts,
-    * bigram counts, scoring) — at 100 TB persist the tokenized projection
-    * or accept the pruned rescans, the q59 trade. Docs with <2 tokens
-    * surface with n_bigrams=0 and NULL scores — never dropped. */
+    * Scale shape: unigram counts are one token-keyed hash aggregate
+    * (map-side combined), checkpointed because they are vocab-sized; V is
+    * ONE broadcast single-row aggregate over them (the BM25 stats
+    * license). Bigram counts are a count WINDOW over one gram-keyed
+    * exchange of the gram stream, which scoring then reads directly: the
+    * gram stream is evaluated once, but every gram row crosses that
+    * exchange with no map-side combine, so a Zipfian hot bigram lands on a
+    * single task — the skew trade for not re-running the corpus-sized
+    * gram stream a second time. Scoring joins the windowed grams to the
+    * unigram table on the context token (a co-keyed hash join) and the
+    * per-doc fold touches only that doc's own grams. The corpus text
+    * column is scanned twice (unigram counts, gram stream) — at 100 TB
+    * persist the tokenized projection or accept the pruned rescan, the
+    * q59 trade. Docs with <2 tokens surface with n_bigrams=0 and NULL
+    * scores — never dropped. */
   def lmScore(documents: DataFrame, alpha: Double = 0.5): DataFrame = {
     require(alpha > 0, s"alpha must be positive, got $alpha")
     val toks = filter(tokens(col("text")), t => length(t) > 0)

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import scala.reflect.runtime.universe.TypeTag
 import graft.kernel.streaming.{SegSnapshot, StreamingClaSPSegmentation}
 import graft.pipeline.SeriesPoint
 
@@ -53,19 +54,6 @@ final case class EwmaOut(url: String, ts: Long, tie: Long, value: Double,
 final case class DeltaOut(url: String, ts: Long, tie: Long, value: Double,
     delta: Option[Double], rate: Option[Double])
 
-/** Per-url state for [[StreamStage.ewmaStream]] (product-encoded): rows
-  * still above the watermark, parallel arrays (ts, tie, value), plus the
-  * running smoother. Buffer size is O(lateness-window points), never the
-  * stream. */
-final case class EwmaBuf(ts: Array[Long], tie: Array[Long], vs: Array[Double],
-    y: Double, primed: Boolean)
-
-/** Per-url state for [[StreamStage.deltaRateStream]]: the above-watermark
-  * buffer plus the last drained (ts, value) pair the next delta differences
-  * against. */
-final case class DeltaBuf(ts: Array[Long], tie: Array[Long], vs: Array[Double],
-    prevTs: Long, prevVal: Double, primed: Boolean)
-
 /** One first-in-window membership row from
   * [[StreamStage.trailingActivesStream]]'s stage 1: this key contributes
   * exactly one such row to trailing window `day_ms`. */
@@ -76,53 +64,22 @@ final case class CoverOut(user: String, dayMs: Long)
 final case class RollCorrOut(bucket_ms: Long, n_buckets: Long,
     corr: Option[Double])
 
-/** State for [[StreamStage.rollingCorrStream]]: open buckets' cents sums,
-  * the ring of closed cells still inside some future window, and the
-  * newest closed bucket (late-arrival guard). O(open + windowBuckets). */
-final case class RollCorrBuf(openB: Array[Long], openX: Array[Long],
-    openY: Array[Long], ringB: Array[Long], ringX: Array[Long],
-    ringY: Array[Long], lastClosed: Long)
-
-/** Per-user state for [[StreamStage.trailingActivesStream]]: the
-  * above-watermark buffer plus the last drained active day the next
-  * coverage range starts after. */
-final case class CoverBuf(ts: Array[Long], tie: Array[Long],
-    vs: Array[Double], prevDay: Long, primed: Boolean)
-
 /** One CLOSED run from [[StreamStage.changeStream]]: the run's first row
   * (ts, tie, value) plus how many raw readings it absorbed. */
 final case class ChangeOut(url: String, ts: Long, tie: Long, value: Double,
     run_len: Long)
 
-/** Per-url state for [[StreamStage.changeStream]]: the above-watermark
-  * buffer plus the OPEN run (first row + length so far) — O(1) beyond the
-  * lateness buffer. */
-final case class ChangeBuf(ts: Array[Long], tie: Array[Long], vs: Array[Double],
-    runTs: Long, runTie: Long, runVal: Double, runLen: Long, primed: Boolean)
-
-/** One flagged point from [[StreamStage.madStream]] (bucket = epoch ms). */
 /** Output row of [[StreamStage.rateLimitStream]]. */
 final case class RlOut(url: String, ts: Long, tie: Long,
     burst_used: Double, violation: Boolean)
-
-/** Buffer + running meter of [[StreamStage.rateLimitStream]]: nano-token
-  * usage `s` as of `lastTs` (primed after the first event). */
-final case class RlStreamBuf(ts: Array[Long], tie: Array[Long],
-    vs: Array[Double], s: Long, lastTs: Long, primed: Boolean)
 
 /** Output row of [[StreamStage.trimmedStream]]. */
 final case class TrimOut(url: String, bucket: Long, n: Long,
     trimmed_each: Long, trimmed_mean: Double, winsor_mean: Double)
 
-/** One buffered open bucket of [[StreamStage.trimmedStream]]. */
-final case class TrimBuf(vs: Array[Double])
-
+/** One flagged point from [[StreamStage.madStream]] (bucket = epoch ms). */
 final case class MadOut(url: String, bucket: Long, tie: Long, value: Double,
     median: Double, mad: Double, is_outlier: Boolean)
-
-/** Per-(url, bucket) buffer for [[StreamStage.madStream]]: one bucket's
-  * (tie, value) rows, bounded by bucket span + lateness. */
-final case class MadBuf(tie: Array[Long], vs: Array[Double])
 
 /** One enriched left row from [[StreamStage.asofStream]]: the event plus
   * the most recent right-side payload with `right.ts <= ts` (None until the
@@ -130,24 +87,14 @@ final case class MadBuf(tie: Array[Long], vs: Array[Double])
 final case class AsofOut(url: String, ts: Long, tie: Long, value: Double,
     payload: Option[Double])
 
-/** Per-url state for [[StreamStage.asofStream]]: above-watermark buffered
-  * rows of BOTH sides plus the carried last right payload. The carry never
-  * expires (a future left row may need a right value from arbitrarily long
-  * ago), so steady state is O(1) per url — like the batch op's running
-  * last-value window, keyed. */
-final case class AsofBuf(ts: Array[Long], tie: Array[Long], side: Array[Int],
-    vs: Array[Double], last: Double, hasLast: Boolean)
+/** One row of either side of [[StreamStage.asofStream]]'s replay: side 0
+  * is the right (signal) side, side 1 the left (event) side. */
+final case class SidedPoint(url: String, ts: Long, side: Int, tie: Long,
+    value: Double)
 
 /** One CUSUM point from [[StreamStage.cusumStream]]. */
 final case class CusumOut(url: String, ts: Long, tie: Long, value: Double,
     cusum: Double, alarm: Boolean)
-
-/** Per-url state for [[StreamStage.cusumStream]]: the above-watermark
-  * buffer plus the running CUSUM statistic in integer cents — O(1) beyond
-  * the lateness buffer, and self-expiring (state is removable whenever the
-  * statistic has clamped back to 0, because that IS the seed). */
-final case class CusumBuf(ts: Array[Long], tie: Array[Long], vs: Array[Double],
-    s: Long)
 
 /** One smoothed point from [[StreamStage.holtStream]]. */
 final case class HoltOut(url: String, ts: Long, tie: Long, value: Double,
@@ -170,58 +117,32 @@ final case class QuantileBucketOut(url: String, bucket_start: Long, n: Long,
 final case class ZscoreOut(url: String, bucket_start: Long, ts: Long,
     value: Double, z: Option[Double], is_outlier: Boolean)
 
-/** Open-bucket state for [[StreamStage.zscoreStream]]: the bucket's rows,
-  * buffered until the watermark closes it (population stats need the whole
-  * bucket — the op is inherently two-pass). */
-final case class ZBuf(ts: Array[Long], vs: Array[Double])
-
 /** One closed-bucket time-weighted average from [[StreamStage.twaStream]]. */
 final case class TwaOut(url: String, bucket_start: Long, twa: Option[Double],
     span_ms: Long, n: Long)
-/** Open-bucket state for [[StreamStage.twaStream]]. */
-final case class TwaBuf(ts: Array[Long], tie: Array[Long], vs: Array[Double])
-
-/** Per-url state for [[StreamStage.holtStream]]: the above-watermark buffer
-  * plus the running (level, trend) pair. */
-final case class HoltBuf(ts: Array[Long], tie: Array[Long], vs: Array[Double],
-    l: Double, b: Double, primed: Boolean)
 
 /** One smoothed point from [[StreamStage.holtWintersStream]]. */
 final case class HwStreamOut(url: String, ts: Long, tie: Long, value: Double,
     level: Double, trend: Double, seasonal: Double, forecast: Double)
 
-/** Per-url state for [[StreamStage.holtWintersStream]]: the above-watermark
-  * buffer plus the running (level, trend, seasonal ring, ring rotation). */
-final case class HwBuf(ts: Array[Long], tie: Array[Long], vs: Array[Double],
-    l: Double, b: Double, seas: Array[Double], rot: Int, primed: Boolean)
+/** Running state of [[StreamStage.holtWintersStream]]: level, trend,
+  * seasonal ring and ring rotation. */
+final case class HwState(l: Double, b: Double, seas: Array[Double], rot: Int,
+    primed: Boolean)
 
 /** One funnel step completion — [[StreamStage.funnelStream]] appends exactly
   * one row per (user, step) the user reaches, at its completion event. */
 final case class FunnelStepOut(user: String, step: Int, ts: Long, tie: Long)
-/** Funnel replay state: buffered above-watermark events (value = step
-  * index) plus the user's progress (depth reached, completion ts). */
-final case class FunnelBuf(ts: Array[Long], tie: Array[Long], vs: Array[Double],
-    depth: Int, tsLast: Long)
 
 /** One CLOSED alert episode from [[StreamStage.hysteresisStream]] — same
   * fields as the batch [[graft.ops.AnalyticsOps.hysteresisAlerts]] rows. */
 final case class AlertEpisode(url: String, ep_start: Long, ep_end: Long,
     n_buckets: Long, peak: Double)
-/** Hysteresis replay state: buffered above-watermark buckets plus the
-  * firing flag and the open episode's O(1) accumulator. */
-final case class HystBuf(ts: Array[Long], tie: Array[Long], vs: Array[Double],
-    firing: Boolean, epStart: Long, epEnd: Long, n: Long, peak: Double)
 
 /** One closed-bucket burn-rate row from [[StreamStage.sloBurnStream]] —
   * same fields as the batch [[graft.ops.AnalyticsOps.sloBurnRate]]. */
 final case class SloOut(url: String, bucket: Long, err: Long, tot: Long,
     burn_short: Double, burn_long: Double, alert: Boolean)
-/** SLO replay state: buffered above-watermark rows, open buckets'
-  * error/total counters, and the ring of closed buckets the long window
-  * can still reach. */
-final case class SloBuf(ts: Array[Long], vs: Array[Double],
-    accB: Array[Long], accErr: Array[Long], accTot: Array[Long],
-    ringB: Array[Long], ringErr: Array[Long], ringTot: Array[Long])
 
 /** One M4-selected row from [[StreamStage.m4Stream]]. */
 final case class M4Out(url: String, bucket: Long, ts: Long, tie: Long,
@@ -238,12 +159,6 @@ final case class M4State(minTs: Long, maxTs: Long, minV: Double, maxV: Double,
   * fields as the batch [[graft.ops.AnalyticsOps.histogramDrift]]. */
 final case class DriftOut(url: String, period: Long, n: Long, m: Long,
     tvd: Double)
-/** Drift replay state: buffered above-watermark rows, open periods'
-  * histograms (flattened (period, bin) → count), and the LAST closed
-  * period's histogram for the next period's comparison. */
-final case class DriftBuf(ts: Array[Long], vs: Array[Double],
-    openP: Array[Long], openBin: Array[Long], openC: Array[Long],
-    prevPeriod: Long, prevBin: Array[Long], prevC: Array[Long])
 
 /** One closed-period PSI row from [[StreamStage.psiDriftStream]] — same
   * fields as the batch [[graft.ops.AnalyticsOps.psiDrift]]. */
@@ -258,12 +173,6 @@ final case class EmdOut(url: String, period: Long, n: Long, m: Long,
 /** One ranked-item event for [[StreamStage.rboDriftStream]]. */
 final case class RboEvent(item: String, ts: Long)
 
-/** [[StreamStage.rboDriftStream]] state: the lateness row buffer, open
-  * per-(period, item) counts, and the previous closed period's top-k. */
-final case class RboBuf(ts: Array[Long], items: Array[String],
-    openP: Array[Long], openItem: Array[String], openC: Array[Long],
-    prevPeriod: Long, prevItem: Array[String], prevRnk: Array[Int])
-
 /** One closed-period RBO row from [[StreamStage.rboDriftStream]] — same
   * fields as the batch [[graft.ops.AnalyticsOps.rboDrift]]. */
 final case class RboOut(period: Long, overlap_k: Long, rbo: Double)
@@ -272,43 +181,33 @@ final case class RboOut(period: Long, overlap_k: Long, rbo: Double)
   * same fields as the batch [[graft.ops.AnalyticsOps.calendarBaseline]]. */
 final case class CalOut(url: String, bucket: Long, n: Long, mean: Double,
     baseline: Option[Double], ratio: Option[Double])
-/** Calendar-baseline replay state: buffered above-watermark rows, open
-  * hourly buckets' (cents, n) accumulators, and the 24 hour-of-day
-  * trailing accumulators (decimal cents + counts). */
-final case class CalBuf(ts: Array[Long], vs: Array[Double],
-    openB: Array[Long], openC: Array[Long], openN: Array[Long],
-    hodC: Array[Long], hodN: Array[Long])
 
 /** One closed-day row from [[StreamStage.availabilityStream]] — same
   * fields as the batch [[graft.ops.AnalyticsOps.availability]]. */
 final case class AvailOut(url: String, day: Long, observed: Long,
     expected: Long, missing: Long, longest_gap_ms: Long)
-/** Availability state: the day's distinct observed buckets. */
-final case class AvailBuf(buckets: Array[Long])
 
 /** One closed-frame word from [[StreamStage.saxStream]] — same fields as
   * the batch [[graft.ops.DownsampleOps.quantileSax]]. */
 final case class SaxOut(url: String, frame: Long, word: String, n_slots: Long)
-/** SAX frame state: per-slot decimal-cents sums and counts. */
-final case class SaxBuf(slots: Array[Long], cents: Array[Long], ns: Array[Long])
 
 /** One closed-bucket row from [[StreamStage.counterIncreaseStream]] — same
   * fields as the batch [[graft.ops.AnalyticsOps.counterIncrease]]. */
 final case class IncOut(url: String, bucket: Long, increase: Option[Double],
     resets: Long, n: Long)
-/** Counter-increase bucket state: the buffered (ts, tie, value) rows. */
-final case class IncBuf(ts: Array[Long], tie: Array[Long], vs: Array[Double])
 
 /** One closed-period row from [[StreamStage.overlapSketchStream]] — same
   * fields as the batch [[graft.ops.AnalyticsOps.distinctOverlapSketch]]. */
 final case class OvlOut(key: String, period: Long, curr_est: Long,
     prev_est: Long, union_est: Long, retained_est: Long, jaccard_est: Double)
-/** Overlap-sketch state: buffered above-watermark (ts, member) rows, open
-  * periods' updatable HLL blobs, and the LAST closed period's compact blob
-  * for the next period's set algebra. */
-final case class OvlBuf(ts: Array[Long], member: Array[String],
-    openP: Array[Long], openSk: Array[Array[Byte]],
-    prevPeriod: Long, prevSk: Array[Byte])
+/** Group state of [[StreamStage]]'s buffered in-order replay: the rows
+  * still above the watermark plus the twin's running state. */
+final case class Replay[R, S](held: Seq[R], run: S)
+
+/** Group state of [[StreamStage]]'s ascending period close: the open
+  * periods' accumulators, the value carried from closed periods, and the
+  * newest closed period (`Long.MinValue` before the first close). */
+final case class Periods[A, C](open: Map[Long, A], carry: C, lastClosed: Long)
 
 /** Spark Structured Streaming wrapper for the streaming ClaSP state machine
   * (SURVEY.md §2.9). The reference ingests strictly in order with no late
@@ -322,7 +221,7 @@ object StreamStage {
     * magnitudes the decimal can't hold (the cast's NULL), so one poison
     * record can never kill a streaming query. Only for twins whose batch
     * side uses the decimal CAST; twins whose batch kernel uses
-    * `BigDecimal.valueOf` directly keep their own exact-throw helpers. */
+    * `BigDecimal.valueOf` directly use [[exactCents]]. */
   private def decimalCents(v: Double): Option[Long] = {
     if (!java.lang.Double.isFinite(v)) return None
     val u = java.math.BigDecimal.valueOf(v)
@@ -330,6 +229,28 @@ object StreamStage {
     if (u.abs.compareTo(java.math.BigInteger.valueOf(1000000000000L)) >= 0)
       None
     else Some(u.longValue)
+  }
+
+  /** Exact cents of `v` (HALF_UP to 2 decimals, `BigDecimal.valueOf` like
+    * the batch kernels); throws on non-finite or overflowing values. */
+  private def exactCents(v: Double): Long = java.math.BigDecimal.valueOf(v)
+    .setScale(2, java.math.RoundingMode.HALF_UP).unscaledValue.longValueExact
+
+  /** The decimal value of `c` cents as a double (the DECIMAL→DOUBLE cast). */
+  private def centsDouble(c: Long): Double =
+    new java.math.BigDecimal(java.math.BigInteger.valueOf(c), 2).doubleValue
+
+  /** Start of the `spanMs`-wide epoch-aligned bucket holding `ts`. */
+  private def bucketOf(ts: Long, spanMs: Long): Long =
+    ts - math.floorMod(ts, spanMs)
+
+  /** The shared event-time prelude: an `event_time` column from the epoch
+    * millis in `ts`, watermarked with `lateness`. */
+  private def watermarked(df: DataFrame, lateness: String,
+      ts: String = "ts"): DataFrame = {
+    import org.apache.spark.sql.functions.{col, timestamp_millis}
+    df.withColumn("event_time", timestamp_millis(col(ts)))
+      .withWatermark("event_time", lateness)
   }
 
   /** Config for the per-url detector.
@@ -370,9 +291,7 @@ object StreamStage {
       tier: String = "1m",
       lateness: String = "10 minutes"): Dataset[org.apache.spark.sql.Row] = {
     import org.apache.spark.sql.functions._
-    points.toDF()
-      .withColumn("event_time", timestamp_millis(col("ts")))
-      .withWatermark("event_time", lateness)
+    watermarked(points.toDF(), lateness)
       .groupBy(col("url"), window(col("event_time"), s"$bucketMs milliseconds"))
       .agg(count(lit(1)).as("cnt"), sum("value").as("sum"),
         min("value").as("min"), max("value").as("max"),
@@ -398,9 +317,7 @@ object StreamStage {
     import org.apache.spark.sql.functions._
     require(bucketMs > 0, s"bucketMs must be positive, got $bucketMs")
     require(binWidth > 0, s"binWidth must be positive, got $binWidth")
-    points.toDF()
-      .withColumn("event_time", timestamp_millis(col("ts")))
-      .withWatermark("event_time", lateness)
+    watermarked(points.toDF(), lateness)
       .groupBy(col("url"), window(col("event_time"), s"$bucketMs milliseconds"),
         floor(col("value") / lit(binWidth)).cast("long").as("bin"))
       .agg(count(lit(1)).as("cnt"),
@@ -425,9 +342,7 @@ object StreamStage {
     import org.apache.spark.sql.functions._
     import graft.functions.OrderedAggregates.{firstByOrd, lastByOrd}
     require(bucketMs > 0, s"bucketMs must be positive, got $bucketMs")
-    points.toDF()
-      .withColumn("event_time", timestamp_millis(col("ts")))
-      .withWatermark("event_time", lateness)
+    watermarked(points.toDF(), lateness)
       .groupBy(col("url"), window(col("event_time"), s"$bucketMs milliseconds"))
       .agg(
         firstByOrd(col("value"), col("ts"), col("value")).as("open"),
@@ -459,9 +374,7 @@ object StreamStage {
       lateness: String = "10 minutes"): Dataset[org.apache.spark.sql.Row] = {
     import org.apache.spark.sql.functions._
     require(rsd > 0, s"rsd must be positive, got $rsd")
-    events.toDF()
-      .withColumn("event_time", timestamp_millis(col("ts")))
-      .withWatermark("event_time", lateness)
+    watermarked(events.toDF(), lateness)
       .groupBy(window(col("event_time"), "1 day"))
       .agg(count(lit(1)).as("cnt"),
         approx_count_distinct(col("user"), rsd).as("users_approx"),
@@ -479,8 +392,8 @@ object StreamStage {
     * `d` after previous day `p` appends one MEMBERSHIP row per trailing
     * window in [max(d, p+w), d+w−1] — ranges from successive days never
     * overlap, so each (key, window) row appends EXACTLY ONCE and is never
-    * retracted. State: the O(lateness) buffer plus one (prevDay, primed)
-    * pair per key; a primed key's state persists (its last active day
+    * retracted. State: the O(lateness) buffer plus the last active day
+    * per key; a primed key's state persists (its last active day
     * gates all future coverage) — the same O(keys) tier as
     * [[sessionizeStream]].
     *
@@ -505,33 +418,25 @@ object StreamStage {
     val win = windowDays.toLong * dayMs
     val points = events.map(a =>
       TiedPoint(a.user, Math.floorDiv(a.ts, dayMs) * dayMs, 0L, 0.0))
-    bufferedReplay[CoverBuf, CoverOut](points, lateness,
-        CoverBuf(Array.emptyLongArray, Array.emptyLongArray,
-          Array.emptyDoubleArray, 0L, false))(
-      s => (s.ts, s.tie, s.vs),
-      // a busy key would otherwise buffer one row PER EVENT until its day
-      // drains — the drain only consumes distinct days (tie/value are
-      // constant 0), so dedup the hold to O(buffered days) state
-      (s, t, q, v) => {
-        val td = t.distinct
-        s.copy(ts = td, tie = new Array[Long](td.length),
-          vs = new Array[Double](td.length))
-      },
-      s => !s.primed,
-      (user, st, ready) => {
-        var prev = st.prevDay
-        var primed = st.primed
-        val out = Vector.newBuilder[CoverOut]
-        ready.foreach { case (d, _, _) =>
-          if (!primed || d > prev) { // same-day repeats are no-ops
-            var w = if (!primed) d else math.max(d, prev + win)
-            val hi = d + win - dayMs
-            while (w <= hi) { out += CoverOut(user, w); w += dayMs }
-            prev = d; primed = true
-          }
+    // running state: the last drained active day, None until primed.
+    // A busy key would otherwise buffer one row PER EVENT until its day
+    // drains — the drain only consumes distinct days (tie/value are
+    // constant 0), so the hold is deduped to O(buffered days) state
+    bufferedReplay(points, lateness, Option.empty[Long])(
+        _.url, _.ts, byTsTie, _.isEmpty, _.distinct) { (user, prev0, ready) =>
+      var prev = prev0
+      val out = Vector.newBuilder[CoverOut]
+      ready.foreach { p =>
+        val d = p.ts
+        if (prev.forall(d > _)) { // same-day repeats are no-ops
+          var w = prev.fold(d)(pd => math.max(d, pd + win))
+          val hi = d + win - dayMs
+          while (w <= hi) { out += CoverOut(user, w); w += dayMs }
+          prev = Some(d)
         }
-        (out.result(), st.copy(prevDay = prev, primed = primed))
-      })
+      }
+      (out.result(), prev)
+    }
   }
 
   /** Stage 2 of the exact trailing-actives twin: a NATIVE watermarked
@@ -551,10 +456,8 @@ object StreamStage {
       windowDays: Int = 7): Dataset[org.apache.spark.sql.Row] = {
     import org.apache.spark.sql.functions._
     require(windowDays >= 1, s"windowDays must be >= 1, got $windowDays")
-    cover.toDF()
-      .withColumn("cover_time", timestamp_millis(col("dayMs")))
-      .withWatermark("cover_time", s"${windowDays * 24} hours")
-      .groupBy(window(col("cover_time"), "1 day"))
+    watermarked(cover.toDF(), s"${windowDays * 24} hours", "dayMs")
+      .groupBy(window(col("event_time"), "1 day"))
       .agg(count(lit(1)).as("actives"))
       .select(unix_millis(col("window.start")).as("day_ms"), col("actives"))
   }
@@ -587,9 +490,7 @@ object StreamStage {
     // row expression (no reference to the window struct needed)
     val x = floor(pmod(col("ts"), lit(bucketMs)) / lit(1000.0)).cast("long")
     val y = round(col("value") * lit(scale)).cast("long")
-    val stats = points.toDF()
-      .withColumn("event_time", timestamp_millis(col("ts")))
-      .withWatermark("event_time", lateness)
+    val stats = watermarked(points.toDF(), lateness)
       .groupBy(col("url"), window(col("event_time"), s"$bucketMs milliseconds"))
       .agg(count(lit(1)).as("n"),
         sum(x).as("sx"), sum(y).as("sy"),
@@ -621,9 +522,7 @@ object StreamStage {
       lateness: String = "10 minutes"): Dataset[org.apache.spark.sql.Row] = {
     import org.apache.spark.sql.functions._
     require(bucketMs > 0, s"bucketMs must be positive, got $bucketMs")
-    val cells = events.toDF()
-      .withColumn("event_time", timestamp_millis(col("ts")))
-      .withWatermark("event_time", lateness)
+    val cells = watermarked(events.toDF(), lateness)
       .groupBy(col("user").as("key"),
         window(col("event_time"), s"$bucketMs milliseconds"),
         col("etype").as("type"))
@@ -668,9 +567,7 @@ object StreamStage {
     val spark = points.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    points.toDF()
-      .withColumn("event_time", timestamp_millis(col("ts")))
-      .withWatermark("event_time", lateness)
+    watermarked(points.toDF(), lateness)
       .select(col("url"), col("ts"), col("event_time"))
       .as[(String, Long, java.sql.Timestamp)]
       .groupByKey(_._1)
@@ -732,9 +629,7 @@ object StreamStage {
     val spark = points.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    points.toDF()
-      .withColumn("event_time", timestamp_millis(col("ts")))
-      .withWatermark("event_time", lateness)
+    watermarked(points.toDF(), lateness)
       .select(col("url"), col("ts"), col("event_time"))
       .as[(String, Long, java.sql.Timestamp)]
       .groupByKey(_._1)
@@ -778,64 +673,148 @@ object StreamStage {
         })
   }
 
+  /** DRIVER (1), per-(key, bucket) close-on-watermark — the whole-bucket
+    * twins (z-score, MAD, M4, heavy hitters, …): rows fold into their
+    * (key, bucket) group's state as they arrive (`fold`: an order-free
+    * accumulator, or simply the bucket's rows), and once the watermark
+    * passes the bucket end the event-time timeout emits
+    * `close(key, bucket, state)` exactly once and removes the state —
+    * the append-once discipline of [[sessionizeStream]]. State is
+    * O(open buckets), bounded by bucket span + lateness, never the stream.
+    * `zero` is by-name: sketch states update in place, so every new group
+    * needs its own. */
+  private def closeOnWatermark[R, S: Encoder, O: Encoder](
+      rows: Dataset[R], lateness: String, bucketMs: Long, zero: => S)(
+      key: R => String, ts: R => Long, fold: (S, Iterator[R]) => S)(
+      close: (String, Long, S) => IterableOnce[O]): Dataset[O] = {
+    require(bucketMs > 0, s"bucketMs must be positive, got $bucketMs")
+    val spark = rows.sparkSession
+    import spark.implicits._
+    watermarked(rows.toDF(), lateness).as(rows.encoder)
+      .groupByKey(r => (key(r), bucketOf(ts(r), bucketMs)))
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
+        (k: (String, Long), in: Iterator[R], state: GroupState[S]) =>
+          if (state.hasTimedOut) {
+            val s = state.get
+            state.remove()
+            close(k._1, k._2, s).iterator
+          } else {
+            state.update(fold(state.getOption.getOrElse(zero), in))
+            // fire once the watermark passes the bucket end
+            state.setTimeoutTimestamp(math.max(k._2 + bucketMs,
+              state.getCurrentWatermarkMs() + 1L))
+            Iterator.empty
+          })
+  }
+
+  /** DRIVER (2), per-key ascending period close with a carried value — the
+    * twins that compare each closed period with what closed before it
+    * (drift vs the previous histogram, top-k or sketch; SLO burn and
+    * rolling correlation over a ring of closed buckets; calendar baselines
+    * over hour-of-day sums). Their accumulators are order-free, so rows
+    * fold into their open period on arrival (`keep` skips rows that only
+    * advance the watermark): a row above the watermark can never fall in
+    * a closing period. Periods the watermark has passed close in
+    * ascending order through `close(key, period, lastClosed, acc, carry)`,
+    * which emits rows and returns the next carry. A row whose period has
+    * already closed is a beyond-lateness straggler and is dropped:
+    * re-opening a closed period would regress the carry. The carry is
+    * needed until the watermark reaches the newest closed period +
+    * `horizon` (`Long.MaxValue`: the key's lifetime); the state is removed
+    * once no period is open and the carry is dead. */
+  private def periodClose[R, A: TypeTag, C: TypeTag, O: Encoder](
+      rows: Dataset[R], lateness: String, periodMs: Long, horizon: Long)(
+      key: R => String, ts: R => Long, zero: => A, fold: (A, Seq[R]) => A,
+      carry: => C, keep: R => Boolean = (_: R) => true)(
+      close: (String, Long, Long, A, C) => (IterableOnce[O], C)): Dataset[O] = {
+    val spark = rows.sparkSession
+    import spark.implicits._
+    watermarked(rows.toDF(), lateness).as(rows.encoder)
+      .groupByKey(key)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
+        (k: String, in: Iterator[R], state: GroupState[Periods[A, C]]) => {
+          val st = state.getOption
+            .getOrElse(Periods(Map.empty[Long, A], carry, Long.MinValue))
+          var open = st.open
+          in.filter(keep).toSeq.groupBy(r => bucketOf(ts(r), periodMs))
+            .foreach { case (p, rs) =>
+              if (p > st.lastClosed)
+                open = open.updated(p, fold(open.getOrElse(p, zero), rs))
+            }
+          val wm = state.getCurrentWatermarkMs()
+          var (c, last) = (st.carry, st.lastClosed)
+          val out = Vector.newBuilder[O]
+          open.keys.filter(_ + periodMs <= wm).toSeq.sorted.foreach { p =>
+            val (o, next) = close(k, p, last, open(p), c)
+            out ++= o; c = next; last = p
+          }
+          open = open.filter(_._1 + periodMs > wm)
+          val expiry =
+            if (last == Long.MinValue || horizon == Long.MaxValue) None
+            else Some(last + horizon)
+          if (open.isEmpty && horizon != Long.MaxValue && expiry.forall(wm >= _))
+            state.remove()
+          else {
+            state.update(Periods(open, c, last))
+            (open.keys.map(_ + periodMs) ++ expiry).minOption.foreach(w =>
+              state.setTimeoutTimestamp(math.max(w, wm + 1L)))
+          }
+          out.result().iterator
+        })
+  }
+
+  /** DRIVER (3), buffered in-order replay — the order-sensitive twins
+    * (EWMA, delta/rate, Holt, CUSUM, funnel, as-of, …): per key, rows
+    * above the watermark are held in group state and the now-final
+    * ≤watermark prefix drains in `order` on every invocation (and on
+    * event-time timeout, so tails flush without new data). The twin
+    * supplies only its running state and `drain(key, state, ready)`; the
+    * row buffer, watermark split, state carry and timeout arming live
+    * here once. `compact` may shrink the held rows for a twin whose drain
+    * ignores repeats. The state is removed only on a call that holds and
+    * drains nothing while `removable` holds for the running state. */
+  private def bufferedReplay[R: TypeTag, S: TypeTag, O: Encoder](
+      rows: Dataset[R], lateness: String, init: S)(
+      key: R => String, ts: R => Long, order: Ordering[R],
+      removable: S => Boolean, compact: Seq[R] => Seq[R] = (h: Seq[R]) => h)(
+      drain: (String, S, Seq[R]) => (IterableOnce[O], S)): Dataset[O] = {
+    val spark = rows.sparkSession
+    import spark.implicits._
+    watermarked(rows.toDF(), lateness).as(rows.encoder)
+      .groupByKey(key)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
+        (k: String, in: Iterator[R], state: GroupState[Replay[R, S]]) => {
+          val st = state.getOption.getOrElse(Replay(Seq.empty[R], init))
+          val wm = state.getCurrentWatermarkMs()
+          // stable sort: rows equal under `order` keep their arrival order
+          val (ready, hold) = (st.held ++ in).sorted(order).partition(ts(_) <= wm)
+          val (out, run) = drain(k, st.run, ready)
+          if (hold.isEmpty && ready.isEmpty && removable(run)) state.remove()
+          else {
+            state.update(Replay(compact(hold), run))
+            // fire once the watermark passes the earliest held row
+            if (hold.nonEmpty)
+              state.setTimeoutTimestamp(math.max(ts(hold.head), wm + 1L))
+          }
+          out.iterator
+        })
+  }
+
+  /** Replay order of [[TiedPoint]] rows: dup-ts rows order by the explicit
+    * tie, matching the batch ops. */
+  private val byTsTie: Ordering[TiedPoint] = Ordering.by(p => (p.ts, p.tie))
+
   /** STREAMING per-url EWMA with correct event-time ordering.
     *
     * EWMA is order-sensitive, so rows cannot be smoothed as they arrive
     * when the stream can reorder within the lateness window. Each url
     * buffers rows still above the watermark and, whenever the watermark
     * advances (new rows or event-time timeout), drains the now-final
-    * prefix in (ts, value) order through the recurrence — emitting exactly
-    * the sequential batch result. State per url is the running (y, primed)
-    * pair plus the O(lateness-window) row buffer; an event-time timeout
-    * flushes tail rows without requiring new data for that url. */
-  /** Shared scaffolding of the order-correct streaming twins (EWMA,
-    * delta/rate, Holt): rows above the watermark are buffered in group
-    * state and the now-final ≤watermark prefix is drained in (ts, tie)
-    * order on every invocation (and on event-time timeout, so tails flush
-    * without new data). The op supplies only its running-state fields and
-    * the per-row step; buffer merge, watermark split, state carry, and
-    * timeout arming live here ONCE. */
-  private def bufferedReplay[S, O](
-      points: Dataset[TiedPoint],
-      lateness: String,
-      init: S)(
-      buf: S => (Array[Long], Array[Long], Array[Double]),
-      rebuf: (S, Array[Long], Array[Long], Array[Double]) => S,
-      removable: S => Boolean,
-      drain: (String, S, Array[(Long, Long, Double)]) => (Vector[O], S))(
-      implicit se: Encoder[S], oe: Encoder[O]): Dataset[O] = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    points.toDF()
-      .withColumn("event_time", timestamp_millis(col("ts")))
-      .withWatermark("event_time", lateness)
-      .select(col("url"), col("ts"), col("tie"), col("value"), col("event_time"))
-      .as[(String, Long, Long, Double, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (url: String, rows: Iterator[(String, Long, Long, Double, java.sql.Timestamp)],
-         state: GroupState[S]) => {
-          val st = state.getOption.getOrElse(init)
-          val (bts, btie, bvs) = buf(st)
-          val incoming = rows.map(r => (r._2, r._3, r._4)).toArray
-          // dup-ts rows order by the explicit tie, matching the batch ops
-          val all = (bts.lazyZip(btie).lazyZip(bvs).toArray ++ incoming)
-            .sortBy { case (t, q, _) => (t, q) }
-          val wm = state.getCurrentWatermarkMs()
-          val (ready, hold) = all.partition(_._1 <= wm)
-          val (out, drained) = drain(url, st, ready)
-          if (hold.isEmpty && ready.isEmpty && removable(drained)) state.remove()
-          else {
-            state.update(rebuf(drained, hold.map(_._1), hold.map(_._2), hold.map(_._3)))
-            if (hold.nonEmpty)
-              // fire once the watermark passes the earliest held row
-              state.setTimeoutTimestamp(math.max(hold.head._1, wm + 1L))
-          }
-          out.iterator
-        })
-  }
-
+    * prefix in (ts, tie) order through the recurrence — emitting exactly
+    * the sequential batch result ([[bufferedReplay]]). State per url is
+    * the running smoother (None until primed) plus the O(lateness-window)
+    * row buffer; an event-time timeout flushes tail rows without
+    * requiring new data for that url. */
   def ewmaStream(
       points: Dataset[TiedPoint],
       alpha: Double,
@@ -844,21 +823,15 @@ object StreamStage {
     val spark = points.sparkSession
     import spark.implicits._
     val beta = 1.0 - alpha
-    bufferedReplay[EwmaBuf, EwmaOut](points, lateness,
-        EwmaBuf(Array.emptyLongArray, Array.emptyLongArray,
-          Array.emptyDoubleArray, 0.0, false))(
-      s => (s.ts, s.tie, s.vs),
-      (s, t, q, v) => s.copy(ts = t, tie = q, vs = v),
-      s => !s.primed,
-      (url, st, ready) => {
-        var y = st.y
-        var primed = st.primed
-        val out = ready.iterator.map { case (t, q, v) =>
-          y = if (!primed) { primed = true; v } else beta * y + alpha * v
-          EwmaOut(url, t, q, v, y)
-        }.toVector
-        (out, st.copy(y = y, primed = primed))
-      })
+    bufferedReplay(points, lateness, Option.empty[Double])(
+        _.url, _.ts, byTsTie, _.isEmpty) { (url, y0, ready) =>
+      var y = y0
+      val out = ready.map { p =>
+        y = Some(y.fold(p.value)(beta * _ + alpha * p.value))
+        EwmaOut(url, p.ts, p.tie, p.value, y.get)
+      }
+      (out, y)
+    }
   }
 
   /** STREAMING per-url first-difference / per-second rate — the unbounded
@@ -875,28 +848,23 @@ object StreamStage {
       lateness: String = "10 minutes"): Dataset[DeltaOut] = {
     val spark = points.sparkSession
     import spark.implicits._
-    bufferedReplay[DeltaBuf, DeltaOut](points, lateness,
-        DeltaBuf(Array.emptyLongArray, Array.emptyLongArray,
-          Array.emptyDoubleArray, 0L, 0.0, false))(
-      s => (s.ts, s.tie, s.vs),
-      (s, t, q, v) => s.copy(ts = t, tie = q, vs = v),
-      s => !s.primed,
-      (url, st, ready) => {
-        var prevTs = st.prevTs
-        var prevVal = st.prevVal
-        var primed = st.primed
-        val out = ready.iterator.map { case (t, q, v) =>
-          val row = if (!primed) DeltaOut(url, t, q, v, None, None)
-          else {
-            val d = v - prevVal
-            val rate = if (t > prevTs) Some(d / ((t - prevTs) / 1000.0)) else None
-            DeltaOut(url, t, q, v, Some(d), rate)
-          }
-          primed = true; prevTs = t; prevVal = v
-          row
-        }.toVector
-        (out, st.copy(prevTs = prevTs, prevVal = prevVal, primed = primed))
-      })
+    // running state: the last drained (ts, value), None at the series head
+    bufferedReplay(points, lateness, Option.empty[(Long, Double)])(
+        _.url, _.ts, byTsTie, _.isEmpty) { (url, prev0, ready) =>
+      var prev = prev0
+      val out = ready.map { p =>
+        val row = prev.fold(DeltaOut(url, p.ts, p.tie, p.value, None, None)) {
+          case (prevTs, prevVal) =>
+            val d = p.value - prevVal
+            val rate =
+              if (p.ts > prevTs) Some(d / ((p.ts - prevTs) / 1000.0)) else None
+            DeltaOut(url, p.ts, p.tie, p.value, Some(d), rate)
+        }
+        prev = Some((p.ts, p.value))
+        row
+      }
+      (out, prev)
+    }
   }
 
   /** STREAMING change-only (LOCF) compression — the unbounded twin of
@@ -908,33 +876,27 @@ object StreamStage {
     * twins). Values compare exactly (the batch op's semantics), state per
     * url is the O(lateness) buffer plus one open-run record, and a url
     * whose stream pauses simply holds its open run until the next change
-    * — nothing is ever re-emitted or revised. */
+    * — nothing is ever re-emitted or revised. The open run is carried as
+    * its would-be output row (None before the first row). */
   def changeStream(
       points: Dataset[TiedPoint],
       lateness: String = "10 minutes"): Dataset[ChangeOut] = {
     val spark = points.sparkSession
     import spark.implicits._
-    bufferedReplay[ChangeBuf, ChangeOut](points, lateness,
-        ChangeBuf(Array.emptyLongArray, Array.emptyLongArray,
-          Array.emptyDoubleArray, 0L, 0L, 0.0, 0L, false))(
-      s => (s.ts, s.tie, s.vs),
-      (s, t, q, v) => s.copy(ts = t, tie = q, vs = v),
-      s => !s.primed,
-      (url, st, ready) => {
-        var (rTs, rTie, rVal, rLen, primed) =
-          (st.runTs, st.runTie, st.runVal, st.runLen, st.primed)
-        val out = Vector.newBuilder[ChangeOut]
-        ready.foreach { case (t, q, v) =>
-          if (!primed) { rTs = t; rTie = q; rVal = v; rLen = 1L; primed = true }
-          else if (v == rVal) rLen += 1L
-          else {
-            out += ChangeOut(url, rTs, rTie, rVal, rLen)
-            rTs = t; rTie = q; rVal = v; rLen = 1L
-          }
+    bufferedReplay(points, lateness, Option.empty[ChangeOut])(
+        _.url, _.ts, byTsTie, _.isEmpty) { (url, run0, ready) =>
+      var run = run0
+      val out = Vector.newBuilder[ChangeOut]
+      ready.foreach { p =>
+        run = run match {
+          case Some(r) if p.value == r.value => Some(r.copy(run_len = r.run_len + 1L))
+          case _ =>
+            out ++= run
+            Some(ChangeOut(url, p.ts, p.tie, p.value, 1L))
         }
-        (out.result(), st.copy(runTs = rTs, runTie = rTie, runVal = rVal,
-          runLen = rLen, primed = primed))
-      })
+      }
+      (out.result(), run)
+    }
   }
 
   /** STREAMING one-sided CUSUM drift detection — the unbounded twin of
@@ -954,24 +916,17 @@ object StreamStage {
     require(h > 0, s"alarm threshold h must be positive, got $h")
     val spark = points.sparkSession
     import spark.implicits._
-    def cents(v: Double): Long = java.math.BigDecimal.valueOf(v)
-      .setScale(2, java.math.RoundingMode.HALF_UP).unscaledValue.longValueExact
-    val kC = cents(k)
-    val hC = cents(h)
-    bufferedReplay[CusumBuf, CusumOut](points, lateness,
-        CusumBuf(Array.emptyLongArray, Array.emptyLongArray,
-          Array.emptyDoubleArray, 0L))(
-      s => (s.ts, s.tie, s.vs),
-      (s, t, q, v) => s.copy(ts = t, tie = q, vs = v),
-      s => s.s == 0L,
-      (url, st, ready) => {
-        var s = st.s
-        val out = ready.iterator.map { case (t, q, v) =>
-          s = math.max(0L, s + cents(v) - kC)
-          CusumOut(url, t, q, v, s.toDouble / 100.0, s > hC)
-        }.toVector
-        (out, st.copy(s = s))
-      })
+    val kC = exactCents(k)
+    val hC = exactCents(h)
+    bufferedReplay(points, lateness, 0L)(
+        _.url, _.ts, byTsTie, _ == 0L) { (url, s0, ready) =>
+      var s = s0
+      val out = ready.map { p =>
+        s = math.max(0L, s + exactCents(p.value) - kC)
+        CusumOut(url, p.ts, p.tie, p.value, s.toDouble / 100.0, s > hC)
+      }
+      (out, s)
+    }
   }
 
   /** STREAMING token-bucket rate-limit audit — the unbounded twin of
@@ -999,24 +954,20 @@ object StreamStage {
     val c = 1000000000L
     val r = Math.round(ratePerSec * 1e6)   // nano-tokens per ms
     val burstNano = Math.round(burst * 1e9)
-    bufferedReplay[RlStreamBuf, RlOut](points, lateness,
-        RlStreamBuf(Array.emptyLongArray, Array.emptyLongArray,
-          Array.emptyDoubleArray, 0L, Long.MinValue, false))(
-      s => (s.ts, s.tie, s.vs),
-      (s, t, q, v) => s.copy(ts = t, tie = q, vs = v),
-      s => !s.primed,
-      (url, st, ready) => {
-        var s = st.s
-        var lastTs = st.lastTs
-        var primed = st.primed
-        val out = ready.iterator.map { case (t, q, _) =>
-          s = if (primed) math.max(0L, s - r * (t - lastTs)) + c
-              else { primed = true; c }
-          lastTs = t
-          RlOut(url, t, q, s.toDouble / 1.0e9, s > burstNano)
-        }.toVector
-        (out, st.copy(s = s, lastTs = lastTs, primed = primed))
-      })
+    // running meter: nano-token usage as of the last event's ts (None
+    // before the first event)
+    bufferedReplay(points, lateness, Option.empty[(Long, Long)])(
+        _.url, _.ts, byTsTie, _.isEmpty) { (url, meter0, ready) =>
+      var meter = meter0
+      val out = ready.map { p =>
+        val s = meter.fold(c) { case (s0, lastTs) =>
+          math.max(0L, s0 - r * (p.ts - lastTs)) + c
+        }
+        meter = Some((s, p.ts))
+        RlOut(url, p.ts, p.tie, s.toDouble / 1.0e9, s > burstNano)
+      }
+      (out, meter)
+    }
   }
 
   /** STREAMING two-threshold hysteresis alerting — the unbounded twin of
@@ -1027,7 +978,8 @@ object StreamStage {
     * (≤ watermark) bucket at or below `lo` arrives — so the emitted set
     * equals the batch op's episodes restricted to those that have closed;
     * a still-open episode lives only in state until its clearing bucket.
-    * State per url: the O(lateness) row buffer + one O(1) accumulator. */
+    * State per url: the O(lateness) row buffer + the open episode (None
+    * while not firing). */
   def hysteresisStream(
       points: Dataset[TiedPoint],
       hi: Double,
@@ -1036,28 +988,21 @@ object StreamStage {
     require(hi > lo, s"hysteresis needs hi > lo, got hi=$hi lo=$lo")
     val spark = points.sparkSession
     import spark.implicits._
-    bufferedReplay[HystBuf, AlertEpisode](points, lateness,
-        HystBuf(Array.emptyLongArray, Array.emptyLongArray,
-          Array.emptyDoubleArray, false, 0L, 0L, 0L, 0.0))(
-      s => (s.ts, s.tie, s.vs),
-      (s, t, q, v) => s.copy(ts = t, tie = q, vs = v),
-      s => !s.firing,
-      (url, st, ready) => {
-        var firing = st.firing
-        var epStart = st.epStart; var epEnd = st.epEnd
-        var n = st.n; var peak = st.peak
-        val out = Vector.newBuilder[AlertEpisode]
-        ready.foreach { case (t, _, v) =>
-          val nowFiring = if (v >= hi) true else if (v <= lo) false else firing
-          if (nowFiring) {
-            if (!firing) { epStart = t; n = 0L; peak = Double.NegativeInfinity }
-            epEnd = t; n += 1L; peak = math.max(peak, v)
-          } else if (firing) out += AlertEpisode(url, epStart, epEnd, n, peak)
-          firing = nowFiring
-        }
-        (out.result(), st.copy(firing = firing, epStart = epStart,
-          epEnd = epEnd, n = n, peak = peak))
-      })
+    bufferedReplay(points, lateness, Option.empty[AlertEpisode])(
+        _.url, _.ts, byTsTie, _.isEmpty) { (url, ep0, ready) =>
+      var ep = ep0
+      val out = Vector.newBuilder[AlertEpisode]
+      ready.foreach { p =>
+        val v = p.value
+        if (v >= hi || (ep.nonEmpty && !(v <= lo))) {
+          val e = ep.getOrElse(
+            AlertEpisode(url, p.ts, p.ts, 0L, Double.NegativeInfinity))
+          ep = Some(e.copy(ep_end = p.ts, n_buckets = e.n_buckets + 1L,
+            peak = math.max(e.peak, v)))
+        } else { out ++= ep; ep = None }
+      }
+      (out.result(), ep)
+    }
   }
 
   /** STREAMING per-url Holt double-exponential smoothing — the unbounded
@@ -1068,7 +1013,8 @@ object StreamStage {
     * to the drained ≤watermark prefix in (ts, tie) order (φ = 1 default:
     * classic Holt; φ < 1: damped trend, matching the batch op's `phi`).
     * Emits level, trend, and the one-step forecast level + φ·trend per
-    * point. State per url is the O(lateness) buffer plus two doubles. */
+    * point. State per url is the O(lateness) buffer plus the
+    * (level, trend) pair, None until primed. */
   def holtStream(
       points: Dataset[TiedPoint],
       alpha: Double,
@@ -1080,27 +1026,20 @@ object StreamStage {
     require(phi > 0 && phi <= 1, s"phi must be in (0, 1], got $phi")
     val spark = points.sparkSession
     import spark.implicits._
-    bufferedReplay[HoltBuf, HoltOut](points, lateness,
-        HoltBuf(Array.emptyLongArray, Array.emptyLongArray,
-          Array.emptyDoubleArray, 0.0, 0.0, false))(
-      s => (s.ts, s.tie, s.vs),
-      (s, t, q, v) => s.copy(ts = t, tie = q, vs = v),
-      s => !s.primed,
-      (url, st, ready) => {
-        var l = st.l
-        var b = st.b
-        var primed = st.primed
-        val out = ready.iterator.map { case (t, q, v) =>
-          if (!primed) { primed = true; l = v; b = 0.0 }
-          else {
-            val lPrev = l
-            l = alpha * v + (1 - alpha) * (l + phi * b)
-            b = betaT * (l - lPrev) + (1 - betaT) * (phi * b)
-          }
-          HoltOut(url, t, q, v, l, b, l + phi * b)
-        }.toVector
-        (out, st.copy(l = l, b = b, primed = primed))
-      })
+    bufferedReplay(points, lateness, Option.empty[(Double, Double)])(
+        _.url, _.ts, byTsTie, _.isEmpty) { (url, lb0, ready) =>
+      var lb = lb0
+      val out = ready.map { p =>
+        val v = p.value
+        val (l, b) = lb.fold((v, 0.0)) { case (lPrev, bPrev) =>
+          val l = alpha * v + (1 - alpha) * (lPrev + phi * bPrev)
+          (l, betaT * (l - lPrev) + (1 - betaT) * (phi * bPrev))
+        }
+        lb = Some((l, b))
+        HoltOut(url, p.ts, p.tie, v, l, b, l + phi * b)
+      }
+      (out, lb)
+    }
   }
 
   /** STREAMING per-url additive Holt-Winters — the unbounded twin of
@@ -1124,34 +1063,31 @@ object StreamStage {
     val spark = points.sparkSession
     import spark.implicits._
     val m = period
-    bufferedReplay[HwBuf, HwStreamOut](points, lateness,
-        HwBuf(Array.emptyLongArray, Array.emptyLongArray, Array.emptyDoubleArray,
-          0.0, 0.0, new Array[Double](m), 0, false))(
-      s => (s.ts, s.tie, s.vs),
-      (s, t, q, v) => s.copy(ts = t, tie = q, vs = v),
-      s => !s.primed,
-      (url, st, ready) => {
-        var l = st.l
-        var b = st.b
-        val q = st.seas.clone()
-        var rot = st.rot
-        var primed = st.primed
-        val out = ready.iterator.map { case (t, qq, x) =>
-          if (!primed) { primed = true; l = x; b = 0.0 }
-          // identical arithmetic to AnalyticsOps.holtWinters' chunk walk
-          val qmIdx = (rot + m - 1) % m
-          val qm = q(qmIdx)
-          val lPrev = l
-          l = (1 - alpha) * (l + b) + alpha * (x - qm)
-          b = betaT * (l - lPrev) + (1 - betaT) * b
-          val sNew = gamma * (x - l) + (1 - gamma) * qm
-          q(qmIdx) = sNew
-          rot = (rot + m - 1) % m
-          val fc = l + b + q((rot + m - 1) % m)
-          HwStreamOut(url, t, qq, x, l, b, sNew, fc)
-        }.toVector
-        (out, st.copy(l = l, b = b, seas = q, rot = rot, primed = primed))
-      })
+    bufferedReplay(points, lateness,
+        HwState(0.0, 0.0, new Array[Double](m), 0, false))(
+        _.url, _.ts, byTsTie, !_.primed) { (url, st, ready) =>
+      var l = st.l
+      var b = st.b
+      val q = st.seas.clone()
+      var rot = st.rot
+      var primed = st.primed
+      val out = ready.map { p =>
+        val x = p.value
+        if (!primed) { primed = true; l = x; b = 0.0 }
+        // identical arithmetic to AnalyticsOps.holtWinters' chunk walk
+        val qmIdx = (rot + m - 1) % m
+        val qm = q(qmIdx)
+        val lPrev = l
+        l = (1 - alpha) * (l + b) + alpha * (x - qm)
+        b = betaT * (l - lPrev) + (1 - betaT) * b
+        val sNew = gamma * (x - l) + (1 - gamma) * qm
+        q(qmIdx) = sNew
+        rot = (rot + m - 1) % m
+        val fc = l + b + q((rot + m - 1) % m)
+        HwStreamOut(url, p.ts, p.tie, x, l, b, sNew, fc)
+      }
+      (out, HwState(l, b, q, rot, primed))
+    }
   }
 
   /** STREAMING ordered funnel — the unbounded twin of
@@ -1187,25 +1123,21 @@ object StreamStage {
       .filter(col("value").isNotNull)
       .select(col("user").as("url"), col("ts"), col("tie"), col("value"))
       .as[TiedPoint]
-    bufferedReplay[FunnelBuf, FunnelStepOut](points, lateness,
-        FunnelBuf(Array.emptyLongArray, Array.emptyLongArray,
-          Array.emptyDoubleArray, 0, Long.MinValue))(
-      s => (s.ts, s.tie, s.vs),
-      (s, t, q, v) => s.copy(ts = t, tie = q, vs = v),
-      _ => false, // funnel progress must outlive quiet periods
-      (user, st, ready) => {
-        var depth = st.depth
-        var tsLast = st.tsLast
-        val out = Vector.newBuilder[FunnelStepOut]
-        for ((t, q, v) <- ready) {
-          val s = v.toInt
-          if (s == depth + 1 && (depth == 0 || t > tsLast)) {
-            depth = s; tsLast = t
-            out += FunnelStepOut(user, s, t, q)
-          }
+    // running state: (depth reached, its completion ts); funnel progress
+    // must outlive quiet periods, so it is never removable
+    bufferedReplay(points, lateness, (0, Long.MinValue))(
+        _.url, _.ts, byTsTie, _ => false) { (user, st, ready) =>
+      var (depth, tsLast) = st
+      val out = Vector.newBuilder[FunnelStepOut]
+      for (p <- ready) {
+        val s = p.value.toInt
+        if (s == depth + 1 && (depth == 0 || p.ts > tsLast)) {
+          depth = s; tsLast = p.ts
+          out += FunnelStepOut(user, s, p.ts, p.tie)
         }
-        (out.result(), st.copy(depth = depth, tsLast = tsLast))
-      })
+      }
+      (out.result(), (depth, tsLast))
+    }
   }
 
   /** STREAMING heavy hitters per event-time bucket — the unbounded twin of
@@ -1222,37 +1154,17 @@ object StreamStage {
       capacity: Int,
       k: Int,
       lateness: String = "10 minutes"): Dataset[HHBucketOut] = {
-    require(bucketMs > 0, s"bucketMs must be positive, got $bucketMs")
     val spark = events.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     val ss = new graft.ops.SpaceSaving(capacity)
-    events.toDF()
-      .withColumn("event_time", timestamp_millis(col("ts")))
-      .withWatermark("event_time", lateness)
-      .select((col("ts") - pmod(col("ts"), lit(bucketMs))).as("bucket"),
-        col("item"), col("event_time"))
-      .as[(Long, String, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (bucket: Long, rows: Iterator[(Long, String, java.sql.Timestamp)],
-         state: GroupState[graft.ops.HHState]) => {
-          if (state.hasTimedOut) {
-            val top = ss.finish(state.get).take(k)
-            state.remove()
-            top.iterator.zipWithIndex.map { case (h, i) =>
-              HHBucketOut(bucket, h.item, h.est, h.err, i + 1L)
-            }
-          } else {
-            var st = state.getOption.getOrElse(ss.zero)
-            rows.foreach { r => st = ss.reduce(st, r._2) }
-            state.update(st)
-            // fire once the watermark passes the bucket end
-            state.setTimeoutTimestamp(math.max(bucket + bucketMs,
-              state.getCurrentWatermarkMs() + 1L))
-            Iterator.empty
-          }
-        })
+    // one global summary per bucket: the group key is the bucket alone
+    closeOnWatermark(events, lateness, bucketMs, ss.zero)(
+        _ => "", _.ts, (st, rows) => rows.foldLeft(st)((b, r) => ss.reduce(b, r.item))) {
+      (_, bucket, st) =>
+        ss.finish(st).take(k).iterator.zipWithIndex.map { case (h, i) =>
+          HHBucketOut(bucket, h.item, h.est, h.err, i + 1L)
+        }
+    }
   }
 
   /** STREAMING distribution-drift monitor — the unbounded twin of
@@ -1262,7 +1174,7 @@ object StreamStage {
     * period is emitted — exactly the batch formula (integer numerator,
     * one double division), and only when that predecessor is the
     * immediately preceding period (gap periods emit nothing, like the
-    * batch join). State per key: the lateness row buffer + O(bins) open
+    * batch join). State per key ([[periodClose]]): O(bins) open
     * histograms + one O(bins) previous histogram; keys are removed once
     * the watermark passes the last period a successor could still need. */
   def driftStream(
@@ -1282,115 +1194,48 @@ object StreamStage {
     }
   }
 
-  /** The SHARED state machine behind the histogram drift twins
-    * ([[driftStream]] TV, [[psiDriftStream]], [[emdKsDriftStream]] — one
-    * body, three ~10-line metric closures): watermark-buffered replay
-    * into per-(period, bin) counts; when a period closes whose IMMEDIATE
+  /** The SHARED close behind the histogram drift twins ([[driftStream]]
+    * TV, [[psiDriftStream]], [[emdKsDriftStream]] — one body, three
+    * ~10-line metric closures) on [[periodClose]]: rows count into
+    * per-(period, bin) histograms; when a period closes whose IMMEDIATE
     * predecessor also closed, `metric(url, period, hist, prev)` emits one
     * row; gap periods emit nothing (like the batch pairs join); state is
     * removed once the watermark passes the last period a successor could
-    * pair with.
-    *
-    * Beyond-lateness stragglers — rows whose period is already CLOSED
-    * (period <= the saved prevPeriod) — are DISCARDED at ingestion.
-    * Spark's stateful-op filter already drops input strictly older than
-    * the watermark before it reaches this function (spec-verified), so
-    * this guard is DEFENSE IN DEPTH: if such a row ever did get through,
-    * it would re-open its closed period while the key's state is alive,
-    * and the re-close would regress prevPeriod and overwrite the
-    * previous-histogram state with the straggler-only histogram,
-    * corrupting the next period's comparison (spec-pinned:
-    * "beyond-lateness straggler" in StreamStageSpec). */
-  private def histDriftReplay[T](
+    * pair with. Beyond-lateness stragglers are dropped by the driver
+    * (spec-pinned: "beyond-lateness straggler" in StreamStageSpec). */
+  private def histDriftReplay[T: Encoder](
       points: Dataset[TiedPoint],
       periodMs: Long,
       binWidth: Double,
       lateness: String)(
-      metric: (String, Long, Map[Long, Long], Map[Long, Long]) => T)(
-      implicit enc: org.apache.spark.sql.Encoder[T]): Dataset[T] = {
+      metric: (String, Long, Map[Long, Long], Map[Long, Long]) => T): Dataset[T] = {
     require(periodMs > 0 && binWidth > 0,
       s"periodMs/binWidth must be positive, got $periodMs/$binWidth")
-    val spark = points.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    points.toDF()
-      .withColumn("event_time", timestamp_millis(col("ts")))
-      .withWatermark("event_time", lateness)
-      .select(col("url"), col("ts"), col("value"), col("event_time"))
-      .as[(String, Long, Double, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (url: String, rows: Iterator[(String, Long, Double, java.sql.Timestamp)],
-         state: GroupState[DriftBuf]) => {
-          val st = state.getOption.getOrElse(DriftBuf(
-            Array.emptyLongArray, Array.emptyDoubleArray,
-            Array.emptyLongArray, Array.emptyLongArray, Array.emptyLongArray,
-            Long.MinValue, Array.emptyLongArray, Array.emptyLongArray))
-          val all = st.ts.zip(st.vs) ++ rows.map(r => (r._2, r._3))
-          val wm = state.getCurrentWatermarkMs()
-          val (ready, hold) = all.partition(_._1 <= wm)
-          val open = scala.collection.mutable.TreeMap
-            .empty[(Long, Long), Long]
-          for (i <- st.openP.indices)
-            open((st.openP(i), st.openBin(i))) = st.openC(i)
-          ready.foreach { case (t, v) =>
-            val p = t - math.floorMod(t, periodMs)
-            // closed periods never re-open: prevPeriod is the LAST closed
-            // one and closing always advances ascending, so p <= prevPeriod
-            // identifies a beyond-lateness straggler -> dropped
-            if (p > st.prevPeriod) {
-              val bin = math.floor(v / binWidth).toLong
-              open((p, bin)) = open.getOrElse((p, bin), 0L) + 1L
-            }
-          }
-          var prevPeriod = st.prevPeriod
-          var prev = st.prevBin.zip(st.prevC).toMap
-          val out = Vector.newBuilder[T]
-          val closing = open.keys.map(_._1)
-            .filter(p => p + periodMs <= wm).toSeq.distinct.sorted
-          closing.foreach { p =>
-            val hist = open.range((p, Long.MinValue), (p, Long.MaxValue))
-              .map { case ((_, b), c) => b -> c }.toMap
-            open.filterInPlace { case ((pp, _), _) => pp != p }
-            if (prevPeriod == p - periodMs) out += metric(url, p, hist, prev)
-            prevPeriod = p
-            prev = hist
-          }
-          val prevDead = prevPeriod == Long.MinValue ||
-            wm >= prevPeriod + 2 * periodMs
-          if (hold.isEmpty && open.isEmpty && prevDead) state.remove()
-          else {
-            val op = open.toArray
-            state.update(DriftBuf(hold.map(_._1), hold.map(_._2),
-              op.map(_._1._1), op.map(_._1._2), op.map(_._2),
-              prevPeriod, prev.keys.toArray, prev.values.toArray))
-            val wake = Seq(
-              hold.iterator.map(_._1).minOption,
-              open.keys.map(_._1).minOption.map(_ + periodMs),
-              if (prevPeriod == Long.MinValue) None
-              else Some(prevPeriod + 2 * periodMs)
-            ).flatten.min
-            state.setTimeoutTimestamp(math.max(wake, wm + 1L))
-          }
-          out.result().iterator
-        })
+    val none = Map.empty[Long, Long]
+    periodClose(points, lateness, periodMs, 2 * periodMs)(
+        _.url, _.ts, none, (h: Map[Long, Long], rows: Seq[TiedPoint]) =>
+          rows.foldLeft(h) { (h, r) =>
+            val bin = math.floor(r.value / binWidth).toLong
+            h.updated(bin, h.getOrElse(bin, 0L) + 1L)
+          }, none) { (url, p, last, hist, prev) =>
+      (Option.when(last == p - periodMs)(metric(url, p, hist, prev)), hist)
+    }
   }
 
   /** STREAMING PSI drift monitor — the unbounded twin of
     * [[graft.ops.AnalyticsOps.psiDrift]] (q116), the population-stability
     * index a production model-input monitor runs CONTINUOUSLY. Identical
-    * state machine to [[driftStream]] (the [[DriftBuf]] shape is reused
-    * verbatim): per key, open periods accumulate bin counts from
-    * watermark-final rows; when a period closes whose immediate
+    * state machine to [[driftStream]]: per key, open periods accumulate
+    * bin counts; when a period closes whose immediate
     * predecessor also closed, its PSI vs that predecessor is emitted —
     * the batch formula exactly (per bin over the union of either side's
     * bins, p = c/n when c > 0 else `eps`, q = q/m when q > 0 else `eps`,
     * Σ (p−q)·ln(p/q) folded in ASCENDING bin order, matching the batch
     * op's sort_array fold), and only when that predecessor is the
     * immediately preceding period (gap periods emit nothing, like the
-    * batch join). State per key: the lateness row buffer + O(bins) open
-    * histograms + one O(bins) previous histogram; keys are removed once
-    * the watermark passes the last period a successor could still need. */
+    * batch join). State per key: O(bins) open histograms + one O(bins)
+    * previous histogram; keys are removed once the watermark passes the
+    * last period a successor could still need. */
   def psiDriftStream(
       points: Dataset[TiedPoint],
       periodMs: Long,
@@ -1418,8 +1263,8 @@ object StreamStage {
   /** STREAMING earth-mover + Kolmogorov-Smirnov drift — the unbounded twin
     * of [[graft.ops.AnalyticsOps.emdKsDrift]] (q144), completing the
     * continuous drift-monitor family (TV [[driftStream]], PSI
-    * [[psiDriftStream]], RBO [[rboDriftStream]]). Identical [[DriftBuf]]
-    * state machine; when a period closes whose immediate predecessor also
+    * [[psiDriftStream]], RBO [[rboDriftStream]]). Identical state
+    * machine; when a period closes whose immediate predecessor also
     * closed, the batch op's cumulative-count identity runs over the
     * ascending union of either side's bins: D(b) = |cumC(b)·m − cumQ(b)·n|
     * (exact integers — BigInt here, decimal(19,0) in batch, equal until
@@ -1470,13 +1315,13 @@ object StreamStage {
     * period emits only when its IMMEDIATE predecessor also closed (gap
     * periods emit nothing, like the batch pairs join); periods with no
     * overlap still emit (overlap_k = 0, rbo = 0.0), as batch's left join
-    * does. The [[driftStream]] discipline throughout: rows above the
-    * watermark buffer, closed periods resolve ascending, state drops once
-    * the watermark passes the last period a successor could pair with.
+    * does. The [[driftStream]] discipline throughout ([[periodClose]]):
+    * closed periods resolve ascending, state drops once the watermark
+    * passes the last period a successor could pair with.
     *
     * The monitor is GLOBAL (one ranked list per period, like the batch
-    * op), so all state lives under one group key: the lateness row buffer
-    * + open-period item counts + the previous top-k (≤ k entries). The
+    * op), so all state lives under one group key: open-period item counts
+    * + the previous top-k (≤ k entries). The
     * open-count maps are bounded by the period's distinct-item
     * cardinality — for unbounded item spaces put a SpaceSaving/heavy-
     * hitters pass upstream, exactly as the batch op's rank windows
@@ -1493,76 +1338,28 @@ object StreamStage {
     val weights = graft.ops.AnalyticsOps.rboWeights(k, p)
     val spark = events.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.functions._
-    events.toDF()
-      .withColumn("event_time", timestamp_millis(col("ts")))
-      .withWatermark("event_time", lateness)
-      .select(col("item"), col("ts"), col("event_time"))
-      .as[(String, Long, java.sql.Timestamp)]
-      .groupByKey(_ => 0)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (_: Int, rows: Iterator[(String, Long, java.sql.Timestamp)],
-         state: GroupState[RboBuf]) => {
-          val st = state.getOption.getOrElse(RboBuf(
-            Array.emptyLongArray, Array.empty[String],
-            Array.emptyLongArray, Array.empty[String], Array.emptyLongArray,
-            Long.MinValue, Array.empty[String], Array.emptyIntArray))
-          val all = st.ts.zip(st.items) ++ rows.map(r => (r._2, r._1))
-          val wm = state.getCurrentWatermarkMs()
-          val (ready, hold) = all.partition(_._1 <= wm)
-          val open = scala.collection.mutable.TreeMap
-            .empty[(Long, String), Long]
-          for (i <- st.openP.indices)
-            open((st.openP(i), st.openItem(i))) = st.openC(i)
-          ready.foreach { case (t, item) =>
-            val per = t - math.floorMod(t, periodMs)
-            open((per, item)) = open.getOrElse((per, item), 0L) + 1L
-          }
-          var prevPeriod = st.prevPeriod
-          var prev = st.prevItem.zip(st.prevRnk).toMap
-          val out = Vector.newBuilder[RboOut]
-          val closing = open.keys.map(_._1)
-            .filter(per => per + periodMs <= wm).toSeq.distinct.sorted
-          closing.foreach { per =>
-            val counts = open
-              .range((per, ""), (per + 1, "")).toArray
-              .map { case ((_, item), c) => (item, c) }
-            open.filterInPlace { case ((pp, _), _) => pp != per }
-            // (count DESC, item ASC) row numbers, truncated at k — the
-            // batch rank window exactly
-            val topk = counts.sortBy { case (item, c) => (-c, item) }
-              .take(k).iterator.zipWithIndex
-              .map { case ((item, _), i) => item -> (i + 1) }.toMap
-            if (prevPeriod == per - periodMs) {
-              val matched = topk.toSeq.flatMap { case (item, rnk) =>
-                prev.get(item).map(pr => (math.max(rnk, pr), item))
-              }.sorted
-              var s = 0.0
-              matched.foreach { case (m, _) => s += weights(m - 1) }
-              out += RboOut(per, matched.size.toLong, (1.0 - p) * s)
-            }
-            prevPeriod = per
-            prev = topk
-          }
-          val prevDead = prevPeriod == Long.MinValue ||
-            wm >= prevPeriod + 2 * periodMs
-          if (hold.isEmpty && open.isEmpty && prevDead) state.remove()
-          else {
-            val op = open.toArray
-            val pv = prev.toArray
-            state.update(RboBuf(hold.map(_._1), hold.map(_._2),
-              op.map(_._1._1), op.map(_._1._2), op.map(_._2),
-              prevPeriod, pv.map(_._1), pv.map(_._2)))
-            val wake = Seq(
-              hold.iterator.map(_._1).minOption,
-              open.keys.map(_._1).minOption.map(_ + periodMs),
-              if (prevPeriod == Long.MinValue) None
-              else Some(prevPeriod + 2 * periodMs)
-            ).flatten.min
-            state.setTimeoutTimestamp(math.max(wake, wm + 1L))
-          }
-          out.result().iterator
-        })
+    // one global ranked list per period: the group key is constant; the
+    // carry is the previous closed period's top-k (item -> rank)
+    periodClose(events, lateness, periodMs, 2 * periodMs)(
+        _ => "", _.ts, Map.empty[String, Long],
+        (c: Map[String, Long], rows: Seq[RboEvent]) =>
+          rows.foldLeft(c)((c, r) => c.updated(r.item, c.getOrElse(r.item, 0L) + 1L)),
+        Map.empty[String, Int]) { (_, per, last, counts, prev) =>
+      // (count DESC, item ASC) row numbers, truncated at k — the batch
+      // rank window exactly
+      val topk = counts.toSeq.sortBy { case (item, c) => (-c, item) }
+        .take(k).iterator.zipWithIndex
+        .map { case ((item, _), i) => item -> (i + 1) }.toMap
+      val row = Option.when(last == per - periodMs) {
+        val matched = topk.toSeq.flatMap { case (item, rnk) =>
+          prev.get(item).map(pr => (math.max(rnk, pr), item))
+        }.sorted
+        var s = 0.0
+        matched.foreach { case (m, _) => s += weights(m - 1) }
+        RboOut(per, matched.size.toLong, (1.0 - p) * s)
+      }
+      (row, topk)
+    }
   }
 
   /** STREAMING audience-overlap sketches — the unbounded twin of
@@ -1573,10 +1370,10 @@ object StreamStage {
     * period whose immediate predecessor also closed, the curr/prev/union
     * estimates and the inclusion–exclusion retained/Jaccard emit — gap
     * periods emit nothing, like the batch join. The [[driftStream]]
-    * discipline: rows above the watermark buffer, closed periods resolve
-    * in ascending order, and a key's state is removed once the watermark
-    * passes the last period a successor could still pair with. State per
-    * key: the lateness row buffer + O(open periods + 1) fixed-size blobs
+    * discipline ([[periodClose]]): closed periods resolve in ascending
+    * order, and a key's state is removed once the watermark passes the
+    * last period a successor could still pair with. State per key:
+    * O(open periods + 1) fixed-size blobs
     * (~2^lgK bytes each) — never a member set. */
   def overlapSketchStream(
       points: Dataset[ActivityPoint],
@@ -1588,71 +1385,31 @@ object StreamStage {
     import org.apache.datasketches.hll.{HllSketch, Union}
     val spark = points.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     def est(sk: HllSketch): Long = Math.round(sk.getEstimate)
-    points.toDF()
-      .withColumn("event_time", timestamp_millis(col("ts")))
-      .withWatermark("event_time", lateness)
-      .select(col("etype"), col("ts"), col("user"), col("event_time"))
-      .as[(String, Long, String, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (key: String, rows: Iterator[(String, Long, String, java.sql.Timestamp)],
-         state: GroupState[OvlBuf]) => {
-          val st = state.getOption.getOrElse(OvlBuf(
-            Array.emptyLongArray, Array.empty[String],
-            Array.emptyLongArray, Array.empty[Array[Byte]],
-            Long.MinValue, Array.emptyByteArray))
-          val all = st.ts.zip(st.member) ++ rows.map(r => (r._2, r._3))
-          val wm = state.getCurrentWatermarkMs()
-          val (ready, hold) = all.partition(_._1 <= wm)
-          val open = scala.collection.mutable.TreeMap.empty[Long, HllSketch]
-          for (i <- st.openP.indices)
-            open(st.openP(i)) = HllSketch.heapify(st.openSk(i))
-          ready.foreach { case (t, m) =>
-            val p = t - math.floorMod(t, periodMs)
-            open.getOrElseUpdate(p, new HllSketch(lgK)).update(m)
-          }
-          var prevPeriod = st.prevPeriod
-          var prevSk: Option[HllSketch] =
-            if (st.prevSk.isEmpty) None else Some(HllSketch.heapify(st.prevSk))
-          val out = Vector.newBuilder[OvlOut]
-          val closing = open.keys.filter(p => p + periodMs <= wm).toSeq.sorted
-          closing.foreach { p =>
-            val curr = open.remove(p).get
-            prevSk.filter(_ => prevPeriod == p - periodMs).foreach { prev =>
-              val u = new Union(lgK)
-              u.update(curr)
-              u.update(prev)
-              val (c, pr, un) = (est(curr), est(prev), est(u.getResult))
-              val retained = math.max(c + pr - un, 0L)
-              // BigDecimal.valueOf (canonical-string), matching Spark round()
-              val jac = java.math.BigDecimal.valueOf(retained.toDouble / un.toDouble)
-                .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
-              out += OvlOut(key, p, c, pr, un, retained, jac)
-            }
-            prevPeriod = p
-            prevSk = Some(curr)
-          }
-          val prevDead = prevPeriod == Long.MinValue ||
-            wm >= prevPeriod + 2 * periodMs
-          if (hold.isEmpty && open.isEmpty && prevDead) state.remove()
-          else {
-            val op = open.toArray
-            state.update(OvlBuf(hold.map(_._1), hold.map(_._2),
-              op.map(_._1), op.map(_._2.toUpdatableByteArray),
-              prevPeriod, prevSk.map(_.toCompactByteArray)
-                .getOrElse(Array.emptyByteArray)))
-            val wake = Seq(
-              hold.iterator.map(_._1).minOption,
-              open.keys.minOption.map(_ + periodMs),
-              if (prevPeriod == Long.MinValue) None
-              else Some(prevPeriod + 2 * periodMs)
-            ).flatten.min
-            state.setTimeoutTimestamp(math.max(wake, wm + 1L))
-          }
-          out.result().iterator
-        })
+    // open periods hold updatable HLL blobs, the carry is the previous
+    // closed period's compact blob (empty before the first close)
+    periodClose(points, lateness, periodMs, 2 * periodMs)(
+        _.etype, _.ts, Array.emptyByteArray,
+        (blob: Array[Byte], rows: Seq[ActivityPoint]) => {
+          val sk = if (blob.isEmpty) new HllSketch(lgK) else HllSketch.heapify(blob)
+          rows.foreach(r => sk.update(r.user))
+          sk.toUpdatableByteArray
+        }, Array.emptyByteArray) { (key, p, last, blob, prevBlob) =>
+      val curr = HllSketch.heapify(blob)
+      val row = Option.when(last == p - periodMs) {
+        val prev = HllSketch.heapify(prevBlob)
+        val u = new Union(lgK)
+        u.update(curr)
+        u.update(prev)
+        val (c, pr, un) = (est(curr), est(prev), est(u.getResult))
+        val retained = math.max(c + pr - un, 0L)
+        // BigDecimal.valueOf (canonical-string), matching Spark round()
+        val jac = java.math.BigDecimal.valueOf(retained.toDouble / un.toDouble)
+          .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
+        OvlOut(key, p, c, pr, un, retained, jac)
+      }
+      (row, curr.toCompactByteArray)
+    }
   }
 
   /** STREAMING M4 downsample — the unbounded twin of
@@ -1668,55 +1425,31 @@ object StreamStage {
       points: Dataset[TiedPoint],
       bucketMs: Long,
       lateness: String = "10 minutes"): Dataset[M4Out] = {
-    require(bucketMs > 0, s"bucketMs must be positive, got $bucketMs")
     val spark = points.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.functions._
-    points.toDF()
-      .withColumn("event_time", timestamp_millis(col("ts")))
-      .withWatermark("event_time", lateness)
-      .select(col("url"),
-        (col("ts") - pmod(col("ts"), lit(bucketMs))).as("bucket"),
-        col("ts"), col("tie"), col("value"), col("event_time"))
-      .as[(String, Long, Long, Long, Double, java.sql.Timestamp)]
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (key: (String, Long),
-         rows: Iterator[(String, Long, Long, Long, Double, java.sql.Timestamp)],
-         state: GroupState[M4State]) => {
-          val (url, bucket) = key
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            val all = s.atMinTs ++ s.atMaxTs ++ s.atMinV ++ s.atMaxV
-            all.distinct.sortBy(c => (c.ts, c.tie)).iterator
-              .map(c => M4Out(url, bucket, c.ts, c.tie, c.value))
-          } else {
-            var st = state.getOption.getOrElse(M4State(Long.MaxValue,
-              Long.MinValue, Double.PositiveInfinity, Double.NegativeInfinity,
-              Nil, Nil, Nil, Nil))
-            rows.foreach { r =>
-              val c = M4Cand(r._3, r._4, r._5)
-              st = st.copy(
-                minTs = math.min(st.minTs, c.ts),
-                maxTs = math.max(st.maxTs, c.ts),
-                minV = math.min(st.minV, c.value),
-                maxV = math.max(st.maxV, c.value),
-                atMinTs = if (c.ts < st.minTs) Seq(c)
-                  else if (c.ts == st.minTs) st.atMinTs :+ c else st.atMinTs,
-                atMaxTs = if (c.ts > st.maxTs) Seq(c)
-                  else if (c.ts == st.maxTs) st.atMaxTs :+ c else st.atMaxTs,
-                atMinV = if (c.value < st.minV) Seq(c)
-                  else if (c.value == st.minV) st.atMinV :+ c else st.atMinV,
-                atMaxV = if (c.value > st.maxV) Seq(c)
-                  else if (c.value == st.maxV) st.atMaxV :+ c else st.atMaxV)
-            }
-            state.update(st)
-            state.setTimeoutTimestamp(math.max(bucket + bucketMs,
-              state.getCurrentWatermarkMs() + 1L))
-            Iterator.empty
-          }
-        })
+    val none = M4State(Long.MaxValue, Long.MinValue, Double.PositiveInfinity,
+      Double.NegativeInfinity, Nil, Nil, Nil, Nil)
+    closeOnWatermark(points, lateness, bucketMs, none)(
+        _.url, _.ts, (s0, rows) => rows.foldLeft(s0) { (st, r) =>
+          val c = M4Cand(r.ts, r.tie, r.value)
+          st.copy(
+            minTs = math.min(st.minTs, c.ts),
+            maxTs = math.max(st.maxTs, c.ts),
+            minV = math.min(st.minV, c.value),
+            maxV = math.max(st.maxV, c.value),
+            atMinTs = if (c.ts < st.minTs) Seq(c)
+              else if (c.ts == st.minTs) st.atMinTs :+ c else st.atMinTs,
+            atMaxTs = if (c.ts > st.maxTs) Seq(c)
+              else if (c.ts == st.maxTs) st.atMaxTs :+ c else st.atMaxTs,
+            atMinV = if (c.value < st.minV) Seq(c)
+              else if (c.value == st.minV) st.atMinV :+ c else st.atMinV,
+            atMaxV = if (c.value > st.maxV) Seq(c)
+              else if (c.value == st.maxV) st.atMaxV :+ c else st.atMaxV)
+        }) { (url, bucket, s) =>
+      (s.atMinTs ++ s.atMaxTs ++ s.atMinV ++ s.atMaxV).distinct
+        .sortBy(c => (c.ts, c.tie))
+        .map(c => M4Out(url, bucket, c.ts, c.tie, c.value))
+    }
   }
 
   /** STREAMING availability report — the unbounded twin of
@@ -1729,47 +1462,24 @@ object StreamStage {
       bucketMs: Long,
       lateness: String = "10 minutes"): Dataset[AvailOut] = {
     require(bucketMs > 0, s"bucketMs must be positive, got $bucketMs")
-    val dayMs = 86400000L
     val spark = points.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.functions._
-    points.toDF()
-      .withColumn("event_time", timestamp_millis(col("ts")))
-      .withWatermark("event_time", lateness)
-      .select(col("url"),
-        (col("ts") - pmod(col("ts"), lit(dayMs))).as("day"),
-        (col("ts") - pmod(col("ts"), lit(bucketMs))).as("b"),
-        col("event_time"))
-      .as[(String, Long, Long, java.sql.Timestamp)]
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (key: (String, Long),
-         rows: Iterator[(String, Long, Long, java.sql.Timestamp)],
-         state: GroupState[AvailBuf]) => {
-          val (url, day) = key
-          if (state.hasTimedOut) {
-            val bs = state.get.buckets.sorted
-            state.remove()
-            var longest = 0L
-            var i = 1
-            while (i < bs.length) {
-              val g = bs(i) - bs(i - 1) - bucketMs
-              if (g > longest) longest = g
-              i += 1
-            }
-            val expected = (bs.last - bs.head) / bucketMs + 1L
-            Iterator.single(AvailOut(url, day, bs.length.toLong, expected,
-              expected - bs.length, longest))
-          } else {
-            val prev = state.getOption.getOrElse(AvailBuf(Array.emptyLongArray))
-            val set = scala.collection.mutable.SortedSet(prev.buckets: _*)
-            rows.foreach(r => set += r._3)
-            state.update(AvailBuf(set.toArray))
-            state.setTimeoutTimestamp(math.max(day + dayMs,
-              state.getCurrentWatermarkMs() + 1L))
-            Iterator.empty
-          }
-        })
+    closeOnWatermark(points, lateness, 86400000L, Array.emptyLongArray)(
+        _.url, _.ts, (seen, rows) =>
+          (seen ++ rows.map(r => bucketOf(r.ts, bucketMs))).distinct) {
+      (url, day, seen) =>
+        val bs = seen.sorted
+        var longest = 0L
+        var i = 1
+        while (i < bs.length) {
+          val g = bs(i) - bs(i - 1) - bucketMs
+          if (g > longest) longest = g
+          i += 1
+        }
+        val expected = (bs.last - bs.head) / bucketMs + 1L
+        Some(AvailOut(url, day, bs.length.toLong, expected,
+          expected - bs.length, longest))
+    }
   }
 
   /** STREAMING PAA + quantile-SAX words — the unbounded twin of
@@ -1784,65 +1494,36 @@ object StreamStage {
       alphabet: Int = 4,
       lateness: String = "10 minutes"): Dataset[SaxOut] = {
     require(alphabet >= 2 && alphabet <= 26, s"alphabet must be 2..26, got $alphabet")
-    val dayMs = 86400000L
     val hourMs = 3600000L
     val spark = points.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.functions._
-    def cents(v: Double): Long =
-      java.math.BigDecimal.valueOf(v)
-        .setScale(2, java.math.RoundingMode.HALF_UP).unscaledValue.longValueExact
-    points.toDF()
-      .withColumn("event_time", timestamp_millis(col("ts")))
-      .withWatermark("event_time", lateness)
-      .select(col("url"),
-        (col("ts") - pmod(col("ts"), lit(dayMs))).as("day"),
-        pmod(floor(col("ts") / lit(hourMs)), lit(24L)).cast("long").as("slot"),
-        col("value"), col("event_time"))
-      .as[(String, Long, Long, Double, java.sql.Timestamp)]
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (key: (String, Long),
-         rows: Iterator[(String, Long, Long, Double, java.sql.Timestamp)],
-         state: GroupState[SaxBuf]) => {
-          val (url, day) = key
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            val n = s.slots.length
-            val means = Array.tabulate(n)(i =>
-              new java.math.BigDecimal(
-                java.math.BigInteger.valueOf(s.cents(i)), 2).doubleValue / s.ns(i))
-            // rank by (mean, slot); NTILE: first n%k tiles get one extra
-            val order = Array.range(0, n).sortBy(i => (means(i), s.slots(i)))
-            val base = n / alphabet; val rem = n % alphabet
-            val sym = new Array[Char](n)
-            for ((idx, r) <- order.zipWithIndex) {
-              val tile =
-                if (base == 0) r
-                else if (r < rem * (base + 1)) r / (base + 1)
-                else rem + (r - rem * (base + 1)) / base
-              sym(idx) = ('a' + tile).toChar
-            }
-            val word = s.slots.zip(sym).sortBy(_._1).map(_._2).mkString
-            Iterator.single(SaxOut(url, day, word, n.toLong))
-          } else {
-            val prev = state.getOption.getOrElse(
-              SaxBuf(Array.emptyLongArray, Array.emptyLongArray, Array.emptyLongArray))
-            val m = scala.collection.mutable.TreeMap.empty[Long, (Long, Long)]
-            for (i <- prev.slots.indices)
-              m(prev.slots(i)) = (prev.cents(i), prev.ns(i))
-            rows.foreach { r =>
-              val (c, cnt) = m.getOrElse(r._3, (0L, 0L))
-              m(r._3) = (c + cents(r._4), cnt + 1L)
-            }
-            val arr = m.toArray
-            state.update(SaxBuf(arr.map(_._1), arr.map(_._2._1), arr.map(_._2._2)))
-            state.setTimeoutTimestamp(math.max(day + dayMs,
-              state.getCurrentWatermarkMs() + 1L))
-            Iterator.empty
+    // per hour-of-day slot: decimal-cents sum and count (n = 0: no rows)
+    closeOnWatermark(points, lateness, 86400000L,
+        (new Array[Long](24), new Array[Long](24)))(
+        _.url, _.ts, { case ((cents0, ns0), rows) =>
+          val (cents, ns) = (cents0.clone(), ns0.clone())
+          rows.foreach { r =>
+            val slot = math.floorMod(math.floorDiv(r.ts, hourMs), 24L).toInt
+            cents(slot) += exactCents(r.value); ns(slot) += 1L
           }
-        })
+          (cents, ns)
+        }) { case (url, day, (cents, ns)) =>
+      val slots = Array.range(0, 24).filter(ns(_) > 0)
+      val n = slots.length
+      val means = slots.map(i => centsDouble(cents(i)) / ns(i))
+      // rank by (mean, slot); NTILE: first n%k tiles get one extra
+      val order = Array.range(0, n).sortBy(i => (means(i), slots(i)))
+      val base = n / alphabet; val rem = n % alphabet
+      val sym = new Array[Char](n)
+      for ((idx, r) <- order.zipWithIndex) {
+        val tile =
+          if (base == 0) r
+          else if (r < rem * (base + 1)) r / (base + 1)
+          else rem + (r - rem * (base + 1)) / base
+        sym(idx) = ('a' + tile).toChar
+      }
+      Some(SaxOut(url, day, sym.mkString, n.toLong))
+    }
   }
 
   /** STREAMING calendar-baseline anomaly scores — the unbounded twin of
@@ -1854,8 +1535,8 @@ object StreamStage {
     * the exact batch arithmetic (decimal-sum → double, one division per
     * term) — stream ≡ batch bit-for-bit on closed buckets. Buckets close
     * in ascending order, so the hour-of-day running sums see exactly the
-    * batch window's prefix. State per key: the lateness row buffer + open
-    * buckets + 24 (cents, n) pairs; cents are held in a Long (overflows
+    * batch window's prefix ([[periodClose]]). State per key: open buckets
+    * + 24 (cents, n) pairs; cents are held in a Long (overflows
     * past ~9e16 cents per hour-of-day per key — far beyond any real
     * per-key volume; the batch op is the deep-history path). */
   def calendarBaselineStream(
@@ -1864,77 +1545,36 @@ object StreamStage {
     val bucketMs = 3600000L
     val spark = points.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.functions._
-    def cents(v: Double): Long =
-      java.math.BigDecimal.valueOf(v)
-        .setScale(2, java.math.RoundingMode.HALF_UP).unscaledValue.longValueExact
-    def decDouble(c: Long): Double =
-      new java.math.BigDecimal(java.math.BigInteger.valueOf(c), 2).doubleValue
-    points.toDF()
-      .withColumn("event_time", timestamp_millis(col("ts")))
-      .withWatermark("event_time", lateness)
-      .select(col("url"), col("ts"), col("value"), col("event_time"))
-      .as[(String, Long, Double, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (url: String, rows: Iterator[(String, Long, Double, java.sql.Timestamp)],
-         state: GroupState[CalBuf]) => {
-          val st = state.getOption.getOrElse(CalBuf(
-            Array.emptyLongArray, Array.emptyDoubleArray,
-            Array.emptyLongArray, Array.emptyLongArray, Array.emptyLongArray,
-            new Array[Long](24), new Array[Long](24)))
-          val all = st.ts.zip(st.vs) ++ rows.map(r => (r._2, r._3))
-          val wm = state.getCurrentWatermarkMs()
-          val (ready, hold) = all.partition(_._1 <= wm)
-          val open = scala.collection.mutable.TreeMap.empty[Long, (Long, Long)]
-          for (i <- st.openB.indices)
-            open(st.openB(i)) = (st.openC(i), st.openN(i))
-          ready.foreach { case (t, v) =>
-            val b = t - math.floorMod(t, bucketMs)
-            val (c, n) = open.getOrElse(b, (0L, 0L))
-            open(b) = (c + cents(v), n + 1L)
-          }
-          val hodC = st.hodC.clone(); val hodN = st.hodN.clone()
-          val out = Vector.newBuilder[CalOut]
-          val closing = open.keys.filter(b => b + bucketMs <= wm)
-            .toArray.sorted
-          closing.foreach { b =>
-            val (c, n) = open.remove(b).get
-            val hod = math.floorMod(b / bucketMs, 24L).toInt
-            val mean = decDouble(c) / n
-            val baseline =
-              if (hodN(hod) > 0) Some(decDouble(hodC(hod)) / hodN(hod))
-              else None
-            val ratio = baseline.filter(_ > 0).map(mean / _)
-            out += CalOut(url, b, n, mean, baseline, ratio)
-            hodC(hod) += c; hodN(hod) += n
-          }
-          // the hour-of-day baselines are UNBOUNDED history (O(24) per
-          // key): dropping them would reset a resuming key's baseline,
-          // diverging from batch — keep the state for the key's lifetime
-          val ob = open.toArray
-          state.update(CalBuf(hold.map(_._1), hold.map(_._2),
-            ob.map(_._1), ob.map(_._2._1), ob.map(_._2._2), hodC, hodN))
-          val wake = Seq(
-            hold.iterator.map(_._1).minOption,
-            open.keys.headOption.map(_ + bucketMs)
-          ).flatten
-          if (wake.nonEmpty)
-            state.setTimeoutTimestamp(math.max(wake.min, wm + 1L))
-          out.result().iterator
-        })
+    // the hour-of-day baselines are UNBOUNDED history (O(24) per key):
+    // dropping them would reset a resuming key's baseline, diverging from
+    // batch — keep the state for the key's lifetime
+    periodClose(points, lateness, bucketMs, Long.MaxValue)(
+        _.url, _.ts, (0L, 0L), (acc: (Long, Long), rows: Seq[TiedPoint]) =>
+          (acc._1 + rows.map(r => exactCents(r.value)).sum, acc._2 + rows.size),
+        (new Array[Long](24), new Array[Long](24))) {
+      case (url, b, _, (c, n), (hodC0, hodN0)) =>
+        val (hodC, hodN) = (hodC0.clone(), hodN0.clone())
+        val hod = math.floorMod(b / bucketMs, 24L).toInt
+        val mean = centsDouble(c) / n
+        val baseline =
+          if (hodN(hod) > 0) Some(centsDouble(hodC(hod)) / hodN(hod))
+          else None
+        val ratio = baseline.filter(_ > 0).map(mean / _)
+        hodC(hod) += c; hodN(hod) += n
+        (Some(CalOut(url, b, n, mean, baseline, ratio)), (hodC, hodN))
+    }
   }
 
   /** STREAMING multi-window SLO burn rate — the unbounded twin of
     * [[graft.ops.AnalyticsOps.sloBurnRate]] (q87). Unlike the per-bucket
     * twins, the burn windows REACH ACROSS buckets, so state groups by key
-    * alone: the above-watermark row buffer, the open buckets' error/total
-    * counters (counts are order-free — no tie needed), and a ring of
+    * alone ([[periodClose]]): the open buckets' error/total counters
+    * (counts are order-free — no tie needed), and a ring of
     * CLOSED buckets covering the long window. A bucket emits exactly once,
     * when the watermark passes its end, with burn rates summed over the
     * ring exactly like the batch RANGE frames (observed buckets only).
     * Input encodes errors as value = 1.0 (ok = 0.0). State per key:
-    * O(lateness rows + longMs/bucketMs ring entries); fully drained keys
+    * O(open buckets + longMs/bucketMs ring entries); fully drained keys
     * are removed once the ring ages out of every future window. */
   def sloBurnStream(
       points: Dataset[TiedPoint],
@@ -1953,73 +1593,27 @@ object StreamStage {
       s"windows must be whole buckets, got $shortMs/$longMs vs $bucketMs")
     val spark = points.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.functions._
-    points.toDF()
-      .withColumn("event_time", timestamp_millis(col("ts")))
-      .withWatermark("event_time", lateness)
-      .select(col("url"), col("ts"), col("value"), col("event_time"))
-      .as[(String, Long, Double, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (url: String, rows: Iterator[(String, Long, Double, java.sql.Timestamp)],
-         state: GroupState[SloBuf]) => {
-          val st = state.getOption.getOrElse(SloBuf(
-            Array.emptyLongArray, Array.emptyDoubleArray,
-            Array.emptyLongArray, Array.emptyLongArray, Array.emptyLongArray,
-            Array.emptyLongArray, Array.emptyLongArray, Array.emptyLongArray))
-          val all = st.ts.zip(st.vs) ++ rows.map(r => (r._2, r._3))
-          val wm = state.getCurrentWatermarkMs()
-          val (ready, hold) = all.partition(_._1 <= wm)
-          val acc = scala.collection.mutable.TreeMap.empty[Long, (Long, Long)]
-          for (i <- st.accB.indices) acc(st.accB(i)) = (st.accErr(i), st.accTot(i))
-          ready.foreach { case (t, v) =>
-            val b = t - math.floorMod(t, bucketMs)
-            val (e, n) = acc.getOrElse(b, (0L, 0L))
-            acc(b) = (e + (if (v > 0) 1L else 0L), n + 1L)
-          }
-          val ring = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-          for (i <- st.ringB.indices)
-            ring += ((st.ringB(i), st.ringErr(i), st.ringTot(i)))
-          val out = Vector.newBuilder[SloOut]
-          val closing = acc.keys.filter(b => b + bucketMs <= wm).toArray.sorted
-          closing.foreach { b =>
-            val (e, n) = acc.remove(b).get
-            ring += ((b, e, n))
-            def burn(span: Long): Double = {
-              var se = 0L; var sn = 0L
-              ring.foreach { case (rb, re, rt) =>
-                if (rb > b - span && rb <= b) { se += re; sn += rt }
-              }
-              se.toDouble / sn.toDouble / budget
-            }
-            val bs = burn(shortMs); val bl = burn(longMs)
-            out += SloOut(url, b, e, n, bs, bl, bs > threshold && bl > threshold)
-            // entries no future bucket's long window can reach are dead
-            ring.filterInPlace(_._1 > b + bucketMs - longMs)
-          }
-          // an entry rb is still needed by any future bucket b'' with
-          // b'' < rb + longMs; the earliest bucket a still-admissible row
-          // (ts > wm) can open is wm+1-(bucketMs-1), so removal is safe
-          // only once wm clears rbmax + longMs + bucketMs
-          val ringDead = ring.isEmpty ||
-            wm >= ring.map(_._1).max + longMs + bucketMs
-          if (hold.isEmpty && acc.isEmpty && ringDead) state.remove()
-          else {
-            state.update(SloBuf(hold.map(_._1), hold.map(_._2),
-              acc.keys.toArray, acc.values.map(_._1).toArray,
-              acc.values.map(_._2).toArray,
-              ring.map(_._1).toArray, ring.map(_._2).toArray,
-              ring.map(_._3).toArray))
-            val wake = Seq(
-              hold.iterator.map(_._1).minOption,
-              acc.keys.headOption.map(_ + bucketMs),
-              if (ring.isEmpty) None
-              else Some(ring.map(_._1).max + longMs + bucketMs)
-            ).flatten.min
-            state.setTimeoutTimestamp(math.max(wake, wm + 1L))
-          }
-          out.result().iterator
-        })
+    // an entry rb is still needed by any future bucket b'' with
+    // b'' < rb + longMs; the earliest bucket a still-admissible row
+    // (ts > wm) can open is wm+1-(bucketMs-1), so the ring is dead only
+    // once wm clears the newest closed bucket + longMs + bucketMs
+    periodClose(points, lateness, bucketMs, longMs + bucketMs)(
+        _.url, _.ts, (0L, 0L), (acc: (Long, Long), rows: Seq[TiedPoint]) =>
+          (acc._1 + rows.count(_.value > 0), acc._2 + rows.size),
+        Seq.empty[(Long, Long, Long)]) { case (url, b, _, (e, n), ring0) =>
+      val ring = ring0 :+ ((b, e, n))
+      def burn(span: Long): Double = {
+        var se = 0L; var sn = 0L
+        ring.foreach { case (rb, re, rt) =>
+          if (rb > b - span && rb <= b) { se += re; sn += rt }
+        }
+        se.toDouble / sn.toDouble / budget
+      }
+      val bs = burn(shortMs); val bl = burn(longMs)
+      // entries no future bucket's long window can reach are dead
+      (Some(SloOut(url, b, e, n, bs, bl, bs > threshold && bl > threshold)),
+        ring.filter(_._1 > b + bucketMs - longMs))
+    }
   }
 
   /** STREAMING rolling-window correlation — the unbounded twin of
@@ -2048,97 +1642,48 @@ object StreamStage {
       s"windowBuckets must be >= 2, got $windowBuckets")
     val spark = points.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     val bucketMs = 3600000L
     val spanMs = windowBuckets.toLong * bucketMs
-    points.toDF()
-      .withColumn("event_time", timestamp_millis(col("ts")))
-      .withWatermark("event_time", lateness)
-      // NOTE: no pre-filter on url — Catalyst pushes filters BELOW the
-      // EventTimeWatermark node, so off-pair rows would stop advancing
-      // the watermark; they are ignored inside the state function instead
-      .select(col("url"), (col("ts") - pmod(col("ts"), lit(bucketMs)))
-        .as("bucket"), col("value"), col("event_time"))
-      .as[(String, Long, Double, java.sql.Timestamp)]
-      .groupByKey(_ => "pair")
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(
-        (_: String, rows: Iterator[(String, Long, Double, java.sql.Timestamp)],
-         state: GroupState[RollCorrBuf]) => {
-          val st = state.getOption.getOrElse(RollCorrBuf(
-            Array.emptyLongArray, Array.emptyLongArray, Array.emptyLongArray,
-            Array.emptyLongArray, Array.emptyLongArray, Array.emptyLongArray,
-            Long.MinValue))
-          val acc = scala.collection.mutable.SortedMap.empty[Long, (Long, Long)]
-          for (i <- st.openB.indices)
-            acc(st.openB(i)) = (st.openX(i), st.openY(i))
-          val ring = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-          for (i <- st.ringB.indices)
-            ring += ((st.ringB(i), st.ringX(i), st.ringY(i)))
-          var lastClosed = st.lastClosed
-          rows.foreach { case (t, b, v, _) =>
-            // off-pair rows only advance the watermark; beyond-lateness
-            // stragglers drop (the watermark-aggregate contract)
-            if ((t == typeA || t == typeB) && b > lastClosed) {
-              val (x, y) = acc.getOrElse(b, (0L, 0L))
-              // None (non-finite / beyond decimal(12,2)) adds 0 but still
-              // OPENS the bucket — exactly the batch cast's NULL-excluded-
-              // from-sum, row-still-grouped semantics
-              val cv = decimalCents(v).getOrElse(0L)
-              acc(b) = if (t == typeA) (x + cv, y) else (x, y + cv)
-            }
+    // one global group; rows outside the two types only advance the
+    // watermark (a pre-filter would be pushed BELOW the watermark node by
+    // Catalyst and stop them advancing it), so they are skipped in-state
+    periodClose(points, lateness, bucketMs, spanMs + bucketMs)(
+        _ => "pair", _.ts, (0L, 0L), (acc: (Long, Long), rows: Seq[SeriesPoint]) =>
+          rows.foldLeft(acc) { case ((x, y), r) =>
+            // None (non-finite / beyond decimal(12,2)) adds 0 but still
+            // OPENS the bucket — exactly the batch cast's NULL-excluded-
+            // from-sum, row-still-grouped semantics
+            val cv = decimalCents(r.value).getOrElse(0L)
+            if (r.url == typeA) (x + cv, y) else (x, y + cv)
+          },
+        Seq.empty[(Long, Long, Long)],
+        keep = r => r.url == typeA || r.url == typeB) {
+      case (_, b, _, (x, y), ring0) =>
+        val ring = ring0 :+ ((b, x, y))
+        import java.math.BigInteger
+        var (sxy, sxx, syy) =
+          (BigInteger.ZERO, BigInteger.ZERO, BigInteger.ZERO)
+        var (n, sx, sy) = (0L, 0L, 0L)
+        ring.foreach { case (rb, rx, ry) =>
+          if (rb > b - spanMs && rb <= b) {
+            val (bx, by) =
+              (BigInteger.valueOf(rx), BigInteger.valueOf(ry))
+            n += 1; sx += rx; sy += ry
+            sxy = sxy.add(bx.multiply(by))
+            sxx = sxx.add(bx.multiply(bx))
+            syy = syy.add(by.multiply(by))
           }
-          val wm = state.getCurrentWatermarkMs()
-          val out = Vector.newBuilder[RollCorrOut]
-          val closing = acc.keys.filter(b => b + bucketMs <= wm)
-            .toArray.sorted
-          closing.foreach { b =>
-            val (x, y) = acc.remove(b).get
-            ring += ((b, x, y))
-            lastClosed = b
-            import java.math.BigInteger
-            var (sxy, sxx, syy) =
-              (BigInteger.ZERO, BigInteger.ZERO, BigInteger.ZERO)
-            var (n, sx, sy) = (0L, 0L, 0L)
-            ring.foreach { case (rb, rx, ry) =>
-              if (rb > b - spanMs && rb <= b) {
-                val (bx, by) =
-                  (BigInteger.valueOf(rx), BigInteger.valueOf(ry))
-                n += 1; sx += rx; sy += ry
-                sxy = sxy.add(bx.multiply(by))
-                sxx = sxx.add(bx.multiply(bx))
-                syy = syy.add(by.multiply(by))
-              }
-            }
-            // the batch op's exact finalize order on the same doubles
-            val nD = n.toDouble
-            val (sxD, syD) = (sx.toDouble, sy.toDouble)
-            val cov = nD * sxy.doubleValue - sxD * syD
-            val varx = nD * sxx.doubleValue - sxD * sxD
-            val vary = nD * syy.doubleValue - syD * syD
-            val corr = if (varx > 0 && vary > 0)
-              Some(cov / math.sqrt(varx * vary)) else None
-            out += RollCorrOut(b, n, corr)
-            ring.filterInPlace(_._1 > b + bucketMs - spanMs)
-          }
-          val ringDead = ring.isEmpty ||
-            wm >= ring.map(_._1).max + spanMs + bucketMs
-          if (acc.isEmpty && ringDead) state.remove()
-          else {
-            state.update(RollCorrBuf(
-              acc.keys.toArray, acc.values.map(_._1).toArray,
-              acc.values.map(_._2).toArray,
-              ring.map(_._1).toArray, ring.map(_._2).toArray,
-              ring.map(_._3).toArray, lastClosed))
-            val wake = Seq(
-              acc.keys.headOption.map(_ + bucketMs),
-              if (ring.isEmpty) None
-              else Some(ring.map(_._1).max + spanMs + bucketMs)
-            ).flatten.min
-            state.setTimeoutTimestamp(math.max(wake, wm + 1L))
-          }
-          out.result().iterator
-        })
+        }
+        // the batch op's exact finalize order on the same doubles
+        val nD = n.toDouble
+        val (sxD, syD) = (sx.toDouble, sy.toDouble)
+        val cov = nD * sxy.doubleValue - sxD * syD
+        val varx = nD * sxx.doubleValue - sxD * sxD
+        val vary = nD * syy.doubleValue - syD * syD
+        val corr = if (varx > 0 && vary > 0)
+          Some(cov / math.sqrt(varx * vary)) else None
+        (Some(RollCorrOut(b, n, corr)), ring.filter(_._1 > b + bucketMs - spanMs))
+    }
   }
 
   /** STREAMING per-(url, bucket) population z-score — the unbounded twin of
@@ -2154,43 +1699,22 @@ object StreamStage {
       bucketMs: Long,
       threshold: Double,
       lateness: String = "10 minutes"): Dataset[ZscoreOut] = {
-    require(bucketMs > 0, s"bucketMs must be positive, got $bucketMs")
     val spark = points.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.functions._
-    points.toDF()
-      .withColumn("event_time", timestamp_millis(col("ts")))
-      .withWatermark("event_time", lateness)
-      .select(col("url"), (col("ts") - pmod(col("ts"), lit(bucketMs))).as("bucket"),
-        col("ts"), col("value"), col("event_time"))
-      .as[(String, Long, Long, Double, java.sql.Timestamp)]
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (key: (String, Long), rows: Iterator[(String, Long, Long, Double, java.sql.Timestamp)],
-         state: GroupState[ZBuf]) => {
-          val (url, bucket) = key
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            val n = s.vs.length
-            val mu = s.vs.sum / n
-            var devSq = 0.0
-            var i = 0
-            while (i < n) { val d = s.vs(i) - mu; devSq += d * d; i += 1 }
-            val sd = math.sqrt(devSq / n)
-            s.ts.iterator.zip(s.vs.iterator).map { case (t, v) =>
-              val z = if (sd > 0) Some((v - mu) / sd) else None
-              ZscoreOut(url, bucket, t, v, z, z.exists(zz => math.abs(zz) > threshold))
-            }
-          } else {
-            val prev = state.getOption.getOrElse(ZBuf(Array.emptyLongArray, Array.emptyDoubleArray))
-            val inc = rows.map(r => (r._3, r._4)).toArray
-            state.update(ZBuf(prev.ts ++ inc.map(_._1), prev.vs ++ inc.map(_._2)))
-            state.setTimeoutTimestamp(math.max(bucket + bucketMs,
-              state.getCurrentWatermarkMs() + 1L))
-            Iterator.empty
-          }
-        })
+    closeOnWatermark(points, lateness, bucketMs, Seq.empty[SeriesPoint])(
+        _.url, _.ts, _ ++ _) { (url, bucket, rows) =>
+      val vs = rows.map(_.value).toArray
+      val n = vs.length
+      val mu = vs.sum / n
+      var devSq = 0.0
+      var i = 0
+      while (i < n) { val d = vs(i) - mu; devSq += d * d; i += 1 }
+      val sd = math.sqrt(devSq / n)
+      rows.map { r =>
+        val z = if (sd > 0) Some((r.value - mu) / sd) else None
+        ZscoreOut(url, bucket, r.ts, r.value, z, z.exists(zz => math.abs(zz) > threshold))
+      }
+    }
   }
 
   /** STREAMING median/MAD outliers — the unbounded twin of
@@ -2206,50 +1730,25 @@ object StreamStage {
       bucketMs: Long,
       k: Double,
       lateness: String = "10 minutes"): Dataset[MadOut] = {
-    require(bucketMs > 0, s"bucketMs must be positive, got $bucketMs")
     require(k > 0, s"k must be positive, got $k")
     val spark = points.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.functions._
-    def cents(v: Double): Long = java.math.BigDecimal.valueOf(v)
-      .setScale(2, java.math.RoundingMode.HALF_UP).unscaledValue.longValueExact
-    points.toDF()
-      .withColumn("event_time", timestamp_millis(col("ts")))
-      .withWatermark("event_time", lateness)
-      .select(col("url"), (col("ts") - pmod(col("ts"), lit(bucketMs))).as("bucket"),
-        col("tie"), col("value"), col("event_time"))
-      .as[(String, Long, Long, Double, java.sql.Timestamp)]
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (key: (String, Long), rows: Iterator[(String, Long, Long, Double, java.sql.Timestamp)],
-         state: GroupState[MadBuf]) => {
-          val (url, bucket) = key
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            val n = s.tie.length
-            val vc = s.vs.map(cents)
-            // lower median = 1-based rank (n+1)/2 = 0-based index (n-1)/2;
-            // rank selection needs only the VALUE at the rank, so sorting
-            // by the value alone matches the batch (value, tie) order
-            val med = vc.sorted.apply((n - 1) / 2)
-            val dev = vc.map(c => math.abs(c - med))
-            val mad = dev.sorted.apply((n - 1) / 2)
-            s.tie.indices.iterator.map { i =>
-              MadOut(url, bucket, s.tie(i), s.vs(i),
-                med.toDouble / 100.0, mad.toDouble / 100.0,
-                dev(i).toDouble > k * mad.toDouble)
-            }
-          } else {
-            val prev = state.getOption.getOrElse(
-              MadBuf(Array.emptyLongArray, Array.emptyDoubleArray))
-            val inc = rows.map(r => (r._3, r._4)).toArray
-            state.update(MadBuf(prev.tie ++ inc.map(_._1), prev.vs ++ inc.map(_._2)))
-            state.setTimeoutTimestamp(math.max(bucket + bucketMs,
-              state.getCurrentWatermarkMs() + 1L))
-            Iterator.empty
-          }
-        })
+    closeOnWatermark(points, lateness, bucketMs, Seq.empty[TiedPoint])(
+        _.url, _.ts, _ ++ _) { (url, bucket, rows) =>
+      val n = rows.length
+      val vc = rows.map(r => exactCents(r.value))
+      // lower median = 1-based rank (n+1)/2 = 0-based index (n-1)/2;
+      // rank selection needs only the VALUE at the rank, so sorting
+      // by the value alone matches the batch (value, tie) order
+      val med = vc.sorted.apply((n - 1) / 2)
+      val dev = vc.map(c => math.abs(c - med))
+      val mad = dev.sorted.apply((n - 1) / 2)
+      rows.indices.map { i =>
+        MadOut(url, bucket, rows(i).tie, rows(i).value,
+          med.toDouble / 100.0, mad.toDouble / 100.0,
+          dev(i).toDouble > k * mad.toDouble)
+      }
+    }
   }
 
   /** STREAMING robust trimmed/winsorized mean — the unbounded twin of
@@ -2269,11 +1768,9 @@ object StreamStage {
       bucketMs: Long,
       alpha: Double = 0.1,
       lateness: String = "10 minutes"): Dataset[TrimOut] = {
-    require(bucketMs > 0, s"bucketMs must be positive, got $bucketMs")
     require(alpha >= 0 && alpha < 0.5, s"alpha must be in [0, 0.5), got $alpha")
     val spark = points.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     // the batch op's cents: Spark Round(value * 100.0) = BigDecimal
     // HALF_UP on the DOUBLE product (not a decimal cast of the raw value),
     // then a non-ANSI long cast. TOTAL like the batch chain — Round passes
@@ -2286,38 +1783,18 @@ object StreamStage {
       else java.math.BigDecimal.valueOf(p)
         .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue.toLong
     }
-    points.toDF()
-      .withColumn("event_time", timestamp_millis(col("ts")))
-      .withWatermark("event_time", lateness)
-      .select(col("url"), (col("ts") - pmod(col("ts"), lit(bucketMs))).as("bucket"),
-        col("value"), col("event_time"))
-      .as[(String, Long, Double, java.sql.Timestamp)]
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (key: (String, Long),
-         rows: Iterator[(String, Long, Double, java.sql.Timestamp)],
-         state: GroupState[TrimBuf]) => {
-          val (url, bucket) = key
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            val sorted = s.vs.map(cents).sorted
-            val n = sorted.length
-            val t = math.floor(alpha * n.toDouble).toLong
-            val kept = sorted.slice(t.toInt, n - t.toInt)
-            val sum = kept.foldLeft(0L)(_ + _)
-            val trimmed = sum.toDouble / (100.0 * kept.length.toDouble)
-            val winsor = (sum + t * (kept.head + kept.last)).toDouble /
-              (100.0 * n.toDouble)
-            Iterator.single(TrimOut(url, bucket, n.toLong, t, trimmed, winsor))
-          } else {
-            val prev = state.getOption.getOrElse(TrimBuf(Array.emptyDoubleArray))
-            state.update(TrimBuf(prev.vs ++ rows.map(_._3)))
-            state.setTimeoutTimestamp(math.max(bucket + bucketMs,
-              state.getCurrentWatermarkMs() + 1L))
-            Iterator.empty
-          }
-        })
+    closeOnWatermark(points, lateness, bucketMs, Seq.empty[SeriesPoint])(
+        _.url, _.ts, _ ++ _) { (url, bucket, rows) =>
+      val sorted = rows.map(r => cents(r.value)).sorted
+      val n = sorted.length
+      val t = math.floor(alpha * n.toDouble).toLong
+      val kept = sorted.slice(t.toInt, n - t.toInt)
+      val sum = kept.foldLeft(0L)(_ + _)
+      val trimmed = sum.toDouble / (100.0 * kept.length.toDouble)
+      val winsor = (sum + t * (kept.head + kept.last)).toDouble /
+        (100.0 * n.toDouble)
+      Some(TrimOut(url, bucket, n.toLong, t, trimmed, winsor))
+    }
   }
 
   /** STREAMING counter increase — the unbounded twin of
@@ -2337,55 +1814,26 @@ object StreamStage {
       points: Dataset[TiedPoint],
       bucketMs: Long,
       lateness: String = "10 minutes"): Dataset[IncOut] = {
-    require(bucketMs > 0, s"bucketMs must be positive, got $bucketMs")
     val spark = points.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.functions._
-    def cents(v: Double): Long = java.math.BigDecimal.valueOf(v)
-      .setScale(2, java.math.RoundingMode.HALF_UP).unscaledValue.longValueExact
-    points.toDF()
-      .withColumn("event_time", timestamp_millis(col("ts")))
-      .withWatermark("event_time", lateness)
-      .select(col("url"), (col("ts") - pmod(col("ts"), lit(bucketMs))).as("bucket"),
-        col("ts"), col("tie"), col("value"), col("event_time"))
-      .as[(String, Long, Long, Long, Double, java.sql.Timestamp)]
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (key: (String, Long),
-         rows: Iterator[(String, Long, Long, Long, Double, java.sql.Timestamp)],
-         state: GroupState[IncBuf]) => {
-          val (url, bucket) = key
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            val order = s.ts.indices.sortBy(i => (s.ts(i), s.tie(i)))
-            var inc = 0L
-            var resets = 0L
-            var prev = Long.MinValue
-            var first = true
-            order.foreach { i =>
-              val v = cents(s.vs(i))
-              if (!first) {
-                if (v >= prev) inc += v - prev
-                else { inc += v; resets += 1L }
-              }
-              prev = v
-              first = false
-            }
-            val increase =
-              if (order.length > 1) Some(inc.toDouble / 100.0) else None
-            Iterator.single(IncOut(url, bucket, increase, resets, order.length.toLong))
-          } else {
-            val prev = state.getOption.getOrElse(
-              IncBuf(Array.emptyLongArray, Array.emptyLongArray, Array.emptyDoubleArray))
-            val inc = rows.map(r => (r._3, r._4, r._5)).toArray
-            state.update(IncBuf(prev.ts ++ inc.map(_._1),
-              prev.tie ++ inc.map(_._2), prev.vs ++ inc.map(_._3)))
-            state.setTimeoutTimestamp(math.max(bucket + bucketMs,
-              state.getCurrentWatermarkMs() + 1L))
-            Iterator.empty
-          }
-        })
+    closeOnWatermark(points, lateness, bucketMs, Seq.empty[TiedPoint])(
+        _.url, _.ts, _ ++ _) { (url, bucket, rows) =>
+      var inc = 0L
+      var resets = 0L
+      var prev = Long.MinValue
+      var first = true
+      rows.sorted(byTsTie).foreach { r =>
+        val v = exactCents(r.value)
+        if (!first) {
+          if (v >= prev) inc += v - prev
+          else { inc += v; resets += 1L }
+        }
+        prev = v
+        first = false
+      }
+      val increase = if (rows.length > 1) Some(inc.toDouble / 100.0) else None
+      Some(IncOut(url, bucket, increase, resets, rows.length.toLong))
+    }
   }
 
   /** STREAMING as-of enrichment — the unbounded twin of
@@ -2408,42 +1856,21 @@ object StreamStage {
       lateness: String = "10 minutes"): Dataset[AsofOut] = {
     val spark = leftPoints.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.functions._
-    def tag(ds: Dataset[TiedPoint], side: Int) = ds.toDF()
-      .select(col("url"), col("ts"), col("tie"), lit(side).as("side"),
-        col("value"))
-    tag(leftPoints, 1).unionByName(tag(rightPoints, 0))
-      .withColumn("event_time", timestamp_millis(col("ts")))
-      .withWatermark("event_time", lateness)
-      .as[(String, Long, Long, Int, Double, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (url: String,
-         rows: Iterator[(String, Long, Long, Int, Double, java.sql.Timestamp)],
-         state: GroupState[AsofBuf]) => {
-          val st = state.getOption.getOrElse(AsofBuf(Array.emptyLongArray,
-            Array.emptyLongArray, Array.emptyIntArray, Array.emptyDoubleArray,
-            0.0, false))
-          val buffered = st.ts.indices.map(i =>
-            (st.ts(i), st.side(i), st.tie(i), st.vs(i)))
-          val incoming = rows.map(r => (r._2, r._4, r._3, r._5))
-          // right (side 0) sorts before left at equal ts: ASOF tie rule
-          val all = (buffered ++ incoming).toArray
-            .sortBy { case (t, s, q, _) => (t, s, q) }
-          val wm = state.getCurrentWatermarkMs()
-          val (ready, hold) = all.partition(_._1 <= wm)
-          var last = st.last
-          var has = st.hasLast
-          val out = ready.iterator.flatMap { case (t, s, q, v) =>
-            if (s == 0) { last = v; has = true; None }
-            else Some(AsofOut(url, t, q, v, if (has) Some(last) else None))
-          }.toVector
-          state.update(AsofBuf(hold.map(_._1), hold.map(_._3),
-            hold.map(_._2), hold.map(_._4), last, has))
-          if (hold.nonEmpty)
-            state.setTimeoutTimestamp(math.max(hold.head._1, wm + 1L))
-          out.iterator
-        })
+    def tag(ds: Dataset[TiedPoint], side: Int) =
+      ds.map(p => SidedPoint(p.url, p.ts, side, p.tie, p.value))
+    // right (side 0) sorts before left at equal ts: ASOF tie rule; the
+    // carried last right payload never expires
+    bufferedReplay(tag(leftPoints, 1).union(tag(rightPoints, 0)), lateness,
+        Option.empty[Double])(_.url, _.ts,
+        Ordering.by((p: SidedPoint) => (p.ts, p.side, p.tie)), _ => false) {
+      (url, last0, ready) =>
+        var last = last0
+        val out = ready.flatMap { p =>
+          if (p.side == 0) { last = Some(p.value); None }
+          else Some(AsofOut(url, p.ts, p.tie, p.value, last))
+        }
+        (out, last)
+    }
   }
 
   /** STREAMING time-weighted average — the unbounded twin of
@@ -2458,51 +1885,26 @@ object StreamStage {
       points: Dataset[TiedPoint],
       bucketMs: Long,
       lateness: String = "10 minutes"): Dataset[TwaOut] = {
-    require(bucketMs > 0, s"bucketMs must be positive, got $bucketMs")
     val spark = points.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.functions._
-    points.toDF()
-      .withColumn("event_time", timestamp_millis(col("ts")))
-      .withWatermark("event_time", lateness)
-      .select(col("url"), (col("ts") - pmod(col("ts"), lit(bucketMs))).as("bucket"),
-        col("ts"), col("tie"), col("value"), col("event_time"))
-      .as[(String, Long, Long, Long, Double, java.sql.Timestamp)]
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (key: (String, Long), rows: Iterator[(String, Long, Long, Long, Double, java.sql.Timestamp)],
-         state: GroupState[TwaBuf]) => {
-          val (url, bucket) = key
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            val ord = (s.ts.lazyZip(s.tie).lazyZip(s.vs)).toArray
-              .sortBy { case (t, q, _) => (t, q) }
-            val span = ord.last._1 - ord.head._1
-            val twa = if (span > 0) {
-              var wsum = java.math.BigDecimal.ZERO
-              var i = 0
-              while (i < ord.length - 1) {
-                val v = java.math.BigDecimal.valueOf(ord(i)._3)
-                  .setScale(2, java.math.RoundingMode.HALF_UP)
-                wsum = wsum.add(v.multiply(
-                  java.math.BigDecimal.valueOf(ord(i + 1)._1 - ord(i)._1)))
-                i += 1
-              }
-              Some(wsum.doubleValue / span.toDouble)
-            } else None
-            Iterator.single(TwaOut(url, bucket, twa, span, ord.length.toLong))
-          } else {
-            val prev = state.getOption.getOrElse(TwaBuf(Array.emptyLongArray,
-              Array.emptyLongArray, Array.emptyDoubleArray))
-            val inc = rows.map(r => (r._3, r._4, r._5)).toArray
-            state.update(TwaBuf(prev.ts ++ inc.map(_._1),
-              prev.tie ++ inc.map(_._2), prev.vs ++ inc.map(_._3)))
-            state.setTimeoutTimestamp(math.max(bucket + bucketMs,
-              state.getCurrentWatermarkMs() + 1L))
-            Iterator.empty
-          }
-        })
+    closeOnWatermark(points, lateness, bucketMs, Seq.empty[TiedPoint])(
+        _.url, _.ts, _ ++ _) { (url, bucket, rows) =>
+      val ord = rows.sorted(byTsTie).toArray
+      val span = ord.last.ts - ord.head.ts
+      val twa = if (span > 0) {
+        var wsum = java.math.BigDecimal.ZERO
+        var i = 0
+        while (i < ord.length - 1) {
+          val v = java.math.BigDecimal.valueOf(ord(i).value)
+            .setScale(2, java.math.RoundingMode.HALF_UP)
+          wsum = wsum.add(v.multiply(
+            java.math.BigDecimal.valueOf(ord(i + 1).ts - ord(i).ts)))
+          i += 1
+        }
+        Some(wsum.doubleValue / span.toDouble)
+      } else None
+      Some(TwaOut(url, bucket, twa, span, ord.length.toLong))
+    }
   }
 
   /** STREAMING per-(url, bucket) quantile sketch — the unbounded twin of
@@ -2518,36 +1920,15 @@ object StreamStage {
       bucketMs: Long,
       k: Int = 256,
       lateness: String = "10 minutes"): Dataset[QuantileBucketOut] = {
-    require(bucketMs > 0, s"bucketMs must be positive, got $bucketMs")
     val spark = points.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.functions._
-    points.toDF()
-      .withColumn("event_time", timestamp_millis(col("ts")))
-      .withWatermark("event_time", lateness)
-      .select(col("url"), (col("ts") - pmod(col("ts"), lit(bucketMs))).as("bucket"),
-        col("value"), col("event_time"))
-      .as[(String, Long, Double, java.sql.Timestamp)]
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (key: (String, Long), rows: Iterator[(String, Long, Double, java.sql.Timestamp)],
-         state: GroupState[graft.ops.Kll]) => {
-          val (url, bucket) = key
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator.single(QuantileBucketOut(url, bucket, s.n,
-              graft.ops.QuantileSketch.quantile(s, 0.5),
-              graft.ops.QuantileSketch.quantile(s, 0.95)))
-          } else {
-            var s = state.getOption.getOrElse(graft.ops.QuantileSketch.empty(k))
-            rows.foreach { r => s = graft.ops.QuantileSketch.update(s, r._3) }
-            state.update(s)
-            state.setTimeoutTimestamp(math.max(bucket + bucketMs,
-              state.getCurrentWatermarkMs() + 1L))
-            Iterator.empty
-          }
-        })
+    import graft.ops.QuantileSketch
+    closeOnWatermark(points, lateness, bucketMs, QuantileSketch.empty(k))(
+        _.url, _.ts, (s, rows) => rows.foldLeft(s)((s, r) => QuantileSketch.update(s, r.value))) {
+      (url, bucket, s) =>
+        Some(QuantileBucketOut(url, bucket, s.n,
+          QuantileSketch.quantile(s, 0.5), QuantileSketch.quantile(s, 0.95)))
+    }
   }
 
   private def feed(
@@ -2619,8 +2000,8 @@ object StreamStage {
       def next(): StreamSummary = { advance(); val s = out; out = null; s }
     }
 
-  /** Structured Streaming: one ClaSS state machine per url inside
-    * flatMapGroupsWithState; emits newly detected change points per batch.
+  /** Structured Streaming: one ClaSS state machine per url as arbitrary
+    * group state; emits newly detected change points per batch.
     * State lives as a flat value snapshot ([[graft.kernel.streaming.SegSnapshot]])
     * under the PRODUCT encoder — primitive arrays serialize as Spark
     * ArrayType, orders of magnitude faster per micro-batch than

@@ -38,7 +38,9 @@ class PipelineOpsSpec extends SparkTestBase {
       Seq(("1m", f"2020-01-$d%02d 00:00:00"), ("1d", f"2020-01-$d%02d 00:00:00")))
     val tiers = rows.toDF("tier", "s")
       .select(col("tier"), to_timestamp(col("s")).as("bucket_start"))
-    val kept = RetentionOps.applyRetention(tiers, Map("1m" -> 2L * 86400000L))
+    val anchor = tiers.agg(max(unix_millis(col("bucket_start"))).as("anchor_ms"))
+    val kept = RetentionOps.applyRetention(tiers, anchor,
+        Map("1m" -> 2L * 86400000L), "tier", "bucket_start")
       .groupBy("tier").count().as[(String, Long)].collect().toMap
     assert(kept("1m") == 3L, "1m keeps days 8,9,10")
     assert(kept("1d") == 10L, "unlisted tier keeps everything")
