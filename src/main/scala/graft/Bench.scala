@@ -48,6 +48,24 @@ object Bench {
           f"cpuSum=${cpuSum.getOrDefault(si.stageId, 0L) / 1e9}%.1fs")
       }
     }
+
+  /** Runs each query once, in order, and times it. A query that throws is
+    * timed like any other, named on stderr and listed in the failures. */
+  def timeQueries(queries: Seq[(String, () => Any)]): (Seq[(String, Double)], Seq[String]) = {
+    val failed = Seq.newBuilder[String]
+    val times = queries.map { case (name, run) =>
+      val q0 = System.nanoTime()
+      val error = try { run(); None } catch { case scala.util.control.NonFatal(e) => Some(e) }
+      val t = (System.nanoTime() - q0) / 1e9
+      error.foreach { e =>
+        Console.err.println(s"[bench] query $name FAILED: $e")
+        failed += name
+      }
+      name -> t
+    }
+    (times, failed.result())
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -187,19 +205,18 @@ object Bench {
     val pointsPerSec = rolledRows / pipelineWall
 
     // ---- per-query timings (skippable for pure scaling runs) --------------
-    val results =
-      if (sys.env.contains("SPARK_GRAFT_SKIP_QUERIES")) Seq.empty[(String, Double)]
-      else SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-        val q0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        name -> (System.nanoTime() - q0) / 1e9
-      }
+    val (results, failed) =
+      if (sys.env.contains("SPARK_GRAFT_SKIP_QUERIES")) (Seq.empty[(String, Double)], Seq.empty[String])
+      else timeQueries(SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+        name -> (() => fn(spark, sfDir).count())
+      })
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val total = pipelineWall + results.map(_._2).sum
     val tiers = tierCounts.toSeq.sortBy(_._1)
       .map { case (t, c) => "\"" + t + "\":" + c }.mkString("{", ",", "}")
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir",""" +
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
+      s""""failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")},"sf":"$sfDir",""" +
       s""""parallelism":$cpus,"pipeline":{"n_urls":$nUrls,"n_points":$nPoints,""" +
       s""""rolled_rows":$rolledRows,"tier_rows":$tiers,"wall_sec":$pipelineWall,""" +
       s""""rolled_points_per_sec":$pointsPerSec,"rollup_hash":$hash}}"""
@@ -216,5 +233,6 @@ object Bench {
       (json + "\n").getBytes("UTF-8"))
     println(json)
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

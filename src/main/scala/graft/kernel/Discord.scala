@@ -29,8 +29,7 @@ object Discord {
     // squared z-normed distance to that one neighbour (one w-length dot
     // each, O(l·w) total) for a comparable anomaly score across rows.
     val off = model.offsetsFlat
-    val (means, stds) = ZNormedEuclidean.preprocess(ts, w)
-      .asInstanceOf[(Array[Double], Array[Double])]
+    val (means, stds) = SlidingStats.slidingMeanStd(ts, w)
     val d = Array.tabulate(off.length) { i =>
       val j = off(i)
       if (j < 0) Double.NegativeInfinity

@@ -22,43 +22,25 @@ sealed trait Distance extends Serializable {
   }
   /** Allocation-free variant: writes into `out` (sized dot.length). */
   def computeInto(idx: Int, dot: Array[Double], w: Int, pre: AnyRef, out: Array[Double]): Unit
-
-  /** computeInto + row max in ONE pass — FP-identical values, one fewer
-    * O(l) sweep in the O(n²) kernel (the kernel is DRAM-bandwidth-bound at
-    * high thread counts, so every removed pass scales the 8→32 leg). */
-  def computeIntoMax(idx: Int, dot: Array[Double], w: Int, pre: AnyRef, out: Array[Double]): Double = {
-    computeInto(idx, dot, w, pre, out)
-    var mx = Double.NegativeInfinity
-    var j = 0
-    while (j < out.length) { if (out(j) > mx) mx = out(j); j += 1 }
-    mx
-  }
 }
 
 object ZNormedEuclidean extends Distance {
   val name = "znormed_euclidean_distance"
-  def preprocess(ts: Array[Double], w: Int): AnyRef = SlidingStats.slidingMeanStd(ts, w)
-  def computeInto(idx: Int, dot: Array[Double], w: Int, pre: AnyRef, out: Array[Double]): Unit = {
-    val (means, stds) = pre.asInstanceOf[(Array[Double], Array[Double])]
-    val mi = means(idx); val si = stds(idx)
-    var j = 0
-    while (j < dot.length) {
-      out(j) = 2.0 * w * (1.0 - (dot(j) - w * means(j) * mi) / (w * stds(j) * si))
-      j += 1
-    }
+  /** (means, stds, w·means, w·stds): `w * means(j) * mi` evaluates as
+    * `(w * means(j)) * mi`, so the products are taken once per fit. */
+  def preprocess(ts: Array[Double], w: Int): AnyRef = {
+    val (means, stds) = SlidingStats.slidingMeanStd(ts, w)
+    (means, stds, means.map(w * _), stds.map(w * _))
   }
-  override def computeIntoMax(idx: Int, dot: Array[Double], w: Int, pre: AnyRef, out: Array[Double]): Double = {
-    val (means, stds) = pre.asInstanceOf[(Array[Double], Array[Double])]
+  def computeInto(idx: Int, dot: Array[Double], w: Int, pre: AnyRef, out: Array[Double]): Unit = {
+    val (means, stds, wMeans, wStds) =
+      pre.asInstanceOf[(Array[Double], Array[Double], Array[Double], Array[Double])]
     val mi = means(idx); val si = stds(idx)
-    var mx = Double.NegativeInfinity
     var j = 0
     while (j < dot.length) {
-      val v = 2.0 * w * (1.0 - (dot(j) - w * means(j) * mi) / (w * stds(j) * si))
-      out(j) = v
-      if (v > mx) mx = v
+      out(j) = 2.0 * w * (1.0 - (dot(j) - wMeans(j) * mi) / (wStds(j) * si))
       j += 1
     }
-    mx
   }
 }
 
