@@ -716,9 +716,9 @@ object Queries {
       // four keep-flag stages + the final projection each consume the
       // corpus through their OWN column-pruned parquet scan (doc_id+text
       // only — pushdown keeps each rescan minimal). The raw scan is NOT
-      // persisted: at 100 TB the corpus cannot be cached, so the rescan
+      // materialized: at 100 TB the corpus cannot be held, so the rescan
       // IS the scalable default; only flag-sized intermediates (see
-      // buildCorpus's decision table) are ever cache candidates.
+      // buildCorpus's decision table) are ever materialized.
       val docs = documents(s, dir)
       val quality = TextOps.qualityScore(docs).select(col("doc_id"), col("keep").as("q_keep"))
       val rep = TextOps.repetitionStats(docs).select(col("doc_id"), col("keep").as("r_keep"))
@@ -1115,16 +1115,13 @@ object Queries {
     // top-10 compiles to TakeOrderedAndProject.
     "q90_dtw_search" -> ((s, dir) => {
       import s.implicits._
-      // persist the hourly profiles: the query-profile collect, the min-id
-      // lookup, and the scoring pass would otherwise each re-run the
-      // event-sized aggregate
-      val hourly = events(s, dir)
+      // the min-id lookup, the query-profile collect and the scoring share it
+      val hourly = ops.Adaptive.materialize(events(s, dir)
         .groupBy(col("user_id"),
           unix_millis(date_trunc("hour", col("ts")).cast("timestamp")).as("b"))
         .agg((sum(col("value").cast("decimal(12,2)")).cast("double")
-          / count(lit(1))).as("m"))
+          / count(lit(1))).as("m")))
         .as[(Long, Long, Double)]
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val qUser = hourly.toDF().agg(min("user_id")).head().getLong(0)
       val query = graft.kernel.Dtw.znorm(
         hourly.filter(_._1 == qUser).collect().sortBy(_._2).map(_._3))
@@ -1347,27 +1344,24 @@ object Queries {
     // Catalyst continuous-aggregate rewrite, min/max included.
     "q100_ca_lifecycle" -> ((s, dir) => {
       val ev = events(s, dir)
-      // ONE parity-keyed hour aggregate feeds both lifecycle halves (r6,
-      // guide §2.4): the old per-half hourAgg(filter(parity)) shapes were
-      // re-evaluated by the upsert join AND by mergeUpserts' two upsert
-      // references — ~5 event-sized scans per run. The parity aggregate is
-      // exact under regrouping (long counts, decimal sums, min/max), and
-      // the checkpoint is (user × hour × 2)-sized, so stored1/delta become
+      // ONE parity-keyed hour aggregate feeds both lifecycle halves: the
+      // upsert join and mergeUpserts' two upsert references share it. The
+      // parity aggregate is exact under regrouping (long counts, decimal
+      // sums, min/max) and (user × hour × 2)-sized, so stored1/delta are
       // free filters. Values are bit-identical (q100 oracle hash-pinned).
-      val parts = ev
+      val parts = ops.Adaptive.materialize(ev
         .groupBy(col("user_id"),
           date_trunc("hour", col("ts")).as("bucket_start"),
           pmod(col("event_id"), lit(2)).as("par"))
         .agg(count(lit(1)).as("cnt"),
           sum(col("value").cast("decimal(12,2)")).as("vsum"),
           min("value").as("vmin"), max("value").as("vmax"))
-        // repartition on the UPSERT JOIN's key before checkpointing: the
+        // repartition on the UPSERT JOIN's key before materializing: the
         // aggregate's (user, bucket, par) partitioning would not satisfy
         // the joins on (user, bucket), forcing them to re-exchange both
-        // checkpointed sides; localCheckpoint preserves this partitioning
-        // so the upsert join and mergeUpserts' anti-join run exchange-free
-        .repartition(col("user_id"), col("bucket_start"))
-        .localCheckpoint(true)
+        // sides; materialize keeps this partitioning, so the upsert join
+        // and mergeUpserts' anti-join run exchange-free
+        .repartition(col("user_id"), col("bucket_start")))
       val stored1 = parts.filter(col("par") === 0).drop("par")
       val delta = parts.filter(col("par") === 1).drop("par")
       val upserts = delta.as("d")

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Scale-adaptive execution sizing (round-6 optimization; guide §2.2/§2.5).
   *
@@ -126,4 +126,28 @@ object Adaptive {
     * shrinks it, so this over-provisions slightly and never under-sizes. */
   def outputFiles(estBytes: Long): Int =
     math.max(1L, estBytes / TargetPartitionBytes).min(Int.MaxValue).toInt
+
+  /** The one way an op or query materializes a SMALL derived table (cells,
+    * vocabulary, key-count or flag-sized — never corpus-sized) that more
+    * than one consumer of the same plan reads.
+    *
+    * Why: referencing a subtree twice re-executes it — each consumer's
+    * pushed-down `isnotnull`/filter makes the copies canonicalize
+    * differently, so exchange reuse cannot fire, and the expensive
+    * aggregate behind the table would run once per consumer.
+    *
+    * How: a lazy local checkpoint. The table is computed by the first
+    * action that needs it, inside that action (no extra job boundary), and
+    * every consumer then reads the same blocks as a `Scan ExistingRDD`.
+    * It truncates lineage (iterative ops such as
+    * [[DedupOps.connectedComponents]] need that) and keeps the plan's
+    * output partitioning, so repartitioning on a downstream join key
+    * before the call saves that join's exchanges (q100).
+    *
+    * Unlike `persist`, nothing is registered with Spark's CacheManager:
+    * the table is private to the query that built it — another query with
+    * the same plan shape recomputes it instead of reading stale or foreign
+    * state — and its blocks are released by the ContextCleaner once the
+    * returned DataFrame is unreachable, so no caller unpersists. */
+  def materialize(df: DataFrame): DataFrame = df.localCheckpoint(eager = false)
 }

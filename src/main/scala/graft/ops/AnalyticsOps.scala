@@ -1077,10 +1077,10 @@ object AnalyticsOps {
       .withColumn("__key", keyCol)
       .withColumn("__tb", trendBucketCol)
       .withColumn("__ph", phaseCol)
-    val cells = tagged
+    // cell-sized; the trend and seasonal derivations share it
+    val cells = Adaptive.materialize(tagged
       .groupBy("__key", "__tb", "__ph")
-      .agg(sum(valueCol).as("__sv"), count(lit(1)).as("__c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .agg(sum(valueCol).as("__sv"), count(lit(1)).as("__c")))
     val trend = cells.groupBy("__key", "__tb")
       .agg((sum("__sv") / sum("__c")).as("trend"))
     val seasonal = cells.join(trend, Seq("__key", "__tb"))
@@ -1413,11 +1413,8 @@ object AnalyticsOps {
     * to the per-period totals, and one final cell-sized hash aggregate.
     * Periods with no predecessor are omitted (drift is undefined).
     *
-    * CACHE LIFETIME: the cell table is persisted (four consumers would
-    * otherwise re-run the event aggregate); the cache is CELL-sized
-    * (keys × periods × bins) and stays registered for the session — a
-    * long-lived service calling this repeatedly should
-    * `spark.catalog.clearCache()` or unpersist between runs. */
+    * The cell table is materialized once for its four consumers
+    * ([[Adaptive.materialize]]: private to this call, released with it). */
   def histogramDrift(
       events: DataFrame,
       keyCol: Column,
@@ -1446,7 +1443,7 @@ object AnalyticsOps {
     *
     * EXACT cross-engine: D and the gap products are exact decimal/HUGEINT
     * integers at any partitioning; each output is one fixed division of
-    * them. Scale shape: reuses [[histogramDrift]]'s persisted cell table
+    * them. Scale shape: reuses [[histogramDrift]]'s cell scaffold
     * (the event-sized aggregate runs once); the cumulative window is
     * partitioned per (key, period) over bin-count-sized frames; the final
     * aggregate is cell-sized.
@@ -1635,14 +1632,11 @@ object AnalyticsOps {
     import org.apache.spark.sql.expressions.Window
     require(churnDays >= 1, s"churnDays must be >= 1, got $churnDays")
     val day = unix_millis(date_trunc("day", tsCol).cast("timestamp"))
-    val spans = events
+    // key-count-sized; the anchor and the lifetime classification share it
+    val spans = Adaptive.materialize(events
       .groupBy(keyCol.as("key"))
       .agg((min(day) / lit(86400000L)).cast("long").as("f"),
-        (max(day) / lit(86400000L)).cast("long").as("l"))
-      // key-count-sized; checkpointed so the anchor aggregate and the
-      // lifetime classification read one event-sized pass, not two
-      // (r6, guide §2.4)
-      .localCheckpoint(true)
+        (max(day) / lit(86400000L)).cast("long").as("l")))
     val anchor = spans.agg(count(lit(1)).as("total"),
       max(col("l")).as("max_day"))
     val evts = spans.crossJoin(broadcast(anchor))
@@ -1677,7 +1671,7 @@ object AnalyticsOps {
     * (key, period, bin), the period's count `c` and its immediate
     * predecessor's `q` (0 where absent, both-absent bins don't exist),
     * plus both totals `n`/`m` — periods with no predecessor drop out.
-    * The event-sized aggregate runs ONCE into the persisted cell table;
+    * The event-sized aggregate runs ONCE into the materialized cell table;
     * everything after is cell-granularity. */
   private def shiftJoinedCells(
       events: DataFrame,
@@ -1688,14 +1682,11 @@ object AnalyticsOps {
       binWidth: Double): DataFrame = {
     require(binWidth > 0, s"binWidth must be positive, got $binWidth")
     require(periodStepMs > 0, s"periodStepMs must be positive, got $periodStepMs")
-    // cells feed four consumers (cells/totals and their +1-period shifts);
-    // persist the CELL-sized table so the event-sized aggregate runs once
-    // (the seasonalDecomposeExact pattern)
-    val cells = events
+    // cell-sized; cells, totals and their +1-period shifts share it
+    val cells = Adaptive.materialize(events
       .groupBy(keyCol.as("key"), periodCol.cast("long").as("period"),
         floor(valueCol / lit(binWidth)).cast("long").as("bin"))
-      .agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .agg(count(lit(1)).as("c")))
     val totals = cells.groupBy("key", "period").agg(sum("c").as("n"))
     val prevCells = cells.select(col("key"),
       (col("period") + lit(periodStepMs)).as("period"), col("bin"),
@@ -1736,11 +1727,11 @@ object AnalyticsOps {
       .withColumn("__key", keyCol)
       .withColumn("__tb", trendBucketCol)
       .withColumn("__ph", phaseCol)
-    val cells = tagged
+    // cell-sized; the trend and seasonal derivations share it
+    val cells = Adaptive.materialize(tagged
       .groupBy("__key", "__tb", "__ph")
       .agg(sum(round(valueCol * lit(scale)).cast("long")).as("__sv"),
-        count(lit(1)).as("__c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        count(lit(1)).as("__c")))
     val trend = cells.groupBy("__key", "__tb")
       .agg((sum("__sv").cast("double") / (lit(scale) * sum("__c"))).as("trend"))
     val seasonal = cells.join(trend, Seq("__key", "__tb"))
@@ -1988,7 +1979,7 @@ object AnalyticsOps {
     * left-to-right over the collected (rollup-sized) bin list, the same
     * mirrorable-op-order discipline as the smoother oracles (and ln
     * parity JVM↔libm is the q65 BM25 precedent). Scale shape: identical
-    * to [[histogramDrift]] — one event-sized aggregate into persisted
+    * to [[histogramDrift]] — one event-sized aggregate into materialized
     * cells, self-joins at cell granularity, and the per-(key, period)
     * fold touches only that pair's own bins. */
   def psiDrift(

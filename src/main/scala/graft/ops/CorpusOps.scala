@@ -145,7 +145,8 @@ object CorpusOps {
     val near = DedupOps.dedupPipeline(documents)
       .select(col("doc_id"), col("keep").as("d_keep"))
     val decon = decontaminate(documents, evalIds)
-    val decided = documents
+    // flag-sized, never text; the drop rows, budget window and shard join share it
+    val decided = Adaptive.materialize(documents
       .select(col("doc_id"), col("lang"), col("source"),
         size(TextOps.tokens(col("text"))).cast("long").as("n_tokens"))
       .join(norm, Seq("doc_id"))
@@ -158,14 +159,7 @@ object CorpusOps {
           .when(!col("q_keep"), "quality")
           .when(!col("r_keep"), "repetition")
           .when(!col("d_keep"), "near_dup")
-          .when(col("contaminated"), "contaminated"))
-      // the decision table is FLAG-SIZED — doc_id, stratum keys, token
-      // count, per-stage keep flags; never the text column (at 100 TB the
-      // raw corpus cannot be cached: each filter stage reads its own
-      // column-pruned scan instead, and only this small table persists).
-      // It is consumed three times below (drop rows, the budget window,
-      // the shard join), so the cache saves two full stage-recomputes.
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .when(col("contaminated"), "contaminated")))
     // budget runs over the docs that survived every filter
     val survivors = decided.filter(col("drop_reason").isNull)
     val w = Window.partitionBy("lang", "source").orderBy("doc_id")

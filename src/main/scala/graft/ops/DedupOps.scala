@@ -149,11 +149,6 @@ object DedupOps {
       .select("doc_a", "doc_b", "hamming")
   }
 
-  /** n-gram Jaccard similarity for candidate pairs from the MinHash LSH
-    * (exact verification happens there); exposed for direct pair scoring. */
-  def ngramJaccard(docs: DataFrame, k: Int = 3): DataFrame =
-    minhashLshPairs(docs, k = k, threshold = 0.0)
-
   /** Connected components over an undirected similarity-pair list — the
     * dedup-GROUPS step a training-data pipeline runs after near-dup pair
     * mining (keep one canonical doc per component). Each round combines
@@ -164,8 +159,8 @@ object DedupOps {
     * silently split components.
     *
     * Scale shape: each round is two keyed equi-joins plus one hash
-    * aggregate — no collect; every round's result is `localCheckpoint`ed
-    * so the plan lineage stays flat instead of nesting one join tree per
+    * aggregate — no collect; every round's result is materialized
+    * ([[Adaptive.materialize]]) so the plan lineage stays flat instead of nesting one join tree per
     * iteration (superseded label tables are reclaimed by Spark's
     * ContextCleaner once the driver drops their references). Convergence
     * is detected distributedly (an isEmpty probe on changed labels).
@@ -178,8 +173,8 @@ object DedupOps {
       nodes: DataFrame,
       pairs: DataFrame,
       maxIter: Int = 25): DataFrame = {
-    // repartition on src BEFORE checkpointing: the per-round propagate join
-    // keys on src, and localCheckpoint preserves physical partitioning, so
+    // repartition on src BEFORE materializing: the per-round propagate join
+    // keys on src, and materialize keeps physical partitioning, so
     // the edge side of that join never re-shuffles after round 0 (the
     // distinct()'s (src, dst) partitioning would otherwise force one edge
     // exchange EVERY round — r6 plan diff: 2 exchanges/round → 1).
@@ -190,31 +185,29 @@ object DedupOps {
     // projections canonicalize differently, so no exchange reuse above
     // the pairs plan's last exchange). The explode emits both directions
     // from a single evaluation; distinct() then dedupes exactly as before.
-    val edges = pairs
+    val edges = Adaptive.materialize(pairs
       .select(explode(array(
         struct(col("a").as("src"), col("b").as("dst")),
         struct(col("b").as("src"), col("a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .distinct()
-      .repartition(col("src"))
-      .localCheckpoint(true)
+      .repartition(col("src")))
     // seed labels at min(node, min neighbour) — exactly the min-fold a
     // first identity-labelled round would compute, so the loop starts one
     // round ahead at the cost of folding the neighbour min into the same
     // aggregate that already deduplicates the node universe. Same fixpoint
     // (seed ≥ component-min pointwise, monotone descent unchanged).
-    var labels = nodes.select(col("node"), col("node").as("comp"))
+    var labels = Adaptive.materialize(nodes.select(col("node"), col("node").as("comp"))
       .union(edges.select(col("src").as("node"), col("src").as("comp")))
       .union(edges.select(col("dst").as("node"), col("src").as("comp")))
-      .groupBy("node").agg(min("comp").as("comp"))
-      .localCheckpoint(true)
+      .groupBy("node").agg(min("comp").as("comp")))
     // Convergence via a MONOTONE invariant instead of a per-round
     // label-diff join: comp is non-increasing per node (min-fold and jump
     // both take minima over a superset that includes the current value) and
     // the node set is fixed, so sum(comp) is strictly decreasing until the
     // fixed point and equal exactly at it. That turns the old third job per
     // round (next ⋈ labels diff + isEmpty probe, two extra exchanges) into
-    // a near-free aggregate over the just-checkpointed round result.
+    // a near-free aggregate that also computes the round result.
     // decimal(38,0): exact at any id/node scale (no long overflow).
     def compSum(df: DataFrame): java.math.BigDecimal =
       df.agg(sum(col("comp").cast("decimal(38,0)"))).head.getDecimal(0)
@@ -224,7 +217,7 @@ object DedupOps {
     // width — label/edge rows are ids, ~32 B each, so a million labels fit
     // comfortably in one 128 MB-class partition. Floor 2 keeps the loop off
     // literal single-partition plans; the outer conf is restored after the
-    // loop (checkpointed results keep their partitioning regardless).
+    // loop (materialized results keep their partitioning regardless).
     val spark = labels.sparkSession
     val init = labels.agg(
       sum(col("comp").cast("decimal(38,0)")), count(lit(1))).head
@@ -240,18 +233,17 @@ object DedupOps {
         val prop = edges.join(labels, edges("src") === labels("node"))
           .select(col("dst").as("node"), col("comp"))
         // the jump join's two sides both read the fold; its shuffle stage is
-        // computed once and re-read (exchange reuse), so no eager
-        // materialization is needed before the round's single checkpoint
+        // computed once and re-read (exchange reuse), so the round's result
+        // is the only table materialized
         val folded = labels.union(prop)
           .groupBy("node").agg(min("comp").as("comp"))
         // pointer jump: relabel through the label's own current label (the
         // renamed copy keeps the self-join's attributes unambiguous)
         val jump = folded.toDF("jn", "jc")
-        val next = folded
+        val next = Adaptive.materialize(folded
           .join(jump, folded("comp") === jump("jn"), "left")
           .select(folded("node"),
-            least(folded("comp"), coalesce(jump("jc"), folded("comp"))).as("comp"))
-          .localCheckpoint(true)
+            least(folded("comp"), coalesce(jump("jc"), folded("comp"))).as("comp")))
         val s = compSum(next)
         converged = s.compareTo(prevSum) == 0
         prevSum = s

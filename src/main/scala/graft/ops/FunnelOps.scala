@@ -38,15 +38,9 @@ object FunnelOps {
     require(steps.distinct.size == steps.size, "funnel steps must be distinct")
     val base = events.select(userCol.as("user"), tsCol.as("ts"),
       typeCol.as("etype"))
-    // each fold step references the accumulated funnel table twice (the
-    // step's survivor join + the outer left join), so without sharing
-    // the whole prefix of event scans re-ran per step — 10 scans for a
-    // 3-step funnel instead of one per step (r6, guide §2.4). The
-    // accumulator is user-count-sized; lazy persist shares one
-    // computation per step without adding eager job boundaries.
-    val first = base.filter(col("etype") === steps.head)
-      .groupBy("user").agg(min(col("ts")).as("ts_1"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // user-count-sized; each step's survivor join and outer left join share it
+    val first = Adaptive.materialize(base.filter(col("etype") === steps.head)
+      .groupBy("user").agg(min(col("ts")).as("ts_1")))
     val completed = steps.zipWithIndex.tail.foldLeft(first) {
       case (acc, (step, i)) =>
         val prevTs = s"ts_$i"
@@ -55,8 +49,7 @@ object FunnelOps {
           .join(acc.select(col("user"), col(prevTs)), Seq("user"))
           .filter(col("ts") > col(prevTs))
           .groupBy("user").agg(min(col("ts")).as(stepTs))
-        acc.join(next.select("user", stepTs), Seq("user"), "left")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        Adaptive.materialize(acc.join(next.select("user", stepTs), Seq("user"), "left"))
     }
     val depth = steps.indices.tail.foldLeft(lit(1)) { (acc, i) =>
       acc + when(col(s"ts_${i + 1}").isNotNull, 1).otherwise(0)

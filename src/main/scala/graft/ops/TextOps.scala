@@ -116,13 +116,11 @@ object TextOps {
       topN: Int = 1000): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(topN >= 2, s"topN must be >= 2, got $topN")
-    val tf = documents
+    // vocab-sized; the vocabulary count and the rank window share it
+    val tf = Adaptive.materialize(documents
       .select(groupCol.as("grp"), explode(tokens(col("text"))).as("tok"))
       .filter(length(col("tok")) > 0)
-      .groupBy("grp", "tok").agg(count(lit(1)).as("c"))
-      // vocab-sized; checkpointed so the vocabulary count and the rank
-      // window read one corpus tokenize+explode pass, not two (r6, §2.4)
-      .localCheckpoint(true)
+      .groupBy("grp", "tok").agg(count(lit(1)).as("c")))
     val vocab = tf.groupBy("grp").agg(count(lit(1)).as("vocab_size"))
     val w = Window.partitionBy("grp").orderBy(col("c").desc, col("tok"))
     val ranked = tf.withColumn("rnk", row_number().over(w))
@@ -177,14 +175,11 @@ object TextOps {
     val toks = documents
       .select(groupCol.as("grp"), explode(tokens(col("text"))).as("tok"))
       .filter(length(col("tok")) > 0)
-    val top = toks.groupBy("tok").agg(count(lit(1)).as("cc"))
+    // topN rows; the membership and grid broadcasts and corpus total share it
+    val top = Adaptive.materialize(toks.groupBy("tok").agg(count(lit(1)).as("cc"))
       .orderBy(col("cc").desc, col("tok")).limit(topN)
       .withColumn("rank",
-        row_number().over(Window.orderBy(col("cc").desc, col("tok"))))
-      // topN rows, but its three references (membership broadcast, grid
-      // broadcast, corpus total) each re-ran the corpus-sized token
-      // aggregate behind it — checkpoint so it computes once (r6, §2.4)
-      .localCheckpoint(true)
+        row_number().over(Window.orderBy(col("cc").desc, col("tok")))))
     val grpCounts = toks
       .join(broadcast(top.select("tok", "rank")), Seq("tok"))
       .groupBy("grp", "rank").agg(count(lit(1)).as("gc"))
@@ -252,14 +247,9 @@ object TextOps {
         shiftright(docIdCol.cast("long"), chunkShift).as("chunk"),
         explode(tokens(col("text"))).as("tok"))
       .filter(length(col("tok")) > 0)
-    // ONE corpus tokenize+explode pass (r6, guide §2.4): first-seen and
-    // per-chunk totals both derive from the (grp, tok, chunk) count
-    // aggregate, which is vocab×chunk-sized and checkpointed; the four
-    // downstream references previously each re-ran the corpus explode.
-    // sum(c) per (grp, chunk) equals the old direct token count exactly.
-    val pairs = toks.groupBy("grp", "tok", "chunk")
-      .agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // vocab×chunk-sized; first-seen and per-chunk totals share it (exact sums)
+    val pairs = Adaptive.materialize(toks.groupBy("grp", "tok", "chunk")
+      .agg(count(lit(1)).as("c")))
     val firstChunk = pairs.groupBy("grp", "tok")
       .agg(min("chunk").as("first_chunk"))
     val newPerChunk = firstChunk
@@ -349,20 +339,10 @@ object TextOps {
       labeled: DataFrame,
       goldCol: Column,
       predCol: Column): DataFrame = {
-    // materialize the (gold, pred) cells eagerly (r6, guide §2.4): the
-    // four downstream branches (byGold/byPred/tp + the classes union)
-    // each acquire branch-specific pushed-down predicates (isnotnull on
-    // their join key, gold = pred for tp), which make the subtrees
-    // canonicalize differently — so WITHOUT the checkpoint the
-    // corpus-sized scan+aggregate ran once per branch (~5×; exchange
-    // reuse cannot fire across differing pushdowns). The cells table is
-    // |gold classes| × |pred classes| rows — checkpointing it is free at
-    // any corpus scale and makes the "everything after is
-    // class-count-sized" contract hold at runtime.
-    val pairs = labeled
+    // class×class-sized; byGold, byPred, tp and the classes union share it
+    val pairs = Adaptive.materialize(labeled
       .groupBy(goldCol.as("gold"), predCol.as("pred"))
-      .agg(count(lit(1)).as("n"))
-      .localCheckpoint(true)
+      .agg(count(lit(1)).as("n")))
     val byGold = pairs.groupBy(col("gold").as("cls"))
       .agg(sum("n").as("support"))
     val byPred = pairs.groupBy(col("pred").as("cls"))
@@ -631,7 +611,7 @@ object TextOps {
     * final round(6) is belt-and-braces only.
     *
     * Scale shape: unigram counts are one token-keyed hash aggregate
-    * (map-side combined), checkpointed because they are vocab-sized; V is
+    * (map-side combined), materialized because they are vocab-sized; V is
     * ONE broadcast single-row aggregate over them (the BM25 stats
     * license). Bigram counts are a count WINDOW over one gram-keyed
     * exchange of the gram stream, which scoring then reads directly: the
@@ -662,14 +642,9 @@ object TextOps {
             element_at(col("t"), i + 2)).as("g")))).as("s"))
       .select(col("doc_id"), col("s.pos").as("pos"), col("s.t1").as("t1"),
         col("s.g").as("g"))
-    // unigram counts are vocab-sized — checkpoint them so the vocabulary
-    // scalar and the context join read ONE tokenize+explode pass instead
-    // of re-running it per reference (the left join pushes isnotnull(t1)
-    // into its copy, so the two subtrees cannot share an exchange) (r6,
-    // guide §2.4)
-    val uni = docToks.select(explode(col("t")).as("tok"))
-      .groupBy("tok").agg(count(lit(1)).as("c1"))
-      .localCheckpoint(true)
+    // vocab-sized; the vocabulary scalar and the context join share it
+    val uni = Adaptive.materialize(docToks.select(explode(col("t")).as("tok"))
+      .groupBy("tok").agg(count(lit(1)).as("c1")))
     val vocab = uni.agg(count(lit(1)).as("v"))
     val terms = grams
       // bigram count via a window over the gram-keyed exchange instead of
@@ -780,11 +755,9 @@ object TextOps {
     require(topN >= 1, s"topN must be >= 1, got $topN")
     val toks = filter(tokens(col("text")), t => length(t) > 0)
     val base = documents.select(toks.as("t"))
-    val uni = base.select(explode(col("t")).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("c"))
-      // vocab-sized; persisted (lazy) so the w1 and w2 attach joins share
-      // one tokenize+explode pass inside the action (r6, guide §2.4)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // vocab-sized; the w1 and w2 attach joins share it
+    val uni = Adaptive.materialize(base.select(explode(col("t")).as("w"))
+      .groupBy("w").agg(count(lit(1)).as("c")))
     val nBig = greatest(size(col("t")) - 1, lit(0))
     val totals = base.agg(
       sum(size(col("t")).cast("long")).as("nu"),
@@ -842,18 +815,13 @@ object TextOps {
     val toks = filter(tokens(col("text")), t => length(t) > 0)
     val base = documents.select(toks.as("t"))
     val nBig = greatest(size(col("t")) - 1, lit(0))
-    val big = base
+    // bigram-type-sized; ctx, cont, types and the smoothing chain share it
+    val big = Adaptive.materialize(base
       .select(explode(zip_with(
         slice(col("t"), lit(1), nBig), slice(col("t"), lit(2), nBig),
         (a, b) => struct(a.as("w1"), b.as("w2")))).as("bg"))
       .select(col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-      .groupBy("w1", "w2").agg(count(lit(1)).as("c_xy"))
-      // the bigram-type count table is the LM artifact every downstream
-      // table derives from — checkpoint it so ctx/cont/types and the
-      // final smoothing chain read ONE corpus explode+aggregate instead
-      // of re-running it per reference (their differing pushed-down
-      // predicates defeat exchange sharing) (r6, guide §2.4)
-      .localCheckpoint(true)
+      .groupBy("w1", "w2").agg(count(lit(1)).as("c_xy")))
     val ctx = big.groupBy("w1").agg(
       sum("c_xy").as("c_w1"), count(lit(1)).as("n_follow"))
     val cont = big.groupBy("w2").agg(count(lit(1)).as("n_precede"))

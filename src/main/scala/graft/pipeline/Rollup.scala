@@ -568,115 +568,91 @@ object Rollup {
         col("vsum").cast("decimal(22,2)").as("vsum")))
   }
 
-  // ------------------------------------------- DataFrame-level gap-fill op
+  // ------------------------------------------ DataFrame-level gap-fill ops
 
   /** Declarative gap-fill + locf over an aggregated (key, bucket, mean)
-    * frame: sequence() per key → explode → left join → last(ignoreNulls)
-    * window. Catalyst-visible (unlike the in-kernel path) so the optimizer
-    * can prune/push; used by the oracle-checked q_gapfill queries. */
+    * frame: every missing bucket takes the last observation before it.
+    * Catalyst-visible (unlike the in-kernel path) so the optimizer can
+    * prune/push; used by the oracle-checked q_gapfill queries. */
   def gapFillLocf(
       agg: DataFrame, // columns: key, bucket (timestamp), mean (double)
-      bucketSeconds: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // the span build and the fill join both reference `agg`, and each
-    // reference re-ran the caller's event-sized aggregate behind it;
-    // persist the (key × bucket)-sized frame so both references share
-    // ONE computation inside the action (lazy — no extra job boundary,
-    // the shiftJoinedCells pattern; r6, guide §2.4 — same in the
-    // linear/nearest variants)
-    val aggM = agg.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val spans = aggM.groupBy("key")
-      .agg(min("bucket").as("b0"), max("bucket").as("b1"))
-      .select(col("key"), explode(
-        sequence(col("b0"), col("b1"), expr(s"interval $bucketSeconds seconds"))).as("bucket"))
-    val w = Window.partitionBy("key").orderBy("bucket")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    spans.join(aggM, Seq("key", "bucket"), "left")
-      .withColumn("gap_filled", col("mean").isNull)
-      .withColumn("mean", last("mean", ignoreNulls = true).over(w))
-  }
+      bucketSeconds: Long): DataFrame =
+    gapFill(agg, bucketSeconds)(col("prev_v"))
 
   /** Linear-interpolation gap fill (TimescaleDB `interpolate`-style, public
     * semantics): every missing bucket between a key's first and last
     * observation gets `prev + (next - prev) * (t - t_prev) / (t_next -
     * t_prev)`; a run of leading gaps takes the first observed value, which
-    * cannot occur here because spans start at each key's min bucket. Same
-    * scale shape as [[gapFillLocf]]: one shuffle on key for the span
-    * generation, one window partitioned by key — no self-join, no
-    * inequality join, survives 100× because per-key state is two running
-    * endpoints. */
+    * cannot occur here because spans start at each key's min bucket. */
   def gapFillLinear(
       agg: DataFrame, // columns: key, bucket (timestamp), mean (double)
       bucketSeconds: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val aggM = agg.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // see gapFillLocf
-    val spans = aggM.groupBy("key")
-      .agg(min("bucket").as("b0"), max("bucket").as("b1"))
-      .select(col("key"), explode(
-        sequence(col("b0"), col("b1"), expr(s"interval $bucketSeconds seconds"))).as("bucket"))
-    val wPrev = Window.partitionBy("key").orderBy("bucket")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wNext = Window.partitionBy("key").orderBy("bucket")
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    val obsTs = when(col("raw").isNotNull, col("bucket"))
-    val joined = spans.join(aggM.withColumnRenamed("mean", "raw"), Seq("key", "bucket"), "left")
-      .withColumn("prev_v", last("raw", ignoreNulls = true).over(wPrev))
-      .withColumn("prev_t", last(obsTs, ignoreNulls = true).over(wPrev))
-      .withColumn("next_v", first("raw", ignoreNulls = true).over(wNext))
-      .withColumn("next_t", first(obsTs, ignoreNulls = true).over(wNext))
     // identical expression shape to the DuckDB oracle: ((next-prev) * dt) / span
     // parquet timestamps arrive as TIMESTAMP_NTZ; session is UTC so the
     // cast is instant-preserving (see q04/q33 and the NTZ gotcha note)
     val eb = unix_seconds(col("bucket").cast("timestamp")).cast("double")
     val ep = unix_seconds(col("prev_t").cast("timestamp")).cast("double")
     val en = unix_seconds(col("next_t").cast("timestamp")).cast("double")
-    joined
-      .withColumn("gap_filled", col("raw").isNull)
-      .withColumn("mean",
-        when(col("raw").isNotNull, col("raw"))
-          .when(col("next_v").isNull, col("prev_v"))
-          .when(col("prev_v").isNull, col("next_v"))
-          .otherwise(col("prev_v") + (col("next_v") - col("prev_v")) * (eb - ep) / (en - ep)))
-      .select(col("key"), col("bucket"), col("mean"), col("gap_filled"))
+    gapFill(agg, bucketSeconds)(observedOrEnds(
+      col("prev_v") + (col("next_v") - col("prev_v")) * (eb - ep) / (en - ep)))
   }
 
   /** Nearest-observation gap fill (pandas `resample(...).nearest()`
     * semantics, public method — completing the locf/linear family): every
     * missing bucket takes the value of the CLOSEST observation in time;
     * exact-middle ties take the PREVIOUS one (so the fill degrades to LOCF
-    * at ties — deterministic and oracle-expressible). Same scale shape as
-    * [[gapFillLocf]]: per-key span explode + two windows carrying one
-    * running endpoint each. Distances are integer ms — the op is exact. */
+    * at ties — deterministic and oracle-expressible). Distances are integer
+    * ms — the op is exact. */
   def gapFillNearest(
       agg: DataFrame, // columns: key, bucket (timestamp), mean (double)
       bucketSeconds: Long): DataFrame = {
+    val eb = unix_millis(col("bucket").cast("timestamp"))
+    val dPrev = eb - unix_millis(col("prev_t").cast("timestamp"))
+    val dNext = unix_millis(col("next_t").cast("timestamp")) - eb
+    gapFill(agg, bucketSeconds)(observedOrEnds(
+      when(dPrev <= dNext, col("prev_v")).otherwise(col("next_v"))))
+  }
+
+  /** The gap-fill family's one skeleton: a row per bucket from each key's
+    * first to its last observation (sequence() per key → explode → left
+    * join), carrying the observation as `raw` (null in a gap) and, in
+    * bucket order per key, the last observation at or before the row
+    * (`prev_v` at `prev_t`) and the first at or after it (`next_v` at
+    * `next_t`). `fill` computes the output `mean` from those columns;
+    * `gap_filled` marks the rows that had no observation. Output columns:
+    * key, bucket, mean, gap_filled.
+    *
+    * Scale shape: one shuffle on key for the span generation, windows
+    * partitioned by key — no self-join, no inequality join; per-key state
+    * is two running endpoints. Endpoint columns a fill never reads are
+    * pruned with their windows by the optimizer. */
+  private def gapFill(agg: DataFrame, bucketSeconds: Long)(fill: Column): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val aggM = agg.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // see gapFillLocf
+    // the span build and the fill join both read the (key × bucket) frame
+    val aggM = graft.ops.Adaptive.materialize(agg)
     val spans = aggM.groupBy("key")
       .agg(min("bucket").as("b0"), max("bucket").as("b1"))
       .select(col("key"), explode(
         sequence(col("b0"), col("b1"), expr(s"interval $bucketSeconds seconds"))).as("bucket"))
-    val wPrev = Window.partitionBy("key").orderBy("bucket")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wNext = Window.partitionBy("key").orderBy("bucket")
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
+    val byBucket = Window.partitionBy("key").orderBy("bucket")
+    val wPrev = byBucket.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val wNext = byBucket.rowsBetween(Window.currentRow, Window.unboundedFollowing)
     val obsTs = when(col("raw").isNotNull, col("bucket"))
-    val joined = spans.join(aggM.withColumnRenamed("mean", "raw"), Seq("key", "bucket"), "left")
+    spans.join(aggM.withColumnRenamed("mean", "raw"), Seq("key", "bucket"), "left")
       .withColumn("prev_v", last("raw", ignoreNulls = true).over(wPrev))
       .withColumn("prev_t", last(obsTs, ignoreNulls = true).over(wPrev))
       .withColumn("next_v", first("raw", ignoreNulls = true).over(wNext))
       .withColumn("next_t", first(obsTs, ignoreNulls = true).over(wNext))
-    val eb = unix_millis(col("bucket").cast("timestamp"))
-    val dPrev = eb - unix_millis(col("prev_t").cast("timestamp"))
-    val dNext = unix_millis(col("next_t").cast("timestamp")) - eb
-    joined
       .withColumn("gap_filled", col("raw").isNull)
-      .withColumn("mean",
-        when(col("raw").isNotNull, col("raw"))
-          .when(col("next_v").isNull, col("prev_v"))
-          .when(col("prev_v").isNull, col("next_v"))
-          .when(dPrev <= dNext, col("prev_v"))
-          .otherwise(col("next_v")))
+      .withColumn("mean", fill)
       .select(col("key"), col("bucket"), col("mean"), col("gap_filled"))
   }
+
+  /** The observation where there is one; in a gap with only one endpoint
+    * that endpoint, else `interior` (linear and nearest fills). */
+  private def observedOrEnds(interior: Column): Column =
+    when(col("raw").isNotNull, col("raw"))
+      .when(col("next_v").isNull, col("prev_v"))
+      .when(col("prev_v").isNull, col("next_v"))
+      .otherwise(interior)
 }

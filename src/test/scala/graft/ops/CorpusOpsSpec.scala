@@ -107,10 +107,9 @@ class CorpusOpsSpec extends SparkTestBase {
   }
 
   test("buildCorpus caches only the flag-sized decision table, never text") {
-    // the cache substitution happens in the LOGICAL plan (CacheManager
-    // replaces the cached subtree with InMemoryRelation), so assert there —
-    // the physical InMemoryTableScanExec hides inside AQE query stages
-    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    // a materialized table is a LogicalRDD in the logical plan, so assert
+    // there — the physical scan hides inside AQE query stages
+    import org.apache.spark.sql.execution.LogicalRDD
     val filler = (1 to 25).map(i => s"w$i").mkString(" ")
     val docs = (1L to 8L)
       .map(i => (i, filler + s" uniq$i extra$i more$i", "en", "web"))
@@ -119,15 +118,15 @@ class CorpusOpsSpec extends SparkTestBase {
       docs.filter($"doc_id" < 0).select("doc_id"),
       budgetPerStratum = 1000L, nShards = 2)
     out.collect()
-    val cachedRels = out.queryExecution.optimizedPlan.collect {
-      case r: InMemoryRelation => r
+    val materialized = out.queryExecution.optimizedPlan.collect {
+      case r: LogicalRDD => r
     }
-    assert(cachedRels.nonEmpty,
-      "the decision table must be persisted (it is consumed three times)")
-    cachedRels.foreach { r =>
-      val cached = r.output.map(_.name)
-      assert(!cached.contains("text"),
-        s"the cache must be flag-sized — text may never be cached, got $cached")
+    assert(materialized.nonEmpty,
+      "the decision table must be materialized (it is consumed three times)")
+    materialized.foreach { r =>
+      val held = r.output.map(_.name)
+      assert(!held.contains("text"),
+        s"the table must be flag-sized — text may never be materialized, got $held")
     }
   }
 

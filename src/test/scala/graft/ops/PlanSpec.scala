@@ -264,9 +264,11 @@ class PlanSpec extends SparkTestBase {
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"))
     assert(!p.contains("Window"),
       "decomposition must come from cell aggregates, not row windows")
-    // phase-2 derivations run on the persisted cells: the events appear in
-    // the plan only for the annotate join, via InMemoryTableScan reuse
-    assert(p.contains("InMemoryTableScan"), "cells must be persisted and reused")
+    // phase-2 derivations run on the materialized cells (Scan ExistingRDD):
+    // the events appear in the plan only for the annotate join
+    assert(p.contains("Scan ExistingRDD"), "cells must be materialized and reused")
+    val scans = p.split("\n").count(l => l.contains("FileScan parquet") && l.contains("events"))
+    assert(scans == 1, s"events must be scanned once, for the annotate join, saw $scans:\n$p")
   }
 
   test("q92 tiered read: ONE events scan serves all three tiers") {
@@ -285,12 +287,12 @@ class PlanSpec extends SparkTestBase {
   test("q96 histogram drift: cells aggregated once, consumers reuse the cache") {
     val p = plan("q96_histogram_drift")
     // four consumers (cells/totals and their shifted twins) must ALL read
-    // the persisted cell table, not re-run the event-sized aggregate (the
-    // FileScan text still appears once per consumer — it is the cached
-    // relation's plan printed inside each InMemoryRelation, not a rescan)
-    val cached = p.split("\n").count(_.contains("InMemoryTableScan"))
-    assert(cached >= 4,
-      s"all four cell consumers must hit the cache, saw $cached:\n$p")
+    // the materialized cell table, not re-run the event-sized aggregate:
+    // each reads it as a Scan ExistingRDD, and the events are never scanned
+    val reads = p.split("\n").count(_.contains("Scan ExistingRDD"))
+    assert(reads >= 4,
+      s"all four cell consumers must read the materialized table, saw $reads:\n$p")
+    assert(!p.contains("FileScan"), s"the event-sized aggregate must not re-run:\n$p")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"))
   }
 

@@ -18,6 +18,10 @@ class RollupPipelineSpec extends SparkTestBase {
     assert(perUrl.values.forall(n => n >= 2 && n <= 5))
   }
 
+  test("SparkEntry.entry: the flagship slice yields rows") {
+    assert(graft.SparkEntry.entry(spark).count() > 0)
+  }
+
   test("kernel rollup: bucket span, gap-fill locf, exact non-gap aggregates") {
     // 1m cadence with a 5-bucket hole; values 1..n
     val pts = Seq(
