@@ -31,27 +31,24 @@ object Queries {
       .as[SeriesPoint]
   }
 
-  /** Synthetic-input sizing for the kernel-heavy queries (q23/q25/q27/q28/
-    * q31/q34). Resolution order: explicit `SPARK_GRAFT_SYNTH_SCALE` env
-    * (0=small, 1=mid, 2=big), else the `sf<value>` token parsed from the
-    * data dir name, else the small tier — so an arbitrarily named dir runs
-    * correctly (just at smoke scale) instead of silently mis-sizing. */
   /** Fixed epoch anchor (2024-01-01T00:00:00Z) for integer time coordinates
     * in q123/q124 — keeps hour indices small enough that every OLS/CCF
     * sufficient statistic is an exact integer sum. */
   private val AnchorMs = 1704067200000L
 
   private val sfToken = "sf([0-9]*\\.?[0-9]+)".r
-  private def synthScale(dir: String, small: Int, mid: Int, big: Int): Int = {
-    val tier = sys.env.get("SPARK_GRAFT_SYNTH_SCALE").map(_.trim.toInt).getOrElse {
-      sfToken.findFirstMatchIn(dir).map(_.group(1).toDouble) match {
-        case Some(sf) if sf >= 0.1  => 2
-        case Some(sf) if sf >= 0.01 => 1
-        case _                      => 0
-      }
+
+  /** Synthetic-input sizing for the kernel-heavy queries (q23/q25/q27/q28/
+    * q31/q34), from the `sf<value>` token parsed from the data dir name:
+    * `big` at sf ≥ 0.1, `mid` at sf ≥ 0.01, else `small` — also when the
+    * name has no such token, so an arbitrarily named dir runs correctly
+    * (just at smoke scale) instead of silently mis-sizing. */
+  private def synthScale(dir: String, small: Int, mid: Int, big: Int): Int =
+    sfToken.findFirstMatchIn(dir).map(_.group(1).toDouble) match {
+      case Some(sf) if sf >= 0.1  => big
+      case Some(sf) if sf >= 0.01 => mid
+      case _                      => small
     }
-    tier match { case 0 => small; case 1 => mid; case _ => big }
-  }
 
   /** Output file count for a query-built rollup store (guide §6: size
     * files toward 128 MB; floor 1). The store is an aggregate of the
@@ -2000,7 +1997,7 @@ object Queries {
     * FFT/ACF period search): their shuffles are tiny in bytes but
     * heavy-tailed in per-key cost, so their partition floor is the full
     * core count with no byte cap, instead of the size-derived width — see
-    * [[graft.ops.Adaptive]] (and its DenseMult knob). */
+    * [[graft.ops.Adaptive]]. */
   private val cpuDenseQueries: Set[String] = Set(
     "q13_epoch_rollup_1h", "q14_clasp_summary", "q23_crawl_pipeline_1d",
     "q24_stream_summary", "q25_stream_cps", "q27_state_detection",

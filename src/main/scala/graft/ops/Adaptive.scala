@@ -21,8 +21,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   *   partitions = max(ceil(inputBytes / 128 MB),                 // target size
   *                    min(defaultParallelism, ceil(inputBytes / 1 MB)))
-  *   // cpuDense queries: floor = defaultParallelism × DenseMult, no byte
-  *   //   minimum (their bytes understate cost by construction)
+  *   // cpuDense queries: floor = defaultParallelism, no byte minimum
+  *   //   (their bytes understate cost by construction)
   *
   * - The 128 MB target is the guide's 100 MB–1 GB post-shuffle partition
   *   size; at 100 TB it dominates (~800k partitions) and the floor is
@@ -35,8 +35,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * - CPU-dense queries (ClaSP/ClaSS kernel stages, DTW, matrix-profile
   *   style per-key O(n²) work) floor at the FULL defaultParallelism with
   *   no byte minimum: their shuffles are small in bytes but heavy in
-  *   per-key CPU, so every core must get a slot regardless of byte counts
-  *   (the over-decomposition multiplier is [[DenseMult]], measured below).
+  *   per-key CPU, so every core must get a slot regardless of byte counts.
+  *   Over-decomposing further does not pay: over the 11 dense queries at
+  *   sf0.1/local[32], back-to-back same-config sweeps measured floor×8 =
+  *   15.6 s, ×2 = 13.6 s, ×1 = 12.5 s — the extra tasks cost more in
+  *   scheduling than they save in straggler drain at these key counts (the
+  *   kernel PIPELINE keeps the bench session's own 8×cores conf).
   *
   * This is session-conf based (`spark.sql.shuffle.partitions` is read at
   * action time) — every query fn sets its own value on entry, so ordering
@@ -59,24 +63,8 @@ object Adaptive {
     * stage's work is metadata-sized and AQE is pure per-stage re-planning
     * overhead (measured back-to-back over all 153 queries at sf0.1:
     * 150.9 s with AQE, 124.4 s without — ~17%). At or above the threshold
-    * AQE stays ON (the 100-TB posture). Override via
-    * SPARK_GRAFT_AQE_MIN_BYTES. */
-  val AqeMinInputBytes: Long =
-    sys.env.get("SPARK_GRAFT_AQE_MIN_BYTES").map(_.toLong)
-      .getOrElse(1024L * 1024 * 1024)
-
-  /** Straggler-drain width multiplier for CPU-dense kernel queries.
-    * Default 1: the dense floor is the FULL defaultParallelism (every core
-    * gets a slot regardless of byte counts — unlike ordinary queries,
-    * whose floor is byte-capped). Measured over the 11 dense queries at
-    * sf0.1/local[32], back-to-back same-config sweeps: floor×8 = 15.6 s,
-    * ×2 = 13.6 s, ×1 = 12.5 s — the extra over-decomposition costs more
-    * in task scheduling than it saves in straggler drain at these key
-    * counts. Deployments with heavier per-key tails can raise
-    * SPARK_GRAFT_DENSE_MULT (the kernel PIPELINE keeps the bench
-    * session's own 8×cores conf either way). */
-  val DenseMult: Long =
-    sys.env.get("SPARK_GRAFT_DENSE_MULT").map(_.toLong).getOrElse(1L)
+    * AQE stays ON (the 100-TB posture). */
+  val AqeMinInputBytes: Long = 1024L * 1024 * 1024
 
   private val dirBytesCache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
@@ -94,7 +82,7 @@ object Adaptive {
 
   /** Shuffle width for a query over `dir`: size-derived with a
     * parallelism floor; `cpuDense` lifts the floor's byte cap for
-    * kernel-stage queries (see object doc and [[DenseMult]]). */
+    * kernel-stage queries (see object doc). */
   def shufflePartitions(spark: SparkSession, dir: String, cpuDense: Boolean): Int = {
     val bytes = math.max(1L, inputBytes(dir))
     val target = (bytes + TargetPartitionBytes - 1) / TargetPartitionBytes
@@ -102,9 +90,8 @@ object Adaptive {
       if (cpuDense)
         // kernel-stage shuffles: bytes understate cost by construction (the
         // per-key work is O(n²) ClaSP/CLaP/DTW CPU), so the byte-based
-        // minimum does NOT apply — keep the straggler-drain fan-out
-        // ([[DenseMult]]; SPARK_GRAFT_DENSE_MULT overrides)
-        spark.sparkContext.defaultParallelism.toLong * DenseMult
+        // minimum does NOT apply — every core gets a slot
+        spark.sparkContext.defaultParallelism.toLong
       else
         math.min(spark.sparkContext.defaultParallelism.toLong,
           (bytes + MinPartitionBytes - 1) / MinPartitionBytes)

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 import graft.kernel.{BinaryClaSPSegmentation, Gorilla}
 
@@ -34,95 +34,24 @@ object Rollup {
   val TierMs: Map[String, Long] =
     Map("1m" -> 60000L, "1h" -> 3600000L, "1d" -> 86400000L)
 
-  /** Series longer than this many buckets route through the streaming ClaSS
-    * detector (the reference's own guidance for very large archives —
-    * `claspy/notebooks/streaming_time_series.ipynb`; its README cites sliding
-    * windows of 1k-10k). Beyond correctness this bounds the per-task tail:
-    * one O(n²) mega-series inside a single groupByKey task is the straggler
-    * that caps cluster scaling, so the threshold is also the knob that keeps
-    * max task time ~flat as data grows. */
+  /** The rollup's chunk width: phase 1 of the chunked rollup cuts every
+    * series into time chunks of this many buckets and runs batch ClaSP on
+    * each, so one O(n²) mega-series never lands whole in one task — the
+    * straggler that caps cluster scaling; the width keeps max task time
+    * ~flat as data grows. [[segmentCps]] (q27) sends series longer than
+    * this through the streaming ClaSS detector instead (the reference's
+    * guidance for very large archives —
+    * `claspy/notebooks/streaming_time_series.ipynb`; its README cites
+    * sliding windows of 1k-10k). */
   val MegaSeriesBuckets = 4000
 
   // ------------------------------------------------------------------ kernel
-
-  /** Per-url kernel: bucket + gap-fill at `bucketMs`, ClaSP-segment the
-    * gap-filled mean series into epochs, emit one RollupRow per bucket.
-    * Runs entirely inside one task (per-series locality — SURVEY.md §2.3). */
-  def kernelRollup(
-      url: String,
-      ptsIn: Iterator[(Long, Double)],
-      bucketMs: Long,
-      tier: String,
-      segment: Boolean): Array[RollupRow] = {
-    val pts = ptsIn.toArray
-    if (pts.isEmpty) return Array.empty
-    java.util.Arrays.sort(pts, Ordering.by[(Long, Double), (Long, Double)](identity))
-
-    val first = Math.floorDiv(pts.head._1, bucketMs)
-    val last = Math.floorDiv(pts.last._1, bucketMs)
-    val nB = (last - first + 1).toInt
-    require(nB > 0 && nB < (1 << 28), s"url=$url buckets=$nB out of range")
-
-    val cnt = new Array[Long](nB)
-    val sum = new Array[Double](nB)
-    val mn = Array.fill(nB)(Double.PositiveInfinity)
-    val mx = Array.fill(nB)(Double.NegativeInfinity)
-    var i = 0
-    while (i < pts.length) {
-      val b = (Math.floorDiv(pts(i)._1, bucketMs) - first).toInt
-      val v = pts(i)._2
-      cnt(b) += 1; sum(b) += v
-      if (v < mn(b)) mn(b) = v
-      if (v > mx(b)) mx(b) = v
-      i += 1
-    }
-
-    // gap-fill: locf mean (first bucket always has data by construction)
-    val mean = new Array[Double](nB)
-    var lastMean = 0.0
-    i = 0
-    while (i < nB) {
-      if (cnt(i) > 0) lastMean = sum(i) / cnt(i)
-      mean(i) = lastMean
-      i += 1
-    }
-
-    val epochs: Array[Int] =
-      if (!segment) Array.fill(nB)(-1)
-      else segmentEpochs(mean)
-
-    Array.tabulate(nB) { b =>
-      val gap = cnt(b) == 0L
-      RollupRow(url, tier, epochs(b), (first + b) * bucketMs,
-        cnt(b), sum(b),
-        if (gap) mean(b) else mn(b),
-        if (gap) mean(b) else mx(b),
-        mean(b), gap)
-    }
-  }
-
-  /** ClaSP change points over the bucket-mean series → dense epoch ids.
-    * Mega-series go through the streaming ClaSS detector — O(ring) per point
-    * instead of O(n²) total — mirroring the reference's own recommendation
-    * for very large archives (`claspy/notebooks/streaming_time_series.ipynb`). */
-  def segmentEpochs(series: Array[Double]): Array[Int] = {
-    val n = series.length
-    val cps = segmentCps(series)
-    val epochs = new Array[Int](n)
-    var e = 0; var next = 0; var i = 0
-    while (i < n) {
-      if (next < cps.length && i == cps(next)) { e += 1; next += 1 }
-      epochs(i) = e
-      i += 1
-    }
-    epochs
-  }
 
   /** Mega-guarded change points: batch ClaSP under [[MegaSeriesBuckets]],
     * the O(ring) streaming detector above it. */
   def segmentCps(series: Array[Double]): Array[Int] = {
     val n = series.length
-    if (n <= MegaSeriesBuckets) segmentSafe(series, 0)
+    if (n <= MegaSeriesBuckets) segmentEpochCps(series)
     else {
       // jump=50: the reference's jump=5 suits LIVE detection latency; for
       // offline epoch assignment a 50-bucket detection grid costs one
@@ -139,9 +68,10 @@ object Rollup {
     }
   }
 
-  /** BinaryClaSPSegmentation with degenerate-input guards: too-short or
-    * (near-)constant series yield no change points. */
-  private def segmentSafe(series: Array[Double], offset: Int): Array[Int] = {
+  /** Raw change-point indices of one gap-filled bucket-mean span (a chunk of
+    * the rollup's phase 1): BinaryClaSPSegmentation with degenerate-input
+    * guards — too-short or (near-)constant series yield no change points. */
+  def segmentEpochCps(series: Array[Double]): Array[Int] = {
     if (series.length < 60) return Array.empty
     var mn = Double.PositiveInfinity; var mx = Double.NegativeInfinity
     var i = 0
@@ -152,7 +82,7 @@ object Rollup {
       i += 1
     }
     if (!(mx - mn > 0) || mx.isNaN || mn.isNaN) return Array.empty
-    try new BinaryClaSPSegmentation().fitPredict(series).map(_ + offset)
+    try new BinaryClaSPSegmentation().fitPredict(series)
     catch { case e: Exception => logSegmentFailure(e); Array.empty }
   }
 
@@ -187,45 +117,6 @@ object Rollup {
   }
 
   // --------------------------------------------------------------- pipeline
-
-  /** Base-tier rollup with ClaSP-adaptive epochs: shuffle once on url
-    * (groupByKey), run the kernel per series inside the task.
-    *
-    * SINGLE-PHASE reference path: one task materializes one url's raw
-    * points, so a mega-series is an unbounded straggler. Retained as the
-    * bit-equality oracle for the two-phase path (RollupPipelineSpec); every
-    * production query and the resume pipeline use [[scalableRollup]] /
-    * [[scalableRollupAllTiers]]. */
-  def adaptiveRollup(
-      points: Dataset[SeriesPoint],
-      bucketMs: Long = 60000L,
-      tier: String = "1m",
-      segment: Boolean = true): Dataset[RollupRow] = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    points
-      .groupByKey(_.url)
-      .flatMapGroups { (url, it) =>
-        kernelRollup(url, it.map(p => (p.ts, p.value)), bucketMs, tier, segment).iterator
-      }
-  }
-
-  /** Gorilla blobs per (url, epoch) straight from points (one shuffle).
-    * Single-phase like [[adaptiveRollup]] — spec oracle only; queries use
-    * [[scalableEpochBlobs]]. */
-  def epochBlobs(
-      points: Dataset[SeriesPoint],
-      bucketMs: Long = 60000L,
-      segment: Boolean = true): Dataset[EpochBlob] = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    points
-      .groupByKey(_.url)
-      .flatMapGroups { (url, it) =>
-        val rows = kernelRollup(url, it.map(p => (p.ts, p.value)), bucketMs, "base", segment)
-        kernelBlobs(url, rows).iterator
-      }
-  }
 
   /** In-kernel tier aggregation: fold one url's 1m rows (already in bucket
     * order) into a coarser tier SEQUENTIALLY. Same row set as [[cascade]],
@@ -263,9 +154,9 @@ object Rollup {
       cnt: Long, sum: Double, min: Double, max: Double, is_cp: Boolean)
 
   /** Phase 1 of the scalable rollup: key by (url, time-chunk of
-    * `chunkBuckets` buckets) so mega-series split across MANY tasks — the
-    * slowest task is bounded by chunk size, not by the largest url (a single
-    * 10^7-point url would otherwise be the cluster-wide straggler). Each
+    * [[MegaSeriesBuckets]] buckets) so mega-series split across MANY tasks —
+    * the slowest task is bounded by chunk size, not by the largest url (a
+    * single 10^7-point url would otherwise be the cluster-wide straggler). Each
     * chunk task bucket-aggregates in timestamp order (deterministic fp) and
     * runs ClaSP on its own gap-filled span — mirroring the reference's
     * `pranges` decomposition (`claspy/nearest_neighbour.py:389-400`). Chunk
@@ -273,11 +164,10 @@ object Rollup {
   private def phase1Chunks(
       points: Dataset[SeriesPoint],
       bucketMs: Long,
-      segment: Boolean,
-      chunkBuckets: Int): Dataset[Phase1Row] = {
+      segment: Boolean): Dataset[Phase1Row] = {
     val spark = points.sparkSession
     import spark.implicits._
-    val chunkMs = bucketMs * chunkBuckets
+    val chunkMs = bucketMs * MegaSeriesBuckets
     points
       .groupByKey(p => (p.url, Math.floorDiv(p.ts, chunkMs)))
       .flatMapGroups { (key: (String, Long), it: Iterator[SeriesPoint]) =>
@@ -327,8 +217,8 @@ object Rollup {
     * per bucket, far smaller than raw points) → a linear sequential walk that
     * gap-fills across chunk boundaries and assigns epochs from the union of
     * chunk cps — all order-fixed, so output is bit-identical at any
-    * parallelism and identical to [[kernelRollup]] for urls that fit one
-    * chunk (proven in RollupPipelineSpec). */
+    * parallelism and identical to the single-phase rollup for urls that fit
+    * one chunk (proven in RollupPipelineSpec). */
   private def phase2BaseRows(
       url: String,
       all: Array[Phase1Row],
@@ -363,77 +253,59 @@ object Rollup {
     base
   }
 
+  /** The chunked two-phase skeleton of every rollup entry point:
+    * [[phase1Chunks]], one shuffle on url, then [[phase2BaseRows]]' walk at
+    * `tier`, whose rows `emit` turns into the url's output. */
+  private def chunkedPerUrl[T: Encoder](
+      points: Dataset[SeriesPoint],
+      bucketMs: Long,
+      segment: Boolean,
+      tier: String)(
+      emit: (String, Array[RollupRow]) => Iterator[T]): Dataset[T] = {
+    val spark = points.sparkSession
+    import spark.implicits._
+    phase1Chunks(points, bucketMs, segment)
+      .groupByKey(_.url)
+      .flatMapGroups { (url, it) =>
+        emit(url, phase2BaseRows(url, it.toArray, bucketMs, segment, tier))
+      }
+  }
+
   /** SCALABLE two-phase rollup, all three tiers from one kernel pass — the
     * skew-safe path (SURVEY.md §4.3): [[phase1Chunks]] bounds the straggler,
     * [[phase2BaseRows]] + [[kernelTiers]] fold sequentially per url. */
   def scalableRollupAllTiers(
       points: Dataset[SeriesPoint],
       bucketMs: Long = 60000L,
-      segment: Boolean = true,
-      chunkBuckets: Int = MegaSeriesBuckets): Dataset[RollupRow] = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    phase1Chunks(points, bucketMs, segment, chunkBuckets)
-      .groupByKey(_.url)
-      .flatMapGroups { (url, it) =>
-        val r1m = phase2BaseRows(url, it.toArray, bucketMs, segment, "1m")
-        r1m.iterator ++ kernelTiers(r1m, "1h").iterator ++ kernelTiers(r1m, "1d").iterator
-      }
+      segment: Boolean = true): Dataset[RollupRow] = {
+    import points.sparkSession.implicits._
+    chunkedPerUrl(points, bucketMs, segment, "1m") { (_, r1m) =>
+      r1m.iterator ++ kernelTiers(r1m, "1h").iterator ++ kernelTiers(r1m, "1d").iterator
+    }
   }
 
-  /** SCALABLE two-phase rollup at a single base tier (same rows as
-    * [[adaptiveRollup]], bit-equal per RollupPipelineSpec, but skew-safe:
-    * no task ever materializes one url's full raw-point series). */
+  /** SCALABLE two-phase rollup at a single base tier: skew-safe, no task
+    * ever materializes one url's full raw-point series; bit-equal to the
+    * single-phase rollup per RollupPipelineSpec. */
   def scalableRollup(
       points: Dataset[SeriesPoint],
       bucketMs: Long = 60000L,
       tier: String = "1m",
-      segment: Boolean = true,
-      chunkBuckets: Int = MegaSeriesBuckets): Dataset[RollupRow] = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    phase1Chunks(points, bucketMs, segment, chunkBuckets)
-      .groupByKey(_.url)
-      .flatMapGroups { (url, it) =>
-        phase2BaseRows(url, it.toArray, bucketMs, segment, tier).iterator
-      }
+      segment: Boolean = true): Dataset[RollupRow] = {
+    import points.sparkSession.implicits._
+    chunkedPerUrl(points, bucketMs, segment, tier)((_, rows) => rows.iterator)
   }
 
-  /** Gorilla blobs per (url, epoch) via the skew-safe two-phase path — same
-    * output as [[epochBlobs]] (phase-2 base rows are bit-equal to the
-    * single-kernel rows), but phase 1 never buffers a whole raw series. */
+  /** Gorilla blobs per (url, epoch) via the skew-safe two-phase path: phase
+    * 1 never buffers a whole raw series. */
   def scalableEpochBlobs(
       points: Dataset[SeriesPoint],
       bucketMs: Long = 60000L,
-      segment: Boolean = true,
-      chunkBuckets: Int = MegaSeriesBuckets): Dataset[EpochBlob] = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    phase1Chunks(points, bucketMs, segment, chunkBuckets)
-      .groupByKey(_.url)
-      .flatMapGroups { (url, it) =>
-        kernelBlobs(url, phase2BaseRows(url, it.toArray, bucketMs, segment, "base")).iterator
-      }
-  }
-
-  /** Raw change-point indices of one gap-filled bucket-mean span (used by
-    * the chunked phase-1 kernels). */
-  def segmentEpochCps(series: Array[Double]): Array[Int] =
-    segmentSafe(series, 0)
-
-  /** Base + 1h + 1d tiers from ONE kernel pass per url (one shuffle total). */
-  def adaptiveRollupAllTiers(
-      points: Dataset[SeriesPoint],
-      bucketMs: Long = 60000L,
-      segment: Boolean = true): Dataset[RollupRow] = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    points
-      .groupByKey(_.url)
-      .flatMapGroups { (url, it) =>
-        val r1m = kernelRollup(url, it.map(p => (p.ts, p.value)), bucketMs, "1m", segment)
-        (r1m.iterator ++ kernelTiers(r1m, "1h").iterator ++ kernelTiers(r1m, "1d").iterator)
-      }
+      segment: Boolean = true): Dataset[EpochBlob] = {
+    import points.sparkSession.implicits._
+    chunkedPerUrl(points, bucketMs, segment, "base") { (url, rows) =>
+      kernelBlobs(url, rows).iterator
+    }
   }
 
   /** Tier cascade: re-aggregate a lower tier's NON-gap rows into a coarser

@@ -27,7 +27,7 @@ class RollupPipelineSpec extends SparkTestBase {
     val pts = Seq(
       (0L, 10.0), (60000L, 20.0), (120000L, 30.0),
       (480000L, 40.0), (540000L, 44.0), (540500L, 46.0))
-    val rows = Rollup.kernelRollup("u", pts.iterator, 60000L, "1m", segment = false)
+    val rows = RollupReference.kernelRollup("u", pts.iterator, 60000L, "1m", segment = false)
     assert(rows.length == 10) // buckets 0..9 inclusive
     assert(rows.count(_.gap_filled) == 5)
     val b0 = rows.find(_.bucket_start == 0L).get
@@ -37,13 +37,13 @@ class RollupPipelineSpec extends SparkTestBase {
     val b9 = rows.find(_.bucket_start == 540000L).get
     assert(b9.cnt == 2 && b9.sum == 90.0 && b9.min == 44.0 && b9.max == 46.0 && b9.mean == 45.0)
     // idempotence: re-bucketing the same points yields identical rows
-    val rows2 = Rollup.kernelRollup("u", pts.iterator, 60000L, "1m", segment = false)
+    val rows2 = RollupReference.kernelRollup("u", pts.iterator, 60000L, "1m", segment = false)
     assert(rows.toSeq == rows2.toSeq)
   }
 
   test("tier cascade is raw-point-exact vs direct aggregation") {
     val points = CrawlSignals.pageSize(pages)
-    val r1m = Rollup.adaptiveRollup(points, 60000L, "1m", segment = false).cache()
+    val r1m = RollupReference.adaptiveRollup(points, 60000L, "1m", segment = false).cache()
     val r1h = Rollup.cascade(r1m, "1h")
     // direct 1h aggregation of the raw points, ignoring gap-fill
     val direct = points.toDF()
@@ -61,7 +61,7 @@ class RollupPipelineSpec extends SparkTestBase {
 
   test("adaptive epochs: contiguous, non-decreasing, and present for regime-shift series") {
     val points = CrawlSignals.pageSize(pages)
-    val r1m = Rollup.adaptiveRollup(points, 60000L, "1m", segment = true)
+    val r1m = RollupReference.adaptiveRollup(points, 60000L, "1m", segment = true)
     val byUrl = r1m.collect().groupBy(_.url)
     assert(byUrl.nonEmpty)
     var urlsWithEpochs = 0
@@ -78,7 +78,7 @@ class RollupPipelineSpec extends SparkTestBase {
 
   test("in-kernel tier fold matches the Catalyst cascade row-for-row") {
     val points = CrawlSignals.pageSize(pages)
-    val r1m = Rollup.adaptiveRollup(points, 60000L, "1m", segment = false).cache()
+    val r1m = RollupReference.adaptiveRollup(points, 60000L, "1m", segment = false).cache()
     val viaKernel = r1m.groupByKey(_.url)
       .flatMapGroups((_, it) => Rollup.kernelTiers(it.toArray, "1h").iterator)
     val viaCascade = Rollup.cascade(r1m, "1h")
@@ -94,10 +94,14 @@ class RollupPipelineSpec extends SparkTestBase {
 
   test("scalable two-phase rollup equals the single-kernel path for single-chunk urls") {
     val points = CrawlSignals.pageSize(pages)
-    val single = Rollup.adaptiveRollupAllTiers(points, 60000L, segment = true)
+    val single = RollupReference.adaptiveRollupAllTiers(points, 60000L, segment = true)
     val scalable = Rollup.scalableRollupAllTiers(points, 60000L, segment = true)
-    assert(Checkpointing.contentHash(single.toDF()) ==
-      Checkpointing.contentHash(scalable.toDF()))
+    val failuresBefore = Rollup.segmentFailures.sum()
+    val scalableHash = Checkpointing.contentHash(scalable.toDF())
+    // a kernel exception degrades a chunk to one epoch; it must not go unseen
+    assert(Rollup.segmentFailures.sum() == failuresBefore,
+      "the segmented crawl-fixture rollup fell back to a single epoch")
+    assert(Checkpointing.contentHash(single.toDF()) == scalableHash)
   }
 
   test("scalable rollup splits mega urls across chunks without seams") {
@@ -130,7 +134,7 @@ class RollupPipelineSpec extends SparkTestBase {
 
   test("gorilla blobs reconstruct the 1m mean stream exactly") {
     val points = CrawlSignals.pageSize(pages)
-    val r1m = Rollup.adaptiveRollup(points, 60000L, "1m", segment = true).cache()
+    val r1m = RollupReference.adaptiveRollup(points, 60000L, "1m", segment = true).cache()
     val blobs = r1m.groupByKey(_.url)
       .flatMapGroups((u, it) => Rollup.kernelBlobs(u, it.toArray).iterator)
       .collect()
@@ -152,7 +156,7 @@ class RollupPipelineSpec extends SparkTestBase {
         timestamp_millis($"ts" - pmod($"ts", lit(3600000L))).as("bucket"))
       .agg((sum("value") / count(lit(1))).as("mean"))
     val gf = Rollup.gapFillLocf(agg1h, 3600L)
-    val kernel1h = Rollup.adaptiveRollup(points, 3600000L, "1h", segment = false)
+    val kernel1h = RollupReference.adaptiveRollup(points, 3600000L, "1h", segment = false)
     val j = gf.select($"key".as("url"), unix_millis($"bucket").as("bucket_start"),
         $"mean".as("gf_mean"), $"gap_filled".as("gf_gap"))
       .join(kernel1h.toDF(), Seq("url", "bucket_start"))
