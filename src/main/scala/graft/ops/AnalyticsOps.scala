@@ -1,56 +1,50 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import scala.reflect.ClassTag
+import scala.reflect.runtime.universe.TypeTag
 
-/** Phase-1 row of [[AnalyticsOps.ewma]]: the input row plus the prefix
-  * affine (cPre, dPre) of its chunk, so the final value is one fused
-  * multiply-add once the chunk's incoming state is known. */
-final case class EwmaRow(key: String, bucket: Long, ts: Long, tie: Long,
-    value: Double, cPre: Double, dPre: Double)
-private[ops] final case class EwmaChunk(key: String, bucket: Long,
-    c: Double, d: Double, firstVal: Double)
-private[ops] final case class EwmaInit(key: String, bucket: Long, yIn: Double)
+/** One event of a chunked segmented scan ([[AnalyticsOps.segmentedScan]]):
+  * its series key, time chunk and (ts, tie) place in the chunk. */
+private[ops] sealed trait ChunkRow extends Product {
+  def key: String; def bucket: Long; def ts: Long; def tie: Long
+}
+private[ops] final case class ValueRow(key: String, bucket: Long, ts: Long,
+    tie: Long, value: Double) extends ChunkRow
+/** `vc` is the value in integer cents. */
+private[ops] final case class CentsRow(key: String, bucket: Long, ts: Long,
+    tie: Long, value: Double, vc: Long) extends ChunkRow
+private[ops] final case class TickRow(key: String, bucket: Long, ts: Long,
+    tie: Long) extends ChunkRow
 
-/** Phase-1 row of [[AnalyticsOps.holt]]: the chunk-prefix affine on the
-  * (level, trend) state — 2×2 matrix (m00..m11) + offset (d0, d1). */
-final case class HoltRow(key: String, bucket: Long, ts: Long, tie: Long,
-    value: Double, m00: Double, m01: Double, m10: Double, m11: Double,
-    d0: Double, d1: Double)
-private[ops] final case class HoltChunk(key: String, bucket: Long,
-    m00: Double, m01: Double, m10: Double, m11: Double,
-    d0: Double, d1: Double, firstVal: Double)
-private[ops] final case class HoltInit(key: String, bucket: Long,
-    lIn: Double, bIn: Double)
+/** The additive Holt-Winters recurrence, one value at a time, from a
+  * (level, trend, seasonal ring) state — the exact sequential walk of
+  * [[AnalyticsOps.holtWinters]]' chunks and of
+  * [[graft.streaming.StreamStage.holtWintersStream]]'s drained prefixes.
+  * `q((rot + j − 1) mod m)` holds the seasonal of lag j. */
+private[graft] final class HoltWintersWalk(alpha: Double, betaT: Double,
+    gamma: Double, var l: Double, var b: Double, val q: Array[Double],
+    var rot: Int) {
+  private val m = q.length
 
-/** Phase-1 row of [[AnalyticsOps.cusum]]: the input row plus the prefix
-  * TROPICAL affine (mPre, tPre) of its chunk — the row's CUSUM is
-  * max(mPre, s_in + tPre) once the chunk's incoming state s_in is known.
-  * All drift arithmetic is integer cents, so the scan is EXACT. */
-final case class CusumRow(key: String, bucket: Long, ts: Long, tie: Long,
-    value: Double, mPre: Long, tPre: Long)
-private[ops] final case class CusumChunk(key: String, bucket: Long,
-    m: Long, t: Long)
-private[ops] final case class CusumInit(key: String, bucket: Long, sIn: Long)
+  /** Applies value `x`; returns its updated seasonal s_t. */
+  def step(x: Double): Double = {
+    val qmIdx = (rot + m - 1) % m
+    val qm = q(qmIdx)
+    val lPrev = l
+    l = (1 - alpha) * (l + b) + alpha * (x - qm)
+    b = betaT * (l - lPrev) + (1 - betaT) * b
+    val s = gamma * (x - l) + (1 - gamma) * qm
+    q(qmIdx) = s
+    rot = qmIdx // the written slot is now the seasonal of lag 1
+    s
+  }
 
-/** Phase-1 row of [[AnalyticsOps.rateLimitAudit]]: the row's chunk-prefix
-  * tropical affine (mPre, tPre) on the time-anchored debt u = s + r·t′ —
-  * the row's u is max(mPre, u_in + tPre) once the chunk's incoming u_in is
-  * known. All arithmetic is integer nano-tokens, so the scan is EXACT. */
-final case class RlRow(key: String, bucket: Long, ts: Long, tie: Long,
-    mPre: Long, tPre: Long)
-private[ops] final case class RlChunk(key: String, bucket: Long,
-    m: Long, t: Long)
-private[ops] final case class RlInit(key: String, bucket: Long, uIn: Long)
-
-/** Output row of [[AnalyticsOps.holtWinters]]. */
-final case class HwOut(key: String, ts: Long, tie: Long, value: Double,
-    level: Double, trend: Double, seasonal: Double, forecast: Double)
-private[ops] final case class HwChunkSummary(key: String, chunk: Long,
-    mat: Array[Double], off: Array[Double], firstVal: Double)
-private[ops] final case class HwInit(key: String, chunk: Long,
-    state: Array[Double])
+  /** The one-step forecast l_t + b_t + s_{t+1−m}. */
+  def forecast: Double = l + b + q((rot + m - 1) % m)
+}
 
 /** Per-series derivative/outlier/histogram analytics — the PromQL-style
   * `delta`/`rate`, anomaly flagging, and distribution-rollup primitives a
@@ -104,32 +98,96 @@ object AnalyticsOps {
       .drop("__key", "__bucket", "__mu", "__sd")
   }
 
+  /** The input of a chunked segmented scan: each event's key, time chunk
+    * (`bucketMs` wide), ts in ms and tie, plus `payload`, read as `R`. */
+  private def chunkRows[R <: ChunkRow : TypeTag](events: DataFrame,
+      keyCol: Column, tsCol: Column, tieCol: Column, bucketMs: Long)(
+      payload: Column*): Dataset[R] = {
+    require(bucketMs > 0, s"bucketMs must be positive, got $bucketMs")
+    val ts = unix_millis(tsCol.cast("timestamp"))
+    events.select(Seq(keyCol.cast("string").as("key"),
+        floor(ts / lit(bucketMs)).cast("long").as("bucket"), ts.as("ts"),
+        tieCol.cast("long").as("tie")) ++ payload: _*)
+      .as(Encoders.product[R])
+  }
+
+  /** DRIVER of the chunked segmented scans ([[ewma]], [[holt]],
+    * [[holtWinters]], [[cusum]], [[rateLimitAudit]]). A per-key sequential
+    * recurrence whose per-row maps compose (affine maps, or (max, +)
+    * tropical ones) runs in three phases, and no task ever holds a whole
+    * series:
+    *
+    *   phase 1: rows group by (key, bucket) — the one event-sized shuffle —
+    *     and `compose` folds each chunk, sorted by (ts, tie), into one
+    *     summary: its composed map, plus what `seed` needs;
+    *   phase 2: per key, the summaries are scanned in bucket order,
+    *     starting from `seed` of the first and applying `step`, which gives
+    *     every chunk its incoming state — chunk-count-sized;
+    *   phase 3: the same grouped rows cogroup with their chunk's incoming
+    *     state (the phase-1 exchange is reused, not repeated), and `emit`
+    *     re-walks the sorted chunk from it, one output per row.
+    *
+    * Skewed mega-series cost O(chunk) memory. Ties on ts are broken by the
+    * tie, so results are deterministic at any parallelism. `emit` yields
+    * (key, ts ms, tie, …) tuples named by `columns`; ts becomes a
+    * timestamp. `step` must not mutate its state: each state is also a
+    * phase-2 output. */
+  private def segmentedScan[R <: ChunkRow : TypeTag : ClassTag, C: TypeTag,
+      S: TypeTag, O <: Product : TypeTag](rows: Dataset[R], columns: String*)(
+      compose: Array[R] => C)(seed: C => S)(step: (S, C) => S)(
+      emit: (S, Array[R]) => Iterator[O]): DataFrame = {
+    val chunkKey = Encoders.product[(String, Long)]
+    def sorted(it: Iterator[R]) = it.toArray.sortBy(r => (r.ts, r.tie))
+    val grouped = rows.groupByKey(r => (r.key, r.bucket))(chunkKey)
+    val incoming = grouped
+      .mapGroups((kb: (String, Long), it: Iterator[R]) =>
+        (kb._1, kb._2, compose(sorted(it))))(Encoders.product[(String, Long, C)])
+      .groupByKey(_._1)(Encoders.STRING)
+      .flatMapGroups { (k: String, it: Iterator[(String, Long, C)]) =>
+        val cs = it.toArray.sortBy(_._2)
+        var s = seed(cs(0)._3)
+        cs.iterator.map { case (_, b, c) => val in = (k, b, s); s = step(s, c); in }
+      }(Encoders.product[(String, Long, S)])
+    grouped.cogroup(incoming.groupByKey(i => (i._1, i._2))(chunkKey)) {
+      (_: (String, Long), rs: Iterator[R], in: Iterator[(String, Long, S)]) =>
+        val chunk = sorted(rs)
+        if (chunk.isEmpty) Iterator.empty else emit(in.next()._3, chunk)
+    }(Encoders.product[O])
+      .toDF(columns: _*)
+      .withColumn("ts", timestamp_millis(col("ts")))
+  }
+
+  /** [[segmentedScan]] for the scans that finalize each row from its chunk
+    * prefix ([[ewma]], [[holt]], [[cusum]], [[rateLimitAudit]]): `extend`
+    * composes one more row into a map, starting from `identity`. A chunk's
+    * summary is its whole composition and `seed` of its first row; the
+    * phase-3 re-walk recomputes every row's prefix and finalizes the row
+    * as `finish(incoming state, prefix, row)`. */
+  private def prefixScan[R <: ChunkRow : TypeTag : ClassTag, P: TypeTag,
+      S: TypeTag, O <: Product : TypeTag](rows: Dataset[R], columns: String*)(
+      identity: P)(extend: (P, R) => P)(seed: R => S)(step: (S, P) => S)(
+      finish: (S, P, R) => O): DataFrame =
+    segmentedScan(rows, columns: _*)(rs =>
+        (rs.foldLeft(identity)(extend), seed(rs(0))))(_._2)(
+        (s, c) => step(s, c._1)) { (in, rs) =>
+      rs.iterator.scanLeft(identity)(extend).drop(1).zip(rs.iterator)
+        .map { case (p, r) => finish(in, p, r) }
+    }
+
   /** Per-key exponentially weighted moving average, distributed.
     *
     * EWMA is a sequential recurrence (y_i = (1-α)·y_{i-1} + α·x_i), but
     * each element is an affine map of the running state, and affine maps
-    * compose — so it parallelizes as a segmented scan instead of a
-    * per-series group walk:
+    * compose — so it runs as a [[segmentedScan]] instead of a per-series
+    * group walk: each row's chunk prefix (c, d) gives
+    * ewma_i = c·y_in + d once its chunk's incoming state y_in is known.
+    * The series head seeds y_in = first value (so ewma_1 = x_1, pandas
+    * adjust=False).
     *
-    *   phase 1: rows are chunked by (key, time bucket); each chunk is
-    *     sorted locally (bucket-bounded memory, NEVER the whole series)
-    *     and every row gets its chunk-prefix affine (cPre, dPre), i.e.
-    *     ewma_i = cPre_i · y_in + dPre_i for the chunk's unknown incoming
-    *     state y_in. One hash shuffle of the events.
-    *   phase 2: per key, the chunk summaries (last prefix affine + first
-    *     value) are scanned in bucket order to resolve each chunk's y_in —
-    *     data volume = chunks, not rows. The series head seeds
-    *     y_in = first value (so ewma_1 = x_1, pandas adjust=False).
-    *   phase 3: join y_in back (aggregate-sized; AQE broadcasts it) and
-    *     finalize with one multiply-add per row.
-    *
-    * At 100 TB this is the shape that survives: no operator ever holds a
-    * whole series, skewed mega-series cost O(chunk) memory, and the only
-    * event-sized movement is the initial chunk shuffle. Ties on ts are
-    * broken by `tieCol`, so results are deterministic at any parallelism
-    * (exact FP equality to a sequential evaluation is NOT guaranteed —
+    * Exact FP equality to a sequential evaluation is NOT guaranteed —
     * affine composition reassociates the arithmetic — but agreement is at
-    * ulp scale; see the spec's tolerance). */
+    * ulp scale (see the spec's tolerance); the q46 oracle mirrors this op
+    * order exactly. */
   def ewma(
       events: DataFrame,
       keyCol: Column,
@@ -139,83 +197,26 @@ object AnalyticsOps {
       alpha: Double,
       bucketMs: Long): DataFrame = {
     require(alpha > 0 && alpha <= 1, s"alpha must be in (0, 1], got $alpha")
-    require(bucketMs > 0, s"bucketMs must be positive, got $bucketMs")
-    val spark = events.sparkSession
     val beta = 1.0 - alpha
-
-    val base = events.select(
-        keyCol.cast("string").as("key"),
-        unix_millis(tsCol.cast("timestamp")).as("ts"),
-        tieCol.cast("long").as("tie"),
-        valueCol.cast("double").as("value"))
-      .withColumn("bucket", floor(col("ts") / lit(bucketMs)).cast("long"))
-      .select("key", "bucket", "ts", "tie", "value")
-
-    // phase 1: chunk-local prefix affines
-    val rowsPrefix = base.as(Encoders.product[(String, Long, Long, Long, Double)])
-      .groupByKey { case (k, b, _, _, _) => (k, b) }(
-        Encoders.product[(String, Long)])
-      .flatMapGroups { (kb: (String, Long), it: Iterator[(String, Long, Long, Long, Double)]) =>
-        val (k, b) = kb
-        val rows = it.toArray.sortBy { case (_, _, ts, tie, _) => (ts, tie) }
-        var c = 1.0
-        var d = 0.0
-        rows.iterator.map { case (_, _, ts, tie, v) =>
-          c *= beta
-          d = beta * d + alpha * v
-          EwmaRow(k, b, ts, tie, v, c, d)
-        }
-      }(Encoders.product[EwmaRow])
-      .toDF()
-
-    // chunk summaries from the phase-1 output (map-side partial agg over the
-    // already-shuffled rows): the chunk-final affine is the LAST row's
-    // (cPre, dPre) in (ts, tie) order. Selecting it by min(cPre) would rely
-    // on cPre = beta^n being strictly decreasing, which fails once beta^n
-    // underflows to 0.0 (~2k rows at alpha=0.3) and min_by ties become
-    // partition-order dependent — so select positionally, like holt().
-    // first/lastByOrd (not min_by/max_by over a struct) keeps this
-    // event-sized aggregate in HashAggregateExec: a struct agg buffer
-    // silently degrades the whole thing to SortAggregate.
-    import graft.functions.OrderedAggregates.{firstByOrd, lastByOrd}
-    val chunks = rowsPrefix.groupBy("key", "bucket")
-      .agg(lastByOrd(col("cPre"), col("ts"), col("tie")).as("c"),
-        lastByOrd(col("dPre"), col("ts"), col("tie")).as("d"),
-        firstByOrd(col("value"), col("ts"), col("tie")).as("firstVal"))
-
-    // phase 2: per-key scan over chunk summaries (chunk-count-sized)
-    val inits = chunks.as(Encoders.product[EwmaChunk])
-      .groupByKey(_.key)(Encoders.STRING)
-      .flatMapGroups { (k: String, it: Iterator[EwmaChunk]) =>
-        val cs = it.toArray.sortBy(_.bucket)
-        var yIn = cs(0).firstVal
-        cs.iterator.map { ch =>
-          val out = EwmaInit(k, ch.bucket, yIn)
-          yIn = ch.c * yIn + ch.d
-          out
-        }
-      }(Encoders.product[EwmaInit])
-      .toDF()
-
-    // phase 3: finalize
-    rowsPrefix.join(inits, Seq("key", "bucket"))
-      .withColumn("ewma", col("cPre") * col("yIn") + col("dPre"))
-      .select(col("key"), timestamp_millis(col("ts")).as("ts"), col("tie"),
-        col("value"), col("ewma"))
+    prefixScan(chunkRows[ValueRow](events, keyCol, tsCol, tieCol, bucketMs)(
+        valueCol.cast("double").as("value")),
+        "key", "ts", "tie", "value", "ewma")((1.0, 0.0))(
+        (p, r) => (p._1 * beta, beta * p._2 + alpha * r.value))(_.value)(
+        (y, p) => p._1 * y + p._2) { (yIn, p, r) =>
+      (r.key, r.ts, r.tie, r.value, p._1 * yIn + p._2)
+    }
   }
 
   /** Per-key Holt double-exponential smoothing (level + linear trend),
-    * distributed by the same segmented-scan trick as [[ewma]] — here the
+    * distributed by the same [[segmentedScan]] as [[ewma]] — here the
     * running state is the 2-vector (level, trend) and each element applies
     * the affine map s ↦ A·s + c(x) with
     *   A = [[1−α, 1−α], [−αβ, 1−αβ]],  c(x) = (α·x, αβ·x),
     * so chunk prefixes are 2×2-matrix compositions instead of scalars.
     * Initialization is l₁ = x₁, b₁ = 0: the seed state (x₁, 0) is a fixed
-    * point of the first element's map, so phase 2 seeds each series with
-    * its first value exactly like the EWMA scan. Emits the smoothed level,
-    * trend, and one-step forecast (level + φ·trend) per row. Same 100-TB
-    * properties: chunk-bounded memory, chunk-count-sized phase 2, one
-    * event-sized shuffle.
+    * point of the first element's map, so each series is seeded with its
+    * first value exactly like the EWMA scan. Emits the smoothed level,
+    * trend, and one-step forecast (level + φ·trend) per row.
     *
     * `phi` < 1 gives DAMPED-trend Holt (Gardner & McKenzie 1985, the
     * public damping standard): the trend decays geometrically instead of
@@ -236,70 +237,25 @@ object AnalyticsOps {
       phi: Double = 1.0): DataFrame = {
     require(alpha > 0 && alpha <= 1, s"alpha must be in (0, 1], got $alpha")
     require(betaT >= 0 && betaT <= 1, s"beta must be in [0, 1], got $betaT")
-    require(bucketMs > 0, s"bucketMs must be positive, got $bucketMs")
     require(phi > 0 && phi <= 1, s"phi must be in (0, 1], got $phi")
     val a00 = 1.0 - alpha; val a01 = (1.0 - alpha) * phi
     val a10 = -alpha * betaT; val a11 = phi * (1.0 - alpha * betaT)
-
-    val base = events.select(
-        keyCol.cast("string").as("key"),
-        unix_millis(tsCol.cast("timestamp")).as("ts"),
-        tieCol.cast("long").as("tie"),
-        valueCol.cast("double").as("value"))
-      .withColumn("bucket", floor(col("ts") / lit(bucketMs)).cast("long"))
-      .select("key", "bucket", "ts", "tie", "value")
-
-    val rowsPrefix = base.as(Encoders.product[(String, Long, Long, Long, Double)])
-      .groupByKey { case (k, b, _, _, _) => (k, b) }(
-        Encoders.product[(String, Long)])
-      .flatMapGroups { (kb: (String, Long), it: Iterator[(String, Long, Long, Long, Double)]) =>
-        val (k, b) = kb
-        val rows = it.toArray.sortBy { case (_, _, ts, tie, _) => (ts, tie) }
-        var m00 = 1.0; var m01 = 0.0; var m10 = 0.0; var m11 = 1.0
-        var d0 = 0.0; var d1 = 0.0
-        rows.iterator.map { case (_, _, ts, tie, v) =>
-          // prefix ← A · prefix;  offset ← A · offset + c(v)
-          val n00 = a00 * m00 + a01 * m10; val n01 = a00 * m01 + a01 * m11
-          val n10 = a10 * m00 + a11 * m10; val n11 = a10 * m01 + a11 * m11
-          val e0 = a00 * d0 + a01 * d1 + alpha * v
-          val e1 = a10 * d0 + a11 * d1 + alpha * betaT * v
-          m00 = n00; m01 = n01; m10 = n10; m11 = n11; d0 = e0; d1 = e1
-          HoltRow(k, b, ts, tie, v, m00, m01, m10, m11, d0, d1)
-        }
-      }(Encoders.product[HoltRow])
-      .toDF()
-
-    // flat-buffer ordered extremes keep this in HashAggregateExec (a
-    // struct-ordered min_by/max_by buffer would degrade it to SortAggregate)
-    import graft.functions.OrderedAggregates.{firstByOrd, lastByOrd}
-    def lastOf(c: String) = lastByOrd(col(c), col("ts"), col("tie")).as(c)
-    val chunks = rowsPrefix.groupBy("key", "bucket")
-      .agg(lastOf("m00"), lastOf("m01"), lastOf("m10"), lastOf("m11"),
-        lastOf("d0"), lastOf("d1"),
-        firstByOrd(col("value"), col("ts"), col("tie")).as("firstVal"))
-
-    val inits = chunks.as(Encoders.product[HoltChunk])
-      .groupByKey(_.key)(Encoders.STRING)
-      .flatMapGroups { (k: String, it: Iterator[HoltChunk]) =>
-        val cs = it.toArray.sortBy(_.bucket)
-        var lIn = cs(0).firstVal
-        var bIn = 0.0
-        cs.iterator.map { ch =>
-          val out = HoltInit(k, ch.bucket, lIn, bIn)
-          val lNext = ch.m00 * lIn + ch.m01 * bIn + ch.d0
-          val bNext = ch.m10 * lIn + ch.m11 * bIn + ch.d1
-          lIn = lNext; bIn = bNext
-          out
-        }
-      }(Encoders.product[HoltInit])
-      .toDF()
-
-    rowsPrefix.join(inits, Seq("key", "bucket"))
-      .withColumn("level", col("m00") * col("lIn") + col("m01") * col("bIn") + col("d0"))
-      .withColumn("trend", col("m10") * col("lIn") + col("m11") * col("bIn") + col("d1"))
-      .select(col("key"), timestamp_millis(col("ts")).as("ts"), col("tie"),
-        col("value"), col("level"), col("trend"),
-        (col("level") + lit(phi) * col("trend")).as("forecast"))
+    // prefix (m00, m01, m10, m11, d0, d1): (level, trend) = M·(l_in, b_in) + d
+    prefixScan(chunkRows[ValueRow](events, keyCol, tsCol, tieCol, bucketMs)(
+        valueCol.cast("double").as("value")),
+        "key", "ts", "tie", "value", "level", "trend", "forecast")(
+        (1.0, 0.0, 0.0, 1.0, 0.0, 0.0))({ case ((m00, m01, m10, m11, d0, d1), r) =>
+      (a00 * m00 + a01 * m10, a00 * m01 + a01 * m11,
+        a10 * m00 + a11 * m10, a10 * m01 + a11 * m11,
+        a00 * d0 + a01 * d1 + alpha * r.value,
+        a10 * d0 + a11 * d1 + alpha * betaT * r.value)
+    })(r => (r.value, 0.0))({ case ((l, b), (m00, m01, m10, m11, d0, d1)) =>
+      (m00 * l + m01 * b + d0, m10 * l + m11 * b + d1)
+    }) { case ((lIn, bIn), (m00, m01, m10, m11, d0, d1), r) =>
+      val level = m00 * lIn + m01 * bIn + d0
+      val trend = m10 * lIn + m11 * bIn + d1
+      (r.key, r.ts, r.tie, r.value, level, trend, level + phi * trend)
+    }
   }
 
   /** Per-key additive Holt-Winters triple-exponential smoothing (level +
@@ -313,27 +269,17 @@ object AnalyticsOps {
     * (x_1, 0, 0…0) — a fixed point of the first element's map, so row 1
     * yields l=x_1, b=0, seasonal=0 exactly like the EWMA/Holt seeds.
     *
-    * Each element applies an AFFINE map of the state, so the series
-    * parallelizes as the same segmented scan as [[ewma]]/[[holt]] — but the
-    * state is (m+2)-dimensional, so materializing a per-row prefix matrix
-    * (the scalar/2×2 trick) would carry O(m²) doubles per ROW. Instead:
-    *
-    *   phase 1: per (key, bucket-chunk), compose the chunk's whole affine
-    *     map (one (m+2)² matrix + offset per CHUNK, never per row; the
-    *     seasonal shift is a circular-index rotation, so each row costs
-    *     three O(m) row combinations, not an O(m²) copy);
-    *   phase 2: per key, scan the chunk summaries in bucket order to
-    *     resolve each chunk's exact incoming state — chunk-count-sized;
-    *   phase 3: COGROUP rows with their chunk's incoming state and re-walk
-    *     each chunk sequentially from it — within-chunk arithmetic is the
-    *     exact sequential recurrence, so only the chunk-boundary
-    *     compositions reassociate FP (tighter than the EWMA/Holt shape).
-    *
-    * Same 100-TB properties: no task holds a series (chunk-bounded), phase
-    * 2 moves chunk summaries (~(m+2)² doubles each), and events shuffle
-    * once into the phase-1/phase-3 chunk partitioning. Emits level, trend,
-    * the updated seasonal s_t, and the one-step forecast
-    * l_t + b_t + s_{t+1−m}. */
+    * Each element applies an AFFINE map of the state, so the series runs
+    * as a [[segmentedScan]] like [[ewma]]/[[holt]] — but the state is
+    * (m+2)-dimensional, so a per-row prefix matrix would carry O(m²)
+    * doubles per ROW. Instead phase 1 composes each chunk's whole map (one
+    * (m+2)² matrix + offset per CHUNK; the seasonal shift is a
+    * circular-index rotation, so each row costs three O(m) row
+    * combinations, not an O(m²) copy), and phase 3 re-walks each chunk with
+    * the exact sequential recurrence ([[HoltWintersWalk]]) from its
+    * incoming state, so only the chunk-boundary compositions reassociate
+    * FP (tighter than the EWMA/Holt shape). Emits level, trend, the
+    * updated seasonal s_t, and the one-step forecast l_t + b_t + s_{t+1−m}. */
   def holtWinters(
       events: DataFrame,
       keyCol: Column,
@@ -349,31 +295,13 @@ object AnalyticsOps {
     require(betaT >= 0 && betaT <= 1, s"beta must be in [0, 1], got $betaT")
     require(gamma >= 0 && gamma <= 1, s"gamma must be in [0, 1], got $gamma")
     require(period >= 1, s"period must be >= 1, got $period")
-    require(bucketMs > 0, s"bucketMs must be positive, got $bucketMs")
-    val spark = events.sparkSession
-    import spark.implicits._
     val m = period
     val dim = m + 2
 
-    val base = events.select(
-        keyCol.cast("string").as("key"),
-        unix_millis(tsCol.cast("timestamp")).as("ts"),
-        tieCol.cast("long").as("tie"),
-        valueCol.cast("double").as("value"))
-      .withColumn("bucket", floor(col("ts") / lit(bucketMs)).cast("long"))
-      .select("key", "bucket", "ts", "tie", "value")
-      .as(Encoders.product[(String, Long, Long, Long, Double)])
-
-    val grouped = base.groupByKey { case (k, b, _, _, _) => (k, b) }(
-      Encoders.product[(String, Long)])
-
-    // phase 1: one composed affine map per chunk. M is row-major dim×dim
-    // with ROT-INDEXED seasonal rows (slot of s-lag-j = 2 + (rot+j-1) % m),
-    // normalized to rot = 0 before serialization.
-    val chunks = grouped.mapGroups { (kb: (String, Long),
-        it: Iterator[(String, Long, Long, Long, Double)]) =>
-      val (k, b) = kb
-      val rows = it.toArray.sortBy { case (_, _, ts, tie, _) => (ts, tie) }
+    // one composed affine map per chunk. M is row-major dim×dim with
+    // ROT-INDEXED seasonal rows (slot of s-lag-j = 2 + (rot+j-1) % m),
+    // normalized to rot = 0 before it leaves the chunk.
+    def compose(rows: Array[ValueRow]): (Array[Double], Array[Double], Double) = {
       val mat = Array.ofDim[Double](dim * dim)
       var i = 0
       while (i < dim) { mat(i * dim + i) = 1.0; i += 1 }
@@ -383,7 +311,7 @@ object AnalyticsOps {
       var rot = 0
       var r = 0
       while (r < rows.length) {
-        val x = rows(r)._5
+        val x = rows(r).value
         val qmSlot = 2 + (rot + m - 1) % m
         // new rows as combos of old rows l(0), b(1), qm(qmSlot)
         var j = 0
@@ -410,7 +338,7 @@ object AnalyticsOps {
         rot = (rot + m - 1) % m
         r += 1
       }
-      // normalize seasonal row order to rot = 0 for serialization
+      // normalize seasonal row order to rot = 0
       val normM = Array.ofDim[Double](dim * dim)
       val normD = new Array[Double](dim)
       System.arraycopy(mat, 0, normM, 0, 2 * dim)
@@ -422,64 +350,33 @@ object AnalyticsOps {
         normD(2 + jj) = off(phys)
         jj += 1
       }
-      HwChunkSummary(k, b, normM, normD, rows(0)._5)
-    }(Encoders.product[HwChunkSummary])
+      (normM, normD, rows(0).value)
+    }
 
-    // phase 2: per-key scan over chunk summaries (chunk-count-sized)
-    val inits = chunks.groupByKey(_.key)(Encoders.STRING)
-      .flatMapGroups { (k: String, it: Iterator[HwChunkSummary]) =>
-        val cs = it.toArray.sortBy(_.chunk)
-        val state = new Array[Double](dim)
-        state(0) = cs(0).firstVal
-        cs.iterator.map { ch =>
-          val out = HwInit(k, ch.chunk, state.clone())
-          val next = new Array[Double](dim)
-          var i = 0
-          while (i < dim) {
-            var acc = ch.off(i)
-            val row = i * dim
-            var j = 0
-            while (j < dim) { acc += ch.mat(row + j) * state(j); j += 1 }
-            next(i) = acc
-            i += 1
-          }
-          System.arraycopy(next, 0, state, 0, dim)
-          out
-        }
-      }(Encoders.product[HwInit])
-
-    // phase 3: cogroup rows with the chunk's incoming state; the walk is
-    // the exact sequential recurrence from that state
-    grouped.cogroup(
-        inits.groupByKey(c => (c.key, c.chunk))(Encoders.product[(String, Long)])) {
-      (kb: (String, Long), rowIt: Iterator[(String, Long, Long, Long, Double)],
-       initIt: Iterator[HwInit]) =>
-        val rows = rowIt.toArray.sortBy { case (_, _, ts, tie, _) => (ts, tie) }
-        if (rows.isEmpty) Iterator.empty
-        else {
-          val st = initIt.next().state
-          var l = st(0); var b = st(1)
-          val q = new Array[Double](m) // q(rot+j-1 % m) = seasonal lag j
-          System.arraycopy(st, 2, q, 0, m)
-          var rot = 0
-          rows.iterator.map { case (k, _, ts, tie, x) =>
-            val qmIdx = (rot + m - 1) % m
-            val qm = q(qmIdx)
-            val lPrev = l
-            l = (1 - alpha) * (l + b) + alpha * (x - qm)
-            b = betaT * (l - lPrev) + (1 - betaT) * b
-            val sNew = gamma * (x - l) + (1 - gamma) * qm
-            q(qmIdx) = sNew
-            rot = (rot + m - 1) % m
-            // next-step seasonal lag m (s_{t+1-m}) now sits at the new qm slot
-            val fc = l + b + q((rot + m - 1) % m)
-            HwOut(k, ts, tie, x, l, b, sNew, fc)
-          }
-        }
-    }(Encoders.product[HwOut])
-      .toDF()
-      .select(col("key"), timestamp_millis(col("ts")).as("ts"), col("tie"),
-        col("value"), col("level"), col("trend"), col("seasonal"), col("forecast"))
+    segmentedScan(chunkRows[ValueRow](events, keyCol, tsCol, tieCol, bucketMs)(
+        valueCol.cast("double").as("value")),
+        "key", "ts", "tie", "value", "level", "trend", "seasonal", "forecast")(
+        compose)(ch => { val s = new Array[Double](dim); s(0) = ch._3; s })(
+        { case (state, (mat, off, _)) =>
+      val next = new Array[Double](dim)
+      var i = 0
+      while (i < dim) {
+        var acc = off(i)
+        val row = i * dim
+        var j = 0
+        while (j < dim) { acc += mat(row + j) * state(j); j += 1 }
+        next(i) = acc
+        i += 1
+      }
+      next
+    }) { (st, rows) =>
+      val walk = new HoltWintersWalk(alpha, betaT, gamma, st(0), st(1),
+        st.slice(2, dim), 0)
+      rows.iterator.map { r =>
+        val s = walk.step(r.value)
+        (r.key, r.ts, r.tie, r.value, walk.l, walk.b, s, walk.forecast)
+      }
+    }
   }
 
   /** Per-key one-sided (upper) CUSUM drift detector, distributed.
@@ -492,15 +389,10 @@ object AnalyticsOps {
     * (max, +) TROPICAL semiring — f_a(s) = max(0, s + a) — and those maps
     * compose in closed form: writing (M, T) for s ↦ max(M, s + T),
     *   (M₂, T₂) ∘ (M₁, T₁) = (max(M₂, M₁ + T₂), T₁ + T₂),
-    * which is associative. So the [[ewma]] segmented scan applies verbatim
-    * with tropical composition in place of real affine composition:
-    *
-    *   phase 1: rows chunked by (key, time bucket), chunk-local prefix
-    *     (mPre, tPre) per row — one event-sized hash shuffle;
-    *   phase 2: per-key scan over chunk summaries (chunk-count-sized)
-    *     resolves each chunk's incoming state s_in, seeded 0;
-    *   phase 3: broadcastable join back; each row finalizes as
-    *     cusum_i = max(mPre_i, s_in + tPre_i).
+    * which is associative. So the [[ewma]] [[segmentedScan]] applies
+    * verbatim with tropical composition in place of real affine
+    * composition: each row's chunk prefix (M, T) gives
+    * cusum_i = max(M, s_in + T), with every series seeded s = 0.
     *
     * Unlike the real-affine scans (q46/q49/q50), this one has NO
     * floating-point reassociation caveat: values are fixed to integer
@@ -508,15 +400,13 @@ object AnalyticsOps {
     * max/+ over integers are exact — so the distributed result is
     * BIT-IDENTICAL to the sequential recurrence (and to a sequential
     * DuckDB oracle) at any parallelism and any chunking. Overflow headroom:
-    * tPre is bounded by chunk length × max|drift| and s by the series'
+    * T is bounded by chunk length × max|drift| and s by the series'
     * net positive drift since its last zero — with cent-scaled telemetry
     * values both sit far below 2^63 even at 10^12-row series (a series
     * that never returns to 0 for 10^12 consecutive samples is a
     * mis-parameterized monitor: k below the in-control mean).
     *
-    * Emits (key, ts, tie, value, cusum, alarm). Same 100-TB properties as
-    * [[ewma]]: chunk-bounded memory, chunk-count-sized phase 2, one
-    * event-sized shuffle. */
+    * Emits (key, ts, tie, value, cusum, alarm). */
   def cusum(
       events: DataFrame,
       keyCol: Column,
@@ -527,72 +417,22 @@ object AnalyticsOps {
       h: Double,
       bucketMs: Long): DataFrame = {
     require(h > 0, s"alarm threshold h must be positive, got $h")
-    require(bucketMs > 0, s"bucketMs must be positive, got $bucketMs")
     def cents(v: Double): Long = java.math.BigDecimal.valueOf(v)
       .setScale(2, java.math.RoundingMode.HALF_UP).unscaledValue.longValueExact
     val kC = cents(k)
     val hC = cents(h)
-
-    val base = events.select(
-        keyCol.cast("string").as("key"),
-        unix_millis(tsCol.cast("timestamp")).as("ts"),
-        tieCol.cast("long").as("tie"),
+    // identity (M, T) = (0, 0) is s ↦ max(0, s), the identity on the
+    // reachable domain (s_in ≥ 0 always)
+    prefixScan(chunkRows[CentsRow](events, keyCol, tsCol, tieCol, bucketMs)(
         valueCol.cast("double").as("value"),
-        (valueCol.cast("decimal(12,2)") * lit(100)).cast("long").as("vc"))
-      .withColumn("bucket", floor(col("ts") / lit(bucketMs)).cast("long"))
-      .select("key", "bucket", "ts", "tie", "value", "vc")
-
-    // phase 1: chunk-local tropical prefixes. Seed (M, T) = (0, 0) is
-    // s ↦ max(0, s), identity on the reachable domain (s_in ≥ 0 always).
-    val rowsPrefix = base
-      .as(Encoders.product[(String, Long, Long, Long, Double, Long)])
-      .groupByKey { case (key, b, _, _, _, _) => (key, b) }(
-        Encoders.product[(String, Long)])
-      .flatMapGroups { (kb: (String, Long),
-          it: Iterator[(String, Long, Long, Long, Double, Long)]) =>
-        val (key, b) = kb
-        val rows = it.toArray.sortBy { case (_, _, ts, tie, _, _) => (ts, tie) }
-        var m = 0L
-        var t = 0L
-        rows.iterator.map { case (_, _, ts, tie, v, vc) =>
-          val a = vc - kC
-          m = math.max(0L, m + a)
-          t += a
-          CusumRow(key, b, ts, tie, v, m, t)
-        }
-      }(Encoders.product[CusumRow])
-      .toDF()
-
-    // chunk summaries: the LAST row's prefix in (ts, tie) order —
-    // flat-buffer ordered aggregate so the event-sized agg stays in
-    // HashAggregateExec (see the q46 note)
-    import graft.functions.OrderedAggregates.lastByOrd
-    val chunks = rowsPrefix.groupBy("key", "bucket")
-      .agg(lastByOrd(col("mPre"), col("ts"), col("tie")).as("m"),
-        lastByOrd(col("tPre"), col("ts"), col("tie")).as("t"))
-
-    // phase 2: per-key tropical scan over chunk summaries, seeded s = 0
-    val inits = chunks.as(Encoders.product[CusumChunk])
-      .groupByKey(_.key)(Encoders.STRING)
-      .flatMapGroups { (key: String, it: Iterator[CusumChunk]) =>
-        val cs = it.toArray.sortBy(_.bucket)
-        var s = 0L
-        cs.iterator.map { ch =>
-          val out = CusumInit(key, ch.bucket, s)
-          s = math.max(ch.m, s + ch.t)
-          out
-        }
-      }(Encoders.product[CusumInit])
-      .toDF()
-
-    // phase 3: finalize — exact integer max, one multiply-free op per row
-    val sC = greatest(col("mPre"), col("sIn") + col("tPre"))
-    rowsPrefix.join(inits, Seq("key", "bucket"))
-      .withColumn("__s", sC)
-      .select(col("key"), timestamp_millis(col("ts")).as("ts"), col("tie"),
-        col("value"),
-        (col("__s").cast("double") / lit(100.0)).as("cusum"),
-        (col("__s") > lit(hC)).as("alarm"))
+        (valueCol.cast("decimal(12,2)") * lit(100)).cast("long").as("vc")),
+        "key", "ts", "tie", "value", "cusum", "alarm")((0L, 0L))(
+        { case ((m, t), r) => val a = r.vc - kC; (math.max(0L, m + a), t + a) })(
+        _ => 0L)({ case (s, (m, t)) => math.max(m, s + t) }) {
+      case (sIn, (m, t), r) =>
+        val s = math.max(m, Math.addExact(sIn, t))
+        (r.key, r.ts, r.tie, r.value, s.toDouble / 100.0, s > hC)
+    }
   }
 
   /** Token-bucket / GCRA rate-limit audit, distributed — replay every
@@ -608,9 +448,9 @@ object AnalyticsOps {
     * substitution u = s + r·t′ (t′ = ts − anchor) removes Δt entirely:
     *   u_i = max(c + r·t′_i, u_{i−1} + c)
     * — a (max, +) tropical affine u ↦ max(M, u + T) per row, the SAME
-    * closed composition as [[cusum]], so the three-phase segmented scan
-    * applies verbatim: one event-sized shuffle, chunk-count-sized phase 2,
-    * no group walk ever holds a series. All arithmetic is integer
+    * closed composition as [[cusum]], so the [[segmentedScan]] applies
+    * verbatim: one event-sized shuffle, chunk-count-sized phase 2, no
+    * group walk ever holds a series. All arithmetic is integer
     * NANO-tokens (the rate quantizes to nano-token/ms granularity —
     * 0.001 tokens/sec steps), so the distributed result is BIT-IDENTICAL
     * to the sequential recurrence and to the DuckDB oracle at any
@@ -638,7 +478,6 @@ object AnalyticsOps {
     require(ratePerSec >= 0.001 && ratePerSec <= 100.0,
       s"ratePerSec must be in [0.001, 100], got $ratePerSec")
     require(burst >= 1.0, s"burst must be >= 1 token, got $burst")
-    require(bucketMs > 0, s"bucketMs must be positive, got $bucketMs")
     val c = 1000000000L                       // one event = 1e9 nano-tokens
     val rNanoPerMs = Math.round(ratePerSec * 1e6)
     val burstNano = Math.round(burst * 1e9)
@@ -661,62 +500,19 @@ object AnalyticsOps {
       span
     }
 
-    val base = events.select(
-        keyCol.cast("string").as("key"),
-        unix_millis(tsCol.cast("timestamp")).as("ts"),
-        tieCol.cast("long").as("tie"))
-      .withColumn("bucket", floor(col("ts") / lit(bucketMs)).cast("long"))
-      .select("key", "bucket", "ts", "tie")
-
-    // phase 1: chunk-local tropical prefixes on u (composition
-    // (M2,T2)∘(M1,T1) = (max(M2, M1+T2), T1+T2), applied row-ascending)
-    val rowsPrefix = base
-      .as(Encoders.product[(String, Long, Long, Long)])
-      .groupByKey { case (key, b, _, _) => (key, b) }(
-        Encoders.product[(String, Long)])
-      .flatMapGroups { (kb: (String, Long),
-          it: Iterator[(String, Long, Long, Long)]) =>
-        val (key, b) = kb
-        val rows = it.toArray.sortBy { case (_, _, ts, tie) => (ts, tie) }
-        var m = NEG
-        var t = 0L
-        rows.iterator.map { case (_, _, ts, tie) =>
-          // guardSpan throws on overflow; phase 3 reuses these same rows,
-          // so one guarded pass covers both multiplications
-          m = math.max(c + rNanoPerMs * guardSpan(ts), m + c)
-          t += c
-          RlRow(key, b, ts, tie, m, t)
-        }
-      }(Encoders.product[RlRow])
-      .toDF()
-
-    import graft.functions.OrderedAggregates.lastByOrd
-    val chunks = rowsPrefix.groupBy("key", "bucket")
-      .agg(lastByOrd(col("mPre"), col("ts"), col("tie")).as("m"),
-        lastByOrd(col("tPre"), col("ts"), col("tie")).as("t"))
-
-    // phase 2: per-key tropical scan over chunk summaries, seeded u = −∞
-    val inits = chunks.as(Encoders.product[RlChunk])
-      .groupByKey(_.key)(Encoders.STRING)
-      .flatMapGroups { (key: String, it: Iterator[RlChunk]) =>
-        val cs = it.toArray.sortBy(_.bucket)
-        var u = NEG
-        cs.iterator.map { ch =>
-          val out = RlInit(key, ch.bucket, u)
-          u = math.max(ch.m, u + ch.t)
-          out
-        }
-      }(Encoders.product[RlInit])
-      .toDF()
-
-    // phase 3: finalize — u_i = max(mPre, uIn + tPre); s = u − r·t′
-    val u = greatest(col("mPre"), col("uIn") + col("tPre"))
-    rowsPrefix.join(inits, Seq("key", "bucket"))
-      .withColumn("__s",
-        u - lit(rNanoPerMs) * (col("ts") - lit(anchorMs)))
-      .select(col("key"), timestamp_millis(col("ts")).as("ts"), col("tie"),
-        (col("__s").cast("double") / lit(1.0e9)).as("burst_used"),
-        (col("__s") > lit(burstNano)).as("violation"))
+    // tropical prefixes (M, T) on u, seeded u = −∞; the re-walk guards
+    // every row again before its own r·t′
+    prefixScan(chunkRows[TickRow](events, keyCol, tsCol, tieCol, bucketMs)(),
+        "key", "ts", "tie", "burst_used", "violation")((NEG, 0L))(
+        { case ((m, t), r) =>
+          (math.max(c + rNanoPerMs * guardSpan(r.ts), m + c), t + c) })(
+        _ => NEG)({ case (u, (m, t)) => math.max(m, u + t) }) {
+      case (uIn, (m, t), r) =>
+        // s = u − r·t′ of the row's u = max(M, u_in + T)
+        val s = Math.subtractExact(math.max(m, Math.addExact(uIn, t)),
+          Math.multiplyExact(rNanoPerMs, Math.subtractExact(r.ts, anchorMs)))
+        (r.key, r.ts, r.tie, s.toDouble / 1.0e9, s > burstNano)
+    }
   }
 
   /** Robust per-group outliers via median/MAD — the outlier rule of choice

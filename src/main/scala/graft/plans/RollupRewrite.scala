@@ -46,19 +46,14 @@ import org.apache.spark.sql.types.{DecimalType, LongType}
   *    aggregate functions, a truncation with no registered tier, a
   *    value-column predicate) is left alone.
   *
-  * Registration: [[RollupRewrite.register]] (hour tier) /
-  * [[RollupRewrite.registerTiers]] (any subset of minute/hour/day) add
-  * the rule to the session's `experimental.extraOptimizations` (the
-  * public per-session optimizer seam); for spark-submit deployments
-  * [[RollupRewriteExtensions]] is the `spark.sql.extensions`-compatible
-  * injector.
+  * Use: [[RollupRewrite.servedFrom]] (hour tier) /
+  * [[RollupRewrite.servedFromTiers]] (any subset of minute/hour/day)
+  * apply the rule to ONE query's optimized plan; no session-global
+  * optimizer state is touched.
   */
 final class RollupRewriteRule(
     rawPathContains: String,
     tiers: Map[String, LogicalPlan]) extends Rule[LogicalPlan] {
-
-  def this(rawPathContains: String, rollupPlan: LogicalPlan) =
-    this(rawPathContains, Map("hour" -> rollupPlan))
 
   /** One registered tier's resolved store columns. */
   private final case class Store(
@@ -259,7 +254,7 @@ final class RollupRewriteRule(
   }
 }
 
-/** Per-session registration + the `spark.sql.extensions` injector. */
+/** Per-query application of [[RollupRewriteRule]]. */
 object RollupRewrite {
 
   private def checked(tier: String, rollup: DataFrame): LogicalPlan = {
@@ -268,36 +263,6 @@ object RollupRewrite {
     require(Set("user_id", "bucket_start", "cnt", "vsum").subsetOf(out),
       s"$tier rollup must expose user_id/bucket_start/cnt/vsum, got $out")
     analyzed
-  }
-
-  /** Register the rewrite on a live session: hour-aligned aggregates over
-    * any parquet relation whose path contains `rawPathContains` are served
-    * from `rollup` (columns: user_id, bucket_start TIMESTAMP-compatible
-    * with date_trunc('hour', ts), cnt LONG, vsum DECIMAL). Returns the
-    * rule so callers can deregister (remove it from
-    * `spark.experimental.extraOptimizations`) when done. */
-  def register(
-      spark: SparkSession,
-      rawPathContains: String,
-      rollup: DataFrame): RollupRewriteRule =
-    registerTiers(spark, rawPathContains, Map("hour" -> rollup))
-
-  /** Multi-tier registration: `tiers` maps date_trunc formats ('minute',
-    * 'hour', 'day') to their stored rollups; an aggregate grouped on any
-    * registered truncation is served from that tier's store. */
-  def registerTiers(
-      spark: SparkSession,
-      rawPathContains: String,
-      tiers: Map[String, DataFrame]): RollupRewriteRule = {
-    require(tiers.nonEmpty, "at least one tier store is required")
-    val allowed = Set("minute", "hour", "day")
-    require(tiers.keySet.map(_.toLowerCase).subsetOf(allowed),
-      s"tier formats must be in $allowed, got ${tiers.keySet}")
-    val rule = new RollupRewriteRule(rawPathContains,
-      tiers.map { case (t, df) => t.toLowerCase -> checked(t, df) })
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ rule
-    rule
   }
 
   /** Apply the rewrite to ONE query without touching session-global
@@ -323,48 +288,5 @@ object RollupRewrite {
     require(rewritten ne q.queryExecution.optimizedPlan,
       "the continuous-aggregate rewrite must fire for this query shape")
     org.apache.spark.sql.graft.Bridge.ofRows(spark, rewritten)
-  }
-}
-
-/** `spark.sql.extensions`-compatible injector for spark-submit
-  * deployments: `--conf spark.sql.extensions=graft.plans.RollupRewriteExtensions`
-  * plus
-  *   spark.graft.rollup.rawPathContains=<substring of the raw table path>
-  *   spark.graft.rollup.store.hour=<parquet path>   (and/or .minute, .day)
-  * Store paths are read lazily at optimize time (so they may be set after
-  * session start) and the built rule is cached until the confs change;
-  * with no confs set the rule is a no-op. The aggregate shape matched is
-  * identical to [[RollupRewrite.registerTiers]]: `PullOutGroupingExpressions`
-  * runs once, early, before the operator-optimization batch that hosts
-  * injected rules, so the pulled-out trunc Project is already in place. */
-final class RollupRewriteExtensions
-    extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    ext.injectOptimizerRule(session => new ConfDrivenRollupRewrite(session))
-}
-
-private final class ConfDrivenRollupRewrite(session: SparkSession)
-    extends Rule[LogicalPlan] {
-  @volatile private var cached
-    : Option[((String, Map[String, String]), RollupRewriteRule)] = None
-
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    val raw = session.conf.getOption("spark.graft.rollup.rawPathContains")
-    val tierPaths = Seq("minute", "hour", "day").flatMap(t =>
-      session.conf.getOption(s"spark.graft.rollup.store.$t").map(t -> _)).toMap
-    if (raw.isEmpty || tierPaths.isEmpty) return plan
-    val key = (raw.get, tierPaths)
-    val rule = cached match {
-      case Some((k, r)) if k == key => r
-      case _ =>
-        // reading the store only ANALYZES its plan (no job); the built
-        // rule is reused until the conf key changes
-        val r = new RollupRewriteRule(raw.get, tierPaths.map { case (t, p) =>
-          t -> session.read.parquet(p).queryExecution.analyzed
-        })
-        cached = Some((key, r))
-        r
-    }
-    rule(plan)
   }
 }

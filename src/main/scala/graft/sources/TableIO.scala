@@ -35,9 +35,9 @@ object ParquetTableIO extends TableIO {
 
   def write(df: DataFrame, table: String, partitionCols: Seq[String],
       mode: SaveMode, dynamicOverwrite: Boolean): Unit = {
-    if (dynamicOverwrite)
-      df.sparkSession.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    val w = df.write.mode(mode)
+    val plain = df.write.mode(mode)
+    // a per-write option, so the session's own overwrite mode is untouched
+    val w = if (dynamicOverwrite) plain.option("partitionOverwriteMode", "dynamic") else plain
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(table)
   }
 

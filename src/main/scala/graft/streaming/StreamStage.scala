@@ -1046,9 +1046,10 @@ object StreamStage {
     * [[graft.ops.AnalyticsOps.holtWinters]], completing the smoother
     * family's streaming twins (EWMA/Holt/HW). Same watermark-buffered
     * in-order replay; the drained prefix runs the EXACT sequential
-    * recurrence (identical op order to the batch op's phase-3 chunk walk),
-    * with the (x₁, 0, 0…0) seed and the circular seasonal ring. State per
-    * url is the O(lateness) buffer plus (level, trend, m seasonals, rot). */
+    * recurrence — the same [[graft.ops.HoltWintersWalk]] the batch op's
+    * phase-3 chunk walk runs — with the (x₁, 0, 0…0) seed and the circular
+    * seasonal ring. State per url is the O(lateness) buffer plus (level,
+    * trend, m seasonals, rot). */
   def holtWintersStream(
       points: Dataset[TiedPoint],
       alpha: Double,
@@ -1066,27 +1067,16 @@ object StreamStage {
     bufferedReplay(points, lateness,
         HwState(0.0, 0.0, new Array[Double](m), 0, false))(
         _.url, _.ts, byTsTie, !_.primed) { (url, st, ready) =>
-      var l = st.l
-      var b = st.b
-      val q = st.seas.clone()
-      var rot = st.rot
+      val walk = new graft.ops.HoltWintersWalk(alpha, betaT, gamma, st.l, st.b,
+        st.seas.clone(), st.rot)
       var primed = st.primed
       val out = ready.map { p =>
         val x = p.value
-        if (!primed) { primed = true; l = x; b = 0.0 }
-        // identical arithmetic to AnalyticsOps.holtWinters' chunk walk
-        val qmIdx = (rot + m - 1) % m
-        val qm = q(qmIdx)
-        val lPrev = l
-        l = (1 - alpha) * (l + b) + alpha * (x - qm)
-        b = betaT * (l - lPrev) + (1 - betaT) * b
-        val sNew = gamma * (x - l) + (1 - gamma) * qm
-        q(qmIdx) = sNew
-        rot = (rot + m - 1) % m
-        val fc = l + b + q((rot + m - 1) % m)
-        HwStreamOut(url, p.ts, p.tie, x, l, b, sNew, fc)
+        if (!primed) { primed = true; walk.l = x; walk.b = 0.0 }
+        val s = walk.step(x)
+        HwStreamOut(url, p.ts, p.tie, x, walk.l, walk.b, s, walk.forecast)
       }
-      (out, HwState(l, b, q, rot, primed))
+      (out, HwState(walk.l, walk.b, walk.q, walk.rot, primed))
     }
   }
 

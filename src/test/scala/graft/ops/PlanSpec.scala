@@ -108,16 +108,20 @@ class PlanSpec extends SparkTestBase {
     // events shuffled on (key, chunk); their subplans are identical, so AQE
     // must materialize the exchange once and reuse it — at 100 TB that is
     // the difference between one event-sized shuffle and two (plus a
-    // second source scan)
-    val df = graft.Queries.all("q50_holt_winters")(spark, dir)
-    // collect() (not count()) so THIS QueryExecution's adaptive plan
-    // finalizes — count() would plan and execute a different query
-    assert(df.collect().nonEmpty)
-    val finalPlan = df.queryExecution.executedPlan.toString
-    assert(finalPlan.contains("ReusedExchange"),
-      s"expected the phase-1/phase-3 event exchange to be reused:\n" +
-        finalPlan.split("\n").filter(l => l.contains("Exchange") ||
-          l.contains("FileScan")).mkString("\n"))
+    // second source scan). Every segmented scan runs on the same driver:
+    // EWMA (q46), Holt (q49), CUSUM (q102) and the rate-limit audit (q133)
+    for (q <- Seq("q50_holt_winters", "q46_ewma", "q49_holt_trend",
+        "q102_cusum", "q133_rate_limit")) {
+      val df = graft.Queries.all(q)(spark, dir)
+      // collect() (not count()) so THIS QueryExecution's adaptive plan
+      // finalizes — count() would plan and execute a different query
+      assert(df.collect().nonEmpty, q)
+      val finalPlan = df.queryExecution.executedPlan.toString
+      assert(finalPlan.contains("ReusedExchange"),
+        s"$q: expected the phase-1/phase-3 event exchange to be reused:\n" +
+          finalPlan.split("\n").filter(l => l.contains("Exchange") ||
+            l.contains("FileScan")).mkString("\n"))
+    }
   }
 
   test("q41/q43: keyed window + single partial+final aggregate") {

@@ -170,6 +170,8 @@ class RollupPipelineSpec extends SparkTestBase {
     val dir2 = java.nio.file.Files.createTempDirectory("ckpt-resume").toString
     val points = CrawlSignals.pageSize(pages).cache()
     val nBuckets = 8
+    val overwriteMode = "spark.sql.sources.partitionOverwriteMode"
+    val modeBefore = spark.conf.get(overwriteMode)
 
     // uninterrupted
     val n1 = Checkpointing.runResumable(points, dir1, nBuckets, segment = false)
@@ -190,6 +192,8 @@ class RollupPipelineSpec extends SparkTestBase {
     def hashOf(dir: String): Long =
       Checkpointing.contentHash(spark.read.parquet(Checkpointing.rollupPath(dir)).drop("bucket"))
     assert(hashOf(dir1) == hashOf(dir2))
+    // dynamic overwrite is a per-write option, not a session-wide setting
+    assert(spark.conf.get(overwriteMode) == modeBefore)
     points.unpersist()
   }
 
