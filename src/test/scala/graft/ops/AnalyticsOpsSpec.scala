@@ -1128,6 +1128,40 @@ class AnalyticsOpsSpec extends SparkTestBase {
     assert(again == theta, "theta estimates stable under repartitioning")
   }
 
+  test("distinctOverlapTheta in estimation mode (lgK = 4): raw output bits equal the recorded golden") {
+    // seeded fixture: 4 keys × 4 consecutive days, each (key, day) audience
+    // 20–500 members drawn from an 800-member pool per key, so consecutive
+    // days overlap. Odd members are multibyte (the sketch hashes UTF-8
+    // bytes); empty and NULL members ride along on some days (both are
+    // skipped). Golden recorded at commit 52394f8 (the engine's own theta
+    // aggregate) with a placeholder and copied from the failure message.
+    val dayMs = 86400000L
+    val rng = new scala.util.Random(122)
+    val fixture = for (k <- 0 until 4; d <- 0 until 4;
+        m <- rng.shuffle((0 until 800).toList).take(20 + rng.nextInt(481))
+          .map(i => Some(if (i % 2 == 0) s"u$i" else s"ü$i")) ++
+          (if ((k + d) % 3 == 0) Seq(Some(""), None) else Nil))
+      yield (s"k$k", dayMs * (d + 1) + rng.nextInt(dayMs.toInt), m)
+    val exact = fixture.filter(_._3.exists(_.nonEmpty))
+      .groupBy(r => (r._1, r._2 / dayMs * dayMs)).map { case (kd, rs) => kd -> rs.size.toLong }
+    assert(exact.values.min > 16,
+      s"every audience must exceed lgK = 4's 16 nominal entries: ${exact.values}")
+    val ev = fixture.map { case (k, ts, m) => (k, new java.sql.Timestamp(ts), m) }
+      .toDF("key", "ts", "member")
+    val out = AnalyticsOps.distinctOverlapTheta(ev, col("key"), col("ts"),
+      col("member"), dayMs, lgK = 4).collect()
+    assert(out.exists(r => r.getLong(2) != exact((r.getString(0), r.getLong(1)))),
+      "some estimate must differ from its exact count (estimation mode)")
+    val lines = out.map(_.toSeq.map {
+      case d: Double => java.lang.Long.toHexString(java.lang.Double.doubleToRawLongBits(d))
+      case x => String.valueOf(x)
+    }.mkString("|")).sorted
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    lines.foreach(l => md.update((l + "\n").getBytes("UTF-8")))
+    val got = (lines.length, md.digest().take(8).map(b => f"$b%02x").mkString)
+    assert(got == ((12, "a57b60ff2c048b3a")), s"theta digest moved: got $got")
+  }
+
   test("linearTrend fits exact lines and NULLs degenerate series") {
     // y = 2.5 + 0.25 x: cents are 250 + 25x, every statistic exact
     val line = (0 to 9).map(i => ("line", i.toLong, 2.5 + 0.25 * i))

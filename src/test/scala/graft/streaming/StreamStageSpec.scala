@@ -88,6 +88,65 @@ class StreamStageSpec extends SparkTestBase {
     assert(batch.size > 6, "fixture must split at least one url into multiple sessions")
   }
 
+  test("streaming sessionization equals batch sessionization under late arrivals") {
+    import org.apache.spark.sql.functions._
+    val gapMs = 90000L
+    // the crawl fixture plus two urls whose steps sit on the gap boundary:
+    // exactly gapMs apart stays in the session, gapMs + 1 opens a new one
+    val crawl = crawlPoints(6).toSeq
+    val t0 = crawl.map(_.ts).min
+    def edge(url: String) = Seq(0L, gapMs, 2 * gapMs + 1, 3 * gapMs + 1, 4 * gapMs + 3)
+      .map(d => SeriesPoint(url, t0 + d, 0.0))
+    val all = crawl ++ edge("edge") ++ edge("edge-batch")
+    val batch = graft.ops.SessionOps
+      .sessionize(all.toDF(), col("url"), timestamp_millis(col("ts")),
+        col("value"), gapMs)
+      .groupBy(col("url"), col("session_id"))
+      .agg(min("ts").as("s"), max("ts").as("e"), count(lit(1)).as("n"))
+      .select("url", "s", "e", "n").as[(String, Long, Long, Long)]
+      .collect().toSet
+
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[SeriesPoint]
+    val q = StreamStage.sessionizeStream(mem.toDS(), gapMs, "30 minutes")
+      .writeStream.format("memory").queryName("session_stream_late")
+      .outputMode("append").start()
+    // the boundary urls arrive first: "edge-batch" whole in one
+    // micro-batch, "edge" one row per micro-batch and out of order, so its
+    // merges run against sessions already in the state store
+    mem.addData(edge("edge-batch"))
+    q.processAllAvailable()
+    for (p <- Seq(2, 0, 4, 1, 3).map(edge("edge"))) {
+      mem.addData(Seq(p))
+      q.processAllAvailable()
+    }
+    // crawl arrival order perturbed by up to ±10 min, so rows on both sides
+    // of a session gap reach the stream out of order across micro-batches.
+    // A row is displaced at most 20 min behind the newest row seen before
+    // it, inside the 30 min lateness, so no row is watermark-dropped.
+    val rng = new scala.util.Random(38)
+    val perturbed = crawl.map(p => (p, p.ts + (rng.nextInt(21) - 10) * 60000L))
+      .sortBy(_._2).map(_._1)
+    for (chunk <- perturbed.grouped(180)) {
+      mem.addData(chunk)
+      q.processAllAvailable()
+    }
+    val far = all.map(_.ts).max + 365L * 86400000L
+    mem.addData(Seq(SeriesPoint("sentinel", far, 0.0)))
+    q.processAllAvailable()
+    mem.addData(Seq(SeriesPoint("sentinel", far + 1, 0.0)))
+    q.processAllAvailable()
+    q.stop()
+    val streamed = spark.table("session_stream_late")
+      .filter(col("url") =!= "sentinel")
+      .as[(String, Long, Long, Long)].collect().toSet
+    val (streamOnly, batchOnly) = (streamed -- batch, batch -- streamed)
+    assert(streamOnly.isEmpty && batchOnly.isEmpty,
+      s"${streamOnly.size} stream-only sessions, e.g. ${streamOnly.take(2)}; " +
+        s"${batchOnly.size} batch-only, e.g. ${batchOnly.take(2)}")
+    assert(batch.count(_._1 == "edge") == 3, "gap boundary: gapMs joins, gapMs + 1 splits")
+  }
+
   test("streaming rollup equals batch rollup non-gap rows") {
     val all = crawlPoints(6)
     // batch truth: non-gap 1m buckets from the scalable kernel
@@ -1989,11 +2048,12 @@ class StreamStageSpec extends SparkTestBase {
   test("stateful twins drop closed state and keep only what must survive") {
     // one twin per state shape: per-(key, bucket) close-on-watermark (mad),
     // per-key ascending period close with a carried value (psi, slo burn,
-    // calendar baseline) and per-key buffered in-order replay (ewma). After
-    // the watermark passes every real row, the state store must hold
-    // exactly the groups whose state outlives the stream: the sentinel's
-    // own group, plus every real key for the twins whose carried value is
-    // unbounded history (calendar's hour-of-day sums, ewma's smoother).
+    // calendar baseline), per-key buffered in-order replay (ewma) and gap
+    // sessions (sessionize). After the watermark passes every real row, the
+    // state store must hold exactly the groups whose state outlives the
+    // stream: the sentinel's own group, plus every real key for the twins
+    // whose carried value is unbounded history (calendar's hour-of-day
+    // sums, ewma's smoother).
     val rng = new scala.util.Random(97)
     val hourMs = 3600000L
     val urls = Seq("a", "b", "c")
@@ -2031,5 +2091,7 @@ class StreamStageSpec extends SparkTestBase {
       StreamStage.calendarBaselineStream(_, lateness)) == urls.size + 1L)
     assert(stateRows("expiry_ewma")(
       StreamStage.ewmaStream(_, 0.3, lateness)) == urls.size + 1L)
+    assert(stateRows("expiry_session")(ds => StreamStage.sessionizeStream(
+      ds.map(p => SeriesPoint(p.url, p.ts, p.value)), hourMs, lateness)) == 1L)
   }
 }
