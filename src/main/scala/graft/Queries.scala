@@ -1627,7 +1627,7 @@ object Queries {
 
     // --- theta-sketch audience overlap (ORACLE-BACKED against the exact
     // set algebra): retained/new/churned from real sketch set operators
-    // (∩, ∖) via the custom theta_sketch_agg — the algebra HLL
+    // (∩, ∖) via Spark's theta_sketch_agg — the algebra HLL
     // inclusion–exclusion can't give. The oracle is exact SQL, valid
     // because every (event_type, day) audience in the testdata sits far
     // below 2^lgK=4096, where a theta sketch retains EVERY hash and its

@@ -417,10 +417,8 @@ object AnalyticsOps {
       h: Double,
       bucketMs: Long): DataFrame = {
     require(h > 0, s"alarm threshold h must be positive, got $h")
-    def cents(v: Double): Long = java.math.BigDecimal.valueOf(v)
-      .setScale(2, java.math.RoundingMode.HALF_UP).unscaledValue.longValueExact
-    val kC = cents(k)
-    val hC = cents(h)
+    val kC = exactCents(k)
+    val hC = exactCents(h)
     // identity (M, T) = (0, 0) is s ↦ max(0, s), the identity on the
     // reachable domain (s_in ≥ 0 always)
     prefixScan(chunkRows[CentsRow](events, keyCol, tsCol, tieCol, bucketMs)(
@@ -434,6 +432,13 @@ object AnalyticsOps {
         (r.key, r.ts, r.tie, r.value, s.toDouble / 100.0, s > hC)
     }
   }
+
+  /** Exact cents of `v` (HALF_UP to 2 decimals via `BigDecimal.valueOf`);
+    * throws on non-finite or overflowing values. [[cusum]] and the
+    * streaming twins that convert values the same way share this one
+    * definition, so stream ≡ batch stays bit-identical. */
+  private[graft] def exactCents(v: Double): Long = java.math.BigDecimal.valueOf(v)
+    .setScale(2, java.math.RoundingMode.HALF_UP).unscaledValue.longValueExact
 
   /** Token-bucket / GCRA rate-limit audit, distributed — replay every
     * key's event stream against a token bucket (capacity `burst` tokens,
@@ -2005,13 +2010,15 @@ object AnalyticsOps {
     * churned (prev∖curr) come from real set operators instead of
     * inclusion–exclusion error stacking. Below 2^lgK distinct members per
     * (key, period) the sketch is in exact mode and every estimate is the
-    * exact count (spec-asserted against [[distinctOverlap]]).
+    * exact count (spec-asserted against [[distinctOverlap]]). `lgK` is
+    * the sketches' log2 nominal entries; Spark checks its range.
     *
     * Scale shape: identical to the HLL variant — ONE event-sized
-    * aggregate into a period-count-sized blob table (the custom
-    * [[graft.functions.ThetaSketchAgg]] hash-aggregates partial+final like
-    * any native aggregate), then consecutive periods join at blob
-    * granularity and the set ops run one evaluation per pair. */
+    * aggregate into a period-count-sized blob table (Spark's
+    * `theta_sketch_agg`, partial+final like any native aggregate), then
+    * consecutive periods join at blob granularity and Spark's
+    * `theta_union`/`theta_intersection`/`theta_difference` run one
+    * evaluation per pair. */
   def distinctOverlapTheta(
       events: DataFrame,
       keyCol: Column,
@@ -2019,9 +2026,7 @@ object AnalyticsOps {
       memberCol: Column,
       periodMs: Long,
       lgK: Int = 12): DataFrame = {
-    import graft.functions.ThetaSketches._
     require(periodMs > 0, s"periodMs must be positive, got $periodMs")
-    require(lgK >= 4 && lgK <= 26, s"lgK must be in [4, 26], got $lgK")
     val daily = events
       .select(keyCol.as("key"),
         (unix_millis(tsCol.cast("timestamp"))
@@ -2035,15 +2040,15 @@ object AnalyticsOps {
         col("c.key") === col("p.key")
           && col("c.period") === col("p.period") + lit(periodMs))
       .select(col("c.key").as("key"), col("c.period").as("period"),
-        theta_estimate(col("c.__sk")).as("curr_est"),
-        theta_estimate(col("p.__sk")).as("prev_est"),
-        theta_estimate(theta_union(col("c.__sk"), col("p.__sk"), lgK))
+        theta_sketch_estimate(col("c.__sk")).as("curr_est"),
+        theta_sketch_estimate(col("p.__sk")).as("prev_est"),
+        theta_sketch_estimate(theta_union(col("c.__sk"), col("p.__sk"), lgK))
           .as("union_est"),
-        theta_estimate(theta_intersect(col("c.__sk"), col("p.__sk")))
+        theta_sketch_estimate(theta_intersection(col("c.__sk"), col("p.__sk")))
           .as("retained_est"),
-        theta_estimate(theta_anotb(col("c.__sk"), col("p.__sk")))
+        theta_sketch_estimate(theta_difference(col("c.__sk"), col("p.__sk")))
           .as("new_est"),
-        theta_estimate(theta_anotb(col("p.__sk"), col("c.__sk")))
+        theta_sketch_estimate(theta_difference(col("p.__sk"), col("c.__sk")))
           .as("churned_est"))
       .withColumn("jaccard_est",
         round(col("retained_est").cast("double")

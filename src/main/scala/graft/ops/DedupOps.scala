@@ -53,15 +53,6 @@ object DedupOps {
         (s: Column) => size(split(s, " ")) === k))
   }
 
-  /** MinHash signature from a PRE-COMPUTED shingle array column: nPerms
-    * independent permutations simulated by xxhash64(shingle, seed) minima —
-    * one array column, no UDF. Take shingles as a column so they are
-    * materialized once, not re-derived per permutation. */
-  def minhashSignature(sh: Column, nPerms: Int = 16): Column =
-    transform(
-      sequence(lit(0), lit(nPerms - 1)),
-      seed => array_min(transform(sh, s => xxhash64(s, seed))))
-
   /** LSH band keys: signature split into `bands` bands of `rows` hashes,
     * each band hashed to one bucket key. */
   def lshBandKeys(sig: Column, bands: Int, rows: Int): Column =
@@ -103,28 +94,6 @@ object DedupOps {
       .filter(col("jaccard") >= threshold)
       .select("doc_a", "doc_b", "jaccard")
   }
-
-  /** SimHash-64 over token hashes: sign-sum of each bit, bit set on
-    * majority. Pure built-in Column composition (64 aggregates over a
-    * PRE-COMPUTED hash array) — the reference semantics; the fast single-pass
-    * path is the native expression [[graft.functions.SimHash64]], proven
-    * equivalent in DedupOpsSpec. `hashes` must be `transform(tokens,
-    * xxhash64)`. */
-  def simhashFromHashes(hashes: Column): Column = {
-    val bitCols = (0 until 64).map { i =>
-      when(
-        aggregate(hashes, lit(0L),
-          (acc, h) => acc + when(shiftright(h, i).bitwiseAND(lit(1L)) === 1L, 1L).otherwise(-1L))
-          > 0,
-        shiftleft(lit(1L), i)).otherwise(lit(0L))
-    }
-    bitCols.reduce((x, y) => x.bitwiseOR(y))
-  }
-
-  def tokenHashes(text: Column): Column =
-    // split("") yields [""]; drop empty tokens so the HOF path agrees with
-    // the native tokenizer (zero tokens) on empty/whitespace-only text
-    transform(filter(split(trim(text), "\\s+"), t => length(t) > 0), t => xxhash64(t))
 
   /** SimHash-64 of raw text — delegates to the native single-pass Catalyst
     * expression (one data pass, stays in whole-stage codegen). */

@@ -10,19 +10,10 @@ import org.apache.spark.sql.expressions.Window
   * bucket-local equi-join instead of a full cross join. */
 object SimilarityOps {
 
-  /** Cosine similarity via zip_with + aggregate — the reference Column
-    * composition, kept for the equivalence test. Higher-order lambdas are
-    * INTERPRETED by Catalyst; use [[cosine]] (native) in real plans. */
-  def cosineHof(a: Column, b: Column): Column = {
-    def dot(x: Column, y: Column): Column =
-      aggregate(zip_with(x, y, (p, q) => p.cast("double") * q.cast("double")),
-        lit(0.0), (acc, v) => acc + v)
-    dot(a, b) / sqrt(dot(a, a) * dot(b, b))
-  }
-
   /** Cosine similarity of two float-array columns — native single-pass
-    * Catalyst expression, bit-identical to [[cosineHof]] (same sequential
-    * double folds). */
+    * Catalyst expression, bit-identical to the zip_with + aggregate
+    * composition the specs keep as its reference (same sequential double
+    * folds). */
   def cosine(a: Column, b: Column): Column = graft.functions.vector.cosine_f(a, b)
 
   /** Brute-force cosine top-k: queries × corpus with the query side
@@ -82,24 +73,6 @@ object SimilarityOps {
       .filter(col("rank") <= k)
       .select(col("query_id"), col("neighbor_id"),
         col("n_lang").as("neighbor_lang"), col("sim"), col("rank"))
-  }
-
-  /** Deterministic pseudo-random hyperplane component for (bit, dim):
-    * a fixed hash mapped to [-1, 1). */
-  private def plane(bit: Int, dim: Column): Column =
-    (pmod(xxhash64(lit(bit), dim), lit(1000003L)).cast("double") / 500001.5) - 1.0
-
-  /** Random-hyperplane LSH signature via HOF composition (reference for the
-    * equivalence test; interpreted — use [[rhpSignature]] in plans). */
-  def rhpSignatureHof(emb: Column, nBits: Int = 16): Column = {
-    val bits = (0 until nBits).map { b =>
-      val proj = aggregate(
-        zip_with(emb, sequence(lit(0), size(emb) - 1),
-          (v, i) => v.cast("double") * plane(b, i)),
-        lit(0.0), (acc, v) => acc + v)
-      when(proj > 0, shiftleft(lit(1L), b)).otherwise(lit(0L))
-    }
-    bits.reduce((x, y) => x.bitwiseOR(y))
   }
 
   /** Random-hyperplane LSH signature: `nBits` sign bits packed into a long

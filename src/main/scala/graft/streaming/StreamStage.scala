@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import scala.reflect.runtime.universe.TypeTag
 import graft.kernel.streaming.{SegSnapshot, StreamingClaSPSegmentation}
+import graft.ops.AnalyticsOps.exactCents
 import graft.pipeline.SeriesPoint
 
 /** One detected global change point of one series. `global_cp` is the index
@@ -18,9 +19,6 @@ final case class StreamSummary(url: String, n_points: Long, window_size: Int,
 /** One closed session from [[StreamStage.sessionizeStream]] (epoch millis). */
 final case class SessionOut(url: String, session_start: Long, session_end: Long,
     n_events: Long)
-
-/** Open-session state for [[StreamStage.sessionizeStream]] (product-encoded). */
-final case class OpenSession(start: Long, end: Long, n: Long)
 
 /** Input row for [[StreamStage.activesStream]]: one activity event with the
   * two identity columns the q45 cardinality rollup sketches. */
@@ -221,7 +219,8 @@ object StreamStage {
     * magnitudes the decimal can't hold (the cast's NULL), so one poison
     * record can never kill a streaming query. Only for twins whose batch
     * side uses the decimal CAST; twins whose batch kernel uses
-    * `BigDecimal.valueOf` directly use [[exactCents]]. */
+    * `BigDecimal.valueOf` directly use
+    * [[graft.ops.AnalyticsOps.exactCents]]. */
   private def decimalCents(v: Double): Option[Long] = {
     if (!java.lang.Double.isFinite(v)) return None
     val u = java.math.BigDecimal.valueOf(v)
@@ -230,11 +229,6 @@ object StreamStage {
       None
     else Some(u.longValue)
   }
-
-  /** Exact cents of `v` (HALF_UP to 2 decimals, `BigDecimal.valueOf` like
-    * the batch kernels); throws on non-finite or overflowing values. */
-  private def exactCents(v: Double): Long = java.math.BigDecimal.valueOf(v)
-    .setScale(2, java.math.RoundingMode.HALF_UP).unscaledValue.longValueExact
 
   /** The decimal value of `c` cents as a double (the DECIMAL→DOUBLE cast). */
   private def centsDouble(c: Long): Double =
@@ -395,7 +389,7 @@ object StreamStage {
     * retracted. State: the O(lateness) buffer plus the last active day
     * per key; a primed key's state persists (its last active day
     * gates all future coverage) — the same O(keys) tier as
-    * [[sessionizeStream]].
+    * [[ewmaStream]]'s carried smoother.
     *
     * The membership stream is itself the write-path artifact ("which keys
     * count toward which trailing window") and is meant to be PERSISTED;
@@ -553,13 +547,16 @@ object StreamStage {
   }
 
   /** STREAMING gap-based sessionization — the unbounded twin of
-    * [[graft.ops.SessionOps.sessionize]]. A session closes when event time
-    * advances past its end by more than `gapMs` within the stream, or when
-    * the WATERMARK does (event-time timeout), so trailing sessions flush
-    * without needing another event on their key. State per key is ONE open
-    * session (three longs) — O(urls) total, independent of stream length,
-    * unlike the batch window which sorts the whole partition. Same
-    * in-order-per-key ingest expectation as [[detectStream]]. */
+    * [[graft.ops.SessionOps.sessionize]], as a NATIVE watermarked
+    * `session_window` aggregate (the [[histogramStream]] pattern, no custom
+    * state code). Each row opens a window [ts, ts + gapMs) and Spark
+    * merges windows that overlap or touch per url, so two rows share a
+    * session iff steps of at most `gapMs` link them — the batch op's
+    * `ts − prev > gapMs` boundary (spec-pinned on both sides of it, within
+    * one micro-batch and across the state store). A session appends
+    * exactly once, when the watermark passes its end; a late row within
+    * the lateness joins the session it belongs to, whatever its arrival
+    * order. State is the open sessions per url. */
   def sessionizeStream(
       points: Dataset[SeriesPoint],
       gapMs: Long,
@@ -568,40 +565,12 @@ object StreamStage {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     watermarked(points.toDF(), lateness)
-      .select(col("url"), col("ts"), col("event_time"))
-      .as[(String, Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (url: String, rows: Iterator[(String, Long, java.sql.Timestamp)],
-         state: GroupState[OpenSession]) => {
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator.single(SessionOut(url, s.start, s.end, s.n))
-          } else {
-            val ts = rows.map(_._2).toArray
-            java.util.Arrays.sort(ts)
-            val closed = List.newBuilder[SessionOut]
-            var open = state.getOption.orNull
-            var i = 0
-            while (i < ts.length) {
-              val t = ts(i)
-              if (open == null) open = OpenSession(t, t, 1L)
-              else if (t - open.end > gapMs) {
-                closed += SessionOut(url, open.start, open.end, open.n)
-                open = OpenSession(t, t, 1L)
-              } else open = OpenSession(open.start, math.max(open.end, t), open.n + 1L)
-              i += 1
-            }
-            if (open != null) {
-              state.update(open)
-              // timeout must land strictly past the current watermark
-              state.setTimeoutTimestamp(math.max(open.end + gapMs + 1L,
-                state.getCurrentWatermarkMs() + 1L))
-            }
-            closed.result().iterator
-          }
-        })
+      .groupBy(col("url"),
+        session_window(col("event_time"), s"$gapMs milliseconds"))
+      .agg(min("ts").as("session_start"), max("ts").as("session_end"),
+        count(lit(1)).as("n_events"))
+      .select("url", "session_start", "session_end", "n_events")
+      .as[SessionOut]
   }
 
   /** STREAMING staleness / absent-series alerting — the unbounded twin of
@@ -679,7 +648,8 @@ object StreamStage {
     * accumulator, or simply the bucket's rows), and once the watermark
     * passes the bucket end the event-time timeout emits
     * `close(key, bucket, state)` exactly once and removes the state —
-    * the append-once discipline of [[sessionizeStream]]. State is
+    * the append-once discipline of a native watermarked window aggregate
+    * ([[histogramStream]]). State is
     * O(open buckets), bounded by bucket span + lateness, never the stream.
     * `zero` is by-name: sketch states update in place, so every new group
     * needs its own. */
@@ -1090,7 +1060,7 @@ object StreamStage {
     * watermark-buffered in-order replay as [[ewmaStream]], with the step
     * index riding the value slot; state per user is the O(steps) progress
     * plus the above-watermark buffer — O(users) total, like
-    * [[sessionizeStream]].
+    * [[ewmaStream]].
     *
     * `events` columns: (user: String, ts: Long ms, tie: Long, etype:
     * String). Non-step events may be pre-filtered or passed through (they
@@ -1137,7 +1107,7 @@ object StreamStage {
     * order-insensitive in the exact regime the q52 oracle pins), and the
     * bucket's top-k is emitted exactly once, when the watermark passes the
     * bucket end (event-time timeout — same append-once discipline as
-    * [[sessionizeStream]]). */
+    * [[histogramStream]]'s native window). */
   def heavyHittersStream(
       events: Dataset[ItemPoint],
       bucketMs: Long,

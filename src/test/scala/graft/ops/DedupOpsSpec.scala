@@ -12,7 +12,7 @@ class DedupOpsSpec extends SparkTestBase {
   test("native SimHash64 expression equals the 64-aggregate Column composition") {
     val both = docs.select(
       graft.functions.functions.simhash64(col("text")).as("fast"),
-      DedupOps.simhashFromHashes(DedupOps.tokenHashes(col("text"))).as("ref"))
+      HofReferences.simhashFromHashes(HofReferences.tokenHashes(col("text"))).as("ref"))
     assert(both.filter(col("fast") =!= col("ref")).count() == 0)
   }
 
@@ -20,7 +20,7 @@ class DedupOpsSpec extends SparkTestBase {
     import graft.functions.functions.minhash_sig
     val both = docs.select(
       minhash_sig(col("text"), 3, 16).as("fast"),
-      DedupOps.minhashSignature(DedupOps.shingles(col("text"), 3), 16).as("ref"))
+      HofReferences.minhashSignature(DedupOps.shingles(col("text"), 3), 16).as("ref"))
     assert(both.filter(to_json(col("fast")) =!= to_json(col("ref"))).count() == 0)
   }
 

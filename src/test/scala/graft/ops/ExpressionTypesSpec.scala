@@ -41,20 +41,6 @@ class ExpressionTypesSpec extends SparkTestBase {
     assert(strings.select(simhash64(col("text"))).collect().length == 1)
   }
 
-  test("theta sketch expressions type-check at analysis and round-trip") {
-    import graft.functions.ThetaSketches._
-    // non-string member; non-binary blob operands
-    analysisFails(doubles.select(theta_sketch_agg(col("emb"))))
-    analysisFails(strings.select(theta_estimate(col("text"))))
-    analysisFails(strings.select(theta_union(col("text"), col("text"))))
-    analysisFails(strings.select(theta_intersect(col("text"), col("text"))))
-    // correctly typed: estimate of a 2-member sketch is exactly 2
-    val sk = Seq("x", "y", "x").toDF("m").agg(theta_sketch_agg(col("m")).as("sk"))
-    assert(sk.select(theta_estimate(col("sk"))).collect()(0).getLong(0) == 2L)
-    assert(sk.select(theta_estimate(
-      theta_anotb(col("sk"), col("sk")))).collect()(0).getLong(0) == 0L)
-  }
-
   test("ordered-extremum aggregate rejects unorderable order columns at analysis") {
     import graft.functions.OrderedAggregates._
     // a map column is not orderable by GreaterThan/LessThan → the

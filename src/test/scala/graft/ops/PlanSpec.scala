@@ -343,4 +343,57 @@ class PlanSpec extends SparkTestBase {
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"))
     assert(!p.contains("SortMergeJoin"), "no data-sized join anywhere")
   }
+
+  // q09/q19/q152 broadcast a tiny query side into an NLJ by design
+  // (plan-pinned; q152 adds the cross-language predicate to the same
+  // brute-force shape);
+  // q29 is a bounded ≤60-doc oracle pin with an explicit theta join;
+  // q37/q65/q112/q118/q131 crossJoin a broadcast 1-ROW anchor/stats aggregate
+  // (the SinglePartition exchange under it is the global agg producing that
+  // one row — aggregate-sized, plan-pinned above)
+  // q134/q140/q141 share the same 1-row (or topN-row: q137's top-200 grid)
+  // broadcast-aggregate crossJoin shape
+  private val allowedNlj =
+    Set("q09_topk_cosine", "q19_ivf_topk", "q152_crosslingual_topk",
+      "q29_jaccard_exact",
+      "q37_retention_expiry", "q65_bm25", "q112_staleness",
+      "q118_lm_perplexity", "q131_keywords", "q134_quality_gate",
+      "q137_source_divergence", "q140_pmi_collocations",
+      "q141_kneser_ney_lm", "q146_churn_survival")
+  // q142's single-partition exchange is the 1-row min/max aggregate that
+  // explodes into the broadcast day spine (span/86400000 rows); q143's is
+  // the unpartitioned rolling window over the BUCKET-COUNT-sized hourly
+  // aggregate (hours in the span — post-reduction, never event-sized)
+  // q146's are the 1-row (N, maxDay) anchor plus the risk-set window and
+  // curve fold over the lifetime SPECTRUM (distinct event times <= days in
+  // span — post-reduction, never key-sized)
+  private val allowedSinglePartition =
+    Set("q37_retention_expiry", "q65_bm25", "q112_staleness",
+      "q118_lm_perplexity", "q131_keywords", "q134_quality_gate",
+      "q140_pmi_collocations", "q141_kneser_ney_lm",
+      "q142_trailing_actives", "q143_rolling_corr",
+      "q146_churn_survival")
+
+  test("every query plans without scale antipatterns outside the allowlists") {
+    // the sweep runs on the smallest scale: plan shape, not data, matters
+    val sweepDir = new java.io.File(dir).getParent + "/sf0.001"
+    assume(new java.io.File(s"$sweepDir/events.parquet").exists(), s"$sweepDir not present")
+    val flags = graft.Queries.all.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+      val p = try fn(spark, sweepDir).queryExecution.executedPlan.toString
+        catch { case e: Exception => fail(s"$name failed to plan", e) }
+      // min_by/max_by/first over STRUCT or ARRAY buffers silently
+      // disqualify HashAggregateExec
+      Seq("SortAggregate fallback" -> p.contains("SortAggregate"),
+        "CartesianProduct" -> p.contains("CartesianProduct"),
+        "BroadcastNestedLoopJoin outside allowlist" ->
+          (p.contains("BroadcastNestedLoopJoin") && !allowedNlj(name)))
+        .collect { case (msg, true) => s"$name: $msg" } ++
+        // rangepartitioning(…, n) is fine; SinglePartition means some
+        // operator pulled everything to one task
+        (if (allowedSinglePartition(name)) Nil
+         else p.split("\n").filter(_.contains("Exchange SinglePartition"))
+           .map(l => s"$name: single-partition exchange: ${l.trim.take(120)}"))
+    }
+    assert(flags.isEmpty, flags.mkString("\n"))
+  }
 }

@@ -14,14 +14,14 @@ class SimilarityOpsSpec extends SparkTestBase {
     val b = emb.select($"vec_id".as("ib"), $"embedding".as("eb"))
     val pairs = a.join(b, $"ia" < $"ib").limit(20000)
       .select(SimilarityOps.cosine($"ea", $"eb").as("fast"),
-        SimilarityOps.cosineHof($"ea", $"eb").as("ref"))
+        HofReferences.cosineHof($"ea", $"eb").as("ref"))
     assert(pairs.filter($"fast" =!= $"ref").count() == 0)
   }
 
   test("native RHP signature is identical to the HOF composition") {
     val both = emb.select(
       SimilarityOps.rhpSignature($"embedding", 16).as("fast"),
-      SimilarityOps.rhpSignatureHof($"embedding", 16).as("ref"))
+      HofReferences.rhpSignatureHof($"embedding", 16).as("ref"))
     assert(both.filter($"fast" =!= $"ref").count() == 0)
   }
 
