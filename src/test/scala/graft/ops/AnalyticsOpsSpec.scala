@@ -1515,6 +1515,45 @@ class AnalyticsOpsSpec extends SparkTestBase {
       "the dead zone must actually exercise the zero-count days")
   }
 
+  test("rollingActives and trailingActives equal brute-force trailing distinct counts") {
+    val dayMs = 86400000L
+    // 240 keys active on days {0..40} U {75..100} (a 34-day dead zone,
+    // longer than every window), with gaps shorter and longer than each
+    // window and several events per key-day; plus a NULL key on real days,
+    // a real key seen only with a NULL ts, and a row with both NULL
+    var s = 11L
+    def lcg(n: Int): Int = { s = (s * 1103515245L + 12345L) & 0x7fffffffL; (s % n).toInt }
+    val real = for {
+      k <- 0 until 240
+      _ <- 0 until 1 + lcg(12)
+      d = lcg(67)
+      rep <- 0 until 1 + lcg(3)
+    } yield (Option(s"k$k"), Option((if (d <= 40) d else d + 34).toLong), rep)
+    val nulls: Seq[(Option[String], Option[Long], Int)] = Seq((None, Some(3L), 0), (None, Some(90L), 1), (None, Some(90L), 2),
+      (Some("k_nullts"), None, 0), (None, None, 0))
+    val rows = real ++ nulls
+    val ev = rows.map { case (k, d, rep) =>
+      (k, d.map(day => new java.sql.Timestamp(day * dayMs + rep * 3600000L + 17L)))
+    }.toDF("user_id", "ts")
+    val keyDays = rows.collect { case (k, Some(d), _) => (k, d) }.distinct
+    val observed = keyDays.map(_._2).distinct.sorted
+    def trailing(w: Long, n: Int): Long =
+      keyDays.filter { case (_, d) => d <= w && d > w - n }.map(_._1).distinct.size.toLong
+    for (n <- Seq(1, 2, 7, 30)) {
+      val rolling = AnalyticsOps.rollingActives(ev, col("user_id"), col("ts"), n)
+        .collect().map(r => r.getTimestamp(0).getTime -> r.getLong(1)).toSeq
+      val wantRolling = observed.map(d => d * dayMs -> trailing(d, n)).toMap
+      assert(rolling.size == wantRolling.size && rolling.toMap == wantRolling,
+        s"n=$n rollingActives: ${rolling.sorted.take(5)} vs ${wantRolling.toSeq.sorted.take(5)}")
+      val full = AnalyticsOps.trailingActives(ev, col("user_id"), col("ts"), n)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq
+      val wantFull = (observed.min to observed.max).map(d => d * dayMs -> trailing(d, n)).toMap
+      assert(full.size == wantFull.size && full.toMap == wantFull,
+        s"n=$n trailingActives: ${full.sorted.take(5)} vs ${wantFull.toSeq.sorted.take(5)}")
+      assert(wantFull.valuesIterator.contains(0L), s"n=$n: the dead zone must read 0")
+    }
+  }
+
   test("seasonalityStrength: eta^2 1 for pure profiles, 0 flat, NULL no-var") {
     val hourMs = 3600000L
     val weekMs = 168L * hourMs

@@ -36,6 +36,79 @@ class CorpusOpsSpec extends SparkTestBase {
     assert(out == Map(1L -> true, 2L -> false, 3L -> false), s"got $out")
   }
 
+  test("decontamination equals a brute-force k-gram set reference on a seeded corpus") {
+    // eval set = doc_id % 50 == 0 (q58's predicate); 300 docs from an LCG
+    // over a 40-token vocabulary with multibyte tokens and repeated runs,
+    // plus too-short, empty and NULL texts. Planted train docs copy runs of
+    // exactly k and k-1 eval tokens between unique fence tokens, so each k
+    // sees both a just-contaminated and a just-clean doc.
+    var s = 7L
+    def lcg(n: Int): Int = { s = (s * 1103515245L + 12345L) & 0x7fffffffL; (s % n).toInt }
+    val vocab = (0 until 34).map(i => s"t$i") ++
+      Seq("naïve", "日本語", "größe", "ñ", "€uro", "🙂")
+    val seps = Seq(" ", "  ", "\t", "\n", " \n ")
+    def render(toks: Seq[String]): String =
+      toks.zipWithIndex.map { case (t, i) => if (i == 0) t else seps(lcg(seps.size)) + t }
+        .mkString
+    def randomDoc(): String = {
+      val toks = (0 until lcg(22)).map(_ => vocab(lcg(vocab.size)))
+      // repeated grams inside one doc
+      val rep = if (toks.size > 4 && lcg(3) == 0) toks ++ toks.take(4) else toks
+      (if (lcg(4) == 0) " " else "") + render(rep) + (if (lcg(4) == 0) "\t" else "")
+    }
+    val base: Seq[(Long, String)] = (0L until 300L).map { id =>
+      val text =
+        if (id % 50 == 0) render((0 until 12 + lcg(8)).map(_ => vocab(lcg(vocab.size))))
+        else if (id == 7L) null
+        else if (id == 11L) ""
+        else if (id == 13L) "   "
+        else if (id == 17L) "t1"
+        else randomDoc()
+      id -> text
+    }
+    val evalToks = base.filter(_._1 % 50 == 0)
+      .map(_._2.split("\\s+").filter(_.nonEmpty).toSeq)
+    val ks = Seq(1, 3, 5, 8)
+    // (doc_id, text, k, run length); ids above 1000 are never % 50 == 0
+    val planted: Seq[(Long, String, Int, Int)] = for {
+      (k, ki) <- ks.zipWithIndex
+      (e, ei) <- evalToks.zipWithIndex
+      (len, li) <- Seq(k, k - 1).zipWithIndex
+      if len >= 1
+    } yield {
+      val id = 1001L + ki * 100 + ei * 10 + li
+      val start = lcg(e.size - len + 1)
+      (id, render(Seq(s"fenceA$id") ++ e.slice(start, start + len) ++ Seq(s"fenceB$id")), k, len)
+    }
+    val rows = base ++ planted.map(p => p._1 -> p._2)
+    val docs = rows.toDF("doc_id", "text")
+    def grams(text: String, k: Int): Set[String] = {
+      val toks = Option(text).toSeq.flatMap(_.split("\\s+").filter(_.nonEmpty))
+      if (toks.size < k) Set.empty else toks.sliding(k).map(_.mkString(" ")).toSet
+    }
+    val isEval = col("doc_id") % 50 === 0
+    for (k <- ks) {
+      val evalGrams = rows.filter(_._1 % 50 == 0).flatMap(r => grams(r._2, k)).toSet
+      val want = rows.filter(_._1 % 50 != 0)
+        .map { case (id, t) => id -> grams(t, k).exists(evalGrams) }.toMap
+      assert(want.valuesIterator.contains(true) && want.valuesIterator.contains(false),
+        s"k=$k: the fixture must hold both clean and contaminated docs")
+      for ((id, _, pk, len) <- planted if pk == k)
+        assert(want(id) == (len == k),
+          s"k=$k: planted doc $id holds a run of $len eval tokens; got ${want(id)}")
+      val viaIds = CorpusOps
+        .decontaminate(docs, docs.filter(isEval).select("doc_id"), k)
+        .as[(Long, Boolean)].collect().toSeq
+      val viaPredicate = TextOps.decontaminate(docs, isEval, k)
+        .select("doc_id", "contaminated").as[(Long, Boolean)].collect().toSeq
+      for ((name, got) <- Seq("evalIds" -> viaIds, "predicate" -> viaPredicate)) {
+        assert(got.size == want.size, s"k=$k $name: ${got.size} rows, want ${want.size}")
+        val diff = got.filter { case (id, c) => !want.get(id).contains(c) }
+        assert(got.toMap == want, s"k=$k $name: ${diff.size} rows differ, e.g. ${diff.take(5)}")
+      }
+    }
+  }
+
   test("shardAssign is a pure function of doc_id: partitioning-invariant, contiguous pos") {
     val docs = (0L until 200L).map(i => (i, s"t$i")).toDF("doc_id", "text")
     val a = CorpusOps.shardAssign(docs, 16)
