@@ -58,6 +58,15 @@ object Queries {
   private def storeFiles(dir: String): Int =
     ops.Adaptive.outputFiles(ops.Adaptive.inputBytes(dir))
 
+  /** Writes a query-built rollup store over `/tmp/graft_<name>_<dir hash>`
+    * in [[storeFiles]] files and reads it back: the stored side that the
+    * continuous-aggregate rewrites (q98/q100/q104/q149/q150) serve from. */
+  private def writeStore(s: SparkSession, dir: String, name: String, df: DataFrame): DataFrame = {
+    val path = s"/tmp/graft_${name}_${math.abs(dir.hashCode)}"
+    df.coalesce(storeFiles(dir)).write.mode("overwrite").parquet(path)
+    s.read.parquet(path)
+  }
+
   private def rollupOut(df: DataFrame): DataFrame =
     df.select(col("url").as("user_id"),
       timestamp_millis(col("bucket_start")).cast("timestamp_ntz").as("bucket_start"),
@@ -699,11 +708,9 @@ object Queries {
     "q57_token_budget" -> ((s, dir) =>
       ops.CorpusOps.tokenBudget(documents(s, dir), 400L)),
 
-    "q58_decontaminate" -> ((s, dir) => {
-      val docs = documents(s, dir)
-      ops.CorpusOps.decontaminate(
-        docs, docs.filter(col("doc_id") % 50 === 0).select("doc_id"), k = 5)
-    }),
+    "q58_decontaminate" -> ((s, dir) =>
+      TextOps.decontaminate(documents(s, dir), col("doc_id") % 50 === 0, k = 5)
+        .select("doc_id", "contaminated")),
 
     // --- the full corpus-assembly composition (oracle-backed): quality ∧
     // repetition ∧ near-dup-canonical ∧ decontaminated, reported as the
@@ -720,8 +727,8 @@ object Queries {
       val quality = TextOps.qualityScore(docs).select(col("doc_id"), col("keep").as("q_keep"))
       val rep = TextOps.repetitionStats(docs).select(col("doc_id"), col("keep").as("r_keep"))
       val dedup = DedupOps.dedupPipeline(docs).select(col("doc_id"), col("keep").as("d_keep"))
-      val decon = ops.CorpusOps.decontaminate(
-        docs, docs.filter(col("doc_id") % 50 === 0).select("doc_id"), k = 5)
+      val decon = TextOps.decontaminate(docs, col("doc_id") % 50 === 0, k = 5)
+        .select("doc_id", "contaminated")
       docs
         .select(col("doc_id"), col("lang"), col("source"),
           size(TextOps.tokens(col("text"))).cast("long").as("n_tokens"))
@@ -1305,12 +1312,8 @@ object Queries {
         .groupBy(col("user_id"), date_trunc("hour", col("ts")).as("bucket"))
         .agg(count(lit(1)).as("cnt"),
           sum(col("value").cast("decimal(12,2)")).as("vsum"))
-      val storePath = s"/tmp/graft_q98_rollup_${math.abs(dir.hashCode)}"
-      hourAgg(events(s, dir))
-        .withColumnRenamed("bucket", "bucket_start")
-        .coalesce(storeFiles(dir))
-        .write.mode("overwrite").parquet(storePath)
-      val stored = s.read.parquet(storePath)
+      val stored = writeStore(s, dir, "q98_rollup",
+        hourAgg(events(s, dir)).withColumnRenamed("bucket", "bucket_start"))
       plans.RollupRewrite.servedFrom(s, "events.parquet", stored,
           hourAgg(events(s, dir)))
         .select(col("user_id"), col("bucket"), col("cnt"),
@@ -1373,9 +1376,7 @@ object Queries {
             .as("vmax"))
       val stored = Rollup.mergeUpserts(stored1, upserts,
         Seq("user_id", "bucket_start"))
-      val path = s"/tmp/graft_q100_store_${math.abs(dir.hashCode)}"
-      stored.coalesce(storeFiles(dir)).write.mode("overwrite").parquet(path)
-      val storeDf = s.read.parquet(path)
+      val storeDf = writeStore(s, dir, "q100_store", stored)
       val q = ev.groupBy(col("user_id"),
           date_trunc("hour", col("ts")).as("bucket"))
         .agg(count(lit(1)).as("cnt"),
@@ -1436,13 +1437,10 @@ object Queries {
     // right). Complements q98 (count/sum) and q100 (min/max).
     "q104_rewrite_avg" -> ((s, dir) => {
       val ev = events(s, dir)
-      val storePath = s"/tmp/graft_q104_rollup_${math.abs(dir.hashCode)}"
-      ev.groupBy(col("user_id"), date_trunc("hour", col("ts")).as("bucket_start"))
-        .agg(count(lit(1)).as("cnt"),
-          sum(col("value").cast("decimal(12,2)")).as("vsum"))
-        .coalesce(storeFiles(dir))
-        .write.mode("overwrite").parquet(storePath)
-      val stored = s.read.parquet(storePath)
+      val stored = writeStore(s, dir, "q104_rollup",
+        ev.groupBy(col("user_id"), date_trunc("hour", col("ts")).as("bucket_start"))
+          .agg(count(lit(1)).as("cnt"),
+            sum(col("value").cast("decimal(12,2)")).as("vsum")))
       val q = ev.groupBy(col("user_id"),
           date_trunc("hour", col("ts")).as("bucket"))
         .agg(count(lit(1)).as("cnt"),
@@ -1465,8 +1463,8 @@ object Queries {
           col("is_outlier"))),
 
     // --- trailing 7-day distinct actives (oracle-backed, exact integer):
-    // the WAU query — sliding DISTINCT via the bounded day fan-out of the
-    // deduplicated (user, day) table; q45's HLL sketches are the
+    // the WAU query on observed days — q142's dedup-first count joined
+    // onto the days that carry events; q45's HLL sketches are the
     // approximate at-scale twin
     "q106_rolling_actives" -> ((s, dir) =>
       ops.AnalyticsOps.rollingActives(events(s, dir),
@@ -1957,11 +1955,8 @@ object Queries {
         .groupBy(col("user_id"), date_trunc("day", col("ts")).as("bucket"))
         .agg(count(lit(1)).as("cnt"),
           sum(col("value").cast("decimal(12,2)")).as("vsum"))
-      val storePath = s"/tmp/graft_q149_rollup_${math.abs(dir.hashCode)}"
-      dayAgg(events(s, dir)).withColumnRenamed("bucket", "bucket_start")
-        .coalesce(storeFiles(dir))
-        .write.mode("overwrite").parquet(storePath)
-      val stored = s.read.parquet(storePath)
+      val stored = writeStore(s, dir, "q149_rollup",
+        dayAgg(events(s, dir)).withColumnRenamed("bucket", "bucket_start"))
       plans.RollupRewrite.servedFromTiers(s, "events.parquet",
           Map("day" -> stored), dayAgg(events(s, dir)))
         .select(col("user_id"), col("bucket"), col("cnt"),
@@ -1980,11 +1975,8 @@ object Queries {
         .groupBy(col("user_id"), date_trunc("hour", col("ts")).as("bucket"))
         .agg(count(lit(1)).as("cnt"),
           sum(col("value").cast("decimal(12,2)")).as("vsum"))
-      val storePath = s"/tmp/graft_q150_rollup_${math.abs(dir.hashCode)}"
-      hourAgg(events(s, dir)).withColumnRenamed("bucket", "bucket_start")
-        .coalesce(storeFiles(dir))
-        .write.mode("overwrite").parquet(storePath)
-      val stored = s.read.parquet(storePath)
+      val stored = writeStore(s, dir, "q150_rollup",
+        hourAgg(events(s, dir)).withColumnRenamed("bucket", "bucket_start"))
       plans.RollupRewrite.servedFrom(s, "events.parquet", stored,
           hourAgg(events(s, dir).filter(col("user_id") % 7 === 3)))
         .select(col("user_id"), col("bucket"), col("cnt"),

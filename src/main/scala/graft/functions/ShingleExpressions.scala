@@ -96,25 +96,6 @@ object ShingleKernel {
     UnsafeArrayData.fromPrimitiveArray(sig)
   }
 
-  /** True iff any element of `a` is present in the broadcast SORTED
-    * distinct long array — binary search per element, O(|a|·log|set|).
-    * The broadcast seam (vs a literal array) is what lets the probe set
-    * grow to 10⁶+ entries: the array ships once per executor over the
-    * torrent broadcast channel instead of being serialized into every
-    * task's expression tree and generated-code references. */
-  def overlapsSortedBroadcast(
-      a: ArrayData,
-      bc: org.apache.spark.broadcast.Broadcast[Array[Long]]): Boolean = {
-    val ref = bc.value
-    val n = a.numElements()
-    var i = 0
-    while (i < n) {
-      if (java.util.Arrays.binarySearch(ref, a.getLong(i)) >= 0) return true
-      i += 1
-    }
-    false
-  }
-
   /** Jaccard of two SORTED long arrays via a merge walk — O(|a|+|b|). */
   def sortedJaccard(a: ArrayData, b: ArrayData): Double = {
     val na = a.numElements()
@@ -165,32 +146,6 @@ case class MinHashSig(child: Expression, k: Int, nPerms: Int) extends UnaryExpre
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c => s"graft.functions.ShingleKernel.minhashSig($c, $k, $nPerms)")
   override protected def withNewChildInternal(newChild: Expression): MinHashSig =
-    copy(child = newChild)
-}
-
-/** `arrays_overlap(child, <probe set>)` with the probe set carried in a
-  * Spark BROADCAST variable instead of a literal array: a literal ships
-  * with every task binary and bloats the generated-code object table, so
-  * it cliffs around ~10⁶ elements; the broadcast ships once per executor
-  * and scales to 10⁸+. Codegen'd via `addReferenceObj` (Spark's own
-  * runtime-filter pattern), so the probe stays inside whole-stage codegen
-  * as a static call. Null child → null, like `arrays_overlap`. */
-case class SortedLongsOverlapBroadcast(
-    child: Expression,
-    bc: org.apache.spark.broadcast.Broadcast[Array[Long]])
-  extends UnaryExpression
-    with org.apache.spark.sql.graft.GraftExpectsInputTypes {
-  override def expectedInputTypes: Seq[DataType] = Seq(ArrayType(LongType))
-  override def dataType: DataType = org.apache.spark.sql.types.BooleanType
-  override def nullSafeEval(v: Any): Any =
-    ShingleKernel.overlapsSortedBroadcast(v.asInstanceOf[ArrayData], bc)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("probeSet", bc,
-      "org.apache.spark.broadcast.Broadcast")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.ShingleKernel.overlapsSortedBroadcast($c, $ref)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): SortedLongsOverlapBroadcast =
     copy(child = newChild)
 }
 

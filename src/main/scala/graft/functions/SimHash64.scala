@@ -71,10 +71,4 @@ object functions {
   /** Jaccard similarity of two sorted long-array columns. */
   def sorted_jaccard(a: Column, b: Column): Column =
     Bridge.column(SortedLongJaccard(Bridge.expression(a), Bridge.expression(b)))
-  /** True iff any element of the long-array column is in the broadcast
-    * SORTED array — `arrays_overlap` against a broadcast probe set. */
-  def overlaps_broadcast(
-      c: Column,
-      bc: org.apache.spark.broadcast.Broadcast[Array[Long]]): Column =
-    Bridge.column(SortedLongsOverlapBroadcast(Bridge.expression(c), bc))
 }

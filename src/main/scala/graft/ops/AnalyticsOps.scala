@@ -585,42 +585,26 @@ object AnalyticsOps {
 
   /** Trailing-window distinct actives (the WAU/MAU query): for every
     * observed day, the number of distinct keys active in the `windowDays`
-    * days ending on it. Sliding DISTINCT does not decompose like a sum —
-    * the exact public shape is to deduplicate to (key, day) once and
-    * fan each row out to the ≤ `windowDays` report days it contributes
-    * to, then deduplicate (key, report-day) and count.
+    * days ending on it — [[trailingActives]]' counts restricted to the days
+    * that carry at least one event (every such day has an active key, so
+    * none is lost), with the day as a timestamp.
     *
-    * Scale shape: one event-sized partial+final hash aggregate down to
-    * (key, day) — map-side combine does the heavy lifting — then all work
-    * is (keys × days)-sized with a BOUNDED ×windowDays fan-out (the q93
-    * canonical-bucket trick), one more hash distinct, and a day-count
-    * aggregate; report days are inner-joined to the observed-day table so
-    * no phantom post-horizon days appear. Pure integer arithmetic — exact
+    * Scale shape: [[trailingActives]]' dedup-first count, then one inner
+    * join against the distinct observed days (a day-sized partial+final
+    * aggregate straight off the scan). Pure integer arithmetic — exact
     * cross-engine. (The approximate at-scale alternative — mergeable HLL
-    * sketches per day, range-unioned — is q45's territory; this is the
-    * exact path, linear in windowDays.) */
+    * sketches per day, range-unioned — is q45's territory.) */
   def rollingActives(
       events: DataFrame,
       keyCol: Column,
       tsCol: Column,
       windowDays: Int): DataFrame = {
-    require(windowDays >= 1, s"windowDays must be >= 1, got $windowDays")
-    val dayMs = 86400000L
-    val keyDays = events
-      .select(keyCol.as("key"),
-        unix_millis(date_trunc("day", tsCol).cast("timestamp")).as("day"))
+    val observed = events
+      .select(unix_millis(date_trunc("day", tsCol).cast("timestamp")).as("day_ms"))
       .distinct()
-    val observed = keyDays.select(col("day")).distinct()
-    keyDays
-      .select(col("key"),
-        explode(sequence(lit(0), lit(windowDays - 1))).as("__i"),
-        col("day"))
-      .select(col("key"), (col("day") + col("__i") * lit(dayMs)).as("day"))
-      .distinct()
-      .join(observed, Seq("day"))
-      .groupBy("day")
-      .agg(count(lit(1)).as("actives"))
-      .select(timestamp_millis(col("day")).as("day"), col("actives"))
+    trailingCounts(events, keyCol, tsCol, windowDays)
+      .join(observed, Seq("day_ms"))
+      .select(timestamp_millis(col("day_ms")).as("day"), col("actives"))
   }
 
   /** Forecast-residual anomaly detection — the classic TS alerting query:
@@ -850,49 +834,6 @@ object AnalyticsOps {
       .groupBy("series_a", "series_b")
       .agg(corr(col("__va"), col("__vb")).as("r"),
         count(lit(1)).as("n_buckets"))
-  }
-
-  /** Additive seasonal decomposition against a calendar profile:
-    * value = trend (per-(key, trend-bucket) mean) + seasonal (per-(key,
-    * season-phase) mean of the detrended values) + residual. With
-    * trend bucket = day and season phase = hour-of-day this is the
-    * "subtract the daily level, then the hour-of-day shape" baseline that
-    * turns diurnal traffic into a flat residual stream worth alerting on.
-    *
-    * Scale shape: ONE event-sized shuffle — a partial+final hash aggregate
-    * to (key, trendBucket, phase) cells carrying (sum, count). Trend and
-    * seasonal are then derived from CELLS (trend = Σsum/Σcnt per (key,
-    * bucket); seasonal = Σ(sum − cnt·trend)/Σcnt per (key, phase)), so the
-    * decomposition itself never re-reads the events. The final annotate is
-    * one join of events against the two cell-sized (AQE-broadcastable)
-    * stat tables. A naive formulation (window mean, join, second window)
-    * would shuffle the events three times; this shape shuffles them once
-    * plus one join. */
-  def seasonalDecompose(
-      events: DataFrame,
-      keyCol: Column,
-      trendBucketCol: Column,
-      phaseCol: Column,
-      valueCol: Column): DataFrame = {
-    val tagged = events
-      .withColumn("__key", keyCol)
-      .withColumn("__tb", trendBucketCol)
-      .withColumn("__ph", phaseCol)
-    // cell-sized; the trend and seasonal derivations share it
-    val cells = Adaptive.materialize(tagged
-      .groupBy("__key", "__tb", "__ph")
-      .agg(sum(valueCol).as("__sv"), count(lit(1)).as("__c")))
-    val trend = cells.groupBy("__key", "__tb")
-      .agg((sum("__sv") / sum("__c")).as("trend"))
-    val seasonal = cells.join(trend, Seq("__key", "__tb"))
-      .groupBy("__key", "__ph")
-      .agg((sum(col("__sv") - col("__c") * col("trend")) / sum("__c"))
-        .as("seasonal"))
-    tagged
-      .join(trend, Seq("__key", "__tb"))
-      .join(seasonal, Seq("__key", "__ph"))
-      .withColumn("residual", valueCol - col("trend") - col("seasonal"))
-      .drop("__key", "__tb", "__ph")
   }
 
   /** Monotonic-counter increase with reset detection (PromQL `increase`):
@@ -1501,7 +1442,7 @@ object AnalyticsOps {
       .join(prevTotals, Seq("key", "period"))
   }
 
-  /** [[seasonalDecompose]] for fixed-decimal telemetry, with BIT-DETERMINISTIC
+  /** Additive seasonal decomposition for fixed-decimal telemetry, with BIT-DETERMINISTIC
     * output at any parallelism: values are scaled to exact integers
     * (`decimals` fractional digits), so the event-sized cell sums are
     * associative integer adds (partial-aggregation order can't perturb
@@ -1512,7 +1453,7 @@ object AnalyticsOps {
     * is reproducible, full stop — and therefore exactly mirrorable by a
     * sequential oracle.
     *
-    * Scale shape: identical to [[seasonalDecompose]] (one event-sized hash
+    * Scale shape: identical to the generic double-sum variant (one event-sized hash
     * aggregate to cells, then cell-sized derivations + one annotate join).
     * The sorted fold buffers one key's CELLS (days × phases), never rows. */
   def seasonalDecomposeExact(
@@ -2504,47 +2445,20 @@ object AnalyticsOps {
   /** EXACT trailing-window distinct actives — one row per day in the data
     * span with the count of keys active at least once in the trailing
     * `windowDays` days (the true WAU/MAU curve; the exact twin of the q117
-    * HLL-sketch tier, which trades this op's fan-out for mergeable state).
+    * HLL-sketch tier), zeros included. [[rollingActives]] is the same count
+    * on observed days only. EXACT cross-engine: pure integer day/count
+    * arithmetic.
     *
-    * The naive shapes both fail at 100 TB: per-day count-distinct over a
-    * 7-day self-join re-reads each event 7x and holds per-window distinct
-    * sets; a distinct-per-window explode fans every (key, day) row out 7x
-    * BEFORE deduplication. This op dedups FIRST (one (key, day) row per
-    * active day), then uses the classic first-in-window identity: a key
-    * counts toward window W exactly once, at its first active day inside
-    * [W−(n−1), W] — i.e. an active day `d` with previous active gap g
-    * covers windows [max(d, prev+n), d+n−1]. That range explode is <= n
-    * rows per DEDUPED (key, day) pair and needs only a lag() over the
-    * key's own days, so total work is n·|distinct(key,day)| with no
-    * distinct-set state anywhere.
-    *
-    * EXACT cross-engine: pure integer day/count arithmetic. Scale shape:
-    * one hash-distinct of (key, day); a key-partitioned lag window; a <=
-    * n-row sequence explode; one final day-keyed hash aggregate (day-count
-    * rows, BROADCAST into the left-outer join) against the day spine
+    * Scale shape: [[trailingCounts]]' dedup-first count; one final left
+    * join of the day-count rows, BROADCAST, against the day spine
     * (span/86400000 rows built from ONE 1-row min/max aggregate). */
   def trailingActives(
       events: DataFrame,
       keyCol: Column,
       tsCol: Column,
       windowDays: Int = 7): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(windowDays >= 1, s"windowDays must be >= 1, got $windowDays")
     val dayMs = 86400000L
-    val win = lit(windowDays.toLong * dayMs)
-    val ud = events
-      .select(keyCol.as("key"),
-        unix_millis(date_trunc("day", tsCol).cast("timestamp")).as("day"))
-      .distinct()
-    val w = Window.partitionBy("key").orderBy(col("day"))
-    val firstIn = ud
-      .withColumn("prev", lag(col("day"), 1).over(w))
-      .withColumn("lo",
-        when(col("prev").isNull, col("day"))
-          .otherwise(greatest(col("day"), col("prev") + win)))
-      .withColumn("hi", col("day") + win - lit(dayMs))
-      .select(explode(sequence(col("lo"), col("hi"), lit(dayMs))).as("day_ms"))
-    val counts = firstIn.groupBy("day_ms").agg(count(lit(1)).as("actives"))
+    val counts = trailingCounts(events, keyCol, tsCol, windowDays)
     val spine = events
       .agg(
         unix_millis(date_trunc("day", min(tsCol)).cast("timestamp")).as("lo"),
@@ -2558,6 +2472,48 @@ object AnalyticsOps {
     spine.join(broadcast(counts), Seq("day_ms"), "left")
       .select(col("day_ms"),
         coalesce(col("actives"), lit(0L)).as("actives"))
+  }
+
+  /** `(day_ms, actives)`: per day, the distinct keys active in the
+    * `windowDays` days ending on it, for every day some key's window
+    * covers (days past the last event included, empty days absent).
+    *
+    * The naive shapes both fail at 100 TB: per-day count-distinct over a
+    * 7-day self-join re-reads each event 7x and holds per-window distinct
+    * sets; a distinct-per-window explode fans every (key, day) row out 7x
+    * BEFORE deduplication. This dedups FIRST (one (key, day) row per
+    * active day), then uses the classic first-in-window identity: a key
+    * counts toward window W exactly once, at its first active day inside
+    * [W−(n−1), W] — i.e. an active day `d` with previous active gap g
+    * covers windows [max(d, prev+n), d+n−1]. That range explode is <= n
+    * rows per DEDUPED (key, day) pair and needs only a lag() over the
+    * key's own days, so total work is n·|distinct(key,day)| with no
+    * distinct-set state anywhere. NULL keys count as one key; NULL
+    * timestamps cover no day.
+    *
+    * Scale shape: one hash-distinct of (key, day); a key-partitioned lag
+    * window; a <= n-row sequence explode; one day-keyed hash aggregate. */
+  private def trailingCounts(
+      events: DataFrame,
+      keyCol: Column,
+      tsCol: Column,
+      windowDays: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    require(windowDays >= 1, s"windowDays must be >= 1, got $windowDays")
+    val dayMs = 86400000L
+    val win = lit(windowDays.toLong * dayMs)
+    val ud = events
+      .select(keyCol.as("key"),
+        unix_millis(date_trunc("day", tsCol).cast("timestamp")).as("day"))
+      .distinct()
+    val w = Window.partitionBy("key").orderBy(col("day"))
+    ud.withColumn("prev", lag(col("day"), 1).over(w))
+      .withColumn("lo",
+        when(col("prev").isNull, col("day"))
+          .otherwise(greatest(col("day"), col("prev") + win)))
+      .withColumn("hi", col("day") + win - lit(dayMs))
+      .select(explode(sequence(col("lo"), col("hi"), lit(dayMs))).as("day_ms"))
+      .groupBy("day_ms").agg(count(lit(1)).as("actives"))
   }
 
   /** Rolling-window Pearson correlation between two event types' hourly

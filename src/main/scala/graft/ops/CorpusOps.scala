@@ -5,9 +5,10 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Corpus-assembly operators: the steps that turn a cleaned document pool
-  * into an actual training mix — per-stratum token budgeting and benchmark
-  * decontamination. Inputs: the `documents(doc_id, text, lang, source,
-  * n_chars)` table. */
+  * into an actual training mix — per-stratum token budgeting, sampling,
+  * shard export and the composed nightly build (whose decontamination
+  * stage is [[TextOps.decontaminate]]). Inputs: the `documents(doc_id,
+  * text, lang, source, n_chars)` table. */
 object CorpusOps {
 
   /** Token-budget quota sampling: within each (lang, source) stratum, keep
@@ -28,63 +29,6 @@ object CorpusOps {
         size(TextOps.tokens(col("text"))).cast("long").as("n_tokens"))
       .withColumn("cum_tokens", sum("n_tokens").over(w))
       .filter(col("cum_tokens") - col("n_tokens") < budget)
-  }
-
-  /** Benchmark decontamination: flag every non-eval document that shares at
-    * least one k-token shingle with the eval set (`evalIds(doc_id)`) — the
-    * standard n-gram-overlap eval-decontamination step run before training.
-    *
-    * Scale shape: shingles are joined by their 64-bit hash
-    * ([[graft.functions]] `hashed_shingles`), so the shuffle ships 8-byte
-    * longs, never gram strings; the eval-gram side is DISTINCT-collapsed
-    * first and is benchmark-sized (tiny vs the corpus), so Spark broadcasts
-    * it and the corpus side never shuffles. A hash collision can only add a
-    * false POSITIVE (an extra dropped doc) at p ≈ 2⁻⁶⁴ per gram pair.
-    * Output: `(doc_id, contaminated)` over documents ∖ evalIds. */
-  def decontaminate(documents: DataFrame, evalIds: DataFrame, k: Int = 5): DataFrame = {
-    import graft.functions.functions.hashed_shingles
-    val grams = documents.select(col("doc_id"),
-      explode(hashed_shingles(col("text"), k)).as("g"))
-    // restrict to eval docs BEFORE shingling (r6, guide §2.3 project
-    // early): the old grams ⋈ evalIds shape computed shingles for the
-    // whole corpus and then kept the eval slice — the join cannot be
-    // pushed below the explode. Same gram set, one benchmark-sized
-    // shingle pass instead of a corpus-sized one.
-    val evalGrams = documents.join(evalIds, Seq("doc_id"))
-      .select(explode(hashed_shingles(col("text"), k)).as("g"))
-      .distinct()
-    val contaminated = grams.join(broadcast(evalGrams), Seq("g"))
-      .select("doc_id").distinct()
-    documents.select("doc_id")
-      .join(evalIds, Seq("doc_id"), "left_anti")
-      .join(contaminated.withColumn("contaminated", lit(true)), Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("contaminated"), lit(false)).as("contaminated"))
-  }
-
-  /** Decontamination for UNBOUNDED document streams — the streaming twin of
-    * [[decontaminate]]. The eval set is static, so its distinct gram
-    * hashes are aggregated once and shipped as a Spark BROADCAST variable
-    * probed by a codegen'd native expression
-    * ([[graft.functions.SortedLongsOverlapBroadcast]] — binary search per
-    * doc gram against the sorted broadcast array); each micro-batch is
-    * then a stateless per-row map — no shuffle, no state store, identical
-    * semantics on batch and streaming inputs (stream ≡ batch asserted in
-    * CorpusOpsSpec, including a 10⁵-gram eval set). The broadcast seam
-    * scales to 10⁸ grams (8 B each — executor-memory-bounded, not
-    * codegen-bounded); the EXACT set rides the broadcast, so there are no
-    * false positives to re-verify.
-    *
-    * Unlike [[decontaminate]], eval docs are NOT excluded from the output
-    * (an anti-join on an unbounded stream would be stateful); feed the
-    * stream pre-filtered or drop `doc_id % …` eval rows downstream. */
-  def decontaminateStream(docs: DataFrame, evalDocs: DataFrame, k: Int = 5): DataFrame = {
-    import graft.functions.functions.{hashed_shingles, overlaps_broadcast}
-    val evalGrams: Array[Long] = evalDocs
-      .select(explode(hashed_shingles(col("text"), k)).as("g"))
-      .distinct().collect().map(_.getLong(0)).sorted
-    val bc = docs.sparkSession.sparkContext.broadcast(evalGrams)
-    docs.select(col("doc_id"),
-      overlaps_broadcast(hashed_shingles(col("text"), k), bc).as("contaminated"))
   }
 
   /** Knuth multiplicative hash of a non-negative 64-bit id, reduced mod
@@ -125,7 +69,9 @@ object CorpusOps {
     * fixes their canonical order and returns the full per-document
     * DECISION TABLE — `keep` plus the first failing stage in `drop_reason`
     * (audit trail), with `shard`/`pos` populated for kept docs — so a
-    * corpus build is reproducible and explainable row by row.
+    * corpus build is reproducible and explainable row by row. `isEval`
+    * marks the held-out benchmark docs (dropped as `eval_doc`); the rest
+    * are decontaminated against their 5-grams.
     *
     * Scale shape: each stage keeps its own documented plan (no new
     * shuffles are introduced by the composition — decisions join back on
@@ -133,7 +79,7 @@ object CorpusOps {
     * filters. */
   def buildCorpus(
       documents: DataFrame,
-      evalIds: DataFrame,
+      isEval: Column,
       budgetPerStratum: Long,
       nShards: Int): DataFrame = {
     val norm = DedupOps.normalizedDedup(documents)
@@ -144,7 +90,8 @@ object CorpusOps {
       .select(col("doc_id"), col("keep").as("r_keep"))
     val near = DedupOps.dedupPipeline(documents)
       .select(col("doc_id"), col("keep").as("d_keep"))
-    val decon = decontaminate(documents, evalIds)
+    val decon = TextOps.decontaminate(documents, isEval, k = 5)
+      .select("doc_id", "contaminated")
     // flag-sized, never text; the drop rows, budget window and shard join share it
     val decided = Adaptive.materialize(documents
       .select(col("doc_id"), col("lang"), col("source"),

@@ -44,15 +44,6 @@ object DedupOps {
       .drop("rn")
   }
 
-  /** Word k-shingles as a deduped array column. */
-  def shingles(text: Column, k: Int = 3): Column = {
-    val toks = split(trim(text), "\\s+")
-    array_distinct(
-      filter(
-        transform(toks, (_, i) => concat_ws(" ", slice(toks, i + lit(1), lit(k)))),
-        (s: Column) => size(split(s, " ")) === k))
-  }
-
   /** LSH band keys: signature split into `bands` bands of `rows` hashes,
     * each band hashed to one bucket key. */
   def lshBandKeys(sig: Column, bands: Int, rows: Int): Column =

@@ -383,8 +383,7 @@ object TextOps {
     * inputs ⇒ bit-identical doubles in any engine); the reported columns are
     * rounded for the oracle hash. */
   def repetitionStats(documents: DataFrame): DataFrame = {
-    val toks = filter(tokens(col("text")), t => length(t) > 0)
-    val base = documents.select(col("doc_id"), toks.as("toks"))
+    val base = documents.select(col("doc_id"), nonEmptyTokens.as("toks"))
     val grams2 = filter(
       transform(col("toks"), (_, i) => concat_ws(" ", slice(col("toks"), i + lit(1), lit(2)))),
       g => size(split(g, " ")) === 2)
@@ -479,7 +478,10 @@ object TextOps {
     * when it shares word-k-gram(s) with any document of the held-out eval
     * set. Reports, per train doc, its distinct-gram count, how many of
     * those grams occur anywhere in the eval set, and the contaminated
-    * fraction.
+    * fraction. It is the engine's one decontamination operator: q115 reads
+    * the counts; q58, q59 and [[CorpusOps.buildCorpus]] keep
+    * `(doc_id, contaminated)`. Eval docs (and rows whose `isEval` is NULL)
+    * are absent from the output; gram-less docs come out clean.
     *
     * Scale shape: grams are native single-pass DISTINCT 64-bit shingle
     * hashes ([[graft.functions.functions.hashed_shingles]], codegen'd), so
@@ -500,13 +502,20 @@ object TextOps {
     val evalGrams = documents.filter(isEval)
       .select(explode(hashed_shingles(col("text"), k)).as("g")).distinct()
       .withColumn("__hit", lit(1))
-    documents.filter(!isEval)
-      .select(col("doc_id"),
+    // eval docs leave AFTER the per-doc count, through an aggregate of the
+    // predicate: a scan filter would become a doc_id constraint that Spark
+    // copies onto every side a caller joins this output with (q59), where
+    // it seeds a runtime bloom filter built in one partition. Eval docs
+    // are benchmark-sized, so counting their grams costs next to nothing.
+    documents
+      .select(col("doc_id"), isEval.as("__eval"),
         explode_outer(hashed_shingles(col("text"), k)).as("g"))
       .join(broadcast(evalGrams), Seq("g"), "left")
       .groupBy("doc_id")
       .agg(count(col("g")).as("n_grams"),
-        count(col("__hit")).as("n_contaminated"))
+        count(col("__hit")).as("n_contaminated"),
+        max(col("__eval")).as("__eval"))
+      .filter(!col("__eval"))
       .select(col("doc_id"), col("n_grams"), col("n_contaminated"),
         round(col("n_contaminated").cast("double")
           / greatest(col("n_grams"), lit(1L)).cast("double"), 6)
@@ -627,8 +636,7 @@ object TextOps {
     * scores — never dropped. */
   def lmScore(documents: DataFrame, alpha: Double = 0.5): DataFrame = {
     require(alpha > 0, s"alpha must be positive, got $alpha")
-    val toks = filter(tokens(col("text")), t => length(t) > 0)
-    val docToks = documents.select(col("doc_id"), toks.as("t"))
+    val docToks = documents.select(col("doc_id"), nonEmptyTokens.as("t"))
     // gram stream: (doc_id, pos, context token, gram string). Tokens are
     // whitespace-split, so the ' ' joint is injective — no collisions.
     // sequence(0, n-2) DESCENDS when n < 2 (Spark defaults step to -1),
@@ -643,8 +651,7 @@ object TextOps {
       .select(col("doc_id"), col("s.pos").as("pos"), col("s.t1").as("t1"),
         col("s.g").as("g"))
     // vocab-sized; the vocabulary scalar and the context join share it
-    val uni = Adaptive.materialize(docToks.select(explode(col("t")).as("tok"))
-      .groupBy("tok").agg(count(lit(1)).as("c1")))
+    val uni = Adaptive.materialize(unigramCounts(docToks))
     val vocab = uni.agg(count(lit(1)).as("v"))
     val terms = grams
       // bigram count via a window over the gram-keyed exchange instead of
@@ -654,7 +661,7 @@ object TextOps {
       // the term expression is NULL for them exactly as the old left
       // join's missing match was.
       .withColumn("c2", count(lit(1)).over(Window.partitionBy("g")))
-      .join(uni.withColumnRenamed("tok", "t1"), Seq("t1"), "left")
+      .join(uni.select(col("tok").as("t1"), col("c").as("c1")), Seq("t1"), "left")
       .crossJoin(broadcast(vocab))
       .select(col("doc_id"), col("pos"),
         when(col("g").isNotNull,
@@ -753,25 +760,16 @@ object TextOps {
     import org.apache.spark.sql.expressions.Window
     require(minCount >= 1, s"minCount must be >= 1, got $minCount")
     require(topN >= 1, s"topN must be >= 1, got $topN")
-    val toks = filter(tokens(col("text")), t => length(t) > 0)
-    val base = documents.select(toks.as("t"))
+    val base = documents.select(nonEmptyTokens.as("t"))
     // vocab-sized; the w1 and w2 attach joins share it
-    val uni = Adaptive.materialize(base.select(explode(col("t")).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("c")))
-    val nBig = greatest(size(col("t")) - 1, lit(0))
+    val uni = Adaptive.materialize(unigramCounts(base))
     val totals = base.agg(
       sum(size(col("t")).cast("long")).as("nu"),
-      sum(nBig.cast("long")).as("nb"))
-    val big = base
-      .select(explode(zip_with(
-        slice(col("t"), lit(1), nBig), slice(col("t"), lit(2), nBig),
-        (a, b) => struct(a.as("w1"), b.as("w2")))).as("bg"))
-      .select(col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-      .groupBy("w1", "w2").agg(count(lit(1)).as("c_xy"))
-      .filter(col("c_xy") >= minCount)
+      sum(nBigrams.cast("long")).as("nb"))
+    val big = bigramCounts(base).filter(col("c_xy") >= minCount)
     val scored = big
-      .join(uni.select(col("w").as("w1"), col("c").as("c_x")), "w1")
-      .join(uni.select(col("w").as("w2"), col("c").as("c_y")), "w2")
+      .join(uni.select(col("tok").as("w1"), col("c").as("c_x")), "w1")
+      .join(uni.select(col("tok").as("w2"), col("c").as("c_y")), "w2")
       .crossJoin(broadcast(totals))
       .withColumn("pmi",
         log(col("c_xy").cast("double")) - log(col("nb").cast("double"))
@@ -812,16 +810,9 @@ object TextOps {
       minCount: Long = 5L): DataFrame = {
     require(discount > 0 && discount < 1,
       s"discount must be in (0,1), got $discount")
-    val toks = filter(tokens(col("text")), t => length(t) > 0)
-    val base = documents.select(toks.as("t"))
-    val nBig = greatest(size(col("t")) - 1, lit(0))
     // bigram-type-sized; ctx, cont, types and the smoothing chain share it
-    val big = Adaptive.materialize(base
-      .select(explode(zip_with(
-        slice(col("t"), lit(1), nBig), slice(col("t"), lit(2), nBig),
-        (a, b) => struct(a.as("w1"), b.as("w2")))).as("bg"))
-      .select(col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-      .groupBy("w1", "w2").agg(count(lit(1)).as("c_xy")))
+    val big = Adaptive.materialize(
+      bigramCounts(documents.select(nonEmptyTokens.as("t"))))
     val ctx = big.groupBy("w1").agg(
       sum("c_xy").as("c_w1"), count(lit(1)).as("n_follow"))
     val cont = big.groupBy("w2").agg(count(lit(1)).as("n_precede"))
@@ -841,4 +832,26 @@ object TextOps {
       .select(col("w1"), col("w2"), col("c_xy"), col("c_w1"),
         col("n_follow"), col("n_precede"), col("p_kn"))
   }
+
+  /** The whitespace tokens of `text` with empty strings dropped: the
+    * token array that [[repetitionStats]], [[lmScore]],
+    * [[pmiCollocations]] and [[knBigramLm]] count over. */
+  private def nonEmptyTokens: Column = filter(tokens(col("text")), t => length(t) > 0)
+
+  /** Adjacent pairs in a token array `t`; 0 for fewer than two tokens. */
+  private def nBigrams: Column = greatest(size(col("t")) - 1, lit(0))
+
+  /** `(tok, c)`: each token's count over the token arrays `t`. */
+  private def unigramCounts(base: DataFrame): DataFrame =
+    base.select(explode(col("t")).as("tok")).groupBy("tok").agg(count(lit(1)).as("c"))
+
+  /** `(w1, w2, c_xy)`: each adjacent token pair's count over the token
+    * arrays `t`, zipped from two slices (no positional explode). */
+  private def bigramCounts(base: DataFrame): DataFrame =
+    base
+      .select(explode(zip_with(
+        slice(col("t"), lit(1), nBigrams), slice(col("t"), lit(2), nBigrams),
+        (a, b) => struct(a.as("w1"), b.as("w2")))).as("bg"))
+      .select(col("bg.w1").as("w1"), col("bg.w2").as("w2"))
+      .groupBy("w1", "w2").agg(count(lit(1)).as("c_xy"))
 }

@@ -532,7 +532,7 @@ class AnalyticsOpsSpec extends SparkTestBase {
       (d, t) <- trendByDay.toSeq; (h, s) <- shapeByHour.toSeq
     } yield (d * 100 + h, "u1", d, h, t + s))
       .toDF("event_id", "user_id", "day", "hod", "value").repartition(8)
-    val out = AnalyticsOps.seasonalDecompose(ev, col("user_id"), col("day"),
+    val out = AnalyticsReferences.seasonalDecompose(ev, col("user_id"), col("day"),
         col("hod"), col("value"))
       .select("event_id", "trend", "seasonal", "residual")
       .collect().map(r => r.getLong(0) ->
@@ -564,7 +564,7 @@ class AnalyticsOpsSpec extends SparkTestBase {
     val exact1 = run(1)
     val exact17 = run(17)
     assert(exact1 == exact17, "bit-identical across partitionings")
-    val generic = AnalyticsOps.seasonalDecompose(ev, col("user_id"),
+    val generic = AnalyticsReferences.seasonalDecompose(ev, col("user_id"),
         col("day"), col("hod"), col("value"))
       .select("event_id", "trend", "seasonal", "residual")
       .collect().map(r => r.getLong(0) ->

@@ -30,8 +30,8 @@ class CorpusOpsSpec extends SparkTestBase {
       (2L, "w1 w2 w3 w4 zz w6"),       // longest shared run is 4 → clean
       (3L, "p q r s t u")              // disjoint → clean
     ).toDF("doc_id", "text")
-    val out = CorpusOps
-      .decontaminate(docs, docs.filter($"doc_id" === 0L).select("doc_id"), k = 5)
+    val out = TextOps.decontaminate(docs, $"doc_id" === 0L, k = 5)
+      .select("doc_id", "contaminated")
       .as[(Long, Boolean)].collect().toMap
     assert(out == Map(1L -> true, 2L -> false, 3L -> false), s"got $out")
   }
@@ -96,16 +96,12 @@ class CorpusOpsSpec extends SparkTestBase {
       for ((id, _, pk, len) <- planted if pk == k)
         assert(want(id) == (len == k),
           s"k=$k: planted doc $id holds a run of $len eval tokens; got ${want(id)}")
-      val viaIds = CorpusOps
-        .decontaminate(docs, docs.filter(isEval).select("doc_id"), k)
-        .as[(Long, Boolean)].collect().toSeq
-      val viaPredicate = TextOps.decontaminate(docs, isEval, k)
+      // the call q58 makes (q59 and buildCorpus make it at k = 5)
+      val got = TextOps.decontaminate(docs, isEval, k = k)
         .select("doc_id", "contaminated").as[(Long, Boolean)].collect().toSeq
-      for ((name, got) <- Seq("evalIds" -> viaIds, "predicate" -> viaPredicate)) {
-        assert(got.size == want.size, s"k=$k $name: ${got.size} rows, want ${want.size}")
-        val diff = got.filter { case (id, c) => !want.get(id).contains(c) }
-        assert(got.toMap == want, s"k=$k $name: ${diff.size} rows differ, e.g. ${diff.take(5)}")
-      }
+      assert(got.size == want.size, s"k=$k: ${got.size} rows, want ${want.size}")
+      val diff = got.filter { case (id, c) => !want.get(id).contains(c) }
+      assert(got.toMap == want, s"k=$k: ${diff.size} rows differ, e.g. ${diff.take(5)}")
     }
   }
 
@@ -156,8 +152,7 @@ class CorpusOpsSpec extends SparkTestBase {
       doc(6L, filler + " e1 e2 e3 e4 e5 tail") // shares eval 5-gram e1..e5
     ).toDF("doc_id", "text", "lang", "source")
     val out = CorpusOps
-      .buildCorpus(docs, docs.filter($"doc_id" === 5L).select("doc_id"),
-        budgetPerStratum = 1000L, nShards = 4)
+      .buildCorpus(docs, $"doc_id" === 5L, budgetPerStratum = 1000L, nShards = 4)
       .collect()
       .map(r => r.getLong(0) ->
         ((Option(r.getString(4)), r.getBoolean(5)))).toMap
@@ -173,7 +168,7 @@ class CorpusOpsSpec extends SparkTestBase {
       .shardAssign(docs.filter($"doc_id".isin(keptIds: _*)).select("doc_id"), 4)
       .as[(Long, Int, Int)].collect().toSet
     val gotShard = CorpusOps
-      .buildCorpus(docs, docs.filter($"doc_id" === 5L).select("doc_id"), 1000L, 4)
+      .buildCorpus(docs, $"doc_id" === 5L, 1000L, 4)
       .filter($"keep")
       .select($"doc_id", $"shard", $"pos").as[(Long, Int, Int)].collect().toSet
     assert(gotShard == expectShard, s"$gotShard vs $expectShard")
@@ -187,8 +182,7 @@ class CorpusOpsSpec extends SparkTestBase {
     val docs = (1L to 8L)
       .map(i => (i, filler + s" uniq$i extra$i more$i", "en", "web"))
       .toDF("doc_id", "text", "lang", "source")
-    val out = CorpusOps.buildCorpus(docs,
-      docs.filter($"doc_id" < 0).select("doc_id"),
+    val out = CorpusOps.buildCorpus(docs, $"doc_id" < 0,
       budgetPerStratum = 1000L, nShards = 2)
     out.collect()
     val materialized = out.queryExecution.optimizedPlan.collect {
@@ -209,78 +203,12 @@ class CorpusOpsSpec extends SparkTestBase {
       .map(i => (i, filler + s" uniq$i extra$i more$i", "en", "web"))
       .toDF("doc_id", "text", "lang", "source")
     val out = CorpusOps
-      .buildCorpus(docs, docs.filter($"doc_id" < 0).select("doc_id"),
-        budgetPerStratum = 60L, nShards = 2)
+      .buildCorpus(docs, $"doc_id" < 0, budgetPerStratum = 60L, nShards = 2)
       .collect().map(r => r.getLong(0) -> Option(r.getString(4))).toMap
     // 28 tokens/doc: docs 1,2 start under 60 (0, 28), doc 3 starts at 56 —
     // still under — doc 4 starts at 84 -> over budget
     assert(out(1L).isEmpty && out(2L).isEmpty && out(3L).isEmpty, s"got $out")
     assert(out(4L) == Some("over_budget"), s"got $out")
-  }
-
-  test("decontaminateStream on a doc stream equals batch decontaminate") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val data = Seq(
-      (0L, "w1 w2 w3 w4 w5 w6"),
-      (1L, "x0 w2 w3 w4 w5 w6 x1"),
-      (2L, "w1 w2 w3 w4 zz w6"),
-      (3L, "p q r s t u"))
-    val evalDocs = data.filter(_._1 == 0L).toDF("doc_id", "text")
-    val batch = CorpusOps
-      .decontaminate(data.toDF("doc_id", "text"), evalDocs.select("doc_id"), k = 5)
-      .as[(Long, Boolean)].collect().toMap
-    val mem = MemoryStream[(Long, String)]
-    val out = CorpusOps.decontaminateStream(
-      mem.toDF.toDF("doc_id", "text"), evalDocs, k = 5)
-    val q = out.writeStream.format("memory").queryName("decon_stream")
-      .outputMode("append").start()
-    try {
-      mem.addData(data.filter(_._1 != 0L): _*) // non-eval docs arrive on the stream
-      q.processAllAvailable()
-      val got = spark.table("decon_stream").as[(Long, Boolean)].collect().toMap
-      assert(got == batch, s"stream $got vs batch $batch")
-    } finally q.stop()
-  }
-
-  test("decontaminateStream handles a 100k+-gram eval set via the broadcast seam") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    // 100 eval docs × 1050 unique tokens → ≥ 100k distinct 5-gram hashes:
-    // far past where a literal-array arrays_overlap bloats the generated
-    // code; the broadcast variable carries it once per executor instead
-    val evalDocs = (0 until 100).map(d =>
-        (d.toLong, (0 until 1050).map(i => s"e${d}_$i").mkString(" ")))
-      .toDF("doc_id", "text")
-    val nGrams = evalDocs
-      .select(explode(graft.functions.functions
-        .hashed_shingles($"text", 5)).as("g"))
-      .distinct().count()
-    assert(nGrams >= 100000L, s"eval set must exceed 1e5 grams, got $nGrams")
-    // stream docs: 1000 contains an eval 5-gram verbatim; 1001 is clean;
-    // 1002 shares 4 of 5 tokens (no full shingle) — clean
-    val streamDocs = Seq(
-      (1000L, "x y e37_10 e37_11 e37_12 e37_13 e37_14 z"),
-      (1001L, "alpha beta gamma delta epsilon zeta"),
-      (1002L, "e37_10 e37_11 e37_12 e37_13 q e37_15"))
-    val batch = CorpusOps
-      .decontaminate(streamDocs.toDF("doc_id", "text")
-          .unionByName(evalDocs.select($"doc_id", $"text")),
-        evalDocs.select("doc_id"), k = 5)
-      .as[(Long, Boolean)].collect().toMap
-    val mem = MemoryStream[(Long, String)]
-    val q = CorpusOps.decontaminateStream(
-        mem.toDF.toDF("doc_id", "text"), evalDocs, k = 5)
-      .writeStream.format("memory").queryName("decon_stream_big")
-      .outputMode("append").start()
-    try {
-      mem.addData(streamDocs: _*)
-      q.processAllAvailable()
-      val got = spark.table("decon_stream_big")
-        .as[(Long, Boolean)].collect().toMap
-      assert(got == batch, s"stream $got vs batch $batch")
-      assert(got == Map(1000L -> true, 1001L -> false, 1002L -> false))
-    } finally q.stop()
   }
 
   test("weightedSample ranks by the Efraimidis–Spirakis key and drops w<=0") {

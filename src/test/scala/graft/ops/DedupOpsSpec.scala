@@ -20,14 +20,14 @@ class DedupOpsSpec extends SparkTestBase {
     import graft.functions.functions.minhash_sig
     val both = docs.select(
       minhash_sig(col("text"), 3, 16).as("fast"),
-      HofReferences.minhashSignature(DedupOps.shingles(col("text"), 3), 16).as("ref"))
+      HofReferences.minhashSignature(HofReferences.shingles(col("text"), 3), 16).as("ref"))
     assert(both.filter(to_json(col("fast")) =!= to_json(col("ref"))).count() == 0)
   }
 
   test("native sorted-hash jaccard equals string-set jaccard") {
     import graft.functions.functions.{hashed_shingles, sorted_jaccard}
     val sample = docs.limit(40).select(col("doc_id"), col("text"),
-      DedupOps.shingles(col("text"), 3).as("sh_str"),
+      HofReferences.shingles(col("text"), 3).as("sh_str"),
       hashed_shingles(col("text"), 3).as("sh_hash"))
     val a = sample.select(col("doc_id").as("ida"), col("sh_str").as("sa"), col("sh_hash").as("ha"))
     val b = sample.select(col("doc_id").as("idb"), col("sh_str").as("sb"), col("sh_hash").as("hb"))
@@ -128,7 +128,7 @@ class DedupOpsSpec extends SparkTestBase {
     // independent expected value: exact O(n²) string-shingle Jaccard pairs
     // at the same threshold, closed over the same component op — any LSH
     // recall miss or verification drift would split/merge a component
-    val sh = docs.select(col("doc_id"), DedupOps.shingles(col("text"), 3).as("s"))
+    val sh = docs.select(col("doc_id"), HofReferences.shingles(col("text"), 3).as("s"))
     val a = sh.select(col("doc_id").as("a"), col("s").as("sa"))
     val b = sh.select(col("doc_id").as("b"), col("s").as("sb"))
     val exactPairs = a.join(b, col("a") < col("b"))

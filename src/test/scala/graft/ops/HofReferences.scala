@@ -5,9 +5,18 @@ import org.apache.spark.sql.functions._
 
 /** Higher-order-function reference compositions of the native expressions
   * behind [[SimilarityOps.cosine]], [[SimilarityOps.rhpSignature]],
-  * MinHash and SimHash — the equivalence specs compare the native path
-  * against these. */
+  * word shingling, MinHash and SimHash — the equivalence specs compare the
+  * native path against these. */
 object HofReferences {
+
+  /** Word k-shingles as a deduped array column. */
+  def shingles(text: Column, k: Int = 3): Column = {
+    val toks = split(trim(text), "\\s+")
+    array_distinct(
+      filter(
+        transform(toks, (_, i) => concat_ws(" ", slice(toks, i + lit(1), lit(k)))),
+        (s: Column) => size(split(s, " ")) === k))
+  }
 
   /** Cosine similarity via zip_with + aggregate — the reference Column
     * composition, kept for the equivalence test. Higher-order lambdas are
