@@ -155,6 +155,111 @@ class ClaSPProfileSpec extends AnyFunSuite {
     }
   }
 
+  /** ClaSS's profile by definition (claspy/streaming/clasp.py:346-392),
+    * -inf outside the splits [minSegSize, n - minSegSize): at split s,
+    * y_true is 1 from s on, each row predicts the strict majority of its
+    * neighbours' y_true, and the confusion matrix counts only the rows
+    * outside the window [s, s+w). */
+  private def classReference(knnFlat: Array[Int], k: Int, w: Int, minSegSize: Int,
+      score: String): Array[Double] = {
+    val n = knnFlat.length / k
+    val prof = Array.fill(n)(Double.NegativeInfinity)
+    var s = minSegSize
+    while (s < n - minSegSize) {
+      var tp, fp, fn, tn = 0L
+      var i = 0
+      while (i < n) {
+        if (i < s || i >= s + w) {
+          var ones = 0
+          var j = 0
+          while (j < k) { if (knnFlat(i * k + j) >= s) ones += 1; j += 1 }
+          val pred = ones > k - ones
+          if (i >= s) { if (pred) tp += 1 else fn += 1 }
+          else { if (pred) fp += 1 else tn += 1 }
+        }
+        i += 1
+      }
+      val total = tp + fp + fn + tn
+      prof(s) = score match {
+        case "f1" => Scoring.f1FromCounts(tp, fp, fn, tn)
+        case "accuracy" => if (total == 0) Double.NegativeInfinity else (tp + tn).toDouble / total
+      }
+      s += 1
+    }
+    prof
+  }
+
+  /** Rows in the split range that list themselves as a neighbour. */
+  private def selfListedSplitRows(knnFlat: Array[Int], k: Int, minSegSize: Int): Seq[Int] = {
+    val n = knnFlat.length / k
+    (minSegSize until n - minSegSize).filter(s => (0 until k).exists(j => knnFlat(s * k + j) == s))
+  }
+
+  test("ClaSS profile equals a per-split confusion-matrix reference") {
+    val rng = new java.util.Random(20261021L)
+    var tables = 0
+    def check(knnFlat: Array[Int], k: Int, w: Int, minSegSize: Int, clue: String): Unit = {
+      for (score <- Seq("f1", "accuracy"))
+        assertBitIdentical(streaming.ClaSS.profile(knnFlat, k, w, minSegSize, score),
+          classReference(knnFlat, k, w, minSegSize, score), s"$clue $score")
+      tables += 1
+    }
+    // the tables the streaming detector scores: StreamingKSN snapshots of
+    // seeded series, taken every few points once two segments fit
+    val shapes = Seq("constant", "spike", "sine", "noise", "step", "quantised", "periodic")
+    for (c <- 0 until 28) {
+      val shape = shapes(c % shapes.length)
+      val (w, k) = (3 + rng.nextInt(10), 1 + rng.nextInt(3))
+      val minSegSize = 5 * w
+      val nTimepoints = 2 * minSegSize + 40 + rng.nextInt(200)
+      val f = 0.05 + 0.3 * rng.nextDouble()
+      val len = nTimepoints + 200
+      val ts = Array.tabulate(len) { i =>
+        shape match {
+          case "constant" => 1.0
+          case "spike" => if (i % 97 == 13) 5.0 else 0.0
+          case "sine" => math.sin(i * f)
+          case "noise" => rng.nextGaussian()
+          case "step" => (if (i < len / 2) 0.0 else 3.0) + 0.1 * rng.nextGaussian()
+          case "quantised" => math.rint(2.0 * math.sin(i * f) + 0.3 * rng.nextGaussian())
+          case _ => (i % (4 + c % 9)).toDouble
+        }
+      }
+      val sksn = new streaming.StreamingKSN(nTimepoints, w, k)
+      for (i <- ts.indices) {
+        sksn.update(ts(i))
+        if (i % 7 == 0 && sksn.knnInsertIdx - sksn.lbound >= 2 * minSegSize) {
+          val t = sksn.transform()
+          assert(selfListedSplitRows(t.offsetsFlat, t.stride, minSegSize).isEmpty,
+            s"streamed $shape case $c at $i lists a split row as its own neighbour")
+          check(t.offsetsFlat, t.stride, w, minSegSize, s"streamed $shape case $c at $i w=$w k=$k")
+        }
+      }
+    }
+    // fitted tables
+    for (c <- 0 until 40) {
+      val (w, k) = (3 + rng.nextInt(20), 1 + rng.nextInt(4))
+      val minSegSize = 5 * w
+      val ts = series(rng, 2 * minSegSize + w + rng.nextInt(600))
+      val knn = new KSubsequenceNeighbours(w, k).fit(Array(ts))
+      assert(selfListedSplitRows(knn.offsetsFlat, knn.stride, minSegSize).isEmpty,
+        s"fitted case $c lists a split row as its own neighbour")
+      check(knn.offsetsFlat, knn.stride, w, minSegSize, s"fitted case $c w=$w k=$k")
+    }
+    // hand-built tables with repeats and no row listing itself
+    for (c <- 0 until 60) {
+      val (w, k) = (3 + rng.nextInt(20), 1 + rng.nextInt(4))
+      val minSegSize = 5 * w
+      val rows = 2 * minSegSize + 1 + rng.nextInt(300)
+      val offs = Array.tabulate(rows * k) { p =>
+        val o = rng.nextInt(rows - 1)
+        if (o >= p / k) o + 1 else o
+      }
+      check(offs, k, w, minSegSize, s"hand-built case $c w=$w k=$k rows=$rows")
+    }
+    assert(tables > 300, s"only $tables tables")
+  }
+
   test("a -1 offset (missing neighbour) throws on both paths") {
     val (w, k, exclRadius, rows) = (4, 3, 5, 100)
     val rng = new java.util.Random(5L)

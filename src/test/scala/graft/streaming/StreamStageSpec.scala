@@ -185,6 +185,37 @@ class StreamStageSpec extends SparkTestBase {
       s"stream-only: ${(streamedClean -- batch).take(3)}; batch-only: ${(batch -- streamedClean).take(3)}")
   }
 
+  test("batch replay equals one detector per url fed on the driver in ts order") {
+    val cfg = StreamStage.Config(nTimepoints = 2048, nWarmup = 200)
+    // three crawl urls, shuffled across partitions, plus one too short to
+    // warm up; every url has distinct timestamps
+    val crawl = crawlPoints(3).toSeq
+    val short = (0 until 150).map(i => SeriesPoint("short", 3600000L + i * 60000L, math.sin(i * 0.3)))
+    val all = new scala.util.Random(13).shuffle(crawl ++ short)
+    assert(all.groupBy(_.url).values.forall(ps => ps.map(_.ts).distinct.size == ps.size))
+
+    val events = Seq.newBuilder[CpEvent]
+    val summaries = all.groupBy(_.url).toSeq.map { case (url, pts) =>
+      val det = new graft.kernel.streaming.StreamingClaSPSegmentation(
+        cfg.nTimepoints, cfg.nWarmup, logCps = true)
+      for (p <- pts.sortBy(_.ts)) {
+        val logged = det.changePoints.length
+        det.update(p.value)
+        for (cp <- det.changePoints.drop(logged)) events += CpEvent(url, cp, det.ingested.toLong)
+      }
+      StreamSummary(url, pts.size.toLong, if (det.isWarmedUp) det.windowSize else -1,
+        det.changePoints.length, det.lastCp)
+    }
+    val byEvent = Ordering.by((e: CpEvent) => (e.url, e.n_ingested, e.global_cp))
+    val wantEvents = events.result().sorted(byEvent)
+    assert(wantEvents.nonEmpty, "the fixture must log change points")
+    assert(summaries.exists(_.window_size == -1) && summaries.count(_.window_size > 0) == 3)
+
+    val ds = all.toDS().repartition(4)
+    assert(StreamStage.detectBatch(ds, cfg).collect().toSeq.sorted(byEvent) == wantEvents)
+    assert(StreamStage.summarizeBatch(ds, cfg).collect().toSeq.sortBy(_.url) == summaries.sortBy(_.url))
+  }
+
   test("structured streaming emits the same cps as batch replay") {
     val all = crawlPoints(4)
     val cfg = StreamStage.Config(nTimepoints = 2048, nWarmup = 200)
