@@ -83,49 +83,29 @@ object ClaSP {
   /** Writes profile(split) for split in [start, end) in O(n·k) total time,
     * bit-identical to scoring `CrossVal.labels` at every split.
     *
-    * Each row's base vote is the majority of its k neighbours' y_true; its
-    * final label is 1 inside the forced window [split-w, split) and the
-    * base vote elsewhere. Every score is a function of four integers: n,
-    * split, onesRight (labels 1 at or after split, i.e. base votes there)
-    * and onesTotal (all labels 1 = base votes outside the window + w).
-    * Advancing the split turns y_true(split) from 1 to 0, which can only
-    * take votes away, and only from the reverse neighbours of split; the
-    * window and the right part each move by one index. So three counters
-    * of base votes (all rows, window rows, rows at or after split) follow
-    * the split in O(1 + |rnn(split)|). Scores go through the count-based
-    * entry points of [[Scoring]], the same arithmetic the array-based
-    * scores use. */
+    * A row's final label is 1 inside the forced window [split-w, split) and
+    * its base vote elsewhere, so every score is a function of n, split,
+    * onesRight (labels 1 at or after split: the base votes there) and
+    * onesLeft (labels 1 before it: base votes outside the window, plus w),
+    * read off the [[SplitWalk]] counters. Scores go through the count-based
+    * entry points of [[Scoring]]. */
   private def profileInto(offsetsFlat: Array[Int], k: Int, w: Int, start: Int, end: Int,
       isF1: Boolean, profile: Array[Double]): Unit = {
-    val n = offsetsFlat.length / k
     // the forced window never wraps (numpy's negative indices) in this range
     require(start >= w, s"first split $start lies inside the first window ($w)")
-    val (rnnOff, rnnVal) = CrossVal.rnn(offsetsFlat, k)
-    // votes(i): row i's neighbours at or after the current split
-    val votes = new Array[Int](n)
-    var q = rnnOff(start)
-    while (q < rnnVal.length) { votes(rnnVal(q)) += 1; q += 1 }
-    @inline def base(row: Int): Int = if (votes(row) > k - votes(row)) 1 else 0
-    var baseTotal = 0; var baseWindow = 0; var baseRight = 0
-    var i = 0
-    while (i < n) {
-      val b = base(i)
-      baseTotal += b
-      if (i >= start) baseRight += b
-      else if (i >= start - w) baseWindow += b
-      i += 1
-    }
+    val walk = new SplitWalk(offsetsFlat, k, w, -w, start)
+    val n = walk.n
     // the roc curve of a step score has two points past the origin
     val tps = new Array[Double](3)
     val fps = new Array[Double](3)
-    var split = start
-    while (split < end) {
-      val onesRight = baseRight
-      val onesTotal = baseTotal - baseWindow + w
+    while (walk.split < end) {
+      val split = walk.split
+      val onesRight = walk.atOrAfter
+      val onesLeft = walk.before - walk.inWindow + w
+      val onesTotal = onesLeft + onesRight
       profile(split) =
         if (isF1) {
           // y_true is 1 at or after split: tp, fp, fn, tn of label 1
-          val onesLeft = onesTotal - onesRight
           Scoring.f1FromCounts(onesRight, onesLeft, n - split - onesRight, split - onesLeft)
         } else {
           // y_score reversed: n-split ones, then split zeros (scoring.py:99-111)
@@ -135,24 +115,7 @@ object ClaSP {
           fps(2) = 1.0 + (n - 1) - onesTotal
           Scoring.rocAucFromCurve(tps, fps, 2)
         }
-      if (split + 1 < end) {
-        q = rnnOff(split)
-        while (q < rnnOff(split + 1)) {
-          val row = rnnVal(q)
-          val before = base(row)
-          votes(row) -= 1
-          if (before != base(row)) {
-            baseTotal -= 1
-            if (row >= split) baseRight -= 1
-            else if (row >= split - w) baseWindow -= 1
-          }
-          q += 1
-        }
-        val b = base(split)
-        baseWindow += b - base(split - w)
-        baseRight -= b
-      }
-      split += 1
+      walk.advance()
     }
   }
 
@@ -225,5 +188,71 @@ object ClaSP {
     } else {
       new ClaSPModel(windowSize, kNeighbours, scoreName, exclRadius, knn, canvas, 0, n)
     }
+  }
+}
+
+/** The split walk both ClaSP profiles score from: the batch one of
+  * [[ClaSP]] and the streaming one of [[streaming.ClaSS]].
+  *
+  * At split s, y_true is 1 at or after s, and a row's base vote is the
+  * strict majority of its k neighbours' y_true. Advancing the split turns
+  * y_true(s) from 1 to 0, which can only take votes away, and only from
+  * the reverse neighbours of s ([[CrossVal.rnn]]). So three counters of
+  * base votes follow the split in O(1 + |rnn(s)|): rows before s
+  * (`before`), rows at or after s (`atOrAfter`), and rows in the window of
+  * w rows that starts `windowOffset` rows from s (`inWindow`). The batch
+  * profile forces its window [s-w, s) to 1 (offset -w); the streaming one
+  * leaves [s, s+w) out of its confusion matrix (offset 0). Each caller
+  * scores a split from the counters in its own loop, so nothing is boxed
+  * or allocated per split. The window must lie inside the table at every
+  * split walked and at the one after the last. */
+private[kernel] final class SplitWalk(offsetsFlat: Array[Int], k: Int, w: Int,
+    windowOffset: Int, start: Int) {
+  val n: Int = offsetsFlat.length / k
+  private val (rnnOff, rnnVal) = CrossVal.rnn(offsetsFlat, k)
+  // votes(i): row i's neighbours at or after the current split
+  private val votes = new Array[Int](n)
+  var split: Int = start
+  var before = 0
+  var inWindow = 0
+  var atOrAfter = 0
+
+  @inline private def base(row: Int): Int = if (votes(row) > k - votes(row)) 1 else 0
+
+  {
+    var q = rnnOff(start)
+    while (q < rnnVal.length) { votes(rnnVal(q)) += 1; q += 1 }
+    val wStart = start + windowOffset
+    var i = 0
+    while (i < n) {
+      val b = base(i)
+      if (i >= start) atOrAfter += b else before += b
+      if (i >= wStart && i < wStart + w) inWindow += b
+      i += 1
+    }
+  }
+
+  /** Moves the split one row right. */
+  def advance(): Unit = {
+    val s = split
+    val wStart = s + windowOffset
+    var q = rnnOff(s)
+    val qEnd = if (s + 1 < n) rnnOff(s + 1) else rnnVal.length
+    while (q < qEnd) {
+      val row = rnnVal(q)
+      val was = base(row)
+      votes(row) -= 1
+      if (was != base(row)) {
+        if (row >= s) atOrAfter -= 1 else before -= 1
+        if (row >= wStart && row < wStart + w) inWindow -= 1
+      }
+      q += 1
+    }
+    // row s joins the rows before the split; the window slides one row
+    val b = base(s)
+    atOrAfter -= b
+    before += b
+    inWindow += base(wStart + w) - base(wStart)
+    split = s + 1
   }
 }

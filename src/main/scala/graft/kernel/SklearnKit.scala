@@ -60,8 +60,9 @@ object SklearnKit {
 
   /** `f1_score(y_true, y_pred, average="macro")` with the default
     * zero_division behavior (degenerate precision/recall/f1 -> 0), averaged
-    * over the sorted union labels. NOTE: distinct from [[Scoring.f1Score]],
-    * whose -inf guards mirror claspy's own binary scorer. */
+    * over the sorted union labels. NOTE: distinct from
+    * [[Scoring.f1FromCounts]], whose -inf guards mirror claspy's own binary
+    * scorer. */
   def f1Macro(yTrue: Array[Int], yPred: Array[Int]): Double = {
     val labels = unionLabels(yTrue, yPred)
     var total = 0.0

@@ -152,14 +152,13 @@ object Pipeline {
     io.write(out1m.toDF(), s"$outDir/tier=1m")
     io.write(out1h.toDF(), s"$outDir/tier=1h")
     io.write(out1d.toDF(), s"$outDir/tier=1d")
-    val blobCount = blobs.count()
     io.write(blobs.toDF(), s"$outDir/blobs")
 
     val res = Result(
       io.read(spark, s"$outDir/tier=1m").count(),
       io.read(spark, s"$outDir/tier=1h").count(),
       io.read(spark, s"$outDir/tier=1d").count(),
-      blobCount)
+      io.read(spark, s"$outDir/blobs").count())
     all.unpersist()
     res
   }

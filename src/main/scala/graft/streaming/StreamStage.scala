@@ -259,8 +259,6 @@ object StreamStage {
   final case class Config(
       nTimepoints: Int = 10000,
       nWarmup: Int = 300,
-      jump: Int = 5,
-      logCps: Boolean = true,
       maxStateBytesPerUrl: Long = 4L << 20) {
 
     /** Upper bound on encoded [[graft.kernel.streaming.SegSnapshot]] bytes
@@ -1891,77 +1889,22 @@ object StreamStage {
     }
   }
 
-  private def feed(
-      state: StreamingClaSPSegmentation,
-      url: String,
-      sorted: Iterator[SeriesPoint]): List[CpEvent] = {
-    val before = state.changePoints.length
-    var n = 0L
-    sorted.foreach { p => state.update(p.value); n += 1 }
-    state.changePoints.drop(before).map(cp =>
-      CpEvent(url, cp, state.ingested.toLong)).toList
+  private def newState(cfg: Config) =
+    new StreamingClaSPSegmentation(cfg.nTimepoints, cfg.nWarmup, logCps = true)
+
+  /** The per-url detector step: feeds one point and returns the change
+    * points it newly logged, each with `n_ingested` read at that moment. */
+  private def step(state: StreamingClaSPSegmentation, url: String,
+      p: SeriesPoint): Seq[CpEvent] = {
+    val logged = state.changePoints.length
+    state.update(p.value)
+    (logged until state.changePoints.length).map(i =>
+      CpEvent(url, state.changePoints(i), state.ingested.toLong))
   }
 
-  private def newState(cfg: Config) =
-    new StreamingClaSPSegmentation(cfg.nTimepoints, cfg.nWarmup,
-      jump = cfg.jump, logCps = cfg.logCps)
-
-  /** Lazily walk one partition sorted by (url, ts): one ring-buffer detector
-    * live at a time, cps emitted as detected — O(ring) memory per task, never
-    * a whole series (the single-phase `it.toArray` was the one spot a
-    * mega-series could blow a task heap). */
-  private def cpWalk(rows: Iterator[SeriesPoint], cfg: Config): Iterator[CpEvent] =
-    new Iterator[CpEvent] {
-      private var curUrl: String = null
-      private var state: StreamingClaSPSegmentation = null
-      private var emitted = 0
-      private val pending = scala.collection.mutable.Queue.empty[CpEvent]
-      private def advance(): Unit =
-        while (pending.isEmpty && rows.hasNext) {
-          val p = rows.next()
-          if (curUrl == null || p.url != curUrl) {
-            curUrl = p.url; state = newState(cfg); emitted = 0
-          }
-          state.update(p.value)
-          while (emitted < state.changePoints.length) {
-            pending.enqueue(CpEvent(curUrl, state.changePoints(emitted), state.ingested.toLong))
-            emitted += 1
-          }
-        }
-      def hasNext: Boolean = { advance(); pending.nonEmpty }
-      def next(): CpEvent = { advance(); pending.dequeue() }
-    }
-
-  /** Same group-walk, emitting one summary per url at its group boundary. */
-  private def summaryWalk(rows: Iterator[SeriesPoint], cfg: Config): Iterator[StreamSummary] =
-    new Iterator[StreamSummary] {
-      private var curUrl: String = null
-      private var state: StreamingClaSPSegmentation = null
-      private var n = 0L
-      private var out: StreamSummary = null
-      private def finishGroup() = StreamSummary(curUrl, n,
-        if (state.isWarmedUp) state.windowSize else -1,
-        state.changePoints.length, state.lastCp)
-      private def advance(): Unit = {
-        while (out == null && rows.hasNext) {
-          val p = rows.next()
-          if (curUrl == null) { curUrl = p.url; state = newState(cfg); n = 0L }
-          else if (p.url != curUrl) {
-            out = finishGroup()
-            curUrl = p.url; state = newState(cfg); n = 0L
-          }
-          state.update(p.value); n += 1
-        }
-        if (out == null && curUrl != null && !rows.hasNext) {
-          out = finishGroup(); curUrl = null
-        }
-      }
-      def hasNext: Boolean = { advance(); out != null }
-      def next(): StreamSummary = { advance(); val s = out; out = null; s }
-    }
-
   /** Structured Streaming: one ClaSS state machine per url as arbitrary
-    * group state; emits newly detected change points per batch.
+    * group state; emits newly detected change points per batch, equal on
+    * every column to [[detectBatch]] however the stream is chunked.
     * State lives as a flat value snapshot ([[graft.kernel.streaming.SegSnapshot]])
     * under the PRODUCT encoder — primitive arrays serialize as Spark
     * ArrayType, orders of magnitude faster per micro-batch than
@@ -1983,11 +1926,11 @@ object StreamStage {
         (url: String, it: Iterator[SeriesPoint], gs: GroupState[SegSnapshot]) =>
           val state = gs.getOption
             .map(s => StreamingClaSPSegmentation.restore(s, cfg.nTimepoints, cfg.nWarmup,
-              jump = cfg.jump, logCps = cfg.logCps))
+              logCps = true))
             .getOrElse(newState(cfg))
           // per-group buffer here is bounded by ONE micro-batch of one url
           // (cap via maxOffsetsPerTrigger/maxFilesPerTrigger), not a series
-          val out = feed(state, url, it.toArray.sortBy(_.ts).iterator)
+          val out = it.toArray.sortBy(_.ts).flatMap(step(state, url, _))
           gs.update(state.snapshot)
           out.iterator
       }
@@ -1995,16 +1938,18 @@ object StreamStage {
 
   /** Batch replay: the same state machine over complete per-url series —
     * the mega-series path (reference's own guidance: streaming ClaSP for
-    * very large archives) and the Verify surface. */
+    * very large archives) and the Verify surface. Spark sorts each url's
+    * group by ts and the step streams through it: one ring-buffer detector
+    * per group, never a whole series in memory. */
   def detectBatch(points: Dataset[SeriesPoint], cfg: Config = Config())
       : Dataset[CpEvent] = {
     val spark = points.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    // secondary sort instead of per-group toArray: repartition co-locates a
-    // url, sortWithinPartitions orders it, the walk streams through
-    points.repartition(col("url")).sortWithinPartitions(col("url"), col("ts"))
-      .mapPartitions(it => cpWalk(it, cfg))
+    points.groupByKey(_.url).flatMapSortedGroups(col("ts")) { (url, it) =>
+      val state = newState(cfg)
+      it.flatMap(step(state, url, _))
+    }
   }
 
   /** Batch replay summary (always one row per url — used by rows-only
@@ -2014,7 +1959,12 @@ object StreamStage {
     val spark = points.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    points.repartition(col("url")).sortWithinPartitions(col("url"), col("ts"))
-      .mapPartitions(it => summaryWalk(it, cfg))
+    points.groupByKey(_.url).flatMapSortedGroups(col("ts")) { (url, it) =>
+      val state = newState(cfg)
+      val n = it.foldLeft(0L) { (n, p) => step(state, url, p); n + 1 }
+      Iterator.single(StreamSummary(url, n,
+        if (state.isWarmedUp) state.windowSize else -1,
+        state.changePoints.length, state.lastCp))
+    }
   }
 }

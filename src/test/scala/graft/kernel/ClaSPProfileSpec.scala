@@ -4,9 +4,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The batch ClaSP profile, which follows reverse-kNN vote counts from split
   * to split, against the definition: materialise the labels of every split
-  * with `CrossVal.labelsInto` and score them with `Scoring.byName`. Every
-  * profile entry must match bit for bit (`doubleToRawLongBits`), including
-  * the -inf outside the evaluated splits. */
+  * with `CrossVal.labelsInto` and score them with
+  * `ScoringReference.byName`. Every profile entry must match bit for bit
+  * (`doubleToRawLongBits`), including the -inf outside the evaluated
+  * splits. The streaming ClaSS profile, which walks the same counters, is
+  * pinned the same way against a per-split confusion matrix. */
 class ClaSPProfileSpec extends AnyFunSuite {
 
   private val scores = Seq("roc_auc", "f1")
@@ -18,7 +20,7 @@ class ClaSPProfileSpec extends AnyFunSuite {
     val prof = Array.fill(nOff)(Double.NegativeInfinity)
     val yTrue = new Array[Int](nOff)
     val yPred = new Array[Int](nOff)
-    val scoreFn = Scoring.byName(score)
+    val scoreFn = ScoringReference.byName(score)
     var split = math.max(0, minSegSize)
     while (split < math.min(nOff, nOff - minSegSize + w)) {
       CrossVal.labelsInto(knn.offsetsFlat, knn.stride, split, w, yTrue, yPred)
@@ -113,7 +115,7 @@ class ClaSPProfileSpec extends AnyFunSuite {
       assert(got(start - 1) == Double.NegativeInfinity && got(end) == Double.NegativeInfinity)
       for (split <- Seq(start, end - 1)) {
         val (yTrue, yPred) = CrossVal.labels(knn.offsetsFlat, knn.stride, split, w)
-        assertBitIdentical(Array(got(split)), Array(Scoring.byName(score)(yTrue, yPred)), s"$score split $split")
+        assertBitIdentical(Array(got(split)), Array(ScoringReference.byName(score)(yTrue, yPred)), s"$score split $split")
       }
       // f1 is -inf at the last split here (too few right-hand windows); the
       // roc curve is proper at both ends

@@ -27,7 +27,7 @@ class StreamStageSpec extends SparkTestBase {
         4L * (s.changePoints.length + s.kKnns.length) + 64L
     val cfg = StreamStage.Config(nTimepoints = 2048, nWarmup = 200)
     val det = new graft.kernel.streaming.StreamingClaSPSegmentation(
-      cfg.nTimepoints, cfg.nWarmup, jump = cfg.jump, logCps = cfg.logCps)
+      cfg.nTimepoints, cfg.nWarmup, jump = 5, logCps = true)
     // feed past the ring so every buffer is at full size
     val rng = new java.util.Random(7)
     (0 until 3000).foreach(i =>
@@ -220,8 +220,9 @@ class StreamStageSpec extends SparkTestBase {
     val all = crawlPoints(4)
     val cfg = StreamStage.Config(nTimepoints = 2048, nWarmup = 200)
 
+    val byEvent = Ordering.by((e: CpEvent) => (e.url, e.n_ingested, e.global_cp))
     val batchCps = StreamStage.detectBatch(all.toSeq.toDS(), cfg)
-      .collect().map(e => (e.url, e.global_cp)).toSet
+      .collect().toSeq.sorted(byEvent)
 
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[SeriesPoint]
@@ -240,7 +241,7 @@ class StreamStageSpec extends SparkTestBase {
     }
     q.stop()
     val streamCps = spark.table("cps").as[CpEvent]
-      .collect().map(e => (e.url, e.global_cp)).toSet
+      .collect().toSeq.sorted(byEvent)
     assert(streamCps == batchCps,
       s"stream $streamCps vs batch $batchCps")
   }
