@@ -9,7 +9,9 @@ import graft.pipeline.SeriesPoint
 
 /** One detected global change point of one series. `global_cp` is the index
   * in the per-url ingest order (reference semantics:
-  * `claspy/streaming/segmentation.py:228-230`). */
+  * `claspy/streaming/segmentation.py:228-230`); `n_ingested` is the
+  * detector's ingested count when it logged the point, in batch and
+  * stream alike. */
 final case class CpEvent(url: String, global_cp: Int, n_ingested: Long)
 
 /** Per-url summary after replaying a series through the streaming detector. */
